@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.domain.{Cleaning, Datasets, Scoring, SyntheticSeason}
 import graft.ml.NonCompletionModel
+import graft.ops.Exec
 
 /** End-to-end domain run mirroring the reference's three entry points
   * (README.md:43-144): clean → featurize/split → train GBT grid → score
@@ -32,7 +33,7 @@ object DomainDemo {
     // entry point 1 — cleaning
     val players = Cleaning.playersDataset(before)
     val plays0 = Cleaning.processPlays(raw, before)
-    val (cleanBefore, cleanAfter) =
+    val (cleanBefore, _) =
       Cleaning.cleanTracking(before, after, players, raw, plays0)
     val plays = Cleaning.filterPlaysWithTracking(plays0, cleanBefore)
     val keptPlays = plays.count()
@@ -67,6 +68,9 @@ object DomainDemo {
     val sample = scores.orderBy(col("game_id"), col("play_id")).limit(3).collect()
       .map(r => s"""{"play":${r.getLong(1)},"deception":${Ioops.jsonNum(r.getDouble(4), 4)},"recovery":${Ioops.jsonNum(r.getDouble(5), 4)}}""")
       .mkString("[", ",", "]")
+    // the sample above is the cleaned frames' last consumer; the after
+    // frame's layer is one of the before frame's, so this releases both
+    Exec.release(cleanBefore)
 
     println(
       s"""{"plays_kept":$keptPlays,"train_rows":$trainN,"test_rows":$testN,""" +

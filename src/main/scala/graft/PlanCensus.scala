@@ -11,7 +11,9 @@ import org.apache.spark.sql.SparkSession
   * query builder run here; Bench bills this to the query, so the census
   * must show it separately rather than hide it), count wall, result rows,
   * Spark jobs for each phase, and — from the AQE-FINAL executed plan —
-  * `Exchange` count, file-scan count, and WholeStageCodegen span count.
+  * `Exchange` count, file-scan count, and WholeStageCodegen span count
+  * (`WholeStageCodegenExec` nodes of [[finalPlanNodes]]; the plan
+  * string marks spans only with the `*(n)` operator prefix).
   * The frame is finalized with a `collect()` on the frame's OWN
   * `QueryExecution` (the verify-skill idiom; `count()` plans a different
   * query, and a noop write finalizes a different QueryExecution — reading
@@ -22,6 +24,24 @@ import org.apache.spark.sql.SparkSession
   * listener bus with a settle pause, so treat them as ±1 under load.
   * Census only — never a gate, never part of the driver contract. */
 object PlanCensus {
+  import org.apache.spark.sql.execution.SparkPlan
+  import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+
+  /** Every operator of an executed plan, pre-order. An adaptive root is
+    * replaced by its current plan (the final one once the frame's own
+    * action has run) and each query stage by the stage's plan, so
+    * operators below stage boundaries are counted too. A reused
+    * exchange appears once, as its `ReusedExchangeExec` marker. */
+  def finalPlanNodes(plan: SparkPlan): Seq[SparkPlan] = plan match {
+    case a: AdaptiveSparkPlanExec => finalPlanNodes(a.executedPlan)
+    case q: QueryStageExec => q +: finalPlanNodes(q.plan)
+    case p => p +: p.children.flatMap(finalPlanNodes)
+  }
+
+  /** WholeStageCodegen spans of an executed plan, query stages included. */
+  def codegenSpans(plan: SparkPlan): Int =
+    finalPlanNodes(plan).count(_.isInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec])
+
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else "/tmp/plan_census.tsv"
@@ -96,7 +116,7 @@ object PlanCensus {
           def cnt(re: String): Int = re.r.findAllIn(plan).length
           val exchanges = cnt("""Exchange (hash|range|Single|rebalance)""")
           val scans = cnt("""Scan parquet|Scan csv|Scan json|Scan orc|FileScan""")
-          val spans = cnt("""WholeStageCodegen \(\d+\)""")
+          val spans = codegenSpans(df.queryExecution.executedPlan)
           sb ++= f"$name\t$build%.3f\t$wall%.3f\t$rows\t$buildJobs\t$jobs\t$exchanges\t$scans\t$spans\n"
         } catch { case e: Exception =>
           val msg = (e.getClass.getSimpleName + ": " +

@@ -2,7 +2,7 @@ package graft.domain
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.ops.{Aggs, Exprs, Joins}
+import graft.ops.{Aggs, Exec, Exprs, Joins}
 import Schemas._
 
 /** Entry point 1 — the cleaning pipeline (reference
@@ -170,34 +170,57 @@ object Cleaning {
   /** Full per-season tracking clean (clean_tracking_data,
     * tracking.py:456-549) over a partitioned DataFrame — the reference's
     * week loop is replaced by data partitioning; at cluster scale the
-    * `week` column is a partition-pruning key. Returns (before, after). */
+    * `week` column is a partition-pruning key. Returns (before, after).
+    *
+    * The data flow is a DAG, not a tree: every intermediate with more
+    * than one consumer is cut with [[Exec.materialize]], so it is
+    * planned, compiled and run once instead of once per use. Three plan
+    * simplifications rest on key containment (player key = game, play,
+    * nfl_id):
+    *
+    *   - the pre-throw tracking is enriched once; the passer rows and
+    *     the post-throw-present rows are row filters of it (the player
+    *     and team left joins go to key-unique dims, so enrichment
+    *     commutes with row filters);
+    *   - the reference's re-sync of the closest rows against the
+    *     pre-throw rows is the identity: a closest row kept its role or
+    *     side only by matching the slice, so its key is already present;
+    *   - the final pre-throw filter is one semi-join against the final
+    *     post-throw rows, whose keys are a subset of every earlier
+    *     stage's keys.
+    *
+    * Release contract: the returned frames read materialized layers
+    * (checkpointed blocks locally, `DISK_ONLY` cache on a cluster), and
+    * the after frame's layer is also one of the before frame's. Once the
+    * last consumer of either frame has run its action, pass the before
+    * frame to [[Exec.release]]; that releases both, and neither they nor
+    * frames derived from them may be used afterwards. Intermediate
+    * layers are released here, as soon as the next layer is built. */
   def cleanTracking(before: DataFrame, after: DataFrame,
                     players: DataFrame, rawPlays: DataFrame,
                     cleanedPlays: DataFrame): (DataFrame, DataFrame) = {
-    val qb = addTeamInfo(addPlayerInfo(
-      before.filter(col("player_role") === Passer)
-        .select(TrackingColsBefore.map(col): _*), players), rawPlays)
-
-    val before1 = keepPlayersPresentIn(before, after)
-    val filteredBefore0 = addTeamInfo(addPlayerInfo(
-      before1.select(TrackingColsBefore.map(col): _*), players), rawPlays)
+    val enriched = Exec.materialize(addTeamInfo(addPlayerInfo(
+      before.select(TrackingColsBefore.map(col): _*), players), rawPlays))
+    val qb = enriched.filter(col("player_role") === Passer)
+    val filteredBefore0 = Exec.materialize(keepPlayersPresentIn(enriched, after))
 
     val beforeSlice = filteredBefore0
       .select(col("game_id"), col("play_id"), col("nfl_id"),
         col("player_side"), col("player_role"), col("play_direction"))
       .dropDuplicates(playerKeys) // many_to_one enforced (tracking.py:77-90)
-    val afterEnriched = after.join(beforeSlice, playerKeys, "left")
-
+    val afterEnriched = Exec.materialize(after.join(beforeSlice, playerKeys, "left"))
     val afterClosest = closestDefender(afterEnriched)
-    val filteredBefore1 = keepPlayersPresentIn(filteredBefore0, afterClosest)
-    val afterSynced = keepPlayersPresentIn(afterClosest, filteredBefore1)
 
-    val afterStd = addTeamInfo(addPlayerInfo(
-      convertPlaysLeftToRight(afterSynced), players), rawPlays)
-    val after1v1 = playsWithOneReceiverAndOneDb(afterStd)
-    val afterFinal = filterPlaysByBallLandingDistance(after1v1, cleanedPlays)
+    val afterStd = Exec.materialize(addTeamInfo(addPlayerInfo(
+      convertPlaysLeftToRight(afterClosest), players), rawPlays))
+    Exec.release(afterEnriched)
+    val after1v1 = Exec.materialize(playsWithOneReceiverAndOneDb(afterStd))
+    Exec.release(afterStd)
+    val afterFinal = Exec.materialize(
+      filterPlaysByBallLandingDistance(after1v1, cleanedPlays))
+    Exec.release(after1v1)
 
-    val filteredBefore2 = keepPlayersPresentIn(filteredBefore1, afterFinal)
+    val filteredBefore2 = keepPlayersPresentIn(filteredBefore0, afterFinal)
     val withQb = filteredBefore2.unionByName(qb)
     val roleComplete = Aggs.distinctCountFilter(withQb, playKeys.map(col),
       col("player_role"), 3) // tracking.py:523-528

@@ -56,12 +56,14 @@ object Exec {
     * + sort ONCE at setup instead of once per iteration; only the
     * node-sized other side moves per round.
     *
-    * `numPartitions` defaults to the session's
-    * `spark.sql.shuffle.partitions` — the same count every downstream
-    * ENSURE_REQUIREMENTS exchange targets statically, so the co-join
-    * side shuffles straight into alignment (no local-core-count
-    * constant; the deployment's shuffle-partition setting is the scale
-    * knob). In durable mode (`persist`, lineage retained) the explicit
+    * `numPartitions` defaults to the session's effective shuffle
+    * partition count (`SQLConf.numShufflePartitions`) — the same count
+    * every downstream ENSURE_REQUIREMENTS exchange targets statically,
+    * so the co-join side shuffles straight into alignment (no
+    * local-core-count constant; the deployment's shuffle-partition
+    * setting is the scale knob). The bridge re-checks that the
+    * checkpoint really has that many partitions before declaring the
+    * layout. In durable mode (`persist`, lineage retained) the explicit
     * repartition+sort below the cache keeps the layout visible to the
     * planner without any re-declaration. */
   def materializeClustered(df: DataFrame, keyCol: String,
@@ -69,11 +71,11 @@ object Exec {
     import org.apache.spark.sql.functions.col
     val k =
       if (numPartitions > 0) numPartitions
-      else df.sparkSession.conf.getOption("spark.sql.shuffle.partitions")
-        .flatMap(_.toIntOption).getOrElse(200)
+      else df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .sessionState.conf.numShufflePartitions
     val laid = df.repartition(k, col(keyCol)).sortWithinPartitions(col(keyCol))
     org.apache.spark.sql.graftbridge.LayoutBridge
-      .declareHashClusteredSorted(materialize(laid), keyCol)
+      .declareHashClusteredSorted(materialize(laid), keyCol, k)
   }
 
   /** Release what a frame holds pinned, once every consumer's action

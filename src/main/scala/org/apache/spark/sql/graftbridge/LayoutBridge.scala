@@ -29,24 +29,38 @@ import org.apache.spark.sql.execution.LogicalRDD
 object LayoutBridge {
 
   /** If `df` is a bare checkpoint leaf (`LogicalRDD`), re-declare it as
-    * hash-partitioned by `keyCol` across its actual partition count and
+    * hash-partitioned by `keyCol` into `numPartitions` partitions and
     * sorted ascending-nulls-first by `keyCol` within partitions;
     * otherwise (the durable `persist` mode, where lineage is retained
     * and the layout stays visible to the planner through the cached
     * plan) return `df` unchanged. Statistics of the original frame are
-    * carried over so join-size estimation is unaffected. */
-  def declareHashClusteredSorted(df: DataFrame, keyCol: String): DataFrame = {
+    * carried over so join-size estimation is unaffected.
+    *
+    * Fails instead of declaring when the leaf's checkpointed RDD does
+    * not have exactly `numPartitions` partitions (the hash layout would
+    * be false), or when `keyCol` does not name exactly one output
+    * column (the layout would be declared on an arbitrary one of them).
+    * Names match with the session's resolver, as `col(keyCol)` does. */
+  def declareHashClusteredSorted(df: DataFrame, keyCol: String,
+                                 numPartitions: Int): DataFrame = {
     df.queryExecution.analyzed match {
       case lr: LogicalRDD =>
-        val attr = lr.output.find(_.name == keyCol).getOrElse(
-          throw new IllegalArgumentException(
-            s"declareHashClusteredSorted: no column '$keyCol' in " +
-              lr.output.map(_.name).mkString("[", ", ", "]")))
         val s = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        val resolver = s.sessionState.conf.resolver
+        val attr = lr.output.filter(a => resolver(a.name, keyCol)) match {
+          case Seq(a) => a
+          case found => throw new IllegalArgumentException(
+            s"declareHashClusteredSorted: expected exactly one column '$keyCol', " +
+              s"found ${found.size} in " + lr.output.map(_.name).mkString("[", ", ", "]"))
+        }
+        val actual = lr.rdd.getNumPartitions
+        if (actual != numPartitions) throw new IllegalStateException(
+          s"declareHashClusteredSorted: checkpoint has $actual partitions, " +
+            s"not the $numPartitions the hash layout requires")
         val stats = df.queryExecution.optimizedPlan.stats
         val relaid = LogicalRDD(
           lr.output, lr.rdd,
-          HashPartitioning(Seq(attr), lr.rdd.getNumPartitions),
+          HashPartitioning(Seq(attr), numPartitions),
           SortOrder(attr, Ascending) :: Nil,
           lr.isStreaming, lr.stream)(s, Some(stats), None)
         org.apache.spark.sql.classic.Dataset.ofRows(s, relaid)

@@ -175,4 +175,18 @@ class PlanSpec extends AnyFunSuite {
         assert(!p.contains(op), s"$q re-derives its artifact ($op in plan):\n$p")
     }
   }
+
+  test("PlanCensus counts codegen spans of the final plan, below query stages too") {
+    // the census once read spans off the plan string, whose only marker
+    // is the `*(n)` prefix, so every row reported 0
+    val df = SparkEntry.queries("a4_argmin_per_group")(spark, sf)
+    df.collect()
+    val root = df.queryExecution.executedPlan
+    val stages = PlanCensus.finalPlanNodes(root)
+      .collect { case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => q }
+    assert(stages.size > 1, s"not a multi-stage plan:\n$root")
+    assert(PlanCensus.codegenSpans(root) > 0, s"no codegen spans counted:\n$root")
+    assert(stages.exists(q => PlanCensus.codegenSpans(q.plan) > 0),
+      s"no codegen span counted inside a query stage:\n$root")
+  }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 import graft.kernels.Pelt
-import graft.ops.Exprs
+import graft.ops.{Exec, Exprs}
 
 /** Domain-pipeline spec over a deterministic synthetic tracking fixture
   * covering FIXTURES.md's edge cases: a valid 1v1 play, a two-receiver
@@ -71,14 +71,16 @@ class DomainSpec extends AnyFunSuite {
     rows.toDF("game_id", "play_id", "nfl_id", "frame_id", "x", "y")
   }
 
-  private lazy val rawPlays: DataFrame = {
-    val rows = Seq(1L, 2L, 3L, 4L, 5L).map(p => Row(1L, p, 2023, 1, 1, "10:00", 1,
+  private def rawPlaysFor(ids: Seq[Long]): DataFrame = {
+    val rows = ids.map(p => Row(1L, p, 2023, 1, 1, "10:00", 1,
       "H", "V", "desc", 10, "H", "V", 30, "N", if (p == 1L) "C" else "I", 10.0,
       "SG", "3x1", if (p == 5L) "GO" else "IN", "N", "TRADITIONAL", 5.0,
       "MAN_COVERAGE", "C1"))
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows), Schemas.rawPlays)
   }
+
+  private lazy val rawPlays: DataFrame = rawPlaysFor(Seq(1L, 2L, 3L, 4L, 5L))
 
   private lazy val players = Cleaning.playersDataset(before)
   private lazy val cleanedPlays = Cleaning.processPlays(rawPlays, before)
@@ -134,6 +136,104 @@ class DomainSpec extends AnyFunSuite {
     assert(rec4.getAs[Double]("x") == 69.0) // 120 - 51
     assert(rec4.getAs[Double]("y") == 23.3) // r2(53.3 - 30.0) — rounded at flip
     assert(rec4.getAs[Double]("dir") == 270.0) // (90+180)%360
+  }
+
+  // ----- the DAG clean against the tree-shaped reference --------------
+
+  private def rowBag(df: DataFrame): Map[Row, Int] =
+    df.collect().groupBy(identity).map { case (r, rs) => r -> rs.length }
+
+  /** Both outputs of `Cleaning.cleanTracking` equal the reference's as
+    * row multisets, with the same columns in the same order. Returns
+    * the (before, after) row counts so callers can check the case was
+    * not vacuous. */
+  private def assertMatchesReference(label: String, before: DataFrame,
+                                     after: DataFrame, raw: DataFrame): (Int, Int) = {
+    val players = Cleaning.playersDataset(before)
+    val plays = Cleaning.processPlays(raw, before)
+    val (gotB, gotA) = Cleaning.cleanTracking(before, after, players, raw, plays)
+    val (refB, refA) = CleaningReference.cleanTracking(before, after, players, raw, plays)
+    try {
+      val sizes = for ((side, got, ref) <- Seq(("before", gotB, refB), ("after", gotA, refA)))
+        yield {
+          assert(got.schema == ref.schema, s"$label $side schema")
+          val (g, r) = (rowBag(got), rowBag(ref))
+          assert(g == r, s"$label $side: only new ${g.toSet -- r.toSet}, " +
+            s"only reference ${r.toSet -- g.toSet}")
+          g.values.sum
+        }
+      (sizes(0), sizes(1))
+    } finally Exec.release(gotB)
+  }
+
+  test("DAG clean equals the tree-shaped reference on the hand fixture, both materialize modes") {
+    for (durable <- Seq("false", "true")) {
+      spark.conf.set(Exec.DurableConf, durable)
+      try {
+        val (nBefore, nAfter) =
+          assertMatchesReference(s"fixture durable=$durable", before, after, rawPlays)
+        assert(nBefore > 0 && nAfter > 0)
+      } finally spark.conf.unset(Exec.DurableConf)
+    }
+  }
+
+  test("DAG clean equals the tree-shaped reference on synthetic seasons, seeds 42-44") {
+    for (seed <- Seq(42L, 43L, 44L)) {
+      val specs = SyntheticSeason.playSpecs(120, seed)
+      val (nBefore, nAfter) = assertMatchesReference(s"seed $seed",
+        SyntheticSeason.trackingBefore(spark, specs),
+        SyntheticSeason.trackingAfter(spark, specs),
+        SyntheticSeason.rawPlays(spark, specs))
+      assert(nBefore > 0 && nAfter > 0, s"seed $seed cleaned to nothing")
+    }
+  }
+
+  test("DAG clean equals the reference on rows that could break key containment") {
+    // the three containment arguments (enrichment commutes with row
+    // filters, the closest rows need no re-sync, one semi-join replaces
+    // the chain) must survive nulls and duplicates:
+    //   - a null nfl_id in post-throw tracking (play 1, frame 4)
+    //   - every post-throw row of play 4 duplicated
+    //   - post-throw rows of player 40, who has no pre-throw rows
+    //   - a play (6, a copy of play 1) whose play_direction is null
+    val hostileBefore = before.union(
+      play(6, direction = null).toDF(beforeCols: _*))
+    val afterOpt = after.select(col("game_id"), col("play_id"),
+      col("nfl_id").cast("long"), col("frame_id"), col("x"), col("y"))
+    val extra = (Seq[(Long, Long, Option[Long], Int, Double, Double)](
+      (1L, 1L, None, 4, 55.0, 30.0)) ++
+      (4 to 6).map(f => (1L, 1L, Option(40L), f, 54.5, 30.0)) ++
+      (4 to 6).flatMap(f => Seq((1L, 6L, Option(20L), f, 54.0 + (f - 3) * 3.0, 30.0),
+        (1L, 6L, Option(30L), f, 56.0 + (f - 3) * 3.0, 30.0),
+        (1L, 6L, Option(31L), f, 80.0, 10.0))))
+      .toDF("game_id", "play_id", "nfl_id", "frame_id", "x", "y")
+    val hostileAfter = afterOpt.union(afterOpt.filter(col("play_id") === 4)).union(extra)
+    // one local relation per input: the reference re-plans each input
+    // per use, and a union-shaped input makes its adaptive plan explode
+    def flat(df: DataFrame): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+    assert(hostileAfter.filter(col("nfl_id").isNull).count() == 1)
+    val (nBefore, nAfter) = assertMatchesReference("hostile",
+      flat(hostileBefore), flat(hostileAfter), rawPlaysFor(Seq(1L, 2L, 3L, 4L, 5L, 6L)))
+    assert(nBefore > 0 && nAfter > 0)
+  }
+
+  test("the cleaned before frame plans only its final layer's exchanges") {
+    // the tree-shaped clean planned 38 shuffle and 45 broadcast
+    // exchanges (plus 79 reused) for one seeded-season write of the
+    // cleaned before frame, and 38 and 69 (plus 57 reused) on this
+    // fixture. Every shared intermediate is now a materialized layer,
+    // so only the final semi-join (two shuffles, turned into one
+    // broadcast at run time), the union and the role-count window (one
+    // shuffle) are planned. A regrown tree fails these pins loudly.
+    val (beforeFinal, _) = cleaned
+    beforeFinal.collect()
+    val nodes = graft.PlanCensus.finalPlanNodes(beforeFinal.queryExecution.executedPlan)
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    val shuffles = nodes.count(_.isInstanceOf[ShuffleExchangeExec])
+    val broadcasts = nodes.count(_.isInstanceOf[BroadcastExchangeExec])
+    assert((shuffles, broadcasts) == ((3, 1)),
+      s"shuffle/broadcast exchanges:\n${beforeFinal.queryExecution.executedPlan}")
   }
 
   // ----- features -----------------------------------------------------

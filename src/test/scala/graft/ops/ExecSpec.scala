@@ -116,4 +116,62 @@ class ExecSpec extends AnyFunSuite {
       } finally spark.conf.unset(Exec.DurableConf)
     }
   }
+
+  // ----- materializeClustered layout safety ----------------------------
+
+  private def declaredLayout(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.analyzed match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        (lr.rdd.getNumPartitions, lr.outputPartitioning)
+      case other => fail(s"not a checkpoint leaf: $other")
+    }
+
+  test("materializeClustered defaults k to the session's effective shuffle partition count") {
+    // with AQE coalescing on, an initial partition number overrides
+    // spark.sql.shuffle.partitions for every ENSURE_REQUIREMENTS exchange;
+    // string-parsing spark.sql.shuffle.partitions read 4 here
+    import spark.implicits._
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "5")
+    try {
+      val expected = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .sessionState.conf.numShufflePartitions
+      assert(expected == 5)
+      val m = Exec.materializeClustered((1 to 100).map(i => (i % 7, i)).toDF("k", "v"), "k")
+      val (parts, layout) = declaredLayout(m)
+      assert(parts == 5)
+      assert(layout.numPartitions == 5 &&
+        layout.isInstanceOf[org.apache.spark.sql.catalyst.plans.physical.HashPartitioning])
+      assert(m.count() == 100)
+      Exec.release(m)
+    } finally spark.conf.unset("spark.sql.adaptive.coalescePartitions.initialPartitionNum")
+  }
+
+  test("the layout bridge refuses a checkpoint whose partition count is not k") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val m = Exec.materialize((1 to 100).toDF("k").repartition(3, col("k")))
+    val e = intercept[IllegalStateException](
+      org.apache.spark.sql.graftbridge.LayoutBridge.declareHashClusteredSorted(m, "k", 4))
+    assert(e.getMessage.contains("3 partitions"), e.getMessage)
+    // the truthful count is declared
+    val ok = org.apache.spark.sql.graftbridge.LayoutBridge.declareHashClusteredSorted(m, "k", 3)
+    assert(declaredLayout(ok)._2.numPartitions == 3)
+    Exec.release(m)
+  }
+
+  test("the layout bridge requires exactly one column named keyCol") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val a = (1 to 10).toDF("k")
+    val b = (1 to 10).toDF("k")
+    // a self-join keeps both `k` attributes under one name
+    val twoKeys = Exec.materialize(a.join(b, a("k") === b("k")).repartition(4))
+    val dup = intercept[IllegalArgumentException](
+      org.apache.spark.sql.graftbridge.LayoutBridge.declareHashClusteredSorted(twoKeys, "k", 4))
+    assert(dup.getMessage.contains("found 2"), dup.getMessage)
+    val none = intercept[IllegalArgumentException](
+      org.apache.spark.sql.graftbridge.LayoutBridge.declareHashClusteredSorted(twoKeys, "v", 4))
+    assert(none.getMessage.contains("found 0"), none.getMessage)
+    Exec.release(twoKeys)
+  }
 }
