@@ -138,21 +138,6 @@ object Ioops {
     } catch { case _: java.io.IOException => "absent" }
   }
 
-  /** Atomically publish a directory artifact: `build` writes into a
-    * job-unique sibling temp directory, which is then renamed onto
-    * `path` (one filesystem metadata op on HDFS/local — never a
-    * partially-visible directory). Two processes cold-starting on the
-    * same stamp each build their own temp dir; the rename loser
-    * detects the winner (rename onto an existing path fails), deletes
-    * its own build, and reads the winner's — a mixed directory with
-    * part files from both jobs under one surviving _SUCCESS (the
-    * failure mode of racing `mode("overwrite")` writes, which
-    * duplicates every downstream consumer's rows) cannot occur. A
-    * pre-existing BROKEN artifact (failed integrity probe upstream) is
-    * deleted before the rename; if the delete and rename interleave
-    * with another process's commit, exactly one directory still wins.
-    * Object stores without atomic rename (S3) need a manifest commit
-    * instead — out of scope for the HDFS/local deployments here. */
   /** [[commitDirAtomic]]'s entry rule for SINGLE-FILE artifacts — ONE
     * definition of the file-publish protocol (job-unique temp,
     * entry-state capture, failed-write cleanup, adopt-the-winner with
@@ -205,6 +190,21 @@ object Ioops {
     }
   }
 
+  /** Atomically publish a directory artifact: `build` writes into a
+    * job-unique sibling temp directory, which is then renamed onto
+    * `path` (one filesystem metadata op on HDFS/local — never a
+    * partially-visible directory). Two processes cold-starting on the
+    * same stamp each build their own temp dir; the rename loser
+    * detects the winner (rename onto an existing path fails), deletes
+    * its own build, and reads the winner's — a mixed directory with
+    * part files from both jobs under one surviving _SUCCESS (the
+    * failure mode of racing `mode("overwrite")` writes, which
+    * duplicates every downstream consumer's rows) cannot occur. A
+    * pre-existing BROKEN artifact (failed integrity probe upstream) is
+    * deleted before the rename; if the delete and rename interleave
+    * with another process's commit, exactly one directory still wins.
+    * Object stores without atomic rename (S3) need a manifest commit
+    * instead — out of scope for the HDFS/local deployments here. */
   def commitDirAtomic(spark: SparkSession, path: String)
                      (build: String => Unit): Unit = {
     val dest = new org.apache.hadoop.fs.Path(path)

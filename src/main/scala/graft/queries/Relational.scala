@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Ioops, Tables}
+import graft.{Artifact, Ioops, Tables}
 import graft.ops.{Aggs, Exprs, Joins}
 import Exprs.{r2, r4}
 
@@ -82,24 +82,26 @@ object Relational {
     // Spark shape of the reference's per-week file loop
     // (tracking.py:467-481, create_datasets.py:86-91).
     "s3_partitioned_scan" -> ((s, d) => {
-      val tmp = System.getProperty("java.io.tmpdir") +
-        s"/graft_part_${d.replaceAll("[^A-Za-z0-9]", "_")}/orders"
+      val tmp = Artifact.path("orders_by_status", d,
+        Ioops.sourceStamp(s, s"$d/orders.parquet"))
       // repartition on the partition column before a partitionBy write:
       // otherwise every task writes a file into every partition dir —
       // tasks × partitions small files, the classic 100-TB lake killer.
       // The write is lake SETUP, not the operator under test (the pruned
-      // scan is) — write once per source dir and reuse, like a real lake
-      // table (testdata is immutable within a round).
-      if (!new java.io.File(tmp, "_SUCCESS").exists)
-        Tables.orders(s, d).repartition(col("o_orderstatus"))
-          .write.mode("overwrite")
-          .partitionBy("o_orderstatus").parquet(tmp)
+      // scan is) — write once per source generation and reuse, like a
+      // real lake table ([[Artifact]]: the source stamp in the path
+      // routes an in-place regeneration to a fresh copy).
       // explicit schema (the writer's own), not footer inference: an
       // EMPTY source writes a zero-part-file lake whose read would die
       // with UNABLE_TO_INFER_SCHEMA (degenerate-cardinality sweep,
       // r10) — and a real lake read is catalog-schema'd anyway.
       // Partition pruning is unaffected (PlanSpec-pinned).
-      s.read.schema(Tables.orders(s, d).schema).parquet(tmp)
+      val schema = Tables.orders(s, d).schema
+      Artifact.ensure(s, tmp)(Artifact.readIf(s, s"$tmp/_SUCCESS")(
+        s.read.schema(schema).parquet(tmp)))(out =>
+        Tables.orders(s, d).repartition(col("o_orderstatus"))
+          .write.mode("overwrite")
+          .partitionBy("o_orderstatus").parquet(out))
         .filter(col("o_orderstatus") === "F")
         .groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n"),
@@ -114,11 +116,10 @@ object Relational {
     // roundtrip must be value-preserving, which is exactly what gets
     // hash-checked.
     "s7_orc_roundtrip" -> ((s, d) => {
-      val tmp = System.getProperty("java.io.tmpdir") +
-        s"/graft_orc_${d.replaceAll("[^A-Za-z0-9]", "_")}/supplier"
-      if (!new java.io.File(tmp, "_SUCCESS").exists)
-        Tables.supplier(s, d).write.mode("overwrite").orc(tmp)
-      s.read.orc(tmp)
+      val tmp = Artifact.path("supplier_orc", d,
+        Ioops.sourceStamp(s, s"$d/supplier.parquet"))
+      Artifact.ensure(s, tmp)(Artifact.readIf(s, s"$tmp/_SUCCESS")(s.read.orc(tmp)))(
+        out => Tables.supplier(s, d).write.mode("overwrite").orc(out))
         .filter(col("s_acctbal") > 0)
         .groupBy(col("s_nationkey"))
         .agg(count(lit(1)).as("n_suppliers"),

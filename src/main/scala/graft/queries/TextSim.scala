@@ -68,23 +68,18 @@ object TextSim {
   require(64 % SimhashChunks == 0,
     s"simhash oracle assumes even chunk widths: 64 % $SimhashChunks != 0")
 
-  /** Quantizer artifact location, keyed by source dir + k (different
-    * scale factors never share an index) + the source stamp. */
-  private def ivfQuantizerPath(d: String, k: Int, stamp: String): String =
-    System.getProperty("java.io.tmpdir") + "/graft-models/ivf_k" + k + "_" +
-      d.replaceAll("[^A-Za-z0-9.]", "_") + "_" + stamp
+  /** ANN artifact names ([[graft.Artifact.path]], keyed by source dir
+    * + the embeddings stamp): the shape is in the name, so a retuned
+    * cell count or codebook shape is a different artifact, and every
+    * PQ-consuming query shares one codebook fit per (source, shape). */
+  private val IvfName = s"ivf_k$IvfCells"
+  private val PqCbName = s"pq_cb_m${PqM}k$PqK"
+  private val IvfPqIdxName = s"ivfpq_idx_k${IvfCells}m$PqM"
 
-  /** PQ codebook artifact location — same life cycle and keying rules
-    * as [[ivfQuantizerPath]]; shared by every PQ-consuming query so
-    * the fit happens once per (source, shape). */
-  private def pqCodebookPath(d: String, stamp: String): String =
-    System.getProperty("java.io.tmpdir") +
-      s"/graft_pq_${d.replaceAll("[^A-Za-z0-9]", "_")}/cb_m${PqM}k${PqK}_" + stamp
-
-  /** Materialized IVF-PQ index table location — same keying rules. */
-  private def ivfPqIndexPath(d: String, stamp: String): String =
-    System.getProperty("java.io.tmpdir") + s"/graft-models/ivfpq_idx_k${IvfCells}m${PqM}_" +
-      d.replaceAll("[^A-Za-z0-9.]", "_") + "_" + stamp
+  private def pqCodebooks(emb: org.apache.spark.sql.DataFrame, d: String,
+                          stamp: String): graft.sim.Pq.Codebooks =
+    graft.sim.Pq.fitOrLoad(emb, "embedding", m = PqM, k = PqK,
+      graft.Artifact.path(PqCbName, d, stamp))
 
   /** One stamp read over the DOCUMENTS table — same read-once-and-
     * thread rule as [[embStamp]]: a query touching several
@@ -94,39 +89,20 @@ object TextSim {
     graft.Ioops.sourceStamp(s, s"$d/documents.parquet")
 
   /** Bigram-LM count-table artifact ([[TextOps.ensureBigramModel]]) —
-    * `slice` names the training subset ("all", "src012"). */
-  private def bigramLmPath(d: String, slice: String, stamp: String): String =
-    System.getProperty("java.io.tmpdir") + s"/graft-models/bigram_lm_${slice}_" +
-      d.replaceAll("[^A-Za-z0-9.]", "_") + "_" + stamp
+    * `slice` names the training subset ("all", "src012"); stamped on
+    * the documents table. */
+  private def bigramLm(docs: org.apache.spark.sql.DataFrame, d: String,
+                       slice: String, stamp: String): org.apache.spark.sql.DataFrame =
+    TextOps.ensureBigramModel(docs, "text",
+      graft.Artifact.path(s"bigram_lm_$slice", d, stamp))
 
   /** Corpus fingerprint-bloom artifact for the incremental-ingest
     * admission query — stamped on the DOCUMENTS table (its source),
     * with the corpus-slice discriminator in the name. */
-  private def corpusBloomPath(d: String, stamp: String): String =
-    System.getProperty("java.io.tmpdir") + "/graft-models/corpus_bloom_even_" +
-      d.replaceAll("[^A-Za-z0-9.]", "_") + "_" + stamp
-
-  /** n-gram Jaccard pair-graph artifact ([[Dedup.ensurePairGraph]]) —
-    * parameters in the name (a different n or threshold is a different
-    * artifact), stamped on the documents table. */
-  private def pairGraphPath(d: String, stamp: String): String =
-    System.getProperty("java.io.tmpdir") + "/graft-models/ngram_pairs_n3_t05_" +
-      d.replaceAll("[^A-Za-z0-9.]", "_") + "_" + stamp
-
-  /** Cross-document span blocklist artifact
-    * ([[Dedup.ensureSpanBlocklist]]) — window/minDocs in the name,
-    * stamped on the documents table. */
-  private def spanBlocklistPath(d: String, stamp: String): String =
-    System.getProperty("java.io.tmpdir") + "/graft-models/spans_w4_m2_" +
-      d.replaceAll("[^A-Za-z0-9.]", "_") + "_" + stamp
-
-  /** Benchmark (eval-set) distinct shingle-hash artifact
-    * ([[Dedup.ensureShingleSet]]) — the planted-benchmark selector
-    * (doc_id % 20 = 0) and n in the name, stamped on the documents
-    * table. */
-  private def benchShinglesPath(d: String, stamp: String): String =
-    System.getProperty("java.io.tmpdir") + "/graft-models/bench_sh_mod20_n3_" +
-      d.replaceAll("[^A-Za-z0-9.]", "_") + "_" + stamp
+  private def corpusBloom(corpus: org.apache.spark.sql.DataFrame, d: String,
+                          stamp: String): org.apache.spark.util.sketch.BloomFilter =
+    graft.text.CorpusSketches.bloomOrLoad(corpus, "text",
+      expected = 200000L, fpp = 0.01, graft.Artifact.path("corpus_bloom_even", d, stamp))
 
   /** The persisted benchmark shingle set `text_decontaminate` and
     * `text_contamination_score` probe: an eval set changes once per
@@ -140,14 +116,16 @@ object TextSim {
                                    d: String): org.apache.spark.sql.DataFrame =
     Dedup.ensureShingleSet(
       Tables.documents(s, d).filter(col("doc_id") % 20 === 0),
-      "doc_id", "text", n = 3, benchShinglesPath(d, docStamp(s, d)))
+      "doc_id", "text", n = 3,
+      graft.Artifact.path("bench_sh_mod20_n3", d, docStamp(s, d)))
 
-  /** SimHash signature artifact ([[Dedup.ensureSimhashSigs]]) —
-    * parameter-free 64-bit signatures, stamped on the documents
-    * table. */
-  private def simhashSigsPath(d: String, stamp: String): String =
-    System.getProperty("java.io.tmpdir") + "/graft-models/simhash_sigs_" +
-      d.replaceAll("[^A-Za-z0-9.]", "_") + "_" + stamp
+  /** Documents-derived artifact names ([[graft.Artifact.path]], keyed
+    * by source dir + the documents stamp) that the oracle reads too.
+    * The TF-vector dim is in its name (a retune generates a fresh
+    * artifact instead of serving a stale one whose schema probe still
+    * passes). */
+  private val SimhashSigsName = "simhash_sigs"
+  private val TfVecsName = s"tf_vecs_d$TfDim"
 
   /** The persisted SimHash signature table `dedup_simhash_neardup`
     * bands — signatures are ingest work (stored next to the corpus in
@@ -156,13 +134,7 @@ object TextSim {
   private[graft] def simhashSigs(s: org.apache.spark.sql.SparkSession,
                                  d: String): org.apache.spark.sql.DataFrame =
     Dedup.ensureSimhashSigs(Tables.documents(s, d), "doc_id", "text",
-      simhashSigsPath(d, docStamp(s, d)))
-
-  /** TF-vector artifact ([[TextOps.ensureTfVectors]]) — dim in the
-    * name, stamped on the documents table. */
-  private def tfVecsPath(d: String, stamp: String): String =
-    System.getProperty("java.io.tmpdir") + s"/graft-models/tf_vecs_d${TfDim}_" +
-      d.replaceAll("[^A-Za-z0-9.]", "_") + "_" + stamp
+      graft.Artifact.path(SimhashSigsName, d, docStamp(s, d)))
 
   /** The persisted TF-vector table `text_tf_cosine_neardup` bands —
     * same ingest-artifact rule as [[simhashSigs]]; the oracle
@@ -170,7 +142,7 @@ object TextSim {
   private[graft] def tfVecs(s: org.apache.spark.sql.SparkSession,
                             d: String): org.apache.spark.sql.DataFrame =
     TextOps.ensureTfVectors(Tables.documents(s, d), "doc_id", "text",
-      dim = TfDim, tfVecsPath(d, docStamp(s, d)))
+      dim = TfDim, graft.Artifact.path(TfVecsName, d, docStamp(s, d)))
 
   /** The persisted boilerplate span table `text_span_crossdup` emits
     * and `text_span_coverage` probes — one span-keyed corpus shuffle
@@ -178,7 +150,7 @@ object TextSim {
   private[graft] def spanBlocklist(s: org.apache.spark.sql.SparkSession,
                                    d: String): org.apache.spark.sql.DataFrame =
     Dedup.ensureSpanBlocklist(Tables.documents(s, d), "text",
-      window = 4, minDocs = 2L, spanBlocklistPath(d, docStamp(s, d)))
+      window = 4, minDocs = 2L, graft.Artifact.path("spans_w4_m2", d, docStamp(s, d)))
 
   /** The shared (pairs, components) pair-graph artifact every exact
     * n-gram dedup DECISION query loads — `dedup_ngram_jaccard` (the
@@ -192,7 +164,8 @@ object TextSim {
                                       d: String):
       (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
     Dedup.ensurePairGraph(Tables.documents(s, d), "doc_id", "text",
-      n = 3, threshold = 0.5, pairGraphPath(d, docStamp(s, d)))
+      n = 3, threshold = 0.5,
+      graft.Artifact.path("ngram_pairs_n3_t05", d, docStamp(s, d)))
 
   /** The MinHash/LSH family's shared generator parameters — one
     * definition for the candidate queries AND their soundness
@@ -201,16 +174,12 @@ object TextSim {
   private[graft] val MinhashBands = 4
   private[graft] val MinhashMinEstimate = 0.5
 
-  /** MinHash/LSH pair-graph artifact ([[Dedup.ensureMinhashPairGraph]])
-    * — parameters DERIVED from the Minhash* constants (not a hardcoded
-    * copy: the stamp only covers the documents table, so a retuned
-    * constant must change the PATH or an old-parameter artifact would
-    * be silently served), stamped on the documents table. */
-  private def minhashPairGraphPath(d: String, stamp: String): String =
-    System.getProperty("java.io.tmpdir") +
-      s"/graft-models/mh_pairs_h${MinhashNumHashes}_b${MinhashBands}" +
-      s"_e${math.round(MinhashMinEstimate * 100)}_" +
-      d.replaceAll("[^A-Za-z0-9.]", "_") + "_" + stamp
+  /** MinHash/LSH pair-graph artifact name — DERIVED from the Minhash*
+    * constants (not a hardcoded copy: the stamp only covers the
+    * documents table, so a retuned constant must change the PATH or an
+    * old-parameter artifact would be silently served). */
+  private val MhPairsName = s"mh_pairs_h${MinhashNumHashes}_b${MinhashBands}" +
+    s"_e${math.round(MinhashMinEstimate * 100)}"
 
   /** The persisted (pairs, components) MinHash pair graph — the same
     * build-once-at-ingest rule as [[ngramPairGraph]], applied to the
@@ -224,7 +193,7 @@ object TextSim {
       (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
     Dedup.ensureMinhashPairGraph(Tables.documents(s, d), "doc_id", "text",
       MinhashNumHashes, MinhashBands, MinhashMinEstimate,
-      minhashPairGraphPath(d, docStamp(s, d)))
+      graft.Artifact.path(MhPairsName, d, docStamp(s, d)))
 
   /** The persisted index rows (cell, neighbor_id, vec, norm, pq_codes)
     * every index-consuming search query probes. One stamp read covers
@@ -238,11 +207,11 @@ object TextSim {
         org.apache.spark.sql.DataFrame) = {
     val stamp = embStamp(s, d)
     val emb = Tables.embeddings(s, d)
-    val model = Ivf.fitOrLoad(emb, "embedding", IvfCells, ivfQuantizerPath(d, IvfCells, stamp))
-    val cb = graft.sim.Pq.fitOrLoad(emb, "embedding", m = PqM, k = PqK,
-      pqCodebookPath(d, stamp))
+    val model = Ivf.fitOrLoad(emb, "embedding", IvfCells,
+      graft.Artifact.path(IvfName, d, stamp))
+    val cb = pqCodebooks(emb, d, stamp)
     val idx = graft.sim.IvfPq.ensureIndex(emb, "vec_id", "embedding", model, cb,
-      ivfPqIndexPath(d, stamp))
+      graft.Artifact.path(IvfPqIdxName, d, stamp))
     (model, cb, idx)
   }
 
@@ -266,14 +235,10 @@ object TextSim {
     if (fs.exists(docsPath)) {
       val docs = Tables.documents(s, d)
       val stamp = docStamp(s, d)
-      graft.text.CorpusSketches.bloomOrLoad(
-        docs.filter(col("doc_id") % 2 === 0), "text",
-        expected = 200000L, fpp = 0.01, corpusBloomPath(d, stamp))
+      corpusBloom(docs.filter(col("doc_id") % 2 === 0), d, stamp)
       // bigram-LM count tables (text_bigram_nll / text_dsir_weight)
-      TextOps.ensureBigramModel(docs, "text", bigramLmPath(d, "all", stamp))
-      TextOps.ensureBigramModel(
-        docs.filter(col("source").isin("src0", "src1", "src2")), "text",
-        bigramLmPath(d, "src012", stamp))
+      bigramLm(docs, d, "all", stamp)
+      bigramLm(docs.filter(col("source").isin("src0", "src1", "src2")), d, "src012", stamp)
       // n-gram pair graph + components (the exact-dedup decision rows)
       ngramPairGraph(s, d)
       // MinHash/LSH pair graph + components (the at-scale generator)
@@ -307,9 +272,7 @@ object TextSim {
     }
     val docs = Tables.documents(s, d)
     val corpus = docs.filter(col("doc_id") % 2 === 0)
-    val bloom = t("bloom_load")(graft.text.CorpusSketches.bloomOrLoad(
-      corpus, "text", expected = 200000L, fpp = 0.01,
-      corpusBloomPath(d, docStamp(s, d))))
+    val bloom = t("bloom_load")(corpusBloom(corpus, d, docStamp(s, d)))
     t("admission")(graft.text.Dedup.incrementalNew(
       corpus, docs.filter(col("doc_id") % 2 === 1), "doc_id", "text",
       bloom, expected = 200000L, fpp = 0.01).count())
@@ -334,12 +297,12 @@ object TextSim {
     val stamp = embStamp(s, d)
     val dstamp = docStamp(s, d)
     Map(
-      "__IVF_QUANT_DATA__" -> (ivfQuantizerPath(d, IvfCells, stamp) + "/data/*.parquet"),
-      "__IVFPQ_IDX__" -> (ivfPqIndexPath(d, stamp) + "/*/*.parquet"),
-      "__PQ_CB__" -> pqCodebookPath(d, stamp),
-      "__MH_SIGS__" -> (minhashPairGraphPath(d, dstamp) + "/signatures/*.parquet"),
-      "__SH_SIGS__" -> (simhashSigsPath(d, dstamp) + "/*.parquet"),
-      "__TF_VECS__" -> (tfVecsPath(d, dstamp) + "/*.parquet"))
+      "__IVF_QUANT_DATA__" -> (graft.Artifact.path(IvfName, d, stamp) + "/data/*.parquet"),
+      "__IVFPQ_IDX__" -> (graft.Artifact.path(IvfPqIdxName, d, stamp) + "/*/*.parquet"),
+      "__PQ_CB__" -> graft.Artifact.path(PqCbName, d, stamp),
+      "__MH_SIGS__" -> (graft.Artifact.path(MhPairsName, d, dstamp) + "/signatures/*.parquet"),
+      "__SH_SIGS__" -> (graft.Artifact.path(SimhashSigsName, d, dstamp) + "/*.parquet"),
+      "__TF_VECS__" -> (graft.Artifact.path(TfVecsName, d, dstamp) + "/*.parquet"))
   }
 
   /** The LSH plane-sign matrix as a DuckDB VALUES literal — the one
@@ -434,9 +397,7 @@ object TextSim {
         corpus,
         docs.filter(col("doc_id") % 2 === 1),
         "doc_id", "text",
-        graft.text.CorpusSketches.bloomOrLoad(corpus, "text",
-          expected = 200000L, fpp = 0.01,
-          corpusBloomPath(d, docStamp(s, d))),
+        corpusBloom(corpus, d, docStamp(s, d)),
         expected = 200000L, fpp = 0.01)
     }),
 
@@ -560,10 +521,8 @@ object TextSim {
       // in-place regeneration
       val stamp = docStamp(s, d)
       TextOps.dsirWeightWithModels(docs,
-        TextOps.ensureBigramModel(docs, "text", bigramLmPath(d, "all", stamp)),
-        TextOps.ensureBigramModel(
-          docs.filter(col("source").isin("src0", "src1", "src2")), "text",
-          bigramLmPath(d, "src012", stamp)),
+        bigramLm(docs, d, "all", stamp),
+        bigramLm(docs.filter(col("source").isin("src0", "src1", "src2")), d, "src012", stamp),
         "doc_id", "text")
     }),
 
@@ -686,7 +645,7 @@ object TextSim {
     "text_bigram_nll" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       TextOps.bigramNllWithModel(docs,
-        TextOps.ensureBigramModel(docs, "text", bigramLmPath(d, "all", docStamp(s, d))),
+        bigramLm(docs, d, "all", docStamp(s, d)),
         "doc_id", "text")
     }),
 
@@ -914,7 +873,7 @@ object TextSim {
     // recall vs brute force.
     "sim_pq_topk" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      val cb = graft.sim.Pq.fitOrLoad(emb, "embedding", m = PqM, k = PqK, pqCodebookPath(d, embStamp(s, d)))
+      val cb = pqCodebooks(emb, d, embStamp(s, d))
       graft.sim.Pq.adcRerankTopK(emb, "vec_id", "embedding",
         emb.filter(col("vec_id") < 10), cb, k = 3, shortlist = 50)
     }),
@@ -1019,7 +978,7 @@ object TextSim {
       // pair's soundness bit — a false kernel/LSH divergence (review
       // r13; the dedup_minhash_agree fix's sibling).
       val sigs = s.read.parquet(
-        minhashPairGraphPath(d, docStamp(s, d)) + "/signatures")
+        graft.Artifact.path(MhPairsName, d, docStamp(s, d)) + "/signatures")
       val sa = sigs.select(col("doc_id").as("id_a"), col("signature").as("__sa"))
       val sb = sigs.select(col("doc_id").as("id_b"), col("signature").as("__sb"))
       val refold = aggregate(
@@ -1142,7 +1101,7 @@ object TextSim {
     // aggregated to one bit per query over EVERY corpus pairing.
     "sim_pq_agree" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      val cb = graft.sim.Pq.fitOrLoad(emb, "embedding", m = PqM, k = PqK, pqCodebookPath(d, embStamp(s, d)))
+      val cb = pqCodebooks(emb, d, embStamp(s, d))
       val q = broadcast(emb.filter(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"),
           graft.sim.Pq.normalized(col("embedding")).as("q_nvec")))

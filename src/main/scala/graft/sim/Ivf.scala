@@ -73,64 +73,31 @@ object Ivf {
 
   def load(path: String): KMeansModel = KMeansModel.load(path)
 
-  /** Per-JVM memo on top of the disk artifact: repeated probe queries in
-    * one process skip even the load. */
-  private val loaded =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), KMeansModel]
-
-  /** Drop memoized quantizers whose path starts with `pathPrefix` —
-    * the [[graft.Tables.invalidate]] counterpart for long-lived
-    * sessions over a regenerated corpus. */
-  def invalidateQuantizers(pathPrefix: String): Unit = {
-    val it = loaded.keySet.iterator()
-    while (it.hasNext) if (it.next()._1.startsWith(pathPrefix)) it.remove()
-  }
-
   /** Train-once/probe-many entry: reuse the quantizer at `path` if one
     * exists, else fit on (a bounded sample of) `df`, save, and return
-    * it. Fit-then-save and load produce identical centroids (the writer
-    * round-trips the model bit-exactly — asserted in IvfSpec), so the
-    * probe results cannot depend on which path ran. Probed through the
-    * Hadoop FS API (a java.io.File probe misses on any non-local
-    * defaultFS — the sourceStamp rule) and published atomically
-    * ([[graft.Ioops.commitDirAtomic]]): racing cold starts cannot
-    * interleave the ML writer's part files, and an unreadable artifact
-    * (truncated metadata behind a crash) refits instead of throwing.
-    * The loser of a publish race ADOPTS the winner's model from disk —
-    * with a fixed seed over the same stamped source the two fits are
-    * identical anyway, but disk is the single source of truth. */
+    * it — the [[graft.Artifact]] life cycle (memo, unreadable artifact
+    * refits instead of throwing, atomic publish: racing cold starts
+    * cannot interleave the ML writer's part files, and the loser ADOPTS
+    * the winner's model from disk). Fit-then-save and load produce
+    * identical centroids (the writer round-trips the model bit-exactly
+    * — asserted in IvfSpec), so the probe results cannot depend on
+    * which path ran. */
   def fitOrLoad(df: DataFrame, vecCol: String, k: Int, path: String,
-                seed: Long = 42L, trainFraction: Double = 1.0): KMeansModel =
-    // memo keyed by (path, k): two same-JVM callers asking different k
-    // at one path must not silently share whichever model loaded first
-    // (the Pq.fitOrLoad cache-key rule)
-    loaded.computeIfAbsent((path, k), _ => {
-      val spark = df.sparkSession
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def tryLoad(): Option[KMeansModel] =
-        if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/metadata"))) None
-        else (try Some(load(path))
-              catch { case scala.util.control.NonFatal(_) => None })
-          .map { m =>
-            // loud shape check OUTSIDE the unreadable-artifact catch
-            // (the Pq header rule): the persisted model carries its
-            // requested k in its params, so a stale artifact fit for a
-            // different cell count fails HERE instead of silently
-            // serving the wrong geometry to every probe (or being
-            // silently refit over a path the caller mis-keyed)
-            require(m.getK == k,
-              s"quantizer artifact at $path was fit for k=${m.getK}, " +
-                s"requested k=$k — stale or mis-keyed artifact path")
-            m
-          }
-      tryLoad().getOrElse {
-        val m = fitCentroids(df, vecCol, k, seed, trainFraction)
-        graft.Ioops.commitDirAtomic(spark, path)(tmp => save(m, tmp))
-        tryLoad().getOrElse(throw new IllegalStateException(
-          s"quantizer artifact unreadable immediately after publish: $path"))
-      }
-    })
+                seed: Long = 42L, trainFraction: Double = 1.0): KMeansModel = {
+    val spark = df.sparkSession
+    val m = graft.Artifact.ensure(spark, path)(
+      graft.Artifact.readIf(spark, s"$path/metadata")(load(path)))(
+      tmp => save(fitCentroids(df, vecCol, k, seed, trainFraction), tmp))
+    // loud shape check on every serve, memo hit included: the
+    // persisted model carries its requested k in its params, so a
+    // stale artifact fit for a different cell count fails HERE instead
+    // of silently serving the wrong geometry to every probe (or being
+    // silently refit over a path the caller mis-keyed)
+    require(m.getK == k,
+      s"quantizer artifact at $path was fit for k=${m.getK}, " +
+        s"requested k=$k — stale or mis-keyed artifact path")
+    m
+  }
 
   /** Assign each [[Similarity.eligible]] vector to its nearest
     * centroid's cell — ineligible rows (NULL / NULL-element /

@@ -51,60 +51,32 @@ object IvfPq {
         col(vecCol).as("vec"), Similarity.l2Norm(col(vecCol)).as("norm"),
         col("pq_codes"))
 
-  private val indexMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), DataFrame]
-
   /** Build-or-load the MATERIALIZED index table — the artifact a
     * deployment stores at ingest (the module doc's write-path pass),
     * not a per-query recomputation: one scan + two pure projections,
     * written partitioned by `cell` so a probed-cell read is partition
     * pruning. Callers key `path` by source content stamp (same
-    * staleness rule as the quantizer artifacts); the per-JVM memo
-    * skips even the re-read. Fresh-build-then-read and warm load serve
-    * byte-identical rows (parquet round trip), so search results
+    * staleness rule as the quantizer artifacts); the
+    * [[graft.Artifact]] life cycle memoizes and publishes atomically
+    * (two JVMs racing the same stamp cannot interleave part files
+    * under one _SUCCESS — a mixed index directory duplicates
+    * shortlist candidates). An unreadable or wrong-schema directory
+    * behind a surviving _SUCCESS (truncated part file, external
+    * tamper, the residual crash window of a lost local-FS publish
+    * race nesting a temp dir inside the artifact) REBUILDS, and the
+    * rebuild's commitDirAtomic entry rule replaces the broken
+    * directory, so pollution self-heals on the next load. Column SET,
+    * not sequence: `cell` is a partition column and its resolved
+    * position is a layout detail. Fresh-build-then-read and warm load
+    * serve byte-identical rows (parquet round trip), so search results
     * cannot depend on which path ran. */
   def ensureIndex(corpus: DataFrame, idCol: String, vecCol: String,
-                  model: KMeansModel, cb: Pq.Codebooks, path: String): DataFrame =
-    indexMemo.computeIfAbsent((corpus.sparkSession, path), _ => {
-      val spark = corpus.sparkSession
-      val success = new org.apache.hadoop.fs.Path(s"$path/_SUCCESS")
-      val fs = success.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // integrity probe with rebuild-on-mismatch — the ensureBigramModel
-      // / ensurePairGraph doctrine: an unreadable or wrong-schema
-      // directory behind a surviving _SUCCESS (truncated part file,
-      // external tamper, the residual crash window of a lost local-FS
-      // publish race nesting a temp dir inside the artifact) REBUILDS
-      // instead of being trusted — and the rebuild's commitDirAtomic
-      // entry rule replaces the broken directory, so pollution
-      // self-heals on the next load instead of failing every read.
-      // Column SET, not sequence: `cell` is a partition column and its
-      // resolved position is a layout detail.
-      val want = Set("cell", "neighbor_id", "vec", "norm", "pq_codes")
-      def tryLoad(): Option[DataFrame] =
-        if (!fs.exists(success)) None
-        else try {
-          val df = spark.read.parquet(path)
-          if (df.columns.toSet == want) Some(df) else None
-        } catch { case scala.util.control.NonFatal(_) => None }
-      tryLoad().getOrElse {
-        // atomic publish (Ioops.commitDirAtomic): two JVMs racing the
-        // same stamp cannot interleave part files under one _SUCCESS —
-        // a mixed index directory duplicates shortlist candidates
-        graft.Ioops.commitDirAtomic(spark, path)(tmp =>
-          buildIndex(corpus, idCol, vecCol, model, cb)
-            .write.mode("overwrite").partitionBy("cell").parquet(tmp))
-        tryLoad().getOrElse(throw new IllegalStateException(
-          s"IVF-PQ index artifact unreadable immediately after build: $path"))
-      }
-    })
-
-  /** Drop memoized index frames whose path starts with `pathPrefix` —
-    * the [[graft.Tables.invalidate]] counterpart for long-lived
-    * sessions over a regenerated corpus (same hook contract as
-    * [[graft.text.Dedup.invalidatePairGraphs]]). */
-  def invalidateIndexes(pathPrefix: String): Unit = {
-    val it = indexMemo.keySet.iterator()
-    while (it.hasNext) if (it.next()._2.startsWith(pathPrefix)) it.remove()
+                  model: KMeansModel, cb: Pq.Codebooks, path: String): DataFrame = {
+    val spark = corpus.sparkSession
+    graft.Artifact.ensure(spark, path)(graft.Artifact.readTable(spark, path)(
+      _.toSet == Set("cell", "neighbor_id", "vec", "norm", "pq_codes")))(tmp =>
+      buildIndex(corpus, idCol, vecCol, model, cb)
+        .write.mode("overwrite").partitionBy("cell").parquet(tmp))
   }
 
   /** ANN top-k through both pruning stages. `model` and `cb` follow the

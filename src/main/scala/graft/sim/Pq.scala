@@ -144,35 +144,20 @@ object Pq {
       s"PQ save at $path: empty codebook (m=${cb.length}" +
         s"${if (cb.nonEmpty) s", min centroids=${cb.map(_.length).min}" else ""})" +
         " — refusing to stamp a degenerate '#pq' header")
-    writeAtomic(s"#pq m=${cb.length} k=${cb.map(_.length).max}\n" + render(cb),
-      path, conf)
-  }
-
-  /** [[save]] with the REQUESTED fit shape stamped into a header line:
-    * a fit may legitimately return fewer than `k` centroids (KMeans on
-    * a subspace with fewer distinct points), so the actual codebook
-    * shape cannot distinguish "fit for k=16" from "fit for k=32, got
-    * 16" — the header can, and [[fitOrLoad]] uses it to reject a
-    * stale artifact from a different requested shape LOUDLY. */
-  private def saveWithMeta(cb: Codebooks, m: Int, k: Int, path: String,
-                           conf: org.apache.hadoop.conf.Configuration): Unit =
-    writeAtomic(s"#pq m=$m k=$k\n" + render(cb), path, conf)
-
-  private def render(cb: Codebooks): String =
-    cb.map(_.map(_.map(d =>
-      java.lang.Double.toString(d)).mkString(",")).mkString(";")).mkString("\n")
-
-  private def writeAtomic(txt: String, path: String,
-                          conf: org.apache.hadoop.conf.Configuration): Unit = {
     // the shared file-publish protocol ([[graft.Ioops.commitFileAtomic]]):
     // entry-broken capture, job-unique temp, failed-write cleanup,
     // adopt-the-winner with post-rename verification — a racing loser
     // can never erase a complete codebook, and a non-race rename
     // failure is loud
     val p = new org.apache.hadoop.fs.Path(path)
-    graft.Ioops.commitFileAtomic(p.getFileSystem(conf), p)(out =>
-      out.write(txt.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+    graft.Ioops.commitFileAtomic(p.getFileSystem(conf), p)(_.write(
+      (s"#pq m=${cb.length} k=${cb.map(_.length).max}\n" + render(cb))
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8)))
   }
+
+  private def render(cb: Codebooks): String =
+    cb.map(_.map(_.map(d =>
+      java.lang.Double.toString(d)).mkString(",")).mkString(";")).mkString("\n")
 
   /** One Hadoop conf for EVERY filesystem touch in this module: the
     * probe, the write, and the read must resolve scheme-less paths
@@ -205,7 +190,7 @@ object Pq {
     * as text and takes line 1 as the header unconditionally) misparsed
     * it, skipping subspace 0 and shifting every row: a FALSE
     * correctness failure. Throwing here routes the legacy artifact
-    * through `tryLoad`'s unparseable→rebuild path instead, keeping the
+    * through the loader's unparseable→rebuild path instead, keeping the
     * engine and the oracle reading one format. */
   private def parseArtifact(txt: String): ((Int, Int), Codebooks) = {
     val lines = txt.split("\n")
@@ -238,41 +223,33 @@ object Pq {
     cb
   }
 
-  private val loaded = new java.util.concurrent.ConcurrentHashMap[(String, Int, Int), Codebooks]
-
-  /** Train-once/probe-many entry, mirroring [[Ivf.fitOrLoad]]. The cache
-    * key includes (m, k): two calls naming the same path with different
-    * shapes must collide loudly in `validated`, not silently share —
-    * a SHAPE mismatch still throws (caller error), while an UNPARSEABLE
-    * artifact (truncation, external tamper) rebuilds, the safe
-    * direction for a corruption gate. Probe via the Hadoop FS API
-    * (java.io.File misses on non-local defaultFS). */
+  /** Train-once/probe-many entry, mirroring [[Ivf.fitOrLoad]] (the
+    * [[graft.Artifact]] life cycle: an UNPARSEABLE artifact —
+    * truncation, external tamper — rebuilds, the safe direction for a
+    * corruption gate). The fit is published with the REQUESTED shape
+    * stamped into its header line: a fit may legitimately return fewer
+    * than `k` centroids (KMeans on a subspace with fewer distinct
+    * points), so the actual codebook shape cannot distinguish "fit for
+    * k=16" from "fit for k=32, got 16" — the header can. A SHAPE
+    * mismatch still throws (caller error), on every serve, memo hit
+    * included: two calls naming the same path with different shapes
+    * collide loudly, never silently share. */
   def fitOrLoad(df: DataFrame, vecCol: String, m: Int, k: Int, path: String,
-                seed: Long = 42L, trainFraction: Double = 1.0): Codebooks =
-    loaded.computeIfAbsent((path, m, k), _ => {
-      val conf = df.sparkSession.sparkContext.hadoopConfiguration
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(conf)
-      def tryLoad(): Option[Codebooks] =
-        if (!fs.exists(p)) None
-        else (try Some(parseArtifact(readText(path, conf)))
-              catch { case scala.util.control.NonFatal(_) => None })
-          .map { case ((am, ak), cb) =>
-            // shape mismatch: still loud. The header carries the
-            // REQUESTED shape, so a stale artifact fit for a smaller k
-            // cannot silently satisfy a larger-k request (the actual
-            // centroid counts cannot distinguish those two cases)
-            require(am == m && ak == k,
-              s"codebook artifact at $path was fit for (m=$am, k=$ak), " +
-                s"requested (m=$m, k=$k) — stale or mis-keyed artifact path")
-            validated(cb, m, k, path)
-          }
-      tryLoad().getOrElse {
-        saveWithMeta(fit(df, vecCol, m, k, seed, trainFraction), m, k, path, conf)
-        tryLoad().getOrElse(throw new IllegalStateException(
-          s"codebook artifact unreadable immediately after publish: $path"))
-      }
-    })
+                seed: Long = 42L, trainFraction: Double = 1.0): Codebooks = {
+    val spark = df.sparkSession
+    val ((am, ak), cb) = graft.Artifact.ensureFile(spark, path)(
+      graft.Artifact.readIf(spark, path)(
+        parseArtifact(readText(path, spark.sparkContext.hadoopConfiguration))))(
+      _.write((s"#pq m=$m k=$k\n" + render(fit(df, vecCol, m, k, seed, trainFraction)))
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+    // The header carries the REQUESTED shape, so a stale artifact fit
+    // for a smaller k cannot silently satisfy a larger-k request (the
+    // actual centroid counts cannot distinguish those two cases)
+    require(am == m && ak == k,
+      s"codebook artifact at $path was fit for (m=$am, k=$ak), " +
+        s"requested (m=$m, k=$k) — stale or mis-keyed artifact path")
+    validated(cb, m, k, path)
+  }
 
   /** ONE subspace's k×sub centroid table as a literal — every consumer
     * binds per-subspace literals instead of `typedLit(whole codebook)

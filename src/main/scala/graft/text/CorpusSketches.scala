@@ -55,17 +55,6 @@ object CorpusSketches {
     else keyed.stat.bloomFilter("fp_h", expected, fpp)
   }
 
-  private val loadedBlooms =
-    new java.util.concurrent.ConcurrentHashMap[String, BloomFilter]
-
-  /** Drop memoized filters whose path starts with `pathPrefix` — the
-    * [[graft.Tables.invalidate]] counterpart so a long-lived ingest
-    * service doesn't pin every old stamp generation forever. */
-  def invalidateBlooms(pathPrefix: String): Unit = {
-    val it = loadedBlooms.keySet.iterator()
-    while (it.hasNext) if (it.next().startsWith(pathPrefix)) it.remove()
-  }
-
   /** Build-or-load the corpus fingerprint bloom as a PERSISTED
     * artifact — the maintained sketch [[fingerprintBloom]]'s doc
     * promises ("built once and updated per ingest, not recomputed"),
@@ -73,44 +62,23 @@ object CorpusSketches {
     * instead of re-scanning yesterday's corpus. Callers key `path` by
     * a source content stamp ([[graft.Ioops.sourceStamp]]) exactly like
     * the ANN artifacts, so a regenerated corpus rebuilds instead of
-    * serving a stale filter. Crash-safe write: serialize to a
-    * job-unique `<path>.tmp-<uuid>`, then rename — a half-written file
-    * is never trusted (an unreadable artifact rebuilds), and a
-    * complete artifact is never deleted by a racing rebuild. Build-then-save and load produce identical
-    * probe behavior (the sketch serialization round-trips the bitset
-    * verbatim — pinned in SketchArtifactSpec). */
+    * serving a stale filter. The [[graft.Artifact]] life cycle: any
+    * unreadable artifact (truncated stream, checksum mismatch, unknown
+    * version header — IllegalArgumentException, not IOException)
+    * rebuilds, and the file publish ([[graft.Ioops.commitFileAtomic]])
+    * never exposes a half-written file nor deletes a racing
+    * publisher's complete one. Build-then-save and load produce
+    * identical probe behavior (the sketch serialization round-trips
+    * the bitset verbatim — pinned in SketchArtifactSpec). */
   def bloomOrLoad(df: DataFrame, textCol: String, expected: Long,
-                  fpp: Double, path: String): BloomFilter =
-    loadedBlooms.computeIfAbsent(path, _ => {
-      val conf = df.sparkSession.sparkContext.hadoopConfiguration
+                  fpp: Double, path: String): BloomFilter = {
+    val spark = df.sparkSession
+    graft.Artifact.ensureFile(spark, path)(graft.Artifact.readIf(spark, path) {
       val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(conf)
-      def tryLoad(): Option[BloomFilter] =
-        if (!fs.exists(p)) None
-        else {
-          val in = fs.open(p)
-          // any unreadable artifact (truncated stream, checksum
-          // mismatch, unknown version header — IllegalArgumentException,
-          // not IOException) reads as "no artifact" → rebuild: the safe
-          // direction for a staleness/corruption gate
-          try Some(BloomFilter.readFrom(in))
-          catch { case scala.util.control.NonFatal(_) => None }
-          finally in.close()
-        }
-      tryLoad().getOrElse {
-        val bloom = fingerprintBloom(df, textCol, expected, fpp)
-        // the shared file-publish protocol
-        // ([[graft.Ioops.commitFileAtomic]]): entry-broken capture,
-        // job-unique temp (a FIXED `.tmp` name would let two
-        // cold-starting JVMs truncate/interleave one inode into
-        // published garbage), failed-write cleanup, and
-        // adopt-the-winner with a POST-RENAME verification — a rename
-        // failing for a non-race reason is loud instead of silently
-        // leaving every later cold JVM to rebuild from a corpus scan
-        graft.Ioops.commitFileAtomic(fs, p)(out => bloom.writeTo(out))
-        bloom
-      }
-    })
+      val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
+      try BloomFilter.readFrom(in) finally in.close()
+    })(out => fingerprintBloom(df, textCol, expected, fpp).writeTo(out))
+  }
 
   /** Incremental-dedup pre-filter: keep only documents whose
     * fingerprint is NOT (probably) in `seen`. The serialized filter

@@ -114,41 +114,18 @@ object Dedup {
         col("n_boiler").cast("double") / col("n_spans").cast("double")))
   }
 
-  private val loadedSpanBlocklists = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), DataFrame]
-
-  /** Drop memoized span blocklists whose path starts with `pathPrefix`. */
-  def invalidateSpanBlocklists(pathPrefix: String): Unit = {
-    val it = loadedSpanBlocklists.keySet.iterator()
-    while (it.hasNext) if (it.next()._2.startsWith(pathPrefix)) it.remove()
-  }
-
   /** Build-or-load the [[crossDocSpans]] boilerplate blocklist as a
     * persisted artifact — the C4-style span table is corpus-level
     * state exactly like the pair graph and the bigram LM: one
     * span-keyed shuffle over the whole corpus at ingest, then every
     * strip/coverage/report consumer loads it. Same life cycle as
-    * [[ensurePairGraph]]: stamp-keyed path, per-JVM memo, integrity
-    * probe with rebuild-on-mismatch, atomic publish. */
+    * [[ensurePairGraph]] ([[graft.Artifact]]): stamp-keyed path,
+    * per-JVM memo, integrity probe with rebuild-on-mismatch, atomic
+    * publish. */
   def ensureSpanBlocklist(df: DataFrame, textCol: String,
                           window: Int, minDocs: Long, path: String): DataFrame =
-    loadedSpanBlocklists.computeIfAbsent((df.sparkSession, path), _ => {
-      val spark = df.sparkSession
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def tryLoad(): Option[DataFrame] =
-        if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/_SUCCESS"))) None
-        else try {
-          val loaded = spark.read.parquet(path)
-          if (loaded.columns.toSeq == Seq("span", "n_docs")) Some(loaded) else None
-        } catch { case scala.util.control.NonFatal(_) => None }
-      tryLoad().getOrElse {
-        graft.Ioops.commitDirAtomic(spark, path)(tmp =>
-          crossDocSpans(df, textCol, window, minDocs)
-            .write.mode("overwrite").parquet(tmp))
-        spark.read.parquet(path)
-      }
-    })
+    graft.Artifact.table(df.sparkSession, path, Seq("span", "n_docs"))(
+      crossDocSpans(df, textCol, window, minDocs))
 
   /** Distinct word n-gram shingles per document: (id, shingle) rows. */
   def shingles(df: DataFrame, idCol: String, textCol: String, n: Int = 3): DataFrame = {
@@ -1897,16 +1874,29 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
   }
 
-  private val loadedPairGraphs = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), ((DataFrame, DataFrame), String)]
+  /** Canonical `_params` stamp of the ngram pair-graph artifact — ONE
+    * definition shared by [[ensurePairGraph]] (which writes and
+    * verifies it) and every external witness (RaceCanary asserts the
+    * on-disk stamp byte-for-byte), so the format cannot drift between
+    * generator and witness (the parameters-next-to-artifacts defect
+    * class; ADVICE r12 #2). `maxCandidatePairs` joins the stamp only
+    * on the banded route — the cap decides where the route flips, so
+    * it parameterizes banded recall but not exact values. */
+  private[graft] def ngramPairGraphStamp(n: Int, threshold: Double, route: String,
+      maxCandidatePairs: Long = DefaultMaxCandidatePairs): String =
+    s"kind=ngram;n=$n;threshold=$threshold;route=$route" +
+      (if (route == "banded") s";maxCandidatePairs=$maxCandidatePairs" else "")
 
-  /** Drop memoized pair graphs whose path starts with `pathPrefix` —
-    * the [[graft.Tables.invalidate]] counterpart for long-lived
-    * sessions over a regenerated corpus. */
-  def invalidatePairGraphs(pathPrefix: String): Unit = {
-    val it = loadedPairGraphs.keySet.iterator()
-    while (it.hasNext) if (it.next()._2.startsWith(pathPrefix)) it.remove()
-  }
+  /** [[ngramPairGraphStamp]]'s sibling for the minhash artifact: the
+    * df cap joins the stamp ONLY when set, so default callers keep
+    * presenting the stamp every pre-cap artifact already carries, and
+    * an auto-resolved cap stamps IDENTICALLY to the same manual cap
+    * (same blacklist by construction — the artifacts are
+    * interchangeable). */
+  private[graft] def minhashPairGraphStamp(numHashes: Int, bands: Int,
+      minEstimate: Double, maxShingleDf: Long = Long.MaxValue): String =
+    s"kind=minhash;numHashes=$numHashes;bands=$bands;minEstimate=$minEstimate" +
+      (if (maxShingleDf == Long.MaxValue) "" else s";maxShingleDf=$maxShingleDf")
 
   /** Build-or-load the exact n-gram Jaccard pair graph AND its
     * connected-component assignment as ONE persisted artifact —
@@ -1935,8 +1925,9 @@ object Dedup {
     * (written, then read back), so the two halves are consistent even
     * if the in-flight pair plan were nondeterministic. Parquet
     * round-trips longs and 4-dp-rounded doubles exactly, so
-    * build-then-read and warm load serve byte-identical rows. */
-  /** `maxCandidatePairs` / `routeDense` pass through to
+    * build-then-read and warm load serve byte-identical rows.
+    *
+    * `maxCandidatePairs` / `routeDense` pass through to
     * [[ngramJaccardPairs]] — without them a dense corpus could never
     * build this artifact (the loud density failure had no thread
     * through here). `routeDense = true` changes RECALL, so it is a
@@ -1955,30 +1946,6 @@ object Dedup {
     * different artifact. A `routeDense = false` caller accepts only
     * the exact stamp (cap-independent: exact values are exact under
     * any cap). */
-  /** Canonical `_params` stamp of the ngram pair-graph artifact — ONE
-    * definition shared by [[ensurePairGraph]] (which writes and
-    * verifies it) and every external witness (RaceCanary asserts the
-    * on-disk stamp byte-for-byte), so the format cannot drift between
-    * generator and witness (the parameters-next-to-artifacts defect
-    * class; ADVICE r12 #2). `maxCandidatePairs` joins the stamp only
-    * on the banded route — the cap decides where the route flips, so
-    * it parameterizes banded recall but not exact values. */
-  private[graft] def ngramPairGraphStamp(n: Int, threshold: Double, route: String,
-      maxCandidatePairs: Long = DefaultMaxCandidatePairs): String =
-    s"kind=ngram;n=$n;threshold=$threshold;route=$route" +
-      (if (route == "banded") s";maxCandidatePairs=$maxCandidatePairs" else "")
-
-  /** [[ngramPairGraphStamp]]'s sibling for the minhash artifact: the
-    * df cap joins the stamp ONLY when set, so default callers keep
-    * presenting the stamp every pre-cap artifact already carries, and
-    * an auto-resolved cap stamps IDENTICALLY to the same manual cap
-    * (same blacklist by construction — the artifacts are
-    * interchangeable). */
-  private[graft] def minhashPairGraphStamp(numHashes: Int, bands: Int,
-      minEstimate: Double, maxShingleDf: Long = Long.MaxValue): String =
-    s"kind=minhash;numHashes=$numHashes;bands=$bands;minEstimate=$minEstimate" +
-      (if (maxShingleDf == Long.MaxValue) "" else s";maxShingleDf=$maxShingleDf")
-
   def ensurePairGraph(docs: DataFrame, idCol: String, textCol: String,
                       n: Int, threshold: Double,
                       path: String,
@@ -2079,46 +2046,6 @@ object Dedup {
   private val adoptionLogged =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  private val loadedTables = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), DataFrame]
-
-  /** Drop memoized single-table artifacts (shingle sets, simhash
-    * signatures, TF vectors) whose path starts with `pathPrefix` — the
-    * [[graft.Tables.invalidate]] counterpart every sibling memo family
-    * carries ([[invalidatePairGraphs]] etc.), so a long-lived session
-    * over a regenerated corpus can flush ALL artifact families, not
-    * all-but-these. */
-  def invalidateTables(pathPrefix: String): Unit = {
-    val it = loadedTables.keySet.iterator()
-    while (it.hasNext) if (it.next()._2.startsWith(pathPrefix)) it.remove()
-  }
-
-  /** ONE definition of the single-table artifact life cycle (the
-    * [[ensurePairGraph]] / [[TextOps.ensureBigramModel]] doctrine for
-    * a plain parquet table): stamp-keyed path, per-JVM memo, integrity
-    * probe (schema + readability) with rebuild-not-trust, atomic
-    * publish. Shared by the shingle-set and simhash-signature
-    * artifacts so the protocol cannot drift between copies. */
-  private[text] def ensureTable(spark: org.apache.spark.sql.SparkSession,
-                                path: String, cols: Seq[String])(
-                                build: => DataFrame): DataFrame =
-    loadedTables.computeIfAbsent((spark, path), _ => {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def tryLoad(): Option[DataFrame] =
-        if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/_SUCCESS"))) None
-        else try {
-          val df = spark.read.parquet(path)
-          if (df.columns.toSeq == cols) Some(df) else None
-        } catch { case scala.util.control.NonFatal(_) => None }
-      tryLoad().getOrElse {
-        graft.Ioops.commitDirAtomic(spark, path)(tmp =>
-          build.write.mode("overwrite").parquet(tmp))
-        tryLoad().getOrElse(throw new IllegalStateException(
-          s"table artifact unreadable immediately after build: $path"))
-      }
-    })
-
   /** Build-or-load a persisted DISTINCT shingle-hash set (one
     * `shingle_h` long column) for a document set — the
     * benchmark/eval-set artifact every decontamination query probes.
@@ -2130,7 +2057,7 @@ object Dedup {
     * it for the bloom literal (a tiny-file scan, no shuffle). */
   def ensureShingleSet(docs: DataFrame, idCol: String, textCol: String,
                        n: Int, path: String): DataFrame =
-    ensureTable(docs.sparkSession, path, Seq("shingle_h"))(
+    graft.Artifact.table(docs.sparkSession, path, Seq("shingle_h"))(
       shingleHashes(docs, idCol, textCol, n)
         .select(col("shingle_h")).distinct())
 
@@ -2144,7 +2071,7 @@ object Dedup {
     * re-derives from this table. */
   def ensureSimhashSigs(docs: DataFrame, idCol: String, textCol: String,
                         path: String): DataFrame =
-    ensureTable(docs.sparkSession, path, Seq(idCol, "simhash"))(
+    graft.Artifact.table(docs.sparkSession, path, Seq(idCol, "simhash"))(
       simhash(docs, idCol, textCol))
 
   /** Shared build-or-load core for the two pair-graph artifacts: ONE
@@ -2152,8 +2079,9 @@ object Dedup {
     * atomically TOGETHER so a loader can never see pairs of one
     * generation next to components of another), the integrity probe,
     * and the derive-components-from-PERSISTED-pairs rule (consistent
-    * halves even if the in-flight pair plan were nondeterministic). */
-  /** The build-or-load core with an OPTIONAL persisted `signatures`
+    * halves even if the in-flight pair plan were nondeterministic).
+    *
+    * The build-or-load core with an OPTIONAL persisted `signatures`
     * half (schema, builder). When present, signatures are written and
     * read back BEFORE the pair build, and `pairsFrom` receives the
     * persisted frame — the derivation chain signatures → pairs →
@@ -2171,8 +2099,9 @@ object Dedup {
     * caller collision — two parameterizations sharing one path — and
     * fails loudly WITHOUT touching the artifact (a rebuild would
     * silently clobber the other caller's data); an accepted stamp
-    * proceeds to the per-half schema/readability probes. */
-  /** Returns (pairs, components, stamp) — the stamp so a caller that
+    * proceeds to the per-half schema/readability probes.
+    *
+    * Returns (pairs, components, stamp) — the stamp so a caller that
     * accepts several parameterizations can see WHICH one it was served
     * (the auto-adoption visibility rule in [[ensureMinhashPairGraph]]). */
   private def ensureGraphArtifact(spark: org.apache.spark.sql.SparkSession,
@@ -2180,99 +2109,88 @@ object Dedup {
                                   sigHalf: Option[(Seq[String], () => DataFrame)],
                                   accepted: Set[String], wantDesc: String)(
                                   pairsFrom: Option[DataFrame] => (DataFrame, String)): (DataFrame, DataFrame, String) = {
-    val ((pairs, comps), stamped) =
-      loadedPairGraphs.computeIfAbsent((spark, path), _ => {
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        def half(sub: String, cols: Seq[String]): Option[DataFrame] =
-          if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/$sub/_SUCCESS"))) None
-          else try {
-            val df = spark.read.parquet(s"$path/$sub")
-            if (df.columns.toSeq == cols) Some(df) else None
-          } catch { case scala.util.control.NonFatal(_) => None }
-        def readParams(): Option[String] = {
-          val p = new org.apache.hadoop.fs.Path(s"$path/_params")
-          if (!fs.exists(p)) None
-          else try {
-            val in = fs.open(p)
-            try Some(new String(in.readAllBytes(),
-              java.nio.charset.StandardCharsets.UTF_8))
-            finally in.close()
-          } catch { case scala.util.control.NonFatal(e) =>
-            // a PRESENT stamp that cannot be read is NOT "missing":
-            // mapping it to None would route into the rebuild path,
-            // whose commitDirAtomic deletes the destination — i.e. a
-            // transient IO error reading another parameterization's
-            // healthy artifact would silently clobber it, the exact
-            // hazard the stamp exists to prevent. Loud beats silent;
-            // the stamp is committed atomically with the data, so a
-            // present-but-unreadable one means external damage or a
-            // transient fault — both operator territory, not rebuild
-            // territory.
-            throw new IllegalStateException(
-              s"pair-graph parameter stamp at $path/_params exists but cannot " +
-                "be read — refusing to guess between 'transient IO fault' and " +
-                "'damaged artifact'; inspect (and if damaged, delete) the " +
-                s"artifact directory: ${e.getMessage}", e)
-          }
-        }
-        def tryLoad(): Option[((DataFrame, DataFrame), String)] =
-          readParams().flatMap { stamp =>
-            // Loud BEFORE the rebuild decision: an unaccepted stamp on
-            // a readable artifact is a different parameterization's
-            // artifact, not a broken one.
-            require(accepted.contains(stamp),
-              s"pair-graph artifact at $path was built with parameters [$stamp] " +
-                s"but this caller requires [$wantDesc] — a different " +
-                "parameterization is a DIFFERENT artifact; give it its own path")
-            if (!sigHalf.forall(sc => half("signatures", sc._1).isDefined)) None
-            else for {
-              p <- half("pairs", pairCols)
-              c <- half("components", Seq("node", "component"))
-            } yield ((p, c), stamp)
-          }
-        tryLoad().getOrElse {
-          graft.Ioops.commitDirAtomic(spark, path) { tmp =>
-            val sigPersisted = sigHalf.map { case (_, build) =>
-              build().write.mode("overwrite").parquet(s"$tmp/signatures")
-              spark.read.parquet(s"$tmp/signatures")
-            }
-            val (pairsDf, actualParams) = pairsFrom(sigPersisted)
-            pairsDf.write.mode("overwrite").parquet(s"$tmp/pairs")
-            // the pair computation's checkpoints (the exact route's
-            // exploded join frame, the banded route's base/candidate
-            // frames) have no consumer past the parquet just written —
-            // everything below reads persisted copies. Exec.release
-            // walks the derived plan and reaps them in both storage
-            // modes (r15 review; the deeper intermediates each released
-            // at their own dead point inside the computation).
-            graft.ops.Exec.release(pairsDf)
-            val persisted = spark.read.parquet(s"$tmp/pairs")
-            val comps = graft.ops.Components
-              .connectedComponents(persisted, "id_a", "id_b")
-            comps.write.mode("overwrite").parquet(s"$tmp/components")
-            // the star path materializes its edge input + converged
-            // state (a graph past the local-solve guard — exactly the
-            // 100-TB build); dead once the parquet lands, same reap
-            // rule as the pairs frame above
-            graft.ops.Exec.release(comps)
-            val out = fs.create(new org.apache.hadoop.fs.Path(s"$tmp/_params"), true)
-            try out.write(actualParams.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            finally out.close()
-          }
-          tryLoad().getOrElse(throw new IllegalStateException(
-            s"pair-graph artifact unreadable immediately after build: $path"))
-        }
-      })
-    // The memo hit path must verify too: computeIfAbsent only runs the
-    // probe for the FIRST caller per (session, path) — a later caller
-    // with different parameters would otherwise be served the memoized
+    // Loud BEFORE the rebuild decision: an unaccepted stamp on a
+    // readable artifact is a different parameterization's artifact,
+    // not a broken one.
+    def verify(stamp: String): Unit =
+      require(accepted.contains(stamp),
+        s"pair-graph artifact at $path carries parameters [$stamp] but this " +
+          s"caller requires [$wantDesc] — a different parameterization is a " +
+          "DIFFERENT artifact; give it its own path")
+    def half(sub: String, cols: Seq[String]): Option[DataFrame] =
+      graft.Artifact.readTable(spark, s"$path/$sub")(_ == cols)
+    def readParams(): Option[String] = {
+      val p = new org.apache.hadoop.fs.Path(s"$path/_params")
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (!fs.exists(p)) None
+      else try {
+        val in = fs.open(p)
+        try Some(new String(in.readAllBytes(),
+          java.nio.charset.StandardCharsets.UTF_8))
+        finally in.close()
+      } catch { case scala.util.control.NonFatal(e) =>
+        // a PRESENT stamp that cannot be read is NOT "missing":
+        // mapping it to None would route into the rebuild path,
+        // whose commitDirAtomic deletes the destination — i.e. a
+        // transient IO error reading another parameterization's
+        // healthy artifact would silently clobber it, the exact
+        // hazard the stamp exists to prevent. Loud beats silent;
+        // the stamp is committed atomically with the data, so a
+        // present-but-unreadable one means external damage or a
+        // transient fault — both operator territory, not rebuild
+        // territory.
+        throw new IllegalStateException(
+          s"pair-graph parameter stamp at $path/_params exists but cannot " +
+            "be read — refusing to guess between 'transient IO fault' and " +
+            "'damaged artifact'; inspect (and if damaged, delete) the " +
+            s"artifact directory: ${e.getMessage}", e)
+      }
+    }
+    def load(): Option[((DataFrame, DataFrame), String)] =
+      readParams().flatMap { stamp =>
+        verify(stamp)
+        if (!sigHalf.forall(sc => half("signatures", sc._1).isDefined)) None
+        else for {
+          p <- half("pairs", pairCols)
+          c <- half("components", Seq("node", "component"))
+        } yield ((p, c), stamp)
+      }
+    val ((pairs, comps), stamped) = graft.Artifact.ensure(spark, path)(load()) { tmp =>
+      val sigPersisted = sigHalf.map { case (_, build) =>
+        build().write.mode("overwrite").parquet(s"$tmp/signatures")
+        spark.read.parquet(s"$tmp/signatures")
+      }
+      val (pairsDf, actualParams) = pairsFrom(sigPersisted)
+      pairsDf.write.mode("overwrite").parquet(s"$tmp/pairs")
+      // the pair computation's checkpoints (the exact route's
+      // exploded join frame, the banded route's base/candidate
+      // frames) have no consumer past the parquet just written —
+      // everything below reads persisted copies. Exec.release
+      // walks the derived plan and reaps them in both storage
+      // modes (r15 review; the deeper intermediates each released
+      // at their own dead point inside the computation).
+      graft.ops.Exec.release(pairsDf)
+      val persisted = spark.read.parquet(s"$tmp/pairs")
+      val comps = graft.ops.Components
+        .connectedComponents(persisted, "id_a", "id_b")
+      comps.write.mode("overwrite").parquet(s"$tmp/components")
+      // the star path materializes its edge input + converged
+      // state (a graph past the local-solve guard — exactly the
+      // 100-TB build); dead once the parquet lands, same reap
+      // rule as the pairs frame above
+      graft.ops.Exec.release(comps)
+      val params = new org.apache.hadoop.fs.Path(s"$tmp/_params")
+      val out = params.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .create(params, true)
+      try out.write(actualParams.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+    }
+    // The memo hit path must verify too: the probe above runs only for
+    // the FIRST caller per (session, path) — a later caller with
+    // different parameters would otherwise be served the memoized
     // frames with no check at all (the same silent-collision hazard,
     // one cache closer).
-    require(accepted.contains(stamped),
-      s"memoized pair-graph at $path carries parameters [$stamped] but this " +
-        s"caller requires [$wantDesc] — a different parameterization is a " +
-        "DIFFERENT artifact; give it its own path")
+    verify(stamped)
     (pairs, comps, stamped)
   }
 }

@@ -92,7 +92,7 @@ object TextOps {
 
   /** Build-or-load the persisted TF-vector table (idCol, tf) — the
     * ingest artifact the TF-cosine near-dup decision query bands
-    * ([[Dedup.ensureTable]] life cycle). The xxhash64 token bucketing
+    * ([[graft.Artifact.table]] life cycle). The xxhash64 token bucketing
     * stays engine-side in the artifact build (kernel-vs-spec pinned
     * by SigKernelsSpec and the text_tf_sound witness); buckets,
     * blocking, cosine, and the threshold downstream are re-derivable
@@ -102,7 +102,7 @@ object TextOps {
   def ensureTfVectors(docs: org.apache.spark.sql.DataFrame, idCol: String,
                       textCol: String, dim: Int,
                       path: String): org.apache.spark.sql.DataFrame =
-    Dedup.ensureTable(docs.sparkSession, path, Seq(idCol, "tf"))(
+    graft.Artifact.table(docs.sparkSession, path, Seq(idCol, "tf"))(
       tfVectors(docs, idCol, textCol, dim))
 
   /** The explode + groupBy formulation of [[tfVectors]] — kept as the
@@ -326,59 +326,29 @@ object TextOps {
                    textCol: String): org.apache.spark.sql.DataFrame =
     countsFromToks(materializedToks(model, Seq.empty, textCol))
 
-  private val loadedModels = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]
-
-  /** Drop memoized model frames whose path starts with `pathPrefix` —
-    * the [[graft.Tables.invalidate]] counterpart for long-lived
-    * sessions over a regenerated lake (stamped paths make this rarely
-    * needed, but the memo must not pin old generations forever). */
-  def invalidateModels(pathPrefix: String): Unit = {
-    val it = loadedModels.keySet.iterator()
-    while (it.hasNext) if (it.next()._2.startsWith(pathPrefix)) it.remove()
-  }
-
   /** Build-or-load the bigram count table as a PERSISTED artifact —
     * "the model is a materialized count table" made literal: train at
     * ingest, write once, score everywhere ([[bigramNllWithModel]]).
-    * Callers key `path` by a source content stamp (the ANN-artifact
-    * staleness rule); the per-JVM memo skips even the re-read.
-    * Build-then-read and warm load serve byte-identical rows (parquet
-    * round-trips longs and strings exactly). An unreadable or
-    * wrong-schema artifact (truncated part file behind a surviving
-    * _SUCCESS, external tamper) REBUILDS instead of being trusted —
-    * same doctrine as [[CorpusSketches.bloomOrLoad]]. */
+    * Callers key `path` by a source content stamp; the
+    * [[graft.Artifact]] life cycle memoizes, rebuilds an unreadable or
+    * wrong-schema artifact instead of trusting it, and publishes
+    * atomically. Build-then-read and warm load serve byte-identical
+    * rows (parquet round-trips longs and strings exactly). */
   def ensureBigramModel(model: org.apache.spark.sql.DataFrame,
-                        textCol: String, path: String): org.apache.spark.sql.DataFrame =
-    loadedModels.computeIfAbsent((model.sparkSession, path), _ => {
-      val spark = model.sparkSession
-      val success = new org.apache.hadoop.fs.Path(s"$path/_SUCCESS")
-      val fs = success.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def tryLoad(): Option[org.apache.spark.sql.DataFrame] =
-        if (!fs.exists(success)) None
-        else try {
-          val df = spark.read.parquet(path)
-          // footer/schema resolution is the cheap integrity probe; a
-          // mismatched or unreadable layout falls through to rebuild
-          if (df.columns.toSeq == Seq("a", "b", "n_ab")) Some(df) else None
-        } catch { case scala.util.control.NonFatal(_) => None }
-      tryLoad().getOrElse {
-        // atomic publish (Ioops.commitDirAtomic): concurrent JVMs
-        // cold-starting on the same stamp cannot interleave overwrite
-        // writes into one mixed directory
-        graft.Ioops.commitDirAtomic(spark, path) { tmp =>
-          val counts = bigramCounts(model, textCol)
-          counts.write.mode("overwrite").parquet(tmp)
-          // the count build's token checkpoint (materializedToks) has
-          // no consumer past the parquet just written — release walks
-          // the derived plan and reaps it in both storage modes
-          // instead of pinning one corpus-sized copy per model build
-          // (r15 review: the ensureGraphArtifact reap rule)
-          graft.ops.Exec.release(counts)
-        }
-        spark.read.parquet(path)
-      }
-    })
+                        textCol: String, path: String): org.apache.spark.sql.DataFrame = {
+    val spark = model.sparkSession
+    graft.Artifact.ensure(spark, path)(
+      graft.Artifact.readTable(spark, path)(_ == Seq("a", "b", "n_ab"))) { tmp =>
+      val counts = bigramCounts(model, textCol)
+      counts.write.mode("overwrite").parquet(tmp)
+      // the count build's token checkpoint (materializedToks) has
+      // no consumer past the parquet just written — release walks
+      // the derived plan and reaps it in both storage modes
+      // instead of pinning one corpus-sized copy per model build
+      // (r15 review: the ensureGraphArtifact reap rule)
+      graft.ops.Exec.release(counts)
+    }
+  }
 
   private def bigramsOf(t: org.apache.spark.sql.DataFrame,
                         cols: Seq[Column]): org.apache.spark.sql.DataFrame =

@@ -142,7 +142,7 @@ class ArtifactCanarySpec extends AnyFunSuite {
     // without the invalidate, the per-JVM memo would keep serving the
     // old frame over the old files
     fs.delete(new org.apache.hadoop.fs.Path(p), true)
-    graft.text.Dedup.invalidateTables(p)
+    Artifact.invalidate(p)
     val n2 = graft.text.Dedup.ensureShingleSet(
       docs.filter(col("doc_id") <= 2), "doc_id", "text", n = 3, p).count()
     assert(n2 < n1, s"expected a fresh, smaller shingle set; got $n2 vs $n1")
@@ -155,5 +155,27 @@ class ArtifactCanarySpec extends AnyFunSuite {
     assert(sh.columns.toSeq == Seq("shingle_h"))
     val n = sh.count()
     assert(n == sh.distinct().count() && n > 0)
+  }
+
+  test("every oracle artifact path lies under the one artifact root") {
+    val root = new java.io.File(System.getProperty("java.io.tmpdir"), "graft-models").getPath + "/"
+    val subs = graft.queries.TextSim.oracleSubstitutions(spark, freshDir("subs"))
+    assert(subs.nonEmpty)
+    subs.foreach { case (token, path) =>
+      assert(path.startsWith(root), s"$token -> $path is outside $root")
+    }
+  }
+
+  test("Artifact.invalidate flushes a memoized pq codebook: a rewritten artifact is re-read") {
+    val p = freshDir("pqinv") + "/cb"
+    val cb = graft.sim.Pq.fitOrLoad(emb, "embedding", m = 2, k = 4, p)
+    // rewrite in place with a different (m=2, k=4) codebook: the memo
+    // keeps serving the old fit until the path is invalidated
+    val other = Array.tabulate(2, 4, 4)((j, c, x) => (j * 100 + c * 10 + x).toDouble)
+    graft.sim.Pq.save(other, p)
+    assert(graft.sim.Pq.fitOrLoad(emb, "embedding", m = 2, k = 4, p) eq cb)
+    Artifact.invalidate(p)
+    val reloaded = graft.sim.Pq.fitOrLoad(emb, "embedding", m = 2, k = 4, p)
+    assert(reloaded.flatten.flatten.toSeq == other.flatten.flatten.toSeq)
   }
 }

@@ -109,7 +109,7 @@ class IvfPqSpec extends AnyFunSuite {
     // discovery cannot reconcile (or which poisons the resolved schema)
     val nested = new java.io.File(idxPath, "idx.tmp-deadbeef")
     emb.limit(3).write.parquet(nested.toString)
-    IvfPq.invalidateIndexes(idxPath)
+    graft.Artifact.invalidate(idxPath)
     val healed = IvfPq.ensureIndex(emb, "vec_id", "embedding", model, cb, idxPath)
       .orderBy("neighbor_id").collect().map(_.toSeq).toSeq
     assert(healed == first, "rebuilt index must serve the same rows")

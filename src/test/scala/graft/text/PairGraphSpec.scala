@@ -53,7 +53,7 @@ class PairGraphSpec extends AnyFunSuite {
     val again = Dedup.ensurePairGraph(docs, "doc_id", "text", 3, 0.5, path)
     assert(again._1 eq pairs)
     // cold re-load in the same session (memo dropped): same rows
-    Dedup.invalidatePairGraphs(path)
+    graft.Artifact.invalidate(path)
     val (reloaded, _) = Dedup.ensurePairGraph(docs, "doc_id", "text", 3, 0.5, path)
     assert(collectedPairs(reloaded) == collectedPairs(pairs))
   }
@@ -66,7 +66,7 @@ class PairGraphSpec extends AnyFunSuite {
     val (pairs, _) = Dedup.ensurePairGraph(docs, "doc_id", "text", 3, 0.5, path)
     val want = collectedPairs(pairs)
     // clobber one half with a wrong-schema frame behind a _SUCCESS
-    Dedup.invalidatePairGraphs(path)
+    graft.Artifact.invalidate(path)
     spark.range(3).toDF("not_the_schema")
       .write.mode("overwrite").parquet(s"$path/components")
     val (p2, c2) = Dedup.ensurePairGraph(docs, "doc_id", "text", 3, 0.5, path)
@@ -119,14 +119,14 @@ class PairGraphSpec extends AnyFunSuite {
     assert(eMemo.getMessage.contains("threshold=0.5") &&
       eMemo.getMessage.contains("threshold=0.7"), eMemo.getMessage)
     // cold-probe path verifies: memo dropped, same mismatch
-    Dedup.invalidatePairGraphs(path)
+    graft.Artifact.invalidate(path)
     val eCold = intercept[IllegalArgumentException] {
       Dedup.ensurePairGraph(docs, "doc_id", "text", 3, 0.7, path)
     }
     assert(eCold.getMessage.contains("DIFFERENT artifact"), eCold.getMessage)
     // the refusal must not have touched the artifact: the original
     // parameterization still loads the original rows
-    Dedup.invalidatePairGraphs(path)
+    graft.Artifact.invalidate(path)
     val (again, _) = Dedup.ensurePairGraph(docs, "doc_id", "text", 3, 0.5, path)
     assert(collectedPairs(again) == want)
     // minhash family carries the same stamp discipline
@@ -161,12 +161,12 @@ class PairGraphSpec extends AnyFunSuite {
       "engaged auto must stamp the RESOLVED cap")
     // a manual default-cap caller ADOPTS the engaged-auto artifact
     // (identical content by construction — same detector, exact confirm)
-    Dedup.invalidatePairGraphs(hotPath)
+    graft.Artifact.invalidate(hotPath)
     val (manual, _) = Dedup.ensureMinhashPairGraph(hot, "doc_id", "text", 16, 8, 0.5,
       hotPath, maxShingleDf = Dedup.DefaultMaxShingleDf)
     assert(collectedPairs(manual) == want)
     // an explicitly-UNCAPPED caller is a caller collision: loud, no clobber
-    Dedup.invalidatePairGraphs(hotPath)
+    graft.Artifact.invalidate(hotPath)
     val e = intercept[IllegalArgumentException] {
       Dedup.ensureMinhashPairGraph(hot, "doc_id", "text", 16, 8, 0.5,
         hotPath, maxShingleDf = Long.MaxValue)
@@ -181,7 +181,7 @@ class PairGraphSpec extends AnyFunSuite {
     assert(java.nio.file.Files.readString(java.nio.file.Paths.get(s"$cleanPath/_params")) ==
       Dedup.minhashPairGraphStamp(16, 4, 0.5),
       "un-engaged auto must stamp the uncapped format (pre-cap artifacts interop)")
-    Dedup.invalidatePairGraphs(cleanPath)
+    graft.Artifact.invalidate(cleanPath)
     val (uncapped, _) = Dedup.ensureMinhashPairGraph(clean, "doc_id", "text", 16, 4, 0.5,
       cleanPath, maxShingleDf = Long.MaxValue)
     assert(collectedPairs(uncapped) == collectedPairs(cleanPairs))
@@ -203,14 +203,14 @@ class PairGraphSpec extends AnyFunSuite {
     val want = collectedPairs(pairs)
     assert(want.nonEmpty)
     // an exact-path consumer at the same path: loud, naming the stamp
-    Dedup.invalidatePairGraphs(path)
+    graft.Artifact.invalidate(path)
     val e = intercept[IllegalArgumentException] {
       Dedup.ensurePairGraph(dense, "doc_id", "text", 3, 0.5, path)
     }
     assert(e.getMessage.contains("route=banded") && e.getMessage.contains("route=exact"),
       e.getMessage)
     // a routeDense consumer with the SAME cap accepts the stamp
-    Dedup.invalidatePairGraphs(path)
+    graft.Artifact.invalidate(path)
     val (ok, _) = Dedup.ensurePairGraph(dense, "doc_id", "text", 3, 0.5, path,
       maxCandidatePairs = 100L, routeDense = true)
     assert(collectedPairs(ok) == want)
@@ -218,7 +218,7 @@ class PairGraphSpec extends AnyFunSuite {
     // decides where the route flips, so under ITS parameters this
     // corpus might have stayed exact — serving it the banded pairs
     // would be silent recall loss (review r12)
-    Dedup.invalidatePairGraphs(path)
+    graft.Artifact.invalidate(path)
     val eCap = intercept[IllegalArgumentException] {
       Dedup.ensurePairGraph(dense, "doc_id", "text", 3, 0.5, path,
         maxCandidatePairs = 999999L, routeDense = true)
@@ -242,7 +242,7 @@ class PairGraphSpec extends AnyFunSuite {
     Dedup.ensurePairGraph(docs, "doc_id", "text", 3, 0.5, path)
     val stampPath = java.nio.file.Paths.get(s"$path/_params")
     java.nio.file.Files.write(stampPath, "corrupted-past-the-crc".getBytes("UTF-8"))
-    Dedup.invalidatePairGraphs(path)
+    graft.Artifact.invalidate(path)
     val e = intercept[IllegalStateException] {
       Dedup.ensurePairGraph(docs, "doc_id", "text", 3, 0.5, path)
     }
@@ -260,7 +260,7 @@ class PairGraphSpec extends AnyFunSuite {
     val want = collectedPairs(pairs)
     // simulate an r11-generation artifact: halves intact, stamp absent
     assert(new java.io.File(s"$path/_params").delete(), "stamp must exist to delete")
-    Dedup.invalidatePairGraphs(path)
+    graft.Artifact.invalidate(path)
     val (p2, c2) = Dedup.ensurePairGraph(docs, "doc_id", "text", 3, 0.5, path)
     assert(collectedPairs(p2) == want)
     assert(c2.columns.toSeq == Seq("node", "component"))
@@ -294,7 +294,7 @@ class PairGraphSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(comp.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == directComp)
     // corrupt half rebuilds, same as the n-gram artifact (shared core)
-    Dedup.invalidatePairGraphs(path)
+    graft.Artifact.invalidate(path)
     spark.range(2).toDF("wrong").write.mode("overwrite").parquet(s"$path/pairs")
     val (p2, _) = Dedup.ensureMinhashPairGraph(
       docs, "doc_id", "text", 16, 4, 0.5, path)

@@ -69,7 +69,7 @@ class SketchArtifactSpec extends AnyFunSuite {
     // memo still serves the original; after invalidation the rewritten
     // artifact is loaded
     assert(CorpusSketches.bloomOrLoad(corpus, "text", 1000L, 0.01, path) eq built)
-    CorpusSketches.invalidateBlooms(path)
+    graft.Artifact.invalidate(path)
     val reloaded = CorpusSketches.bloomOrLoad(corpus, "text", 1000L, 0.01, path)
     val otherKeys = other.select(
       xxhash64(TextOps.fingerprint(col("text"))).as("h")).as[Long].collect()
@@ -81,7 +81,7 @@ class SketchArtifactSpec extends AnyFunSuite {
     val path = tmpPath("lm_a")
     val m1 = TextOps.ensureBigramModel(corpus, "text", path)
     assert(TextOps.ensureBigramModel(corpus, "text", path) eq m1)
-    TextOps.invalidateModels(path)
+    graft.Artifact.invalidate(path)
     val m2 = TextOps.ensureBigramModel(corpus, "text", path)
     assert(!(m2 eq m1), "post-invalidate call must resolve a fresh frame")
     assert(m2.columns.toSeq == Seq("a", "b", "n_ab"))

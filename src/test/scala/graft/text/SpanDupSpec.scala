@@ -92,7 +92,7 @@ class SpanDupSpec extends AnyFunSuite {
     assert(viaArt == inline, s"artifact-probed coverage diverged: $viaArt vs $inline")
     // warm memo hit + corrupted artifact rebuild
     assert(Dedup.ensureSpanBlocklist(docs, "text", 4, 2L, path) eq art)
-    Dedup.invalidateSpanBlocklists(path)
+    graft.Artifact.invalidate(path)
     spark.range(2).toDF("wrong").write.mode("overwrite").parquet(path)
     val rebuilt = Dedup.ensureSpanBlocklist(docs, "text", 4, 2L, path)
     assert(rebuilt.collect().map(r => (r.getString(0), r.getLong(1))).toSet == direct)
