@@ -1,12 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every `SparkEntry.queries`
   * entry on `SPARK_GRAFT_SF_DIR` and prints ONE JSON line with
-  * per-query wall-clock. An untimed warmup pass touches every table and
-  * runs one trivial job first so JVM/codegen/file-listing startup cost
-  * is not attributed to whichever query happens to run first.
+  * per-query wall-clock. An untimed warmup pass ([[Harness.setUp]])
+  * touches every table and runs one trivial job first so
+  * JVM/codegen/file-listing startup cost is not attributed to whichever
+  * query happens to run first.
   *
   * Emission order (clip-safety contract, VERDICT r19 #3 — the r18
   * round-over-round table was lost to a log tail that clipped the
@@ -261,256 +260,20 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // driver contract: bench runs at local[32] unless overridden
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // Shuffle/spill compression OFF for this single-node local[*]
-      // deployment: shuffle blocks never cross a network here — they
-      // round-trip the local page cache — so lz4 is pure CPU tax on
-      // the same cores doing the query work. Measured A/B at sf0.1
-      // (158 queries, same binary, interleaved runs): median per-query
-      // ratio 0.79–0.88 with compression off, no per-query regression
-      // beyond run noise. A multi-node cluster (network shuffle, real
-      // disk pressure) should keep the default ON — override via env.
-      .config("spark.shuffle.compress",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", "false"))
-      .config("spark.shuffle.spill.compress",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", "false"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Setup phases are TIMED and reported in the output JSON
-    // (setup_sec + per-phase map): BENCH r13's driver leg showed a
-    // cold-start gradient (first ~60 queries at median 1.34–1.44×,
-    // decaying to ~1.0 by position ~60) that was invisible because
-    // setup cost was neither measured nor complete — the evidence for
-    // any future environment attribution should ride the bench's own
-    // sidecar (dev/BENCH_NORM_r14.md).
-    val setupPhases = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    def phase[T](name: String)(body: => T): T = {
-      val t0 = System.nanoTime()
-      val r = body
-      setupPhases += name -> (System.nanoTime() - t0) / 1e9
-      r
-    }
-    // cache-warming reads best-effort: an unreadable classpath entry or
-    // a transient table-read fault must degrade to a missing warmup,
-    // never abort the bench before any JSON is printed (the same
-    // degrade-don't-abort contract as the prebuild block)
-    def warmPhase(name: String)(body: => Unit): Unit = phase(name) {
-      try body
-      catch { case e: Exception =>
-        System.err.println(s"[bench] $name warmup failed (continuing): ${e.getMessage}")
-      }
-    }
-    // warmup: schema + footer reads for every table, one real scan job
-    // (legacy nanos conf set before any footer read so a nanos-layout
-    // events table still resolves — same rule as Tables.events, which
-    // adapts to whichever layout the footer declares)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    phase("schemas") {
-      Tables.names.foreach(n => Tables.t(spark, sfDir, n).schema)
-      Tables.lineitem(spark, sfDir).count()
-    }
-    // Read the CLASSPATH's bytes once: class loading is lazy, so in a
-    // fresh container the first measured queries to touch an operator
-    // family pay scattered cold-disk reads of the jar pages backing
-    // its classes — a cold-page-cache rehearsal of the r13 driver leg
-    // reproduced its early-query gradient (first buckets ~1.33-1.34x,
-    // decaying over the run) with the testdata already byte-warmed,
-    // pointing at the jars (dev/BENCH_NORM_r14.md). One sequential
-    // read of each classpath entry moves that cost into setup.
-    warmPhase("jar_bytes") {
-      val buf = new Array[Byte](1 << 20)
-      def slurp(p: java.nio.file.Path): Unit = {
-        val in = java.nio.file.Files.newInputStream(p)
-        try { while (in.read(buf) >= 0) () } finally in.close()
-      }
-      System.getProperty("java.class.path", "")
-        .split(java.io.File.pathSeparator)
-        // a blank entry resolves Paths.get("") to the CWD and the
-        // directory walk below would slurp the whole working tree
-        // (multi-GB testdata included) into setup time (ADVICE r14)
-        .filter(_.nonEmpty).foreach { entry =>
-          val p = java.nio.file.Paths.get(entry)
-          if (java.nio.file.Files.isRegularFile(p)) slurp(p)
-          else if (java.nio.file.Files.isDirectory(p)) {
-            val s = java.nio.file.Files.walk(p)
-            try s.filter(java.nio.file.Files.isRegularFile(_)).forEach(slurp(_))
-            finally s.close()
-          }
-        }
-    }
-    // Read every table's BYTES once (raw stream, not a Spark scan): in
-    // a fresh container the OS page cache holds none of the testdata,
-    // and without this the first measured query to scan each table
-    // pays its cold-disk reads — the r13 driver leg billed exactly
-    // those to the early alphabet (the a*/dedup families). Raw reads
-    // warm the cache with minimal CPU and precompute nothing.
-    warmPhase("table_bytes") {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val buf = new Array[Byte](1 << 20)
-      Tables.names.foreach { n =>
-        val p = new org.apache.hadoop.fs.Path(s"$sfDir/$n.parquet")
-        val fs = p.getFileSystem(conf)
-        if (fs.exists(p)) {
-          val it = fs.listFiles(p, true)
-          while (it.hasNext) {
-            val st = it.next()
-            if (st.isFile) {
-              val in = fs.open(st.getPath)
-              try { while (in.read(buf) >= 0) () } finally in.close()
-            }
-          }
-        }
-      }
-    }
-    // one tiny shuffle + hash-agg + broadcast join: the first exchange
-    // in a JVM pays shuffle-machinery + codegen JIT that would otherwise
-    // be billed to whichever measured query runs first
-    phase("ops_warm") {
-      val li = Tables.lineitem(spark, sfDir).limit(2048)
-      li.groupBy(org.apache.spark.sql.functions.col("l_returnflag")).count()
-        .join(org.apache.spark.sql.functions.broadcast(
-          li.select(org.apache.spark.sql.functions.col("l_returnflag")).distinct()),
-          "l_returnflag")
-        .count()
-    }
-    // one tiny parquet write+read: the first write in a JVM pays
-    // committer/output-format class-loading + JIT that would otherwise
-    // be billed to whichever sink-exercising query runs first
-    phase("sink_warm") {
-      // per-process temp dir: a fixed shared path would race a second
-      // concurrent bench JVM's overwrite mid-read
-      val dir = java.nio.file.Files.createTempDirectory("graft_bench_warmup")
-      val p = dir.resolve("w").toString
-      Tables.nation(spark, sfDir).limit(16).write.mode("overwrite").parquet(p)
-      spark.read.parquet(p).count()
-      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
-    }
-    // warm Spark ML too: the first KMeans fit in a JVM pays ~2s of
-    // one-time class-loading/codegen that would otherwise be billed to
-    // whichever IVF query runs first
-    phase("ml_warm") {
-      import spark.implicits._
-      import org.apache.spark.ml.functions.array_to_vector
-      val tiny = (0 until 16).map(i => (i.toLong, Array(i.toFloat, (i * 7 % 5).toFloat)))
-        .toDF("id", "v").select(array_to_vector(org.apache.spark.sql.functions.col("v")).as("__fv"))
-      new org.apache.spark.ml.clustering.KMeans()
-        .setK(2).setSeed(1L).setMaxIter(1).setFeaturesCol("__fv").fit(tiny)
-    }
-    // Pattern warmup (VERDICT r9 #5's sanctioned avenue, A/B-gated via
-    // SPARK_GRAFT_WARM_PATTERNS): tiny queries exercising the dozen
-    // hottest PHYSICAL-OPERATOR shapes (window, generate, SMJ, object
-    // hash agg, expand, interpreted HOFs, sort-agg min_by, time
-    // windows, set ops, the native graft kernels). Generated classes
-    // are per-query unique, so this cannot pre-compile the measured
-    // queries themselves — what it warms is Janino + the evaluator
-    // infrastructure + C2 on the operator code paths, which PERF_FLOOR
-    // r9 measured as ~65% of the scale-invariant per-query overhead.
-    // Setup-phase (untimed) like every other warm block here.
-    // NOT ADOPTED (default off): the interleaved A/B measured wins of
-    // 6.3% / 2.0% / 2.3% over three warm/control pairs — median 2.3%,
-    // below the >=5%-median adoption bar VERDICT r9 #5 set for this
-    // lever (dev/WARMUP_AB_r10.md, bench_warmab_r10_*.json). Kept
-    // behind the flag as the measured-but-below-bar experiment.
-    if (sys.env.getOrElse("SPARK_GRAFT_WARM_PATTERNS", "false") == "true") phase("pattern_warm") {
-      import org.apache.spark.sql.functions._
-      import spark.implicits._
-      val t0 = System.nanoTime()
-      val df = spark.range(256).select(col("id"),
-        (col("id") % 7).as("k"), (col("id") % 3).cast("double").as("v"),
-        concat(lit("tok"), col("id") % 11, lit(" w"), col("id") % 5).as("s"),
-        timestamp_seconds(col("id") * 60).as("ts"),
-        transform(sequence(lit(0), lit(7)), i => (i + col("id")).cast("double")).as("arr"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("k")).orderBy(col("id"))
-      def j(d: org.apache.spark.sql.DataFrame): Unit = { d.count(); () }
-      try {
-        j(df.select(row_number().over(w), lag(col("v"), 1).over(w),
-          sum(col("v")).over(w.rowsBetween(-2, 0))))
-        j(df.select(posexplode(col("arr"))))
-        j(df.hint("merge").join(df.select(col("id").as("id2")),
-          col("id") === col("id2")))
-        j(df.groupBy(col("k")).agg(collect_list(col("v")),
-          percentile(col("v"), lit(0.5)), min_by(col("id"), col("v"))))
-        j(df.cube(col("k"), col("v") > 1).count())
-        j(df.select(aggregate(col("arr"), lit(0.0), (a, x) => a + x),
-          zip_with(col("arr"), col("arr"), (a, b) => a * b),
-          filter(col("arr"), x => x > 2)))
-        j(df.groupBy(window(col("ts"), "10 minutes")).count())
-        j(df.select(col("k")).distinct()
-          .intersect(df.select(col("k"))).union(df.select(col("k")).limit(1)))
-        j(df.select(graft.sim.Similarity.dot(col("arr"), col("arr")),
-          graft.sim.Similarity.lshBucket(col("arr"), 8),
-          graft.functions.Sq8Codes.codes(col("arr"))))
-        j(df.select(
-          graft.functions.ShingleHashes.shingles(split(col("s"), " "), 2, true),
-          graft.functions.SimHash64.simhash(split(col("s"), " "))))
-        j(df.select(regexp_replace(col("s"), "[0-9]+", "#"),
-          split(col("s"), " "), get_json_object(lit("""{"k":1}"""), "$.k")))
-        j(df.orderBy(col("v").desc, col("id")).limit(5))
-      } catch { case e: Exception =>
-        System.err.println(s"[bench] pattern warmup failed (continuing): ${e.getMessage}")
-      }
-      System.err.println(f"[bench] pattern warmup ${(System.nanoTime() - t0) / 1e9}%.1fs")
-    }
-    // build the ANN index artifacts (IVF quantizer + PQ codebooks) and
-    // the bucketed join layout in setup: both are write-path work a
-    // deployment pays at ingest, so measured queries are probe/score
-    // (resp. exchange-free join) only. Idempotent: warm artifacts load.
-    // Guarded: a setup failure must degrade to per-query error markers
-    // for the queries that need the artifact (they rebuild inline),
-    // never abort the whole bench before any JSON is printed.
-    // a prebuild failure degrades queries to inline rebuilds INSIDE
-    // their measured time — record it in the output JSON, not just
-    // stderr (the driver's log tail clips; the sidecar survives)
-    var setupErr: Option[String] = None
-    phase("prebuild") {
-      try {
-        graft.queries.TextSim.prebuildIndexes(spark, sfDir)
-        Ioops.ensureBucketedPair(spark, sfDir)
-      } catch { case e: Exception =>
-        setupErr = Some(e.getClass.getSimpleName + ": " +
-          Option(e.getMessage).getOrElse("").replaceAll("[\"\\\\\\n\\r\\t]", " ").take(160))
-        System.err.println(s"[bench] setup prebuild failed (continuing): ${e.getMessage}")
-      }
-    }
-    setupPhases.foreach { case (n, s) =>
-      System.err.println(f"[bench] setup $n%-12s $s%7.2fs")
-    }
-    // Attribution profile (dev knob, perturbs warmth — NOT for gate
-    // legs): per-phase wall of dedup_incremental's artifact load vs
-    // its admission compute, the split VERDICT r13 #1 asks for.
-    if (sys.env.getOrElse("SPARK_GRAFT_BENCH_PHASES", "false") == "true")
-      try graft.queries.TextSim.dedupIncrementalPhases(spark, sfDir)
-      catch { case e: Exception =>
-        System.err.println(s"[bench] phases profile failed (continuing): ${e.getMessage}")
-      }
+    val spark = Harness.session("graft-bench", Harness.cpus(32), benchProfile = true)
+    val setup = Harness.setUp(spark, sfDir, "[bench]")
     // dev-loop subset (names csv): targeted A/B timing of a few queries
     // without the full 158-query run. Unset = driver contract (all).
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(Harness.csvNames)
     val results: Seq[(String, Either[String, Double])] =
-      SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (n, _) => only.forall(_.contains(n)) }
-        .map { case (name, fn) =>
+      Harness.eachQuery(spark, only) { (_, fn) =>
         val t0 = System.nanoTime()
-        val r = try { fn(spark, sfDir).count(); Right((System.nanoTime() - t0) / 1e9) }
-          catch { case e: Throwable =>
-            e.printStackTrace()
-            val msg = Option(e.getMessage).getOrElse("").replaceAll("[\"\\\\\\n\\r\\t]", " ").take(160)
-            Left(e.getClass.getSimpleName + ": " + msg)
-          }
-        // drop blocks pinned by eager localCheckpoints inside operators —
-        // leaking them degrades every later query in the run
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        name -> r
+        try { fn(spark, sfDir).count(); Right((System.nanoTime() - t0) / 1e9) }
+        catch { case e: Throwable =>
+          e.printStackTrace()
+          val msg = Option(e.getMessage).getOrElse("").replaceAll("[\"\\\\\\n\\r\\t]", " ").take(160)
+          Left(e.getClass.getSimpleName + ": " + msg)
+        }
       }
     // Load-normalized total (VERDICT r10 #1): the cold gate number was
     // riding box weather — 51.9→60.8s across three rounds on frozen
@@ -594,11 +357,11 @@ object Bench {
     // evidence trail for environment attributions (a slow driver-side
     // "table_bytes" or "prebuild" phase explains a cold container
     // without touching the measured totals)
-    val setupJson = setupPhases.map { case (n, s) => s""""$n":${Ioops.jsonNum(s, 3)}""" }
+    val setupJson = setup.phases.map { case (n, s) => s""""$n":${Ioops.jsonNum(s, 3)}""" }
       .mkString("{", ",", "}")
     val setupFields =
-      s""","setup_sec":${Ioops.jsonNum(setupPhases.map(_._2).sum, 3)},"setup":$setupJson""" +
-        setupErr.map(e => s""","setup_err":${Ioops.jsonEscape(e)}""").getOrElse("")
+      s""","setup_sec":${Ioops.jsonNum(setup.phases.map(_._2).sum, 3)},"setup":$setupJson""" +
+        setup.err.map(e => s""","setup_err":${Ioops.jsonEscape(e)}""").getOrElse("")
     // Emission timestamp (ISO-8601 UTC — locale-free by construction):
     // lets any archived copy of this line be matched to its BENCH_r{N}
     // without filesystem mtimes. Sidecar-schema provenance (VERDICT

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.domain.{Cleaning, Datasets, Scoring, SyntheticSeason}
 import graft.ml.NonCompletionModel
@@ -14,16 +13,7 @@ import graft.ops.Exec
 object DomainDemo {
   def main(args: Array[String]): Unit = {
     val nPlays = if (args.nonEmpty) args(0).toInt else 120
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-domain-demo", Harness.cpus(8))
 
     val specs = SyntheticSeason.playSpecs(nPlays)
     val before = SyntheticSeason.trackingBefore(spark, specs)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan (and optionally time an
   * action) for one named query — `runMain graft.Explain <name> [sfDir]` —
   * or audit every headline query's *executed* (AQE-final) plan into a
@@ -36,16 +34,7 @@ object Explain {
     if (args.headOption.contains("--audit")) { audit(args); return }
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-explain", Harness.cpus(8))
     val df = SparkEntry.queries(name)(spark, sfDir)
     df.explain("formatted")
     val t0 = System.nanoTime()
@@ -60,24 +49,15 @@ object Explain {
   private def audit(args: Array[String]): Unit = {
     val outFile = if (args.length > 1) args(1) else "PLANS.md"
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-explain", Harness.cpus(8))
     val sb = new StringBuilder
     sb ++= "# Physical plan audit (generated by `runMain graft.Explain --audit`)\n\n"
     sb ++= s"Executed (AQE-final) plans for the headline queries at `$sfDir`.\n"
     sb ++= "`*(n)` prefixes mark operators fused into WholeStageCodegen stage n.\n"
     sb ++= "PlanSpec pins the load-bearing properties (broadcasts, pushdown,\n"
     sb ++= "pruning, top-k fusion, native kernels in codegen stages) in CI.\n"
-    headline.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
+    val written = Harness.eachQuery(spark, Some(headline.toSet)) { (name, fn) =>
+      val df = fn(spark, sfDir)
       df.collect() // finalize the adaptive plan
       // elide embedded binary literals (serialized bloom filters print
       // as ~500KB of hex per occurrence — unreadable and megabytes of
@@ -86,11 +66,10 @@ object Explain {
       val plan = df.queryExecution.executedPlan.toString.trim
         .replaceAll("0x[0-9A-Fa-f]{64,}", "0x<binary literal elided>")
       sb ++= s"\n## $name\n\n```\n$plan\n```\n"
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
     }
     java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
       sb.toString.getBytes("UTF-8"))
-    println(s"[explain] wrote ${headline.size} plans to $outFile")
+    println(s"[explain] wrote ${written.size} plans to $outFile")
     spark.stop()
   }
 }

@@ -180,14 +180,7 @@ object HostileGen {
   def main(args: Array[String]): Unit = {
     val (srcDir, destDir) = (args(0), args(1))
     val mode = args.lift(2).getOrElse("hostile")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-hostilegen", Harness.cpus(4))
     // The raw per-table read below must survive a nanos-generation
     // events footer (TIMESTAMP(NANOS) is rejected by the vectorized
     // reader without this; resolves as long instead — the same conf

@@ -103,13 +103,7 @@ object PipelineDemo {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val outDir = if (args.length > 1) args(1)
       else System.getProperty("java.io.tmpdir") + "/graft_curated"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-pipeline-demo", Harness.cpus(8))
     val (curated, r) = curate(spark, Tables.documents(spark, sfDir))
     curated.repartition(col("lang"))
       .write.mode("overwrite").partitionBy("lang").parquet(s"$outDir/documents")

@@ -223,19 +223,6 @@ object RaceCanary {
   private val families: Map[String, Family] =
     Seq(ShingleFamily, IvfIndexFamily, PairGraphFamily).map(f => f.name -> f).toMap
 
-  private def session(app: String): SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName(app)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   private def waitFor(p: String, timeoutMs: Long = 240000): Unit = {
     val t0 = System.currentTimeMillis()
     while (!Files.exists(Paths.get(p))) {
@@ -246,7 +233,7 @@ object RaceCanary {
   }
 
   def child(dir: String, rounds: Int, fam: Family): Unit = {
-    val spark = session(s"race-canary-child-${fam.name}")
+    val spark = Harness.session(s"race-canary-child-${fam.name}", 8)
     Files.writeString(Paths.get(s"$dir/child_ready"), "1")
     (0 until rounds).foreach { i =>
       waitFor(s"$dir/go_$i")
@@ -263,7 +250,7 @@ object RaceCanary {
 
   def parent(dir: String, rounds: Int, fam: Family): Unit = {
     Files.createDirectories(Paths.get(dir))
-    val spark = session(s"race-canary-parent-${fam.name}")
+    val spark = Harness.session(s"race-canary-parent-${fam.name}", 8)
 
     // fork the second JVM with this process's classpath + module opens
     val javaBin = System.getProperty("java.home") + "/bin/java"

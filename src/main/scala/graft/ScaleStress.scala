@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
   * synthetic corpora at 1× and 10× the sf0.1 design point with ONE
   * generator (so the pair is distribution-identical and the ratio is
   * meaningful) and timing the heaviest operator families on both,
-  * with shuffle bytes captured from the Spark listener bus:
+  * with shuffle bytes captured from the Spark listener bus
+  * ([[Harness.Meter]]):
   *
   *   runMain graft.ScaleStress gen /tmp/scale1  50000
   *   runMain graft.ScaleStress gen /tmp/scale10 500000
@@ -112,66 +113,6 @@ object ScaleStress {
     println(s"[scale] generated $nDocs docs/vectors + ${nDocs * 10} lineitem rows at $dir ($vocabNote)")
   }
 
-  /** One completed stage's metrics: callsite name, shuffle bytes, and
-    * spill — the classification row VERDICT r12 #2 asks for (shuffle
-    * growth must be attributed to a NAMED exchange, with the
-    * memory-pressure signal measured beside it, not argued). */
-  private[graft] final case class StageBytes(id: Int, name: String,
-      read: Long, written: Long, memSpilled: Long, diskSpilled: Long,
-      sec: Double)
-
-  /** Shuffle-byte capture: stage-level totals from the listener bus,
-    * plus the per-stage breakdown when `SPARK_GRAFT_SCALE_STAGES=1`. */
-  private final class ShuffleMeter
-      extends org.apache.spark.scheduler.SparkListener {
-    @volatile var read = 0L
-    @volatile var written = 0L
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageBytes]
-    // SQL actions submit jobs through a thread pool, so a stage's OWN
-    // callsite is the pool lambda ("withThreadLocalCaptured at
-    // CompletableFuture.java") — attribution lives in the JOB
-    // properties instead: callSite.short is the driving action
-    // ("count at Exec.scala:NN"), which together with the
-    // deterministic job ORDER names each exchange across scale points.
-    private val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, String]
-    private val execDesc = new java.util.concurrent.ConcurrentHashMap[Long, String]
-    override def onOtherEvent(
-        e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
-      // the SQL execution description IS the driving action's callsite
-      // ("count at Exec.scala:NN") — the only place it survives the
-      // thread-pool submission
-      case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
-        execDesc.put(s.executionId, s.description.linesIterator.nextOption().getOrElse("").take(100))
-      case _ =>
-    }
-    override def onJobStart(
-        js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-      val cs = Option(js.properties).flatMap { p =>
-        Option(p.getProperty("spark.sql.execution.id")).map { eid =>
-          s"exec $eid: ${Option(execDesc.get(eid.toLong)).getOrElse("?")}"
-        }.orElse(Option(p.getProperty("callSite.short")))
-      }.getOrElse("?")
-      js.stageIds.foreach(sid => stageJob.put(sid, s"job ${js.jobId}: $cs"))
-    }
-    override def onStageCompleted(
-        sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val m = sc.stageInfo.taskMetrics
-      read += m.shuffleReadMetrics.totalBytesRead
-      written += m.shuffleWriteMetrics.bytesWritten
-      // stage wall (submission -> completion): the attribution tool the
-      // r15c GCLocker hunt was missing - bytes alone cannot say WHERE a
-      // 2x wall regression lives
-      val sec = (for {
-        sub <- sc.stageInfo.submissionTime
-        done <- sc.stageInfo.completionTime
-      } yield (done - sub) / 1e3).getOrElse(0.0)
-      stages.add(StageBytes(sc.stageInfo.stageId,
-        Option(stageJob.get(sc.stageInfo.stageId)).getOrElse(sc.stageInfo.name),
-        m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten,
-        m.memoryBytesSpilled, m.diskBytesSpilled, sec))
-    }
-  }
-
   private def stageDetail: Boolean = sys.env.get("SPARK_GRAFT_SCALE_STAGES").contains("1")
 
   /** JSON string escape for stage callsite names — the shared
@@ -179,32 +120,16 @@ object ScaleStress {
   private def jstr(s: String): String = Ioops.jsonEscape(s)
 
   private def timed(spark: SparkSession, name: String)(
-      body: => Long): (String, Double, Long, Long, Long, Seq[StageBytes]) = {
-    val meter = new ShuffleMeter
-    spark.sparkContext.addSparkListener(meter)
+      body: => Long): (String, Double, Long, Long, Long, Seq[Harness.StageBytes]) = {
+    val meter = Harness.meter(spark)
     val t0 = System.nanoTime()
     val rows = body
     val sec = (System.nanoTime() - t0) / 1e9
-    // listener bus is async (and its drain API is private[spark]): a
-    // fixed sleep under-drains exactly when the backlog is largest (the
-    // heavy 10× runs), silently understating shuffle totals — poll
-    // until two consecutive reads agree (quiescent), bounded at 5s
-    // the settle tuple includes the per-stage row count: a trailing
-    // stage that shuffled nothing but spilled (exactly the rows the
-    // stage report exists to show) changes neither byte counter and
-    // would otherwise be dropped while still queued (defect class #17)
-    var prev = (-1L, -1L, -1)
-    var waited = 0
-    while (waited < 5000 && { Thread.sleep(100); waited += 100
-      val cur = (meter.read, meter.written, meter.stages.size)
-      val settled = cur == prev; prev = cur; !settled }) ()
-    spark.sparkContext.removeSparkListener(meter)
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    println(f"[scale] $name%-22s ${sec}%8.2fs  rows=$rows%-9d shuffleR=${meter.read / 1048576}%6d MiB  shuffleW=${meter.written / 1048576}%6d MiB")
-    val stages = {
-      import scala.jdk.CollectionConverters._
-      meter.stages.iterator().asScala.toVector.sortBy(-_.written)
-    }
+    val r = meter.settle()
+    meter.close()
+    Harness.releaseCheckpoints(spark)
+    println(f"[scale] $name%-22s ${sec}%8.2fs  rows=$rows%-9d shuffleR=${r.shuffleRead / 1048576}%6d MiB  shuffleW=${r.shuffleWritten / 1048576}%6d MiB")
+    val stages = meter.stages
     if (stageDetail) {
       val active = stages.filter(s => s.written > 0 || s.read > 0 || s.diskSpilled > 0)
       active.take(25).foreach { s =>
@@ -216,7 +141,7 @@ object ScaleStress {
         println(s"[scale]   ... ${active.size - 25} more active stages " +
           s"(${active.size} total; full set in the sidecar up to its own 40-row cap)")
     }
-    (name, sec, rows, meter.read, meter.written, stages)
+    (name, sec, rows, r.shuffleRead, r.shuffleWritten, stages)
   }
 
   /** `only`: optional comma-list of family names — the 30× point runs
@@ -492,21 +417,12 @@ object ScaleStress {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "8g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-scale-stress", Harness.cpus(32))
     args(0) match {
       case "gen" => gen(spark, args(1), args(2).toLong,
         args.lift(3).getOrElse("fixed"))
       case "run" => run(spark, args(1), args(2),
-        args.lift(3).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet))
+        args.lift(3).map(Harness.csvNames))
       case "probe" => probe(spark, args(1),
         args.lift(2).map(_.toInt).getOrElse(4),
         args.lift(3).map(_.toInt).getOrElse(16),

@@ -102,9 +102,10 @@ object Exec {
     * Safe on any frame (no-op when nothing under it is pinned);
     * non-blocking. Frames that share a checkpoint with the released
     * one lose it too — release only when EVERY consumer is done (which
-    * is why Bench additionally sweeps `getPersistentRDDs` between
-    * queries; library builders release explicitly instead of relying
-    * on such a sweep). */
+    * is why the mains' shared query loop,
+    * [[graft.Harness.eachQuery]], additionally sweeps
+    * `getPersistentRDDs` between queries; library builders release
+    * explicitly instead of relying on such a sweep). */
   def release(df: DataFrame): Unit = {
     val spark = df.sparkSession
     def walk(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Unit =

@@ -255,30 +255,6 @@ object TextSim {
     ()
   }
 
-  /** Attribution profile for the `dedup_incremental` benchmark row
-    * (VERDICT r13 #1, dev/BENCH_NORM_r14.md): the same work the
-    * scoreboard query does, split into its artifact-load and
-    * admission-compute phases with per-phase wall printed to stderr.
-    * Dev instrumentation behind Bench's SPARK_GRAFT_BENCH_PHASES knob —
-    * running it warms the query's whole path, so never on a gate
-    * leg. */
-  def dedupIncrementalPhases(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    def t[T](name: String)(body: => T): T = {
-      val t0 = System.nanoTime()
-      val r = body
-      System.err.println(
-        f"[bench] phases dedup_incremental/$name%-10s ${(System.nanoTime() - t0) / 1e9}%7.3fs")
-      r
-    }
-    val docs = Tables.documents(s, d)
-    val corpus = docs.filter(col("doc_id") % 2 === 0)
-    val bloom = t("bloom_load")(corpusBloom(corpus, d, docStamp(s, d)))
-    t("admission")(graft.text.Dedup.incrementalNew(
-      corpus, docs.filter(col("doc_id") % 2 === 1), "doc_id", "text",
-      bloom, expected = 200000L, fpp = 0.01).count())
-    ()
-  }
-
   /** Artifact-path substitutions for the persisted-index oracles: the
     * `sim_ivf_topk` oracle re-derives the probed-cell top-k in DuckDB
     * from the SAME persisted artifacts the engine probes (quantizer

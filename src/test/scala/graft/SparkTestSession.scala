@@ -5,18 +5,6 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for the whole test run (suite-level lazy
   * sessions would pay ~8s JVM+session startup per suite). */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Harness.session("graft-tests", 4,
+    warehouseDir = Some(java.nio.file.Files.createTempDirectory("graft_wh").toString))
 }
