@@ -30,6 +30,15 @@ object Bench {
     * gate discussion if the gate is ever re-epoched. */
   private[graft] val RawGateRefSec = 42.9
 
+  /** The scale every gate reference was measured at: [[RawGateRefSec]],
+    * dev/BENCH_ANCHORS.json and dev/BENCH_PERQUERY_REF.json are all
+    * sf0.1 figures, so a run on any other SF dir is not a gate reading. */
+  private[graft] val GateScale = "sf0.1"
+
+  /** The last path segment of an SF dir (`/data/sf0.1/` → `sf0.1`). */
+  private def scaleOf(sfDir: String): String =
+    sfDir.split('/').filter(_.nonEmpty).lastOption.getOrElse(sfDir)
+
   /** Board-median drift above this means the container ran materially
     * off epoch speed — the raw gate number is weather until read
     * through `value_normalized`. r16's driver leg (drift 2.215, raw
@@ -91,9 +100,10 @@ object Bench {
 
   /** Self-adjudicating gate fields appended to both printed JSON lines
     * and the sidecar: `raw_gate_ratio` / `norm_gate_ratio` (vs the
-    * committed r1 anchor), `gate_partial` (true when the battery did
-    * not complete — failed queries or a dev subset — so the ratios
-    * cover only the completed queries and are NOT a gate reading),
+    * committed r1 anchor), `gate_partial` (true when the reading is
+    * NOT a gate reading: failed queries or a dev subset, so the ratios
+    * cover only the completed queries, or an `sfDir` whose scale is not
+    * [[GateScale]], so the references do not apply),
     * `drift_alert` (true when the board median says the container ran
     * > [[DriftAlertFactor]]× off epoch IN EITHER DIRECTION — a
     * too-fast container can mask a real regression behind a passing
@@ -122,15 +132,21 @@ object Bench {
   private[graft] def gateVerdictJson(total: Double,
       driftInfo: Option[(Double, Int, Double, Double)],
       nFailed: Int = 0, subset: Boolean = false,
-      boardMed: Option[Double] = None): String = {
+      boardMed: Option[Double] = None, sfDir: String = GateScale): String = {
     import Ioops.{jsonEscape, jsonNum}
     val rawRatio = total / RawGateRefSec
-    val partial = nFailed > 0 || subset
+    val scale = scaleOf(sfDir)
+    val reasons = Seq(
+      Option.when(subset)("query subset"),
+      Option.when(nFailed > 0)(s"$nFailed failed"),
+      Option.when(scale != GateScale)(
+        s"scale $scale, gate references are $GateScale")).flatten
+    val partial = reasons.nonEmpty
     val breach = rawRatio > 2.0 && !partial
     val partialNote =
       if (!partial) ""
-      else s"PARTIAL RUN (${if (subset) "query subset" else s"$nFailed failed"}): " +
-        "ratios cover only the completed queries -- not a gate reading; "
+      else s"PARTIAL RUN (${reasons.mkString("; ")}): " +
+        "ratios are not comparable to the references -- not a gate reading; "
     val rawPart = partialNote +
       s"raw ${jsonNum(rawRatio, 2)}x vs ${jsonNum(RawGateRefSec, 1)}s r1 anchor (gate 2x)"
     val base = s""","raw_gate_ratio":${jsonNum(rawRatio, 3)},"gate_partial":$partial"""
@@ -337,7 +353,7 @@ object Bench {
       s""","drift_factor":${Ioops.jsonNum(drift, 4)},"n_anchors":$n,"anchor_spread":[${Ioops.jsonNum(lo, 4)},${Ioops.jsonNum(hi, 4)}],"value_normalized":${Ioops.jsonNum(total / drift, 3)}"""
     }.getOrElse("") +
       gateVerdictJson(total, driftInfo, nFailed = failed.size, subset = subsetRun,
-        boardMed = boardMed) +
+        boardMed = boardMed, sfDir = sfDir) +
       driftInfo.map { case (drift, _, _, _) =>
         excursionsJson(timedMap, perQueryRefs, drift)
       }.getOrElse("")

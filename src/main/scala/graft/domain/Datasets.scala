@@ -1,7 +1,6 @@
 package graft.domain
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops.{Aggs, Exprs}
 import Schemas._
@@ -21,7 +20,7 @@ object Datasets {
   /** A5: last frame per (game, play, nfl) with explicit ordering
     * (create_datasets.py:16-25 `tail(1)` relies on file order). */
   def lastFramePerPlayer(tracking: DataFrame): DataFrame =
-    Aggs.topRowPerGroup(tracking,
+    Aggs.argminPerGroup(tracking,
       Seq(col("game_id"), col("play_id"), col("nfl_id")),
       Seq(col("frame_id").desc))
 

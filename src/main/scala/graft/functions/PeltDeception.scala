@@ -2,12 +2,13 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import scala.collection.mutable.ArrayBuffer
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import graft.kernels.Pelt
 
@@ -24,6 +25,8 @@ import graft.kernels.Pelt
   * composability: it runs inside a plain `groupBy.agg` next to other
   * aggregates, in SQL via the registered function, and needs no
   * Dataset/encoder hop). Buffers serialize as a flat binary triple list.
+  * It is the pipeline's PELT path: `domain.Scoring` runs it beside a
+  * `max_by` last-frame pick in one aggregate per play.
   */
 case class PeltDeception(
     valueExpr: Expression, orderExpr: Expression, tieExpr: Expression,
@@ -112,6 +115,13 @@ case class PeltDeception(
 }
 
 object PeltDeception {
+  /** `pelt_deception(value, order, tie)` as an aggregate Column, built
+    * without the function registry: it works in a session that does
+    * not register [[GraftExtensions]]. */
+  def column(value: Column, order: Column, tie: Column): Column =
+    ColumnBridge.column(PeltDeception(ColumnBridge.expression(value),
+      ColumnBridge.expression(order), ColumnBridge.expression(tie)).toAggregateExpression())
+
   /** FunctionRegistry descriptor for SparkSessionExtensions.injectFunction. */
   val descriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
     FunctionIdentifier("pelt_deception"),
@@ -140,7 +150,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(TfVector.descriptor)
     ext.injectFunction(Sq8Codes.descriptor)
     ext.injectFunction(ZOrderKey.descriptor)
-    // rewrite the interpreted HOF dot-product idiom to the native kernel
-    ext.injectOptimizerRule(_ => VecDotRewrite)
   }
 }

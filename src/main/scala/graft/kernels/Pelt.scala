@@ -18,10 +18,12 @@ import scala.collection.mutable
   * whose adjacent-segment mean difference is largest, and the fallback
   * (`deception.py:39-40,97-104`) when no change point is found.
   *
-  * Pure JVM-local kernel: runs per play/user inside
-  * `Dataset.groupByKey(...).mapGroups` after a single shuffle on the
-  * group key — series are 10–70 points, so O(n²/jump) is negligible and
-  * the operator scales with the number of groups, not series length.
+  * Pure JVM-local kernel: runs per play/user after a single shuffle on
+  * the group key, inside the native aggregate
+  * ([[graft.functions.PeltDeception]], the pipeline's path) or a
+  * `Dataset.groupByKey(...).mapGroups` (the board's reference form) —
+  * series are 10–70 points, so O(n²/jump) is negligible and the
+  * operator scales with the number of groups, not series length.
   */
 object Pelt {
   val DefaultPenalty = 0.01

@@ -11,24 +11,36 @@ import org.apache.spark.sql.functions._
   * `drop_duplicates` keep-first). Every helper here makes the ordering
   * explicit — a total order with tie-break keys — so results are
   * deterministic on a distributed engine (SURVEY.md §7.5 risk 1).
+  *
+  * Every per-group pick in the library goes through this object, in one
+  * of two forms. The window form ([[argminPerGroup]] for one row,
+  * [[topNPerGroup]] for k rows; pandas `idxmin`/`tail(1)`/`nlargest`)
+  * keeps whole rows and plans as a `row_number` window plus filter, so
+  * Spark's window group-limit pushdown applies. The aggregate form
+  * ([[argminSelect]]/[[argmaxSelect]], `min_by`/`max_by` over a struct)
+  * keeps selected fields only and combines map-side. Which one wins
+  * depends on size: at sf0.1 board sizes the aggregate is about 2×
+  * faster, but on the season pipeline's 120-play clean stage it was
+  * slower (a traced `season` A/B of the two forms, seeds 43-48:
+  * `domain.clean_s` median 8.24 → 8.70 s, task time 11.5 → 12.9 s), so
+  * `Cleaning` and `Datasets` keep the window form. The score stage picks its last frame with `max_by`
+  * because that pick rides in the same aggregate as the PELT score
+  * ([[graft.domain.Scoring]]).
   */
 object Aggs {
 
   private def rn(partition: Seq[Column], order: Seq[Column]): Column =
     row_number().over(Window.partitionBy(partition: _*).orderBy(order: _*))
 
-  /** A4: argmin-per-group (tracking.py:426-437 `idxmin` + join-back).
-    * Keeps exactly one row per group: the minimum of `order` — callers
-    * must include tie-break columns for determinism. */
+  /** A4/A5: argmin-per-group (tracking.py:426-437 `idxmin` + join-back)
+    * and, with a descending `order`, last-row-per-group
+    * (deception.py:8-15 `tail(1)`). Keeps exactly one row per group:
+    * the minimum of `order` — callers must include tie-break columns
+    * for determinism. */
   def argminPerGroup(df: DataFrame, partition: Seq[Column], order: Seq[Column]): DataFrame =
     df.withColumn("__rn", rn(partition, order))
       .filter(col("__rn") === 1)
       .drop("__rn")
-
-  /** A5 (last): last-row-per-group (deception.py:8-15 `tail(1)`);
-    * `order` should be the descending time/tie-break columns. */
-  def topRowPerGroup(df: DataFrame, partition: Seq[Column], order: Seq[Column]): DataFrame =
-    argminPerGroup(df, partition, order)
 
   /** A4/A5 as ONE aggregate: group keys + the `payload` fields of the
     * row minimizing `order` (a composite total order, lexicographic

@@ -94,10 +94,8 @@ object Sampling {
     * (vanishingly rare) under-filled ones. */
   def capPerGroup(df: DataFrame, group: Seq[Column], key: Column, n: Int): DataFrame = {
     require(n > 0, s"cap must be positive, got $n")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(group: _*).orderBy(hashDraw(key), key)
-    df.withColumn("__graft_rn", row_number().over(w))
-      .filter(col("__graft_rn") <= n).drop("__graft_rn")
+    Aggs.topNPerGroup(df, group, Seq(hashDraw(key), key), n, "__graft_rn")
+      .drop("__graft_rn")
   }
 
   /** Budgeted selection: walk each group in a caller-supplied priority

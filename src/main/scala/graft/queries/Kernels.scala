@@ -11,13 +11,15 @@ import graft.kernels.Pelt
   * the oracle map per the driver contract; covered by PeltSpec). The
   * `k2_pelt_agree` differential exposes the mapGroups-vs-native-agg
   * bit-parity to the driver scoreboard with an exact oracle.
+  *
+  * The native aggregate is the PELT path of the paper's pipeline
+  * (`domain.Scoring` runs it next to the last-frame pick in one
+  * aggregate); [[peltMapGroups]] stays here as the board's reference
+  * form, the independent formulation `k2_pelt_agree` compares it with.
   */
 object Kernels {
   import Relational.Q
 
-  /** K2/K3: one shuffle on the group key, then a JVM-local kernel per
-    * group (`groupByKey.mapGroups`) over the explicitly frame-ordered
-    * series — the Spark shape of deception.py:83-136. */
   /** Kernel input domain: a change-point series is (key, ordered ts,
     * numeric value) — a row with a NULL in any of the four fields has
     * no place in it (no position in the order, or no measurable value)
@@ -30,6 +32,9 @@ object Kernels {
       .filter(col("user_id").isNotNull && col("value").isNotNull &&
         col("tsm").isNotNull && col("event_id").isNotNull)
 
+  /** K2/K3: one shuffle on the group key, then a JVM-local kernel per
+    * group (`groupByKey.mapGroups`) over the explicitly ordered series
+    * — the Spark shape of deception.py:83-136. */
   private def peltMapGroups(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val ev = peltInput(s, d)

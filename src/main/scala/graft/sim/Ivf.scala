@@ -3,9 +3,8 @@ package graft.sim
 import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.ops.Exprs
+import graft.ops.{Aggs, Exprs}
 
 /** IVF-style approximate nearest-neighbor search: a seeded KMeans coarse
   * quantizer partitions the corpus into cells; search touches only the
@@ -141,14 +140,12 @@ object Ivf {
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"),
       Similarity.l2Norm(col(vecCol)).as("q_norm"))
       .filter(col("q_norm") > 0) // Similarity.eligible on the query side
-    val probeW = Window.partitionBy(col("query_id"))
-      .orderBy(col("cent_dist").asc, col("cell").asc)
-    q.crossJoin(broadcast(cents))
+    val dists = q.crossJoin(broadcast(cents))
       .withColumn("cent_dist",
         sqrt(aggregate(zip_with(transform(col("q_vec"), x => x.cast("double")), col("centroid"),
           (a, b) => (a - b) * (a - b)), lit(0.0), (acc, v) => acc + v)))
-      .withColumn("__pr", row_number().over(probeW))
-      .filter(col("__pr") <= nprobe)
+    Aggs.topNPerGroup(dists, Seq(col("query_id")),
+        Seq(col("cent_dist").asc, col("cell").asc), nprobe, "__pr")
       .select(col("query_id"), col("q_vec"), col("q_norm"), col("cell"))
   }
 
@@ -170,10 +167,8 @@ object Ivf {
                           queries: DataFrame, model: KMeansModel,
                           k: Int = 3, nprobe: Int = 2): DataFrame = {
     val scored = scoredWithinCells(assigned, idCol, vecCol, queries, model, nprobe)
-    val rankW = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(rankW))
-      .filter(col("rank") <= k)
+    Aggs.topNPerGroup(scored, Seq(col("query_id")),
+        Seq(col("cos_sim").desc, col("neighbor_id").asc), k)
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos_sim"))
   }
 

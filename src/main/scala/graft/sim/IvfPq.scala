@@ -2,9 +2,8 @@ package graft.sim
 
 import org.apache.spark.ml.clustering.KMeansModel
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.ops.{Exec, Exprs}
+import graft.ops.{Aggs, Exec, Exprs}
 
 /** IVF-PQ: the deployed shape of product-quantized ANN search —
   * [[Ivf]]'s coarse quantizer prunes the corpus to the `nprobe` cells
@@ -117,10 +116,8 @@ object IvfPq {
       .select(col("query_id"), col("neighbor_id"),
         Exprs.r4(Similarity.dot(col("q_nvec"),
           Pq.decode(col("pq_codes"), cb))).as("approx_cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx_cos").desc, col("neighbor_id").asc)
-    val short = scored.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= shortlist)
+    val short = Aggs.topNPerGroup(scored, Seq(col("query_id")),
+        Seq(col("approx_cos").desc, col("neighbor_id").asc), shortlist, "__rn")
       .select(col("query_id"), col("neighbor_id"))
     Pq.exactRerank(corpus, idCol, vecCol, queries, short, k)
   }

@@ -2,7 +2,7 @@ package graft.sim
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.ops.Exprs
+import graft.ops.{Aggs, Exprs}
 
 /** Product quantization (PQ) for embedding columns — the ANN
   * compression regime BETWEEN [[Similarity.sq8]] (uniform per-component
@@ -328,19 +328,16 @@ object Pq {
   def adcLutScore(qNorm: Column, codes: Column, cb: Codebooks): Column = {
     val m = cb.length
     val sub = cb.head.head.length
-    // statically unrolled left-to-right sum over per-subspace literals —
-    // the same fold order as the former aggregate(sequence(0, m-1))
-    // form (0.0 + t0 + t1 + …), so scores are bit-identical; the query
-    // side carries its own dimension guard (the corpus side is guarded
-    // at encode)
+    // statically unrolled left-to-right sum of one native dot per
+    // subspace literal — the same fold order as the former
+    // aggregate(sequence(0, m-1)) form (0.0 + t0 + t1 + …), so scores
+    // are bit-identical; the query side carries its own dimension guard
+    // (the corpus side is guarded at encode)
     val q = dimGuarded(qNorm, m, sub)
     (0 until m).map { j =>
-      aggregate(
-        zip_with(
-          slice(q, j * sub + 1, sub),
-          element_at(subLit(cb, j), element_at(codes, j + 1) + 1),
-          (a, b) => a * b),
-        lit(0.0), (x, y) => x + y)
+      Similarity.dot(
+        slice(q, j * sub + 1, sub),
+        element_at(subLit(cb, j), element_at(codes, j + 1) + 1))
     }.foldLeft(lit(0.0))(_ + _)
   }
 
@@ -369,11 +366,8 @@ object Pq {
     val scored = q.join(c, col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
         Exprs.r4(Similarity.dot(col("q_norm"), col("c_recon"))).as("approx_cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("approx_cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    Aggs.topNPerGroup(scored, Seq(col("query_id")),
+        Seq(col("approx_cos").desc, col("neighbor_id").asc), k)
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("approx_cos"))
   }
 
@@ -412,11 +406,8 @@ object Pq {
       .join(q, "query_id")
       .select(col("query_id"), col("neighbor_id"),
         Exprs.r4(Similarity.dot(col("q_norm"), col("c_norm"))).as("cos_sim"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    reranked.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    Aggs.topNPerGroup(reranked, Seq(col("query_id")),
+        Seq(col("cos_sim").desc, col("neighbor_id").asc), k)
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos_sim"))
   }
 

@@ -2,7 +2,7 @@ package graft.sim
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.ops.{Exec, Exprs}
+import graft.ops.{Aggs, Exec, Exprs}
 
 /** Similarity search over embedding columns (`array<float>`).
   *
@@ -61,11 +61,8 @@ object Similarity {
     val scored = q.join(c, col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
         Exprs.r4(dot(col("q_vec"), col("c_vec")) / (col("q_norm") * col("c_norm"))).as("cos_sim"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    Aggs.topNPerGroup(scored, Seq(col("query_id")),
+        Seq(col("cos_sim").desc, col("neighbor_id").asc), k)
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos_sim"))
   }
 
@@ -210,11 +207,8 @@ object Similarity {
     val scored = q.join(c, col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
         Exprs.r4(dot(col("q_dq"), col("c_dq"))).as("approx_cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("approx_cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    Aggs.topNPerGroup(scored, Seq(col("query_id")),
+        Seq(col("approx_cos").desc, col("neighbor_id").asc), k)
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("approx_cos"))
   }
 

@@ -1705,37 +1705,30 @@ object Dedup {
     }(org.apache.spark.sql.Encoders.row(sorted.schema))
   }
 
+  /** The band exchange's width as a multiple of the session's shuffle
+    * width. 4× is the measured best; 8× regressed (dev/SCALE_r15c.md,
+    * and the comment in [[bandPairsRaw]]). */
+  private[text] val BandWidthMult: Int = 4
+
+  /** The band exchange's partition count: `BandWidthMult × shuffle
+    * width` (the session's shuffle partitions), computed
+    * overflow-checked — the shuffle width is session input, so a
+    * product past Int fails AT PLAN BUILD by name instead of surfacing
+    * mid-job as an opaque negative-partition repartition error
+    * (ADVICE r16). */
+  private[text] def bandPartitions(shuffleWidth: Int): Int = {
+    val base = math.max(1, shuffleWidth)
+    try math.multiplyExact(BandWidthMult, base) catch {
+      case _: ArithmeticException => throw new IllegalArgumentException(
+        s"band partitions: $BandWidthMult times the session's shuffle " +
+          s"partitions ($base) overflows Int — lower spark.sql.shuffle.partitions")
+    }
+  }
+
   /** The pre-distinct band-collision pair stream of
     * [[minhashCandidateIds]] (a pair appears once per colliding
     * band) — split out so the sort-fold distinct has an executable
     * spec twin (`.distinct()` over this stream, DedupPropertySpec). */
-  private[text] def bandWidthMult(spark: org.apache.spark.sql.SparkSession): Int = {
-    val raw = spark.conf.getOption("spark.graft.dedup.bandWidthMult")
-    val mult = try raw.map(_.trim.toInt).getOrElse(4) catch {
-      case _: NumberFormatException => throw new IllegalArgumentException(
-        s"spark.graft.dedup.bandWidthMult must be an integer >= 1, got '${raw.get}'")
-    }
-    require(mult >= 1,
-      s"spark.graft.dedup.bandWidthMult must be >= 1, got $mult")
-    mult
-  }
-
-  /** The band exchange's partition count: `bandWidthMult × session
-    * shuffle width`, computed overflow-checked so a huge-but-positive
-    * knob value fails AT PLAN BUILD with the knob's name instead of
-    * surfacing mid-job as an opaque negative-partition repartition
-    * error — the exact failure class the knob validation exists to
-    * prevent (ADVICE r16). */
-  private[text] def bandPartitions(spark: org.apache.spark.sql.SparkSession): Int = {
-    val mult = bandWidthMult(spark)
-    val base = math.max(1, spark.sessionState.conf.numShufflePartitions)
-    try math.multiplyExact(mult, base) catch {
-      case _: ArithmeticException => throw new IllegalArgumentException(
-        s"spark.graft.dedup.bandWidthMult ($mult) times the session's " +
-          s"shuffle partitions ($base) overflows Int — lower the knob")
-    }
-  }
-
   private[text] def bandPairsRaw(sig: DataFrame, idCol: String,
                                  numHashes: Int, bands: Int): DataFrame = {
     // bands must tile the signature exactly: bands > numHashes makes
@@ -1772,18 +1765,15 @@ object Dedup {
       // genuinely cluster-scale widths sort-based writing is the norm
       // regardless and the 4x RATIO, not the absolute count, is the
       // measured lever.
-      // spark.graft.dedup.bandWidthMult: the measured lever for the
-      // band-join sorts' per-partition working set (see the paragraph
-      // above). The 300x ladder re-confirmed 4x: at 8x the exchange's
-      // map side crosses bypassMergeThreshold, switches to sort-based
-      // shuffle writing, and spills 9.4 GB itself (+36% family wall)
-      // for only a partial SMJ-sort reduction (dev/SCALE_r15c.md).
-      // Validated HERE, at plan build, like statsChunkLongs: a zero /
-      // negative / non-numeric value must fail with the knob's name,
-      // not as an opaque repartition error mid-job (review r15) —
-      // including a huge-but-positive mult whose product overflows
-      // Int into a negative partition count (ADVICE r16).
-      .repartition(bandPartitions(sig.sparkSession), col("band"), col("band_key"))
+      // BandWidthMult: the measured lever for the band-join sorts'
+      // per-partition working set (see the paragraph above). The 300x
+      // ladder re-confirmed 4x: at 8x the exchange's map side crosses
+      // bypassMergeThreshold, switches to sort-based shuffle writing,
+      // and spills 9.4 GB itself (+36% family wall) for only a partial
+      // SMJ-sort reduction (dev/SCALE_r15c.md). A constant, not a conf
+      // key: no caller ever set another value.
+      .repartition(bandPartitions(sig.sparkSession.sessionState.conf.numShufflePartitions),
+        col("band"), col("band_key"))
     val a = banded.select(col(idCol).as("id_a"), col("band"), col("band_key"))
     val b = banded.select(col(idCol).as("id_b"), col("band"), col("band_key"))
     a.join(b, Seq("band", "band_key"))

@@ -91,11 +91,8 @@ object Entity {
       .filter(abs(length(col("dirty_name")) - length(col("match_name"))) <= maxDist)
       .withColumn("dist", levenshtein(col("dirty_name"), col("match_name")).cast("long"))
       .filter(col("dist") <= maxDist)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("dirty_id"))
-      .orderBy(col("dist").asc, col("match_id").asc)
-    cand.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
+    graft.ops.Aggs.argminPerGroup(cand, Seq(col("dirty_id")),
+        Seq(col("dist").asc, col("match_id").asc))
       .select("dirty_id", "dirty_name", "match_id", "match_name", "dist")
   }
 
@@ -133,12 +130,8 @@ object Entity {
     val passes = blockKeys.map(bk =>
       fuzzyMatch(dirty, dirtyIdCol, dirtyNameCol, clean, cleanIdCol, cleanNameCol,
         bk, maxDist, maxBlockPairs))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("dirty_id"))
-      .orderBy(col("dist").asc, col("match_id").asc)
-    passes.reduce(_.unionByName(_))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
+    graft.ops.Aggs.argminPerGroup(passes.reduce(_.unionByName(_)), Seq(col("dirty_id")),
+        Seq(col("dist").asc, col("match_id").asc))
       .select("dirty_id", "dirty_name", "match_id", "match_name", "dist")
   }
 }

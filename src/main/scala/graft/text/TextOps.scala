@@ -158,11 +158,8 @@ object TextOps {
         graft.ops.Exprs.r4(col("tf") *
           (log((col("n_docs") + 1).cast("double") / (col("df") + 1)) + 1.0))
           .as("tfidf"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(idCol))
-      .orderBy(col("tfidf").desc, col("term").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    graft.ops.Aggs.topNPerGroup(scored, Seq(col(idCol)),
+        Seq(col("tfidf").desc, col("term").asc), k)
       .select(col(idCol), col("rank"), col("term"), col("tfidf"))
   }
 
@@ -229,11 +226,8 @@ object TextOps {
           .as("__s"))
     val scored = perTerm.groupBy(col("query_id"), col("doc_id"))
       .agg(graft.ops.Exprs.r4(graft.ops.Exprs.sumExact(col("__s"))).as("score"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    graft.ops.Aggs.topNPerGroup(scored, Seq(col("query_id")),
+        Seq(col("score").desc, col("doc_id").asc), k)
       .select(col("query_id"), col("rank"), col("doc_id"), col("score"))
   }
 

@@ -65,6 +65,25 @@ class BenchSpec extends AnyFunSuite
     assert(fSub("bench_verdict").contains("PARTIAL RUN (query subset)"))
   }
 
+  test("a run off the sf0.1 gate scale is partial: no raw_breach, the verdict names the scale") {
+    // 101.94 s breaches the raw gate; at sf0.001 or sf1 it is no reading
+    for ((dir, scale) <- Seq("/data/sf0.001" -> "sf0.001", "/data/sf1/" -> "sf1",
+        "sf0.01" -> "sf0.01")) {
+      val f = parse(Bench.gateVerdictJson(101.94, Some((1.0, 12, 0.9, 1.1)),
+        boardMed = Some(1.0), sfDir = dir))
+      assert(f("gate_partial") == "true", dir)
+      assert(!f.contains("raw_breach"), dir)
+      assert(f("bench_verdict").contains(s"PARTIAL RUN (scale $scale, gate references are sf0.1)"),
+        dir)
+    }
+    // the gate scale itself, with or without a trailing slash, still gates
+    for (dir <- Seq("/data/testdata/sf0.1", "/data/sf0.1/")) {
+      val f = parse(Bench.gateVerdictJson(101.94, Some((1.0, 12, 0.9, 1.1)),
+        boardMed = Some(1.0), sfDir = dir))
+      assert(f("gate_partial") == "false" && f.contains("raw_breach"), dir)
+    }
+  }
+
   test("anchors unavailable: raw-only fields, no spurious alert, verdict says so") {
     val f = parse(Bench.gateVerdictJson(60.0, None))
     assert(f("drift_alert") == "false")

@@ -286,6 +286,49 @@ class DomainSpec extends AnyFunSuite {
     assert(math.abs(scores(2L).getAs[Double]("recovery_score") - 0.6) < 1e-12)
   }
 
+  /** Two plays' frames in REVERSED frame order over 3 input partitions;
+    * receiver and defender ids change per frame, so only the last frame
+    * carries the expected ids. */
+  private val reversedProbs = Map(
+    1L -> Array(0.1, 0.15, 0.1, 0.12, 0.1, 0.7, 0.75, 0.8, 0.7, 0.72, 0.74, 0.9),
+    2L -> Array(0.6, 0.4, 0.5, 0.3, 0.35, 0.2, 0.25))
+  private def reversedResults: DataFrame = {
+    val rows = reversedProbs.toSeq.sortBy(_._1).flatMap { case (playId, ps) =>
+      ps.indices.map(i => (7L, playId, i + 1, 100L + i, 200L + i,
+        if (playId == 1L) "I" else "C", ps(i)))
+    }.reverse
+    spark.sparkContext.parallelize(rows, 3).toDF("game_id", "play_id", "frame_id",
+      "receiver_id", "defender_id", "pass_result", "non_completion_probability")
+  }
+
+  test("scores: frames arriving out of order over 3 partitions score the frame-sorted series") {
+    val scores = Scoring.computeScores(spark, reversedResults).collect()
+      .map(r => r.getAs[Long]("play_id") -> r).toMap
+    assert(scores.keySet == Set(1L, 2L))
+    for ((playId, ps) <- reversedProbs) {
+      val r = scores(playId)
+      val n = ps.length
+      assert(r.getAs[Long]("game_id") == 7L)
+      assert(r.getAs[Double]("deception_score") == Pelt.deceptionScore(ps), s"play $playId")
+      // ids and the recovery score come from the last frame (frame n)
+      assert(r.getAs[Long]("receiver_id") == 100L + n - 1, s"play $playId")
+      assert(r.getAs[Long]("defender_id") == 200L + n - 1, s"play $playId")
+    }
+    // play 1 I → 1 − p_last; play 2 C → −p_last
+    assert(math.abs(scores(1L).getAs[Double]("recovery_score") - (1.0 - 0.9)) < 1e-12)
+    assert(math.abs(scores(2L).getAs[Double]("recovery_score") - (-0.25)) < 1e-12)
+  }
+
+  test("scores: one aggregate on the play key plans exactly one shuffle exchange") {
+    // the typed mapGroups + last-frame window + join form planned 3
+    val scores = Scoring.computeScores(spark, reversedResults)
+    scores.collect()
+    val nodes = graft.PlanCensus.finalPlanNodes(scores.queryExecution.executedPlan)
+    val shuffles = nodes.count(
+      _.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeExec])
+    assert(shuffles == 1, s"shuffle exchanges:\n${scores.queryExecution.executedPlan}")
+  }
+
   // ----- presentation-layer data prep (teams dim, animation) ----------
 
   test("teams dim: 32 rows, unique abbrs, known lookups") {

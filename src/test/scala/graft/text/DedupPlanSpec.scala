@@ -51,35 +51,14 @@ class DedupPlanSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.dedup.statsChunkLongs")
   }
 
-  test("bandWidthMult: degenerate or non-numeric knob fails at plan build by name") {
-    // same contract as statsChunkLongs (review r15): 0/negative would
-    // surface as an opaque repartition failure and non-numeric as a
-    // raw NumberFormatException mid-plan — both must fail loudly with
-    // the knob's name before any job runs
-    for (bad <- Seq("0", "-4", "four")) {
-      spark.conf.set("spark.graft.dedup.bandWidthMult", bad)
-      try {
-        val e = intercept[IllegalArgumentException] { Dedup.bandWidthMult(spark) }
-        assert(e.getMessage.contains("bandWidthMult"), s"value '$bad': ${e.getMessage}")
-      } finally spark.conf.unset("spark.graft.dedup.bandWidthMult")
-    }
-    // and the validated read still honors a legitimate override
-    spark.conf.set("spark.graft.dedup.bandWidthMult", "2")
-    try assert(Dedup.bandWidthMult(spark) == 2)
-    finally spark.conf.unset("spark.graft.dedup.bandWidthMult")
-    assert(Dedup.bandWidthMult(spark) == 4)
-    // huge-but-positive: passes the >= 1 check but its product with
-    // the session shuffle width overflows Int — must ALSO fail by
-    // name at plan build, not as a negative-partition repartition
-    // error mid-job (ADVICE r16)
-    spark.conf.set("spark.graft.dedup.bandWidthMult", Int.MaxValue.toString)
-    try {
-      val e = intercept[IllegalArgumentException] { Dedup.bandPartitions(spark) }
-      assert(e.getMessage.contains("bandWidthMult") && e.getMessage.contains("overflows"))
-    } finally spark.conf.unset("spark.graft.dedup.bandWidthMult")
-    // the checked product itself is the plain product when sane
-    assert(Dedup.bandPartitions(spark) ==
-      4 * math.max(1, spark.sessionState.conf.numShufflePartitions))
+  test("bandPartitions: 4x the shuffle width; an overflowing product fails by name") {
+    assert(Dedup.bandPartitions(32) == 128)
+    assert(Dedup.bandPartitions(0) == 4) // a degenerate width counts as 1
+    // the shuffle width is session input: a product past Int must fail
+    // at plan build, not as a negative-partition repartition error
+    // mid-job (ADVICE r16)
+    val e = intercept[IllegalArgumentException] { Dedup.bandPartitions(Int.MaxValue) }
+    assert(e.getMessage.contains("band partitions") && e.getMessage.contains("overflows"))
   }
 
   test("hot-bucket width is plan-validated against the 2^22 clamp (entry AND escalation)") {
