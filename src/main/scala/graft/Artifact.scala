@@ -19,6 +19,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     RELOADED from disk — disk is the single source of truth, and an
   *     artifact that cannot be read back right after its publish is
   *     loud;
+  *   - ONE prune: a publish deletes the generations of the same
+  *     artifact it supersedes, on disk and in the memo, so a
+  *     regenerated source leaves one generation under [[root]];
   *   - ONE [[invalidate]] for long-lived sessions over a regenerated
   *     lake (stamped paths make it rarely needed, but the memo must not
   *     pin old generations forever).
@@ -73,14 +76,47 @@ object Artifact {
 
   // computeIfAbsent serializes same-JVM callers of one path (one build,
   // not two racing ones); a build must therefore never ensure another
-  // artifact itself — the map forbids recursive updates.
+  // artifact itself — the map forbids recursive updates (so the prune,
+  // which edits the memo, runs after it returns).
   private def serve[T <: AnyRef](spark: SparkSession, path: String, load: => Option[T])(
-      publish: => Unit): T =
-    memo.computeIfAbsent((spark, path), _ => load.getOrElse {
+      publish: => Unit): T = {
+    var published = false
+    val v = memo.computeIfAbsent((spark, path), _ => load.getOrElse {
       publish
+      published = true
       load.getOrElse(throw new IllegalStateException(
         s"artifact unreadable immediately after publish: $path"))
     }).asInstanceOf[T]
+    if (published) prune(spark, path)
+    v
+  }
+
+  private val Stamp = "[0-9a-z]+".r
+
+  /** After `published` is published, delete the generations it
+    * supersedes — the `<root>/<name>_<srcDir>_<stamp>` siblings with the
+    * same `<name>_<srcDir>_` prefix and another stamp — and drop their
+    * memo entries, so a regenerated source leaves one generation behind.
+    * Only [[path]]-built paths qualify (a direct child of [[root]] whose
+    * last `_` segment is a stamp: stamps never contain `_`), so a temp
+    * sibling mid-publish is never touched; the published stamp itself is
+    * kept, because same-stamp racers adopt it. */
+  private def prune(spark: SparkSession, published: String): Unit = {
+    val name = published.stripPrefix(s"$root/")
+    val gen = name.take(name.lastIndexOf('_') + 1)
+    def stamped(n: String) = Stamp.matches(n.drop(gen.length))
+    if (name != published && !name.contains('/') && gen.nonEmpty && stamped(name)) {
+      val dir = new org.apache.hadoop.fs.Path(root)
+      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.listStatus(dir).map(_.getPath.getName)
+        .filter(n => n != name && n.startsWith(gen) && stamped(n))
+        .foreach { n =>
+          val stale = s"$root/$n"
+          memo.keySet.removeIf(k => k._2 == stale || k._2.startsWith(s"$stale/"))
+          fs.delete(new org.apache.hadoop.fs.Path(stale), true)
+        }
+    }
+  }
 
   /** `read`, if `marker` exists (probed through the Hadoop FS API — a
     * java.io.File probe misses on any non-local defaultFS) and the read

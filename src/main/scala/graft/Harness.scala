@@ -173,17 +173,6 @@ object Harness {
       spark.read.parquet(p).count()
       org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
     }
-    // warm Spark ML too: the first KMeans fit in a JVM pays ~2s of
-    // one-time class-loading/codegen that would otherwise be billed to
-    // whichever IVF query runs first
-    phase("ml_warm") {
-      import spark.implicits._
-      import org.apache.spark.ml.functions.array_to_vector
-      val tiny = (0 until 16).map(i => (i.toLong, Array(i.toFloat, (i * 7 % 5).toFloat)))
-        .toDF("id", "v").select(array_to_vector(org.apache.spark.sql.functions.col("v")).as("__fv"))
-      new org.apache.spark.ml.clustering.KMeans()
-        .setK(2).setSeed(1L).setMaxIter(1).setFeaturesCol("__fv").fit(tiny)
-    }
     // build the ANN index artifacts (IVF quantizer + PQ codebooks) and
     // the bucketed join layout in setup: both are write-path work a
     // deployment pays at ingest, so measured queries are probe/score

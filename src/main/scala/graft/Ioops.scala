@@ -178,7 +178,9 @@ object Ioops {
       catch { case scala.util.control.NonFatal(_) => () }
       throw e
     }
-    if (entryBroken.isDefined) fs.delete(p, false) // result judged below
+    // recursive: a directory where a file artifact belongs (an older
+    // artifact format) is as broken as a garbled file
+    if (entryBroken.isDefined) fs.delete(p, true) // result judged below
     if (!fs.rename(tmp, p)) {
       fs.delete(tmp, false) // lost the race — adopt the winner at `p`
       val now = try { val st = fs.getFileStatus(p); Some((st.getLen, st.getModificationTime)) }

@@ -122,10 +122,11 @@ object RaceCanary {
           ((pmod(hash(col("id"), j), lit(2000)) - lit(1000)).cast("double")
             / 1000.0).cast("float")).as("embedding"))
     /** The two quantizer ensures are themselves part of the race: on
-      * the loser they ADOPT from disk, so both JVMs necessarily hold
-      * the same (winner's) model/codebooks before the index ensure —
-      * which is exactly the property that makes the index checksums
-      * comparable without assuming cross-JVM KMeans determinism. */
+      * the loser they ADOPT from disk, so both JVMs hold the winner's
+      * centroids/codebooks before the index ensure. The fits are also
+      * deterministic across JVMs ([[graft.sim.Kmeans]]: a content-ordered
+      * training set and a seeded driver-side fit, whatever the partition
+      * layout), so either JVM's fit would publish the same bytes. */
     private def quantizers(spark: SparkSession, dir: String, i: Int) = {
       val e = emb(spark)
       val model = graft.sim.Ivf.fitOrLoad(e, "embedding", k = 16,

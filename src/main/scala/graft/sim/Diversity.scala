@@ -1,6 +1,5 @@
 package graft.sim
 
-import org.apache.spark.ml.clustering.KMeansModel
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -29,10 +28,10 @@ object Diversity {
     * deterministic per-key hash draw (uniform within each cell).
     * Emits the input columns plus `cell`. */
   def diversitySample(df: DataFrame, idCol: String, vecCol: String,
-                      model: KMeansModel, perCell: Int): DataFrame = {
+                      cents: Kmeans.Centroids, perCell: Int): DataFrame = {
     require(perCell > 0, s"perCell must be positive, got $perCell")
     graft.ops.Sampling.capPerGroup(
-      Ivf.assignCells(df, vecCol, model), Seq(col("cell")), col(idCol), perCell)
+      Ivf.assignCells(df, vecCol, cents), Seq(col("cell")), col(idCol), perCell)
   }
 
   /** [[diversitySample]] against a PERSISTED index frame

@@ -1,120 +1,64 @@
 package graft.sim
 
-import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.{Aggs, Exprs}
+import Kmeans.Centroids
 
-/** IVF-style approximate nearest-neighbor search: a seeded KMeans coarse
+/** IVF-style approximate nearest-neighbor search: a seeded k-means coarse
   * quantizer partitions the corpus into cells; search touches only the
   * probed cells instead of the full corpus.
   *
-  * Scale shape: centroids are tiny (k vectors) and live driver-side /
-  * broadcast; cell assignment is one `model.transform` pass (linear, no
-  * shuffle beyond the scan); search joins on the cell key, so cost is
-  * corpus_fraction ≈ nprobe/k per query instead of 1. Composes with
-  * [[Similarity.lshNearDup]] for skew-safe within-cell near-dup search.
-  * At 100 TB the quantizer is fit on a bounded sample (`trainFraction`),
-  * never the full corpus.
+  * Scale shape: the quantizer is tiny (k centroids) and lives in the
+  * plan as a literal / broadcast; cell assignment is one projection
+  * ([[Kmeans.nearest]], no shuffle beyond the scan); search joins on the
+  * cell key, so cost is corpus_fraction ≈ nprobe/k per query instead of
+  * 1. Composes with [[Similarity.lshNearDup]] for skew-safe within-cell
+  * near-dup search. At 100 TB the quantizer is fit on a bounded sample
+  * (`trainFraction`, and at most [[Kmeans.PointsPerCentroid]]·k
+  * vectors), never the full corpus.
   */
 object Ivf {
 
-  /** Fit the coarse quantizer. Deterministic for a fixed seed and input. */
+  /** Fit the coarse quantizer ([[Kmeans]]: one collect, then a driver-side
+    * fit). Deterministic for a fixed seed and input, whatever its
+    * partitioning. Fewer eligible vectors than k is a named domain error
+    * (callers may catch it to fall back to brute force). */
   def fitCentroids(df: DataFrame, vecCol: String, k: Int,
-                   seed: Long = 42L, trainFraction: Double = 1.0): KMeansModel = {
-    // cache: kmeans|| init rounds + Lloyd iterations each run a job over
-    // the training frame — uncached, every one re-scans the source and
-    // re-converts arrays to vectors
-    // Similarity.eligible: NULL / NULL-element / zero-norm vectors are
-    // outside the ANN contract — array_to_vector NPEs on them and a
-    // zero vector would pull a centroid to the origin
-    val training = (if (trainFraction < 1.0) df.sample(withReplacement = false, trainFraction, seed) else df)
-      .filter(Similarity.eligible(col(vecCol)))
-      .select(array_to_vector(col(vecCol)).as("__fv"))
-      .cache()
-    // try/finally so the advertised domain error below (which callers
-    // may catch to fall back to brute force) cannot leak the cached
-    // training frame (review sweep r10)
-    try {
-      // Named domain contract, not an MLlib crash: fitting a k-centroid
-      // quantizer on fewer than k eligible vectors dies inside KMeans as
-      // an uncontextualized ArrayIndexOutOfBoundsException (degenerate-
-      // cardinality sweep, r10). The count is a job over the frame the
-      // init rounds are about to re-scan from cache anyway.
-      val nTrain = training.count()
-      require(nTrain >= k,
-        s"cannot fit an IVF quantizer with k=$k on $nTrain eligible training " +
-          s"vector(s) — lower k (or raise trainFraction), or use brute-force " +
-          s"search for corpora this small")
-      // kmeans|| init kept: a badly-initialized quantizer splits true
-      // clusters across cells, which directly costs near-dup recall
-      // (single-cell probing); the init rounds run on the (sampled)
-      // training frame, not the full corpus. One init step (not the
-      // default 2) — each step is a full pass over the training frame,
-      // and one oversampling round already yields ~2k well-spread
-      // candidates for the final local k-means++.
-      new KMeans().setK(k).setSeed(seed).setMaxIter(5).setInitSteps(1)
-        .setFeaturesCol("__fv").setPredictionCol("cell")
-        .fit(training)
-    } finally { training.unpersist(); () }
-  }
+                   seed: Long = 42L, trainFraction: Double = 1.0): Centroids =
+    Kmeans.fit(Kmeans.trainingSet(df, vecCol, k, seed, trainFraction,
+      "an IVF quantizer")(transform(_, _.cast("double"))), k, seed)
 
-  /** S5 for the quantizer: the fitted KMeans persists like any model
-    * artifact (same Spark ML writer as ml.NonCompletionModel), because
-    * the real IVF life cycle is train-once / probe-many — an index build
-    * job fits and saves; every search job loads and probes. Refitting
-    * inside the query is both wasted work (KMeans jobs per run) and an
-    * index-stability bug at scale (a refit on new data silently moves
-    * cell boundaries under concurrent searches). */
-  def save(model: KMeansModel, path: String): Unit =
-    model.write.overwrite().save(path)
-
-  def load(path: String): KMeansModel = KMeansModel.load(path)
-
-  /** Train-once/probe-many entry: reuse the quantizer at `path` if one
-    * exists, else fit on (a bounded sample of) `df`, save, and return
-    * it — the [[graft.Artifact]] life cycle (memo, unreadable artifact
-    * refits instead of throwing, atomic publish: racing cold starts
-    * cannot interleave the ML writer's part files, and the loser ADOPTS
-    * the winner's model from disk). Fit-then-save and load produce
-    * identical centroids (the writer round-trips the model bit-exactly
-    * — asserted in IvfSpec), so the probe results cannot depend on
-    * which path ran. */
+  /** Train-once/probe-many entry: the quantizer at `path` if one exists,
+    * else fit on (a bounded sample of) `df` and publish — the real IVF
+    * life cycle (an index build fits and saves; every search loads and
+    * probes; a refit on new data would silently move cell boundaries
+    * under concurrent searches). A one-subspace [[Kmeans.ensure]]
+    * artifact, so the codebook rules hold: an unparseable file refits,
+    * and a healthy artifact fit for a different k is loud on every serve,
+    * memo hit included. Fit-then-publish and load serve identical
+    * centroids (the text round trip is bit-exact, asserted in IvfSpec). */
   def fitOrLoad(df: DataFrame, vecCol: String, k: Int, path: String,
-                seed: Long = 42L, trainFraction: Double = 1.0): KMeansModel = {
-    val spark = df.sparkSession
-    val m = graft.Artifact.ensure(spark, path)(
-      graft.Artifact.readIf(spark, s"$path/metadata")(load(path)))(
-      tmp => save(fitCentroids(df, vecCol, k, seed, trainFraction), tmp))
-    // loud shape check on every serve, memo hit included: the
-    // persisted model carries its requested k in its params, so a
-    // stale artifact fit for a different cell count fails HERE instead
-    // of silently serving the wrong geometry to every probe (or being
-    // silently refit over a path the caller mis-keyed)
-    require(m.getK == k,
-      s"quantizer artifact at $path was fit for k=${m.getK}, " +
-        s"requested k=$k — stale or mis-keyed artifact path")
-    m
-  }
+                seed: Long = 42L, trainFraction: Double = 1.0): Centroids =
+    Kmeans.ensure(df.sparkSession, path, "ivf", 1, k)(
+      Array(fitCentroids(df, vecCol, k, seed, trainFraction))).head
 
   /** Assign each [[Similarity.eligible]] vector to its nearest
     * centroid's cell — ineligible rows (NULL / NULL-element /
     * zero-norm) never enter an index or a cell join, the same
     * never-pairs contract every ANN path shares. */
-  def assignCells(df: DataFrame, vecCol: String, model: KMeansModel): DataFrame =
-    model.transform(df.filter(Similarity.eligible(col(vecCol)))
-        .withColumn("__fv", array_to_vector(col(vecCol))))
-      .drop("__fv")
+  def assignCells(df: DataFrame, vecCol: String, cents: Centroids): DataFrame =
+    df.filter(Similarity.eligible(col(vecCol)))
+      .withColumn("cell", Kmeans.nearest(col(vecCol), cents))
 
   /** ANN near-duplicate pairs against a FITTED quantizer: IVF cell as
     * the block key, sign-LSH sub-buckets inside each cell (skew-safe
     * even if one cell is hot). Candidate recall is cell-collision ×
     * LSH-collision; exact cosine is still computed per candidate. */
   def ivfNearDup(df: DataFrame, idCol: String, vecCol: String,
-                 model: KMeansModel, threshold: Double,
+                 cents: Centroids, threshold: Double,
                  planes: Int): DataFrame =
-    Similarity.lshNearDup(assignCells(df, vecCol, model), idCol, vecCol,
+    Similarity.lshNearDup(assignCells(df, vecCol, cents), idCol, vecCol,
       "cell", threshold, planes)
 
   /** Fit-inline convenience (tests / one-shot jobs); production probes
@@ -131,16 +75,15 @@ object Ivf {
     * one row per (query, probed cell), ready for an equi-join on
     * `cell` against the cell-assigned corpus. */
   def probeCells(queries: DataFrame, idCol: String, vecCol: String,
-                 model: KMeansModel, nprobe: Int): DataFrame = {
+                 cents: Centroids, nprobe: Int): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
-    val cents = model.clusterCenters.zipWithIndex
-      .map { case (c, i) => (i, c.toArray) }.toSeq
+    val table = cents.toSeq.zipWithIndex.map { case (c, i) => (i, c) }
       .toDF("cell", "centroid")
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"),
       Similarity.l2Norm(col(vecCol)).as("q_norm"))
       .filter(col("q_norm") > 0) // Similarity.eligible on the query side
-    val dists = q.crossJoin(broadcast(cents))
+    val dists = q.crossJoin(broadcast(table))
       .withColumn("cent_dist",
         sqrt(aggregate(zip_with(transform(col("q_vec"), x => x.cast("double")), col("centroid"),
           (a, b) => (a - b) * (a - b)), lit(0.0), (acc, v) => acc + v)))
@@ -154,19 +97,19 @@ object Ivf {
     * corpus vectors in those cells. Exact cosine + deterministic
     * tie-break within the probed set. */
   def ivfTopK(corpus: DataFrame, idCol: String, vecCol: String,
-              queries: DataFrame, model: KMeansModel,
+              queries: DataFrame, cents: Centroids,
               k: Int = 3, nprobe: Int = 2): DataFrame =
-    ivfTopKFromAssigned(assignedFrame(corpus, idCol, vecCol, model),
-      idCol, vecCol, queries, model, k, nprobe)
+    ivfTopKFromAssigned(assignedFrame(corpus, idCol, vecCol, cents),
+      idCol, vecCol, queries, cents, k, nprobe)
 
   /** [[ivfTopK]] against a pre-assigned frame — [[assignedFrame]]
     * recomputed inline, or a persisted index's rows via
     * [[indexAssigned]] (cells and norms paid at ingest, not per
     * search). */
   def ivfTopKFromAssigned(assigned: DataFrame, idCol: String, vecCol: String,
-                          queries: DataFrame, model: KMeansModel,
+                          queries: DataFrame, cents: Centroids,
                           k: Int = 3, nprobe: Int = 2): DataFrame = {
-    val scored = scoredWithinCells(assigned, idCol, vecCol, queries, model, nprobe)
+    val scored = scoredWithinCells(assigned, idCol, vecCol, queries, cents, nprobe)
     Aggs.topNPerGroup(scored, Seq(col("query_id")),
         Seq(col("cos_sim").desc, col("neighbor_id").asc), k)
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos_sim"))
@@ -174,8 +117,8 @@ object Ivf {
 
   /** The corpus side of the cell join: cell, id, vector, L2 norm. */
   def assignedFrame(corpus: DataFrame, idCol: String, vecCol: String,
-                    model: KMeansModel): DataFrame =
-    assignCells(corpus, vecCol, model)
+                    cents: Centroids): DataFrame =
+    assignCells(corpus, vecCol, cents)
       .select(col("cell"), col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"),
         Similarity.l2Norm(col(vecCol)).as("c_norm"))
 
@@ -191,9 +134,9 @@ object Ivf {
     * exact rounded cosine for every (query, probed-cell corpus row)
     * pair. One expression tree, so both rankers see IDENTICAL doubles. */
   private def scoredWithinCells(assigned: DataFrame, idCol: String, vecCol: String,
-                                queries: DataFrame, model: KMeansModel,
+                                queries: DataFrame, cents: Centroids,
                                 nprobe: Int): DataFrame = {
-    val probes = probeCells(queries, idCol, vecCol, model, nprobe)
+    val probes = probeCells(queries, idCol, vecCol, cents, nprobe)
     probes.join(assigned, Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
@@ -211,17 +154,17 @@ object Ivf {
     * (window/sort/tie-break), which is exactly what the
     * `sim_ivf_agree` scoreboard differential witnesses. */
   def ivfTopKAgg(corpus: DataFrame, idCol: String, vecCol: String,
-                 queries: DataFrame, model: KMeansModel,
+                 queries: DataFrame, cents: Centroids,
                  k: Int = 3, nprobe: Int = 2): DataFrame =
-    ivfTopKAggFromAssigned(assignedFrame(corpus, idCol, vecCol, model),
-      idCol, vecCol, queries, model, k, nprobe)
+    ivfTopKAggFromAssigned(assignedFrame(corpus, idCol, vecCol, cents),
+      idCol, vecCol, queries, cents, k, nprobe)
 
   /** [[ivfTopKAgg]] against a pre-assigned frame (same contract as
     * [[ivfTopKFromAssigned]]). */
   def ivfTopKAggFromAssigned(assigned: DataFrame, idCol: String, vecCol: String,
-                             queries: DataFrame, model: KMeansModel,
+                             queries: DataFrame, cents: Centroids,
                              k: Int = 3, nprobe: Int = 2): DataFrame = {
-    val scored = scoredWithinCells(assigned, idCol, vecCol, queries, model, nprobe)
+    val scored = scoredWithinCells(assigned, idCol, vecCol, queries, cents, nprobe)
     // NaN order parity (defense-in-depth — IvfSpec shows NaN scores are
     // unreachable: NaN elements are rejected at quantizer fit and a
     // zero-norm division throws under ANSI before either ranker runs):

@@ -1,6 +1,5 @@
 package graft.sim
 
-import org.apache.spark.ml.clustering.KMeansModel
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.{Aggs, Exec, Exprs}
@@ -20,7 +19,7 @@ import graft.ops.{Aggs, Exec, Exprs}
   * touching a row COSTS.
   *
   * Scale shape: the index build (cell + codes per row) is a WRITE-path
-  * pass — one scan, two pure projections (broadcast centroids, literal
+  * pass — one scan, two pure projections (literal centroids, literal
   * codebooks), no shuffle — and is what a 100 TB deployment stores,
   * partitioned/bucketed by `cell` so a probed-cell read is partition
   * pruning, not a filter. The search side joins the tiny probes frame
@@ -44,8 +43,8 @@ object IvfPq {
     * don't read (PQ scoring never loads `vec`; exact-IVF scoring never
     * loads `pq_codes`). */
   def buildIndex(corpus: DataFrame, idCol: String, vecCol: String,
-                 model: KMeansModel, cb: Pq.Codebooks): DataFrame =
-    Pq.encode(Ivf.assignCells(corpus, vecCol, model), vecCol, cb)
+                 cents: Kmeans.Centroids, cb: Pq.Codebooks): DataFrame =
+    Pq.encode(Ivf.assignCells(corpus, vecCol, cents), vecCol, cb)
       .select(col("cell"), col(idCol).as("neighbor_id"),
         col(vecCol).as("vec"), Similarity.l2Norm(col(vecCol)).as("norm"),
         col("pq_codes"))
@@ -70,31 +69,31 @@ object IvfPq {
     * serve byte-identical rows (parquet round trip), so search results
     * cannot depend on which path ran. */
   def ensureIndex(corpus: DataFrame, idCol: String, vecCol: String,
-                  model: KMeansModel, cb: Pq.Codebooks, path: String): DataFrame = {
+                  cents: Kmeans.Centroids, cb: Pq.Codebooks, path: String): DataFrame = {
     val spark = corpus.sparkSession
     graft.Artifact.ensure(spark, path)(graft.Artifact.readTable(spark, path)(
       _.toSet == Set("cell", "neighbor_id", "vec", "norm", "pq_codes")))(tmp =>
-      buildIndex(corpus, idCol, vecCol, model, cb)
+      buildIndex(corpus, idCol, vecCol, cents, cb)
         .write.mode("overwrite").partitionBy("cell").parquet(tmp))
   }
 
-  /** ANN top-k through both pruning stages. `model` and `cb` follow the
+  /** ANN top-k through both pruning stages. `cents` and `cb` follow the
     * same train-once/probe-many S5 life cycle as their single-stage
     * queries ([[Ivf.fitOrLoad]], [[Pq.fitOrLoad]] — fit on a bounded
     * sample, persist, load everywhere else). This overload builds the
     * index inline (tests / one-shot jobs); production passes the
     * persisted index via the `indexed` overload below. */
   def topK(corpus: DataFrame, idCol: String, vecCol: String,
-           queries: DataFrame, model: KMeansModel, cb: Pq.Codebooks,
+           queries: DataFrame, cents: Kmeans.Centroids, cb: Pq.Codebooks,
            k: Int = 3, nprobe: Int = 2, shortlist: Int = 50): DataFrame = {
     // Materialized for the same reason as Pq.adcTopK — decode's lambda
     // references pq_codes and CollapseProject would otherwise inline the
     // whole argmin encode into it, re-running the m·k distance scan per
     // subspace reference.
     val indexed = Exec.materialize(
-      buildIndex(corpus, idCol, vecCol, model, cb)
+      buildIndex(corpus, idCol, vecCol, cents, cb)
         .select(col("cell"), col("neighbor_id"), col("pq_codes")))
-    topKIndexed(corpus, idCol, vecCol, queries, indexed, model, cb,
+    topKIndexed(corpus, idCol, vecCol, queries, indexed, cents, cb,
       k, nprobe, shortlist)
   }
 
@@ -102,11 +101,11 @@ object IvfPq {
     * [[buildIndex]] schema). */
   def topKIndexed(corpus: DataFrame, idCol: String, vecCol: String,
                   queries: DataFrame, indexedFull: DataFrame,
-                  model: KMeansModel, cb: Pq.Codebooks,
+                  cents: Kmeans.Centroids, cb: Pq.Codebooks,
                   k: Int = 3, nprobe: Int = 2, shortlist: Int = 50): DataFrame = {
     require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
     val indexed = indexedFull.select(col("cell"), col("neighbor_id"), col("pq_codes"))
-    val probes = Ivf.probeCells(queries, idCol, vecCol, model, nprobe)
+    val probes = Ivf.probeCells(queries, idCol, vecCol, cents, nprobe)
       .select(col("query_id"),
         Pq.normalizedBy(col("q_vec"), col("q_norm")).as("q_nvec"), col("cell"))
     // equi-join on cell, probes broadcast: corpus rows in non-probed

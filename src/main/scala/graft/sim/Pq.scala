@@ -23,10 +23,9 @@ import graft.ops.{Aggs, Exprs}
   * what shuffles/broadcasts/caches at 100 TB; exact vectors are read
   * only to rerank survivors.
   *
-  * Encoding is expression-only: per subspace, squared distances to all
-  * k centroids via codegen'd HOFs over the literal codebook, argmin by
-  * `array_position(d2, array_min(d2))` (first minimum — deterministic
-  * tie-break). The outer per-centroid lambda references its subvector,
+  * Encoding is expression-only: per subspace, [[Kmeans.nearest]] — the
+  * argmin [[Ivf.assignCells]] shares — over the literal codebook (first
+  * minimum — deterministic tie-break). The outer per-centroid lambda references its subvector,
   * so the normalize+slice chain evaluates per CENTROID (m·k times per
   * row — the CollapseProject behavior documented on
   * Dedup.shingleHashArray; a constant factor comparable to the
@@ -53,203 +52,56 @@ object Pq {
     zip_with(vd, array_repeat(nrm, size(vec)), (x, n) => x / n)
   }
 
-  /** Fit one seeded KMeans per subspace on (a sample of) `df`.
-    * Deterministic for fixed seed and input (seed + j per subspace).
-    *
-    * All m subspace slices are materialized in ONE cached pass over the
-    * (sampled) source, and the m fits run CONCURRENTLY — each fit is a
-    * handful of tiny jobs whose wall-clock is scheduler overhead, not
-    * compute, so sequential fits would pay that overhead m times in a
-    * row. The eager count before the futures stops the concurrent fits
-    * racing to compute the same cached partitions. */
+  /** Fit one seeded k-means per subspace ([[Kmeans.fit]], seed + j for
+    * subspace j) on the L2-normalized training set — ONE collect
+    * ([[Kmeans.trainingSet]]) serves all m subspace fits, which then
+    * run on the driver. Deterministic for fixed seed and input, whatever
+    * its partitioning. */
   def fit(df: DataFrame, vecCol: String, m: Int, k: Int,
           seed: Long = 42L, trainFraction: Double = 1.0): Codebooks = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    // probe the dimension on a non-null vector: a NULL in the first row
-    // would surface as an opaque NPE from getInt instead of a clear error
-    val firstRow = df.filter(col(vecCol).isNotNull).select(size(col(vecCol))).head(1)
-    require(firstRow.nonEmpty,
-      s"cannot fit PQ codebooks on an empty or all-null '$vecCol' frame")
-    val dim = firstRow.head.getInt(0)
+    // Similarity.eligible inside trainingSet: normalized() divides by
+    // the norm, so a NULL / NULL-element / zero-norm vector is outside
+    // the shared ANN contract
+    val pts = Kmeans.trainingSet(df, vecCol, k, seed, trainFraction,
+      "PQ codebooks")(normalized)
+    val dim = pts.head.length
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
     val sub = dim / m
-    // Similarity.eligible: normalized() divides by the norm, so a NULL
-    // / NULL-element / zero-norm vector is an ANSI DIVIDE_BY_ZERO (or
-    // poison centroids) — outside the shared ANN contract
-    val src = df.filter(graft.sim.Similarity.eligible(col(vecCol)))
-    val sampled =
-      if (trainFraction < 1.0) src.sample(withReplacement = false, trainFraction, seed)
-      else src
-    val sliced = sampled
-      .withColumn("__pq_norm", normalized(col(vecCol)))
-      .select((0 until m).map(j =>
-        array_to_vector(slice(col("__pq_norm"), j * sub + 1, sub)).as(s"__fv$j")): _*)
-      .cache()
-    // the require lives INSIDE the try: callers are invited to catch
-    // this domain error and fall back to brute force, so the throw
-    // path must unpersist too or every degenerate fit leaks a cached
-    // frame (review sweep r10)
-    try {
-      // eager count doubles as the domain contract: KMeans on fewer
-      // than k training rows dies with an uncontextualized MLlib
-      // ArrayIndexOutOfBoundsException (degenerate-cardinality sweep,
-      // r10)
-      val nTrain = sliced.count()
-      require(nTrain >= k,
-        s"cannot fit PQ codebooks with k=$k on $nTrain eligible training " +
-          s"vector(s) — lower k (or raise trainFraction), or use brute-force " +
-          s"search for corpora this small")
-      val fits = (0 until m).map(j => Future {
-        new KMeans().setK(k).setSeed(seed + j).setMaxIter(5).setInitSteps(1)
-          .setFeaturesCol(s"__fv$j").setPredictionCol("__cell")
-          .fit(sliced).clusterCenters.map(_.toArray)
-      })
-      // bounded await: an executor hang must fail the fit with the stuck
-      // subspace named, not stall the driver forever with no diagnostic
-      fits.zipWithIndex.map { case (f, j) =>
-        try Await.result(f, Duration(10, java.util.concurrent.TimeUnit.MINUTES))
-        catch { case _: java.util.concurrent.TimeoutException =>
-          throw new IllegalStateException(
-            s"PQ subspace $j KMeans fit did not complete within 10 minutes")
-        }
-      }.toArray
-    } finally { sliced.unpersist(); () }
+    Array.tabulate(m)(j => Kmeans.fit(pts.map(_.slice(j * sub, (j + 1) * sub)), k, seed + j))
   }
 
-  /** Persist / reload the codebooks as a plain JSON-ish text artifact
-    * (doubles round-trip via their shortest-repr strings — bit-exact,
-    * asserted in PqSpec). Crash-safe publish through the Hadoop FS API
-    * (the bloomOrLoad pattern: write `<path>.tmp-<uuid>`, then
-    * rename): a half-written file is never visible at `path`, and two
-    * racing writers each publish a COMPLETE file — the rename loser
-    * adopts the winner (identical content anyway: fixed-seed fits over
-    * the same stamped source). java.io/java.nio would silently miss on
-    * any non-local defaultFS. */
-  def save(cb: Codebooks, path: String,
-           conf: org.apache.hadoop.conf.Configuration = activeHadoopConf): Unit = {
-    // header derived from the ACTUAL shape (a direct save has no
-    // separate "requested" shape, so a later [[fitOrLoad]] with a
-    // LARGER requested k will — correctly — reject it; round-trip a
-    // direct save through [[load]], or use [[fitOrLoad]] end to end):
-    // every artifact carries the '#pq' header, because [[load]]
-    // requires it and the text-parsing DuckDB oracle reads line 1 as
-    // the header unconditionally — a headerless file would be served
-    // by a tolerant engine while the oracle misparses it (subspace 0
-    // skipped, rows shifted)
+  /** Persist / reload the codebooks as a plain text artifact
+    * ([[Kmeans]]'s format; doubles round-trip bit-exactly, asserted in
+    * PqSpec) through the shared file-publish protocol
+    * ([[graft.Ioops.commitFileAtomic]]), against the active session's
+    * Hadoop conf. The header is derived from the ACTUAL shape — a direct
+    * save has no separate "requested" shape, so a later [[fitOrLoad]]
+    * with a LARGER requested k will, correctly, reject it. */
+  def save(cb: Codebooks, path: String): Unit = {
+    // every artifact carries the '#pq' header: the text-parsing DuckDB
+    // oracle reads line 1 as the header unconditionally
     require(cb.nonEmpty && cb.forall(_.nonEmpty),
       s"PQ save at $path: empty codebook (m=${cb.length}" +
         s"${if (cb.nonEmpty) s", min centroids=${cb.map(_.length).min}" else ""})" +
         " — refusing to stamp a degenerate '#pq' header")
-    // the shared file-publish protocol ([[graft.Ioops.commitFileAtomic]]):
-    // entry-broken capture, job-unique temp, failed-write cleanup,
-    // adopt-the-winner with post-rename verification — a racing loser
-    // can never erase a complete codebook, and a non-race rename
-    // failure is loud
     val p = new org.apache.hadoop.fs.Path(path)
-    graft.Ioops.commitFileAtomic(p.getFileSystem(conf), p)(_.write(
-      (s"#pq m=${cb.length} k=${cb.map(_.length).max}\n" + render(cb))
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+    graft.Ioops.commitFileAtomic(p.getFileSystem(hadoopConf), p)(
+      _.write(Kmeans.render("pq", cb.length, cb.map(_.length).max, cb)))
   }
 
-  private def render(cb: Codebooks): String =
-    cb.map(_.map(_.map(d =>
-      java.lang.Double.toString(d)).mkString(",")).mkString(";")).mkString("\n")
+  private def hadoopConf =
+    org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration
 
-  /** One Hadoop conf for EVERY filesystem touch in this module: the
-    * probe, the write, and the read must resolve scheme-less paths
-    * against the SAME defaultFS — a session that sets fs.defaultFS
-    * programmatically (spark.hadoop.*) with no core-site.xml on the
-    * classpath would otherwise probe one filesystem and write another,
-    * publishing an artifact its own post-publish load cannot find. */
-  private def activeHadoopConf: org.apache.hadoop.conf.Configuration =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .map(_.sparkContext.hadoopConfiguration)
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
+  def load(path: String): Codebooks = Kmeans.parse("pq", Kmeans.readText(path, hadoopConf))._2
 
-  def load(path: String,
-           conf: org.apache.hadoop.conf.Configuration = activeHadoopConf): Codebooks =
-    parseArtifact(readText(path, conf))._2
-
-  private def readText(path: String,
-                       conf: org.apache.hadoop.conf.Configuration): String = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val in = p.getFileSystem(conf).open(p)
-    try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-      java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-  }
-
-  /** (requested shape from the header, codebooks). The header is
-    * REQUIRED: `fitOrLoad` always writes one, so a headerless file is a
-    * pre-header generation — tolerated loads used to serve it fine
-    * while the `sim_ivfpq_topk` DuckDB oracle (which reads the codebook
-    * as text and takes line 1 as the header unconditionally) misparsed
-    * it, skipping subspace 0 and shifting every row: a FALSE
-    * correctness failure. Throwing here routes the legacy artifact
-    * through the loader's unparseable→rebuild path instead, keeping the
-    * engine and the oracle reading one format. */
-  private def parseArtifact(txt: String): ((Int, Int), Codebooks) = {
-    val lines = txt.split("\n")
-    if (!lines.head.startsWith("#pq "))
-      throw new IllegalArgumentException(
-        "codebook artifact missing '#pq m=.. k=..' header (pre-header generation) — rebuild")
-    val mk = "m=(\\d+) k=(\\d+)".r.findFirstMatchIn(lines.head)
-      .getOrElse(throw new IllegalArgumentException(
-        s"unparseable codebook header: ${lines.head}"))
-    ((mk.group(1).toInt, mk.group(2).toInt),
-      lines.tail.map(_.split(";").map(_.split(",")
-        .map(java.lang.Double.parseDouble))))
-  }
-
-  /** Artifact-shape check: a stale path from a fit with a different
-    * shape would otherwise load silently and encode/decode garbage.
-    * `m` must match EXACTLY (code layout and sub-dimension slicing
-    * depend on it); `k` is an UPPER bound, not an equality — KMeans
-    * legitimately returns fewer centroids than requested when a
-    * subspace has fewer distinct points (tiny or degenerate corpora),
-    * and a freshly-fit artifact must pass the same check its future
-    * loaders apply. Every subspace needs ≥1 centroid and one
-    * consistent sub-dimension. */
-  private def validated(cb: Codebooks, m: Int, k: Int, path: String): Codebooks = {
-    require(cb.length == m && cb.forall(s => s.length >= 1 && s.length <= k),
-      s"codebook artifact at $path has shape (m=${cb.length}, k=${cb.headOption.map(_.length).getOrElse(0)}), expected (m=$m, k<=$k)")
-    val sub = cb.head.head.length
-    require(cb.forall(_.forall(_.length == sub)),
-      s"codebook artifact at $path has ragged centroid dimensions")
-    cb
-  }
-
-  /** Train-once/probe-many entry, mirroring [[Ivf.fitOrLoad]] (the
-    * [[graft.Artifact]] life cycle: an UNPARSEABLE artifact —
-    * truncation, external tamper — rebuilds, the safe direction for a
-    * corruption gate). The fit is published with the REQUESTED shape
-    * stamped into its header line: a fit may legitimately return fewer
-    * than `k` centroids (KMeans on a subspace with fewer distinct
-    * points), so the actual codebook shape cannot distinguish "fit for
-    * k=16" from "fit for k=32, got 16" — the header can. A SHAPE
-    * mismatch still throws (caller error), on every serve, memo hit
-    * included: two calls naming the same path with different shapes
-    * collide loudly, never silently share. */
+  /** Train-once/probe-many entry, mirroring [[Ivf.fitOrLoad]]: the
+    * codebook artifact at `path` ([[Kmeans.ensure]] — memo, unparseable
+    * artifact rebuilds, requested (m, k) in the header, a different
+    * requested shape is loud). */
   def fitOrLoad(df: DataFrame, vecCol: String, m: Int, k: Int, path: String,
-                seed: Long = 42L, trainFraction: Double = 1.0): Codebooks = {
-    val spark = df.sparkSession
-    val ((am, ak), cb) = graft.Artifact.ensureFile(spark, path)(
-      graft.Artifact.readIf(spark, path)(
-        parseArtifact(readText(path, spark.sparkContext.hadoopConfiguration))))(
-      _.write((s"#pq m=$m k=$k\n" + render(fit(df, vecCol, m, k, seed, trainFraction)))
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-    // The header carries the REQUESTED shape, so a stale artifact fit
-    // for a smaller k cannot silently satisfy a larger-k request (the
-    // actual centroid counts cannot distinguish those two cases)
-    require(am == m && ak == k,
-      s"codebook artifact at $path was fit for (m=$am, k=$ak), " +
-        s"requested (m=$m, k=$k) — stale or mis-keyed artifact path")
-    validated(cb, m, k, path)
-  }
+                seed: Long = 42L, trainFraction: Double = 1.0): Codebooks =
+    Kmeans.ensure(df.sparkSession, path, "pq", m, k)(
+      fit(df, vecCol, m, k, seed, trainFraction))
 
   /** ONE subspace's k×sub centroid table as a literal — every consumer
     * binds per-subspace literals instead of `typedLit(whole codebook)
@@ -294,13 +146,7 @@ object Pq {
       .drop("__pq_vnorm")
       .select(df.columns.toIndexedSeq.map(col) ++ (0 until m).map(j =>
         slice(col("__pq_norm"), j * sub + 1, sub).as(s"__pq_sub$j")): _*)
-    val codes = array((0 until m).map { j =>
-      val cents = subLit(cb, j)
-      val d2 = transform(cents, c =>
-        aggregate(zip_with(col(s"__pq_sub$j"), c, (a, b) => (a - b) * (a - b)),
-          lit(0.0), (acc, x) => acc + x))
-      (array_position(d2, array_min(d2)) - 1).cast("int")
-    }: _*)
+    val codes = array((0 until m).map(j => Kmeans.nearest(col(s"__pq_sub$j"), cb(j))): _*)
     withSubs.withColumn("pq_codes", codes)
       .drop((0 until m).map(j => s"__pq_sub$j"): _*)
   }

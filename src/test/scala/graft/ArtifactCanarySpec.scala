@@ -41,13 +41,26 @@ class ArtifactCanarySpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(path)
 
   test("quantizer: unreadable foreign dir rebuilds; healthy wrong-k artifact is loud") {
-    // (a) a directory that is not a KMeansModel at all (no metadata/)
-    // reads as "no artifact" and rebuilds
+    // (a) garbage bytes at the path read as "no artifact" and rebuild
+    // into a headed quantizer file
     val p1 = freshDir("ivf") + "/q1"
-    pollute(p1)
+    val pp1 = new org.apache.hadoop.fs.Path(p1)
+    fs.mkdirs(pp1.getParent)
+    val out = fs.create(pp1, true)
+    out.write(Array.fill[Byte](64)(0x5a))
+    out.close()
     val m1 = graft.sim.Ivf.fitOrLoad(emb, "embedding", 3, p1)
-    assert(m1.getK == 3)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$p1/metadata")))
+    assert(m1.length == 3)
+    val in = fs.open(pp1)
+    val firstLine = try scala.io.Source.fromInputStream(in).getLines().next()
+      finally in.close()
+    assert(firstLine == "#ivf m=1 k=3")
+    // a foreign DIRECTORY at the path (an older, directory-shaped
+    // quantizer format) is replaced by the file too
+    val p0 = freshDir("ivfdir") + "/q0"
+    pollute(p0)
+    assert(graft.sim.Ivf.fitOrLoad(emb, "embedding", 3, p0).length == 3)
+    assert(fs.getFileStatus(new org.apache.hadoop.fs.Path(p0)).isFile)
     // (b) a HEALTHY artifact fit for k=3 probed with k=4 is a mis-keyed
     // path (stamps cover data, not parameters) — loud, never refit
     val e = intercept[IllegalArgumentException](
@@ -164,6 +177,29 @@ class ArtifactCanarySpec extends AnyFunSuite {
     subs.foreach { case (token, path) =>
       assert(path.startsWith(root), s"$token -> $path is outside $root")
     }
+  }
+
+  test("a publish prunes superseded generations, on disk and in the memo, and nothing else") {
+    val src = freshDir("prune")
+    def gen(stamp: String) = Artifact.path("prune_canary", src, stamp)
+    def exists(p: String) = fs.exists(new org.apache.hadoop.fs.Path(p))
+    def table(stamp: String, v: Int) =
+      Artifact.table(spark, gen(stamp), Seq("v"))(Seq(v).toDF("v"))
+    assert(table("aaa1", 1).as[Int].collect().toSeq == Seq(1))
+    // neighbours a prune must leave alone: a temp sibling mid-publish
+    // and another artifact over the same source
+    val temp = gen("aaa1") + ".tmp-0"
+    val other = Artifact.path("prune_canary_other", src, "aaa1")
+    fs.mkdirs(new org.apache.hadoop.fs.Path(temp))
+    fs.mkdirs(new org.apache.hadoop.fs.Path(other))
+    assert(table("bbb2", 2).as[Int].collect().toSeq == Seq(2))
+    assert(!exists(gen("aaa1")) && exists(gen("bbb2")))
+    assert(exists(temp) && exists(other))
+    // the pruned generation's memo entry went with it: asking for it
+    // again builds afresh (and prunes the newer one in turn)
+    assert(table("aaa1", 3).as[Int].collect().toSeq == Seq(3))
+    assert(exists(gen("aaa1")) && !exists(gen("bbb2")))
+    Seq(gen("aaa1"), temp, other).foreach(p => fs.delete(new org.apache.hadoop.fs.Path(p), true))
   }
 
   test("Artifact.invalidate flushes a memoized pq codebook: a rewritten artifact is re-read") {

@@ -67,13 +67,15 @@ class IvfSpec extends AnyFunSuite {
   test("quantizer persists via S5: save/load round-trips centroids bit-exactly") {
     val dir = java.nio.file.Files.createTempDirectory("ivf_rt").toString + "/q"
     val model = Ivf.fitCentroids(vecs, "embedding", 3, seed = 7L)
-    Ivf.save(model, dir)
-    val reloaded = Ivf.load(dir)
-    assert(model.clusterCenters.map(_.toArray.toSeq).toSeq ==
-      reloaded.clusterCenters.map(_.toArray.toSeq).toSeq)
-    // fitOrLoad on an existing artifact takes the load path and probes
-    // must agree with the in-memory model's
+    // the first fitOrLoad fits and publishes; after the memo is dropped
+    // the second one reads the text artifact back from disk
+    val published = Ivf.fitOrLoad(vecs, "embedding", 3, dir, seed = 7L)
+    graft.Artifact.invalidate(dir)
     val viaLoad = Ivf.fitOrLoad(vecs, "embedding", 3, dir, seed = 7L)
+    assert(!(viaLoad eq published))
+    assert(model.map(_.toSeq).toSeq == published.map(_.toSeq).toSeq)
+    assert(model.map(_.toSeq).toSeq == viaLoad.map(_.toSeq).toSeq)
+    // probes against the loaded quantizer agree with the in-memory fit's
     val a = Ivf.assignCells(vecs, "embedding", model)
       .select(col("vec_id"), col("cell")).collect().map(r => (r.getLong(0), r.getInt(1))).toSet
     val b = Ivf.assignCells(vecs, "embedding", viaLoad)
@@ -107,7 +109,7 @@ class IvfSpec extends AnyFunSuite {
     // upstream of the top-k machinery (so the window-vs-agg ranking
     // twins can never silently disagree on NaN order — ivfTopKAgg's
     // nan_first flag is defense-in-depth, not a live code path):
-    // (1) NaN elements — rejected by the quantizer's vector assembly
+    // (1) NaN elements — rejected by the quantizer's training-set check
     val withNaN = Seq((0L, Array(1.0f, 0.0f)), (1L, Array(Float.NaN, 1.0f)))
       .toDF("vec_id", "embedding")
     val e1 = intercept[Exception] {

@@ -78,7 +78,7 @@ class PairGraphSpec extends AnyFunSuite {
     // the scoreboard wiring: TextSim.ngramPairGraph keys the path by
     // the documents stamp, so an in-place rewrite (+ catalog
     // invalidation, the documented contract) builds a second artifact
-    // generation instead of serving the first
+    // generation instead of serving the first (and prunes the first)
     val dir = java.nio.file.Files.createTempDirectory("graft_pg_stamp").toString
     val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
     def artifacts(): Set[String] = {
@@ -95,9 +95,10 @@ class PairGraphSpec extends AnyFunSuite {
     writeDocs(dir, "generation two with different text")
     graft.Tables.invalidate(dir)
     graft.queries.TextSim.ngramPairGraph(spark, dir)
+    // the publish of the new generation prunes the superseded one
     val gen2 = artifacts()
-    assert(gen2.size == 2 && gen1.subsetOf(gen2),
-      s"regeneration must produce a second artifact: gen1=$gen1 gen2=$gen2")
+    assert(gen2.size == 1 && gen2 != gen1,
+      s"regeneration must leave exactly one, new artifact: gen1=$gen1 gen2=$gen2")
   }
 
   test("params stamp: mismatched parameters at the same path fail loudly, artifact untouched") {
