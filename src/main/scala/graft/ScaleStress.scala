@@ -189,9 +189,10 @@ object ScaleStress {
         // template cohort's m² band collisions never MATERIALIZE
         // (a generation-stage knob like BANDS, not an output filter
         // like MINEST; witness by shuffle bytes). -1 = AutoShingleDf
-        // (r13): the bucketed detector decides, the production
-        // default. Unset keeps the uncapped legs comparable across
-        // rounds.
+        // (r13), the production default: the exact path's sort-fold
+        // stats pass measures the hot mass and decides, so the leg
+        // pays one shuffle of the exploded corpus. Unset keeps the
+        // uncapped legs comparable across rounds.
         val minEst = sys.env.get("SPARK_GRAFT_SCALE_MINEST")
           .map(_.toDouble).getOrElse(0.5)
         val nBands = sys.env.get("SPARK_GRAFT_SCALE_BANDS")

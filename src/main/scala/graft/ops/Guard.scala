@@ -37,6 +37,11 @@ object Guard {
     * what was being materialized, `remedy` tells the caller what to do
     * about it (raise which knob, pre-filter what, chunk how). */
   def driverLiteral[T](ds: Dataset[T], name: String, cap: Long, remedy: String): Array[T] =
-    probe(ds, cap).getOrElse(throw new IllegalArgumentException(
-      s"$name exceeds the driver-materialization cap of $cap rows — $remedy"))
+    probe(ds, cap).getOrElse(throw overCap(name, cap, remedy))
+
+  /** [[driverLiteral]]'s failure, for callers that [[probe]] first and
+    * decide per call site whether an over-cap result is fatal. */
+  def overCap(name: String, cap: Long, remedy: String): IllegalArgumentException =
+    new IllegalArgumentException(
+      s"$name exceeds the driver-materialization cap of $cap rows — $remedy")
 }

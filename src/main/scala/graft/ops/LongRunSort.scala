@@ -90,9 +90,8 @@ import org.apache.spark.memory.{MemoryConsumer, MemoryMode}
   * The default chunk budget is derived from the executor itself (a
   * quarter of this JVM's per-core heap share, floored at 1 Mi longs and
   * capped at [[MaxDefaultChunkLongs]]) — with the grant in place this is
-  * a fairness ceiling rather than the only safety net; the explicit
-  * knob (`spark.graft.dedup.statsChunkLongs`) overrides the derivation
-  * for operators that know their corpus.
+  * a fairness ceiling rather than the only safety net; an explicit
+  * `chunkLongs` overrides the derivation (tests use it to force spills).
   *
   * This is deliberately NOT a general sorter: one column, fixed width,
   * no comparator — the narrowness is what buys the 4.5× density. Callers

@@ -341,6 +341,7 @@ object Dedup {
     // Density is summed in DOUBLE: it is a routing decision, not a
     // result, and a petabyte corpus's Σdf² overflows long.
     val (hotRows, candidateMass) = collectShingleStats(arr, maxShingleDf)
+      .getOrElse(throw blacklistOverflow(maxShingleDf, MaxBlacklistRows))
     val retained =
       if (hotRows.isEmpty) col("__sh")
       else graft.functions.LongSetRemove.remove(col("__sh"), hotRows.map(_.getLong(1)))
@@ -404,12 +405,14 @@ object Dedup {
       .filter(col("jaccard") >= threshold), "exact")
   }
 
-  /** The one stats pass behind [[ngramJaccardPairs]]'s hot-shingle
-    * guard AND density router: hot-shingle rows (`__t = 0`, value in
-    * `__v`) plus per-partition PARTIAL sums of the post-guard
-    * candidate-mass Σ df·(df−1)/2 (`__t = 1`, partial in `__mass` —
-    * [[collectShingleStats]] sums them distributed and bounds ONLY
-    * the `__t = 0` rows against the blacklist guard's 4M bound).
+  /** The one df pass behind every hot-shingle decision — the exact
+    * path's guard AND density router, and the minhash df cap
+    * ([[resolveMinhashCap]]): hot-shingle rows (`__t = 0`, value in
+    * `__v`, its df in `__df`) plus per-partition PARTIAL sums of the
+    * post-guard candidate-mass Σ df·(df−1)/2 (`__t = 1`, partial in
+    * `__mass` — [[collectShingleStats]] sums them distributed and
+    * bounds ONLY the `__t = 0` rows against the blacklist guard's 4M
+    * bound).
     *
     * Shape (r14, VERDICT r13 #3; sort kernel swapped r15): ONE shuffle
     * of the exploded corpus hash-partitioned on the fingerprint, an
@@ -448,9 +451,16 @@ object Dedup {
     * equi-key never matches null) and the signature kernels skip
     * them — so they must neither join the blacklist (a hot null would
     * NPE the typed collect at the call site) nor inflate the
-    * candidate-mass routing sum (same rule as the minhash df-cap's
-    * stats pass; defect class #5: null keys group as a value). */
-  private[text] def shingleStats(arr: DataFrame, maxShingleDf: Long): DataFrame = {
+    * candidate-mass routing sum (defect class #5: null keys group as
+    * a value). The run length is a DOCUMENT frequency only over
+    * per-document DISTINCT arrays — every caller passes
+    * `shingleHashArray(distinct = true)`.
+    *
+    * `chunkLongs` is the in-task sort budget; `0` derives it from the
+    * executor (see [[graft.ops.LongRunSort.runCursor]]) — a positive
+    * value exists only to force the spill path in tests. */
+  private[text] def shingleStats(arr: DataFrame, maxShingleDf: Long,
+      chunkLongs: Int = 0): DataFrame = {
     val spark = arr.sparkSession
     import spark.implicits._
     // 4x the session's shuffle width: a SORT buffers its whole
@@ -474,16 +484,9 @@ object Dedup {
     // (4.5× denser), spilling LZ4-framed raw longs past the chunk
     // budget OR when the task memory manager asks (r16: the chunk is
     // acquired as an execution-memory grant, so Spark sees it and can
-    // reclaim it under pressure). The default budget is derived
-    // per-executor inside the task (a quarter of the JVM's per-core
-    // heap share) as a fairness ceiling; the knob overrides it and is
-    // validated HERE, at plan build — a bad value must fail before the
-    // corpus shuffle runs, not in every reduce task after it (r15c).
-    val chunkLongs = spark.conf.getOption("spark.graft.dedup.statsChunkLongs")
-      .map(_.toInt).getOrElse(0)
-    require(chunkLongs == 0 || chunkLongs >= 2,
-      s"spark.graft.dedup.statsChunkLongs must be >= 2 (or unset to derive " +
-        s"from the executor), got $chunkLongs")
+    // reclaim it under pressure). The budget is derived per-executor
+    // inside the task (a quarter of the JVM's per-core heap share) as
+    // a fairness ceiling.
     arr.select(explode(col("__sh")).as("shingle_h"))
       .filter(col("shingle_h").isNotNull)
       .repartition(parts, col("shingle_h"))
@@ -501,34 +504,37 @@ object Dedup {
         // per input element — at 10⁹ elements the GC churn would
         // cost more than the spill this kernel removes
         val runs = graft.ops.LongRunSort.runCursor(it, chunkLongs)
-        new Iterator[(Int, Long, Double)] {
+        new Iterator[(Int, Long, Long, Double)] {
           private var mass = 0.0
           private var massEmitted = false
           private var hasPending = false
-          private var pending: (Int, Long, Double) = null
+          private var pending: (Int, Long, Long, Double) = null
           private def advance(): Unit = {
             while (!hasPending && runs.nextRun()) {
               val cnt = runs.runCount
-              if (cnt > maxShingleDf) { pending = (0, runs.runValue, 0.0); hasPending = true }
+              if (cnt > maxShingleDf) { pending = (0, runs.runValue, cnt, 0.0); hasPending = true }
               else mass += cnt.toDouble * (cnt - 1).toDouble / 2.0
             }
             if (!hasPending && !massEmitted) {
-              pending = (1, 0L, mass); hasPending = true; massEmitted = true
+              pending = (1, 0L, 0L, mass); hasPending = true; massEmitted = true
             }
           }
           override def hasNext: Boolean = { advance(); hasPending }
-          override def next(): (Int, Long, Double) = {
+          override def next(): (Int, Long, Long, Double) = {
             advance()
             if (!hasPending) throw new NoSuchElementException("stats fold drained")
             hasPending = false
             pending
           }
         }
-      }.toDF("__t", "__v", "__mass")
+      }.toDF("__t", "__v", "__df", "__mass")
   }
 
   /** The one evaluation + driver collect of [[shingleStats]]:
-    * `(hot rows, candidate mass)`.
+    * `Some((hot rows, candidate mass))`, or `None` when the blacklist
+    * holds more than `maxBlacklistRows` shingles — the caller picks
+    * the loud remedy ([[blacklistOverflow]]: the exact path, explicit
+    * minhash caps) or auto mode's disengage ([[resolveMinhashCap]]).
     *
     * The stats frame is [[graft.ops.Exec.materialize]]d BEFORE the
     * guard probes it (r15): [[graft.ops.Guard]]'s CollectLimit ramps
@@ -548,18 +554,26 @@ object Dedup {
     * message misattributing the excess to hot shingles. The mass sum
     * stays distributed (one tiny aggregate over the pinned frame). */
   private[text] def collectShingleStats(arr: DataFrame, maxShingleDf: Long,
-      maxBlacklistRows: Long = MaxBlacklistRows): (Array[org.apache.spark.sql.Row], Double) = {
+      maxBlacklistRows: Long = MaxBlacklistRows)
+      : Option[(Array[org.apache.spark.sql.Row], Double)] = {
     val statsMat = Exec.materialize(shingleStats(arr, maxShingleDf))
-    try {
-      val hot = Guard.driverLiteral(
-        statsMat.filter(col("__t") === 0),
-        s"hot-shingle blacklist (df > $maxShingleDf)", maxBlacklistRows,
-        "raise maxShingleDf or pre-filter boilerplate before dedup")
+    try Guard.probe(statsMat.filter(col("__t") === 0), maxBlacklistRows).map { hot =>
       val mass = statsMat.filter(col("__t") === 1)
         .agg(coalesce(sum(col("__mass")), lit(0.0))).head().getDouble(0)
       (hot, mass)
     } finally Exec.release(statsMat)
   }
+
+  /** The loud failure for a blacklist past the driver bound, naming
+    * the remedy. */
+  private def blacklistOverflow(cap: Long, maxBlacklistRows: Long): IllegalArgumentException =
+    Guard.overCap(s"hot-shingle blacklist (df > $cap)", maxBlacklistRows,
+      "raise maxShingleDf or pre-filter boilerplate before dedup")
+
+  /** Σ df·(df−1)/2 over collected hot rows: the quadratic pair mass a
+    * hot cohort injects into every band join downstream. */
+  private[text] def hotMass(hot: Array[org.apache.spark.sql.Row]): Double =
+    hot.iterator.map { r => val d = r.getLong(2).toDouble; d * (d - 1.0) / 2.0 }.sum
 
   /** The r13 aggregate formulation of [[shingleStats]] — kept as the
     * executable spec the sort-fold is property-differentialed against
@@ -573,9 +587,9 @@ object Dedup {
       .groupBy(col("shingle_h"))
       .agg(count(lit(1)).as("__df"))
     dfCounts.filter(col("__df") > maxShingleDf)
-      .select(lit(0).as("__t"), col("shingle_h").as("__v"), lit(0.0).as("__mass"))
+      .select(lit(0).as("__t"), col("shingle_h").as("__v"), col("__df"), lit(0.0).as("__mass"))
       .unionAll(dfCounts.select(
-        lit(1).as("__t"), lit(0L).as("__v"),
+        lit(1).as("__t"), lit(0L).as("__v"), lit(0L).as("__df"),
         coalesce(sum(when(col("__df") <= maxShingleDf,
           col("__df").cast("double") * (col("__df") - 1).cast("double") / 2)),
           lit(0.0)).as("__mass")))
@@ -1079,14 +1093,14 @@ object Dedup {
       .select(col(idCol), col("fingerprint"))
   }
 
-  /** Sentinel for `maxShingleDf`: run the cheap hot-shingle DETECTOR
-    * ([[hotShinglesBucketed]] at [[DefaultMaxShingleDf]]) and engage
+  /** Sentinel for `maxShingleDf`: run the hot-shingle stats pass
+    * ([[collectShingleStats]] at [[DefaultMaxShingleDf]]) and engage
     * the cap only when the measured quadratic candidate mass from
     * hot shingles exceeds [[AutoEngageHotPairs]] — the
     * boilerplate-cohort guard as a DEFAULT, not advice (VERDICT r12
     * #1: the user who most needs the cap — raw minhash over an
     * unstripped web crawl — is exactly the one who won't know to set
-    * it). When the detector does not engage, results are bit-identical
+    * it). When the cap does not engage, results are bit-identical
     * to the uncapped path. */
   val AutoShingleDf: Long = -1L
 
@@ -1097,7 +1111,7 @@ object Dedup {
   val DefaultMaxShingleDf: Long = 1000L
 
   /** Auto-engage threshold, in quadratic candidate pairs
-    * (Σ over confirmed-hot shingles of df·(df−1)/2 — the pair mass a
+    * (Σ over hot shingles of df·(df−1)/2 — the pair mass a
     * boilerplate cohort injects into every band join downstream).
     * Below it the hot shingles are real but harmless (a df=1001
     * stop-phrase ≈ 5×10⁵ pairs — noise next to any corpus-scale band
@@ -1108,298 +1122,34 @@ object Dedup {
     * semantics. */
   private[graft] val AutoEngageHotPairs: Double = 1e6
 
-  /** Bucket-table width for [[hotShinglesBucketed]]'s stage 1 — a
-    * power of two; 2²¹ buckets = one bounded 16 MiB long[] per task.
-    * Sizing: suspect-bucket confirm cost grows with the mean bucket
-    * load N/width, so width should keep N/width ≲ cap/2; at 2²¹ that
-    * holds to N ≈ 10⁹ shingle occurrences per JVM-visible corpus at
-    * the default cap. Past it the detector DEGRADES GRACEFULLY: more
-    * buckets turn suspect and the confirm pass approaches the full
-    * exact aggregate — never a wrong blacklist (the confirm is exact
-    * by construction). */
-  private[graft] val HotBucketWidth: Int = 1 << 21
-
-  /** Hard ceiling on any bucket-table width, default or escalated —
-    * plan-validated at [[hotShinglesBucketedOpt]] entry (VERDICT r16
-    * #3). 2²² is chosen for the DRIVER (the suspect collect is
-    * width-bounded, so this keeps the worst case in the same ~4M-row
-    * class as the blacklist guard) and it also bounds the EXECUTOR
-    * side: the per-task [[graft.ops.SegLongCounts]] grant is
-    * `width × 8` = 32 MiB at this ceiling, i.e. ≤ 1 GiB per 32-task
-    * executor even if the pool is too contended to grant it (the
-    * consumer proceeds under-granted; see the SegLongCounts doc). */
-  private[graft] val MaxBucketWidth: Int = 1 << 22
-
-  /** Exact hot-shingle stats from the bucketed detector:
-    * `blacklist` = exactly the shingle fingerprints with document
-    * frequency > cap (provably — see [[hotShinglesBucketed]]);
-    * `hotMass` = Σ df·(df−1)/2 over them (the quadratic pair mass a
-    * band join would materialize for the cohort); `maxDf` for the
-    * engage log; `suspectBuckets` as the detector-cost diagnostic. */
-  private[graft] case class HotShingleStats(blacklist: Array[Long],
-      hotMass: Double, maxDf: Long, suspectBuckets: Int)
-
-  /** The CHEAP df-stats pass (VERDICT r12 next-round #1/#3): find the
-    * exact set of shingles with df > cap without shuffling the
-    * exploded corpus.
-    *
-    * The former exact aggregate shuffled every (doc, shingle)
-    * occurrence — mostly-unique keys defeat map-side combine, so the
-    * stats pass cost ~5.2 GiB at the 100× scale point and was the
-    * entire reason the minhash cap could not default on. This pass
-    * replaces it with a thresholded bucket-count sketch + an exact
-    * confirm, and is PROVABLY blacklist-identical to the exact
-    * aggregate:
-    *
-    *   1. '''Stage 1 (per-partition, bounded memory, ~zero shuffle)''':
-    *      each partition folds its distinct-per-doc shingle stream
-    *      into a bounded `long[width]` bucket-count array
-    *      (bucket = low bits of the xxhash64 fingerprint) and emits
-    *      `(bucket, localCount)` ONLY where `localCount ≥ t`,
-    *      `t = max(1, cap / 2P)`. A partition therefore drops at most
-    *      `t − 1` occurrences per bucket, so across `P` partitions a
-    *      bucket's emitted total `B'` undercounts its true total `B`
-    *      by at most `P·(t−1) ≤ cap/2`.
-    *   2. '''Suspect buckets (pigeonhole superset — the proof)''': a
-    *      shingle with df > cap lives in a bucket with `B ≥ df > cap`,
-    *      hence `B' > cap − P·(t−1)`. Keeping every bucket with
-    *      `B' > cap − P_actual·(t−1)` is therefore a DETERMINISTIC
-    *      superset of every hot shingle's bucket — no sampling, no
-    *      sketch-error probability. (`P_actual` is counted by a
-    *      sentinel row per partition, so the bound holds even if
-    *      planning-time and runtime partition counts were to differ.)
-    *   3. '''Exact confirm, suspects only''': occurrences whose bucket
-    *      is suspect (a broadcast semi-join — suspects are bounded by
-    *      `width`) flow into the exact per-shingle count; `df > cap`
-    *      is the blacklist. Superset candidates + exact confirm ⇒ the
-    *      final blacklist equals the exact aggregate's ALWAYS, under
-    *      any partitioning (partitioning moves only the COST, via
-    *      which buckets turn suspect). Property-pinned against the
-    *      exact spec twin in DedupPropertySpec, including under
-    *      repartitioning and collision-heavy tiny widths.
-    *
-    * Cost shape: stage 1 shuffles only buckets that clear the local
-    * threshold — on a clean corpus that is ~nothing and the confirm
-    * never runs (zero extra shuffle, one tokenize scan); on a cohort
-    * corpus the confirm shuffles the suspect buckets' occupants
-    * (≈ hot mass + mean-load noise), not the corpus. At CLUSTER scale
-    * the pigeonhole threshold degenerates (P > cap/2 ⇒ t = 1, no
-    * local shedding) — the pass stays sound (t = 1 drops nothing) and
-    * stage 1's emission is still bounded by P × width rows (each task
-    * emits at most its bucket table), orders below the N-row exploded
-    * shuffle the exact aggregate pays: at 10⁴ tasks × 2²¹ buckets
-    * that is ~2×10¹⁰ rows against an N ~ 10¹³ corpus. The threshold
-    * is an extra local-scale win, not the scheme's load-bearing
-    * bound. DF counts
-    * DISTINCT docs per shingle (`array_distinct` before the fold) and
-    * null elements are excluded — both matching the signature
-    * kernel's skip semantics (defect class #5). */
-  private[graft] def hotShinglesBucketed(arr: DataFrame, cap: Long,
-      width: Int = HotBucketWidth,
-      maxBlacklistRows: Long = MaxBlacklistRows): HotShingleStats =
-    hotShinglesBucketedOpt(arr, cap, width, maxBlacklistRows).getOrElse(
-      throw new IllegalArgumentException(
-        s"hot-shingle blacklist (df > $cap) exceeds the driver-materialization " +
-          s"cap of $maxBlacklistRows rows — raise maxShingleDf or pre-filter " +
-          "boilerplate before dedup"))
-
-  /** Driver bound on a collected hot-shingle blacklist (shared with
-    * the exact spec twin's Guard): past it the guard cannot hold the
-    * removal set. Explicit-cap callers fail loudly with the remedy
-    * ([[hotShinglesBucketed]]); the AUTO path must NOT turn a corpus
-    * that ran fine under the pre-r13 uncapped default into a hard
-    * failure, so it DISENGAGES loudly instead
-    * ([[resolveMinhashCap]]). */
+  /** Driver bound on a collected hot-shingle blacklist: past it the
+    * guard cannot hold the removal set. The exact path and explicit
+    * minhash caps fail loudly with the remedy ([[blacklistOverflow]]);
+    * the AUTO path must NOT turn a corpus that ran fine under the
+    * pre-r13 uncapped default into a hard failure, so it DISENGAGES
+    * loudly instead ([[resolveMinhashCap]]). */
   private[graft] val MaxBlacklistRows: Long = 4000000L
 
-  /** [[hotShinglesBucketed]], `None` when the exact blacklist would
-    * exceed [[MaxBlacklistRows]] — for callers with a fallback
-    * (the auto resolver) rather than a remedy message. */
-  private[graft] def hotShinglesBucketedOpt(arr: DataFrame, cap: Long,
-      width: Int = HotBucketWidth,
-      maxBlacklistRows: Long = MaxBlacklistRows,
-      escalate: Boolean = true,
-      plannedPOverride: Int = 0): Option[HotShingleStats] = {
-    require(cap >= 1 && cap < Long.MaxValue, s"df cap must be >= 1, got $cap")
-    require(width >= 2 && (width & (width - 1)) == 0,
-      s"bucket width must be a positive power of two, got $width")
-    // the same clamp the escalation arithmetic applies, enforced on
-    // the caller-supplied width too: past 2²² the suspect collect and
-    // the per-task table both leave their designed envelopes
-    require(width <= MaxBucketWidth,
-      s"bucket width must be <= $MaxBucketWidth (2^22), got $width")
-    val spark = arr.sparkSession
-    import spark.implicits._
-    val occ = arr.select(explode(array_distinct(col("__sh"))).as("s"))
-      .filter(col("s").isNotNull)
-    val mask = (width - 1).toLong
-    val plannedP =
-      if (plannedPOverride > 0) plannedPOverride
-      else math.max(1, occ.rdd.getNumPartitions)
-    val t = math.max(1L, cap / (2L * plannedP))
-    // Suppression (only when an escalation rerun is available): a
-    // partition whose bucket table is DEGRADED — more than a quarter
-    // of the buckets clear the local threshold — would shuffle a
-    // near-full bucket table that the driver is about to discard and
-    // re-measure anyway. It emits just the sentinels plus a
-    // degradation marker instead; the 300× stage table measured this
-    // probe emission at 703 MiB, the whole top-decade excess
-    // (dev/SCALE_r13.md §2a). escalate = false (the rerun itself, and
-    // tests) always emits fully.
-    val suppress = escalate
-    val locals = occ.as[Long].mapPartitions { it =>
-      // segmented + grant-accounted (r16, §17.5 item f): the flat
-      // 16/32 MiB long[] this held before was a multi-region
-      // humongous allocation on every core at stage start — the
-      // GCLocker-race class of the r15c 300× OOM
-      val counts = new graft.ops.SegLongCounts(width)
-      var n = 0L
-      while (it.hasNext) { counts.inc((it.next() & mask).toInt); n += 1 }
-      // sentinels: (-1, 1) counts ACTUAL partitions, so the drop bound
-      // below uses the runtime P, not the planning-time estimate;
-      // (-2, n) measures total occurrences, so the escalation check
-      // below uses the REAL N, never an a-priori guess; (-3, 1) marks
-      // a degraded (suppressed) partition
-      var hotBuckets = 0
-      var b = 0
-      while (b < width) { if (counts.get(b) >= t) hotBuckets += 1; b += 1 }
-      if (suppress && hotBuckets > width / 4) Iterator((-1, 1L), (-2, n), (-3, 1L))
-      else Iterator((-1, 1L), (-2, n)) ++
-        Iterator.range(0, width).filter(x => counts.get(x) >= t).map(x => (x, counts.get(x)))
-    }.toDF("__b", "__n")
-    // the suspect floor is applied BEFORE the collect using the
-    // PLANNED partition count: actualP ≤ plannedP ⇒ the planned drop
-    // bound over-estimates the true undercount, so the pre-collect
-    // filter keeps a superset of the actual-rule suspects (cost, not
-    // correctness). The sentinel then PROVES actualP ≤ plannedP —
-    // were a runtime split ever to exceed the plan, the floor would
-    // be unsound, so that is a loud invariant failure, not a rebuild.
-    // Collect is bounded by width + 1; realistic corpora yield ~|hot|
-    // rows (mean-load noise sits far below the floor).
-    val plannedDrop = plannedP.toLong * (t - 1L)
-    val totals = locals.groupBy(col("__b")).agg(sum(col("__n")).as("__c"))
-      .filter(col("__b") < 0 || col("__c") > cap - plannedDrop)
-      .collect()
-    val actualP = totals.find(_.getInt(0) == -1).map(_.getLong(1)).getOrElse(0L)
-    if (actualP > plannedP) {
-      // the pre-collect suspect floor used the PLANNED P, so the
-      // pigeonhole superset bound did not hold for this run's output —
-      // but a rerun planned at the MEASURED P is sound by construction
-      // (ADVICE r13 #4: a future AQE/source change that splits past the
-      // plan should cost a loud retry, not fail the whole job). A
-      // second excess against the measured P is a genuine invariant
-      // break and still throws.
-      if (plannedPOverride > 0)
-        throw new IllegalStateException(
-          s"hotShinglesBucketed ran $actualP partitions > the MEASURED plan $plannedP " +
-            "on the retry — the pigeonhole superset bound is unsound (bug)")
-      org.apache.logging.log4j.LogManager.getLogger(getClass).warn(
-        s"hotShinglesBucketed: runtime split $actualP partitions > planned $plannedP — " +
-          s"suspect floor was unsound for this run; re-running once planned at $actualP")
-      return hotShinglesBucketedOpt(arr, cap, width, maxBlacklistRows, escalate,
-        plannedPOverride = actualP.toInt)
-    }
-    // Width escalation (r13, measured at the 300× point): once the
-    // mean bucket load N/width crosses cap/2, most buckets clear the
-    // suspect floor and the confirm degrades toward the exact pass
-    // (correct, but the cheapness is gone — 606 MiB at 100× vs 15.9
-    // GiB at 300× on the 2²¹ default). N is measured by the stage-1
-    // sentinels, so the pass re-runs ONCE with a width sized from the
-    // real count (4N/cap keeps the mean load at cap/4), bounded at
-    // 2²² (a 32 MiB long[] per task — and, load-bearing: the rerun's
-    // suspect collect is width-bounded, so the clamp keeps the
-    // driver's worst case in the blacklist guard's ~4M-row class).
-    // Past THAT bound — N > cap·2²¹ occurrences in one JVM's corpus —
-    // the degradation is accepted and documented; the blacklist stays
-    // exact either way. Tests pass escalate = false to pin the
-    // collision-heavy small-width behavior the escalated run still
-    // relies on at its own N/W ratio.
-    val occTotal = totals.find(_.getInt(0) == -2).map(_.getLong(1)).getOrElse(0L)
-    val degraded = totals.exists(_.getInt(0) == -3)
-    if (escalate && (degraded || occTotal / width > cap / 2)) {
-      // rerun width clamp = 2²² — chosen for the DRIVER, not the
-      // executors: the rerun emits fully and its suspect collect is
-      // bounded by the width, so 2²² keeps the worst-case collect in
-      // the same ~4M-row class as the blacklist guard (a 2²⁴ clamp
-      // would quadruple task arrays for a 16M-row collect cliff in
-      // the very regime the escalation exists for — review r13).
-      // Past N = cap·2²¹ occurrences the rerun is degraded-but-
-      // bounded: emission ≤ P × 2²² rows, blacklist exact either way.
-      val target = math.max(width.toLong, 4L * occTotal / math.max(1L, cap))
-      val w1 = Integer.highestOneBit(math.min(target, MaxBucketWidth.toLong).toInt - 1) << 1
-      val next = math.max(w1, width)
-      org.apache.logging.log4j.LogManager.getLogger(getClass).info(
-        f"hotShinglesBucketed: ${if (degraded) "degraded partitions" else "mean bucket load > cap/2"} " +
-          f"at width=$width ($occTotal%,d occurrences) — re-running once at width=$next")
-      // the rerun never suppresses: either the bigger width makes the
-      // emission sparse, or the corpus genuinely exceeds the width
-      // clamp (N > cap·2²³ in one JVM — a bigger explicit cap is the
-      // right knob there) and the full emission is the honest cost.
-      // A measured-P override threads through: the partition count is
-      // width-independent, so a P-retry that then escalates must not
-      // re-plan from the estimate it just proved wrong (review r14).
-      return hotShinglesBucketedOpt(arr, cap, next, maxBlacklistRows,
-        escalate = false, plannedPOverride = plannedPOverride)
-    }
-    val suspects = totals.iterator
-      .filter(r => r.getInt(0) >= 0)
-      .map(_.getInt(0)).toArray
-    if (suspects.isEmpty) Some(HotShingleStats(Array.empty, 0.0, 0L, 0))
-    else {
-      val suspectDf = broadcast(spark.createDataset(suspects.toSeq).toDF("__b"))
-      Guard.probe(
-        occ.withColumn("__b", col("s").bitwiseAND(lit(mask)).cast("int"))
-          .join(suspectDf, Seq("__b"), "left_semi")
-          .groupBy(col("s")).agg(count(lit(1)).as("__df"))
-          .filter(col("__df") > cap),
-        maxBlacklistRows).map { hotRows =>
-        val mass = hotRows.iterator.map { r =>
-          val d = r.getLong(1).toDouble; d * (d - 1.0) / 2.0
-        }.sum
-        HotShingleStats(hotRows.map(_.getLong(0)),
-          mass, if (hotRows.isEmpty) 0L else hotRows.iterator.map(_.getLong(1)).max,
-          suspects.length)
-      }
-    }
-  }
-
-  /** The exact-aggregate formulation of [[hotShinglesBucketed]]'s
-    * blacklist — kept as the executable spec the bucketed pass is
-    * property-differentialed against (it shuffles the full exploded
-    * corpus, so it is not the production path). */
-  private[text] def hotShinglesExact(arr: DataFrame, cap: Long): Array[Long] =
-    Guard.driverLiteral(
-      arr.select(explode(array_distinct(col("__sh"))).as("shingle_h"))
-        .filter(col("shingle_h").isNotNull)
-        .groupBy(col("shingle_h")).agg(count(lit(1)).as("__df"))
-        .filter(col("__df") > cap).select(col("shingle_h")),
-      s"hot-shingle blacklist (df > $cap)", MaxBlacklistRows,
-      "raise maxShingleDf or pre-filter boilerplate before dedup")
-      .map(_.getLong(0))
-
-  /** A resolved `maxShingleDf` decision: the effective cap, the
-    * detector's pre-confirmed blacklist when auto engaged, and — when
-    * the resolver already paid a tokenize + checkpoint of the corpus —
-    * the shared per-doc shingle arrays, so
-    * [[minhashSignaturesResolved]] never re-tokenizes what the
-    * detector just scanned. */
-  /** A resolved df cap. `sharedArr`, when present, is the resolver's
-    * materialized shingle-array checkpoint ([[graft.ops.Exec.materialize]])
-    * that the detector and the signature projection both read — the
-    * caller that consumes the resolution OWNS its release
+  /** A resolved df cap. `blacklist` is present exactly when the
+    * stats pass ran and the cap is finite (engaged auto, explicit
+    * finite caps); possibly empty. `sharedArr`, when present, is the
+    * resolver's materialized per-doc shingle-array checkpoint
+    * ([[graft.ops.Exec.materialize]]) that the stats pass and the
+    * signature projection both read — so [[minhashSignaturesResolved]]
+    * never re-tokenizes what the stats pass just scanned. The caller
+    * that consumes the resolution OWNS its release
     * ([[graft.ops.Exec.release]]) once the derived signatures are
-    * persisted or fully consumed. `blacklist` is present exactly when
-    * the detector ran and the cap is finite (engaged auto, explicit
-    * finite caps); possibly empty. */
+    * persisted or fully consumed. */
   private[text] case class ResolvedCap(cap: Long,
       blacklist: Option[Array[Long]], sharedArr: Option[DataFrame])
 
   /** Resolve a requested `maxShingleDf`. Explicit `Long.MaxValue`
     * passes through untouched (uncapped single-scan plan, zero cost);
-    * explicit finite caps run the detector here, over resolver-owned
+    * explicit finite caps run the stats pass ([[collectShingleStats]],
+    * the exact path's one df pass) here, over resolver-owned
     * materialized arrays (r15 — see [[ResolvedCap]]);
-    * [[AutoShingleDf]] runs the detector
-    * and engages the default cap only above [[AutoEngageHotPairs]].
+    * [[AutoShingleDf]] runs it at [[DefaultMaxShingleDf]] and engages
+    * that cap only above [[AutoEngageHotPairs]].
     *
     * Two r14 cost levers (VERDICT r13 #2), both provably
     * behavior-free:
@@ -1407,98 +1157,101 @@ object Dedup {
     *   - '''Row-count skip gate''': a shingle's document frequency is
     *     bounded by the corpus's document count, so
     *     `N ≤ DefaultMaxShingleDf` ⇒ the blacklist is PROVABLY empty
-    *     and the detector's un-engaged result is known without running
-    *     it — the uncapped plan returns directly, zero detector cost.
-    *     The count is one column-pruned scan, orders cheaper than the
-    *     tokenize pass it skips. NOTE the looser VERDICT-proposed
-    *     bound — skip while N(N−1)/2 ≤ the engage mass — is NOT
-    *     sound: the engage mass SUMS over hot shingles, so a cohort of
-    *     m > cap docs sharing k shingles carries k·m(m−1)/2 pairs and
-    *     crosses any fixed mass once k is large enough — e.g. 1,100
-    *     docs sharing two 3-gram shingles ≈ 1.2e6 pairs, inside that
-    *     bound's skip zone (pinned in DedupSpec).
+    *     and the un-engaged result is known without running the stats
+    *     pass — the uncapped plan returns directly. The count is one
+    *     column-pruned scan, orders cheaper than the tokenize pass it
+    *     skips. NOTE the looser VERDICT-proposed bound — skip while
+    *     N(N−1)/2 ≤ the engage mass — is NOT sound: the engage mass
+    *     SUMS over hot shingles, so a cohort of m > cap docs sharing k
+    *     shingles carries k·m(m−1)/2 pairs and crosses any fixed mass
+    *     once k is large enough — e.g. 1,100 docs sharing two 3-gram
+    *     shingles ≈ 1.2e6 pairs, inside that bound's skip zone (pinned
+    *     in DedupSpec).
     *   - '''Shared materialized arrays''': past the gate the resolver
     *     materializes the shingle arrays ONCE ([[graft.ops.Exec.materialize]])
-    *     and every consumer — the detector's fold, its exact confirm,
-    *     and the signature build — reads that checkpoint, exactly the
-    *     trade the explicit-cap path has made since r12. The r13
-    *     resolver re-tokenized per pass to avoid the write; measured
-    *     at +2 s on the 1× scale leg and +3 s at 100× vs the manual
-    *     cap (dev/SCALE_r13.md §2) — the write is cheaper than the
-    *     rescans at every measured point, and the scoreboard's small
-    *     corpora never reach here (the gate returns first).
+    *     and both consumers — the stats pass and the signature build —
+    *     read that checkpoint. The r13 resolver re-tokenized per pass
+    *     to avoid the write; measured at +2 s on the 1× scale leg and
+    *     +3 s at 100× vs the manual cap (dev/SCALE_r13.md §2) — the
+    *     write is cheaper than the rescans at every measured point,
+    *     and the scoreboard's small corpora never reach here (the gate
+    *     returns first).
+    *
+    * The shared arrays are per-document DISTINCT: the stats fold's
+    * run length is then the document frequency (a shingle repeated
+    * within one document counts once), and a signature — a min over
+    * the set — is unchanged by the dedup.
     *
     * Engaged auto is blacklist-identical to an explicit
-    * `maxShingleDf = DefaultMaxShingleDf` (same detector, same exact
-    * confirm), so the two stamp and interoperate identically;
-    * un-engaged auto returns the uncapped path bit-identically. */
+    * `maxShingleDf = DefaultMaxShingleDf` (same pass, same cap), so
+    * the two stamp and interoperate identically; un-engaged auto
+    * returns the uncapped path bit-identically. An oversized
+    * blacklist fails an explicit cap loudly and disengages auto. */
   private[text] def resolveMinhashCap(df: DataFrame, idCol: String, textCol: String,
       requested: Long,
       engageHotPairs: Double = AutoEngageHotPairs,
-      maxBlacklistRows: Long = MaxBlacklistRows): ResolvedCap =
-    if (requested == Long.MaxValue) ResolvedCap(Long.MaxValue, None, None)
-    else if (requested != AutoShingleDf) {
-      require(requested >= 1,
-        s"maxShingleDf must be >= 1, Long.MaxValue (off), or AutoShingleDf (-1), got $requested")
-      // Explicit finite cap (r15): the resolver OWNS the shared
-      // materialized arrays — the detector's two passes and the
-      // signature projection all read ONE checkpoint, and every
-      // caller that persists the signatures (ensureMinhashPairGraph,
-      // minhashCandidates) releases it through `sharedArr`. The
-      // former shape materialized INSIDE the signature build with no
-      // handle to release: one leaked corpus-sized pinned copy per
-      // explicit-cap build (the same leak ADVICE r14 flagged on the
-      // auto path). Explicit callers keep the LOUD oversized-blacklist
-      // failure (hotShinglesBucketed throws the remedy; the auto path
-      // below disengages instead — review r13).
-      val a = Exec.materialize(shingleHashArray(df, idCol, textCol, distinct = false))
-      val bl =
-        try hotShinglesBucketed(a, requested, maxBlacklistRows = maxBlacklistRows).blacklist
-        catch { case t: Throwable => Exec.release(a); throw t }
-      ResolvedCap(requested, Some(bl), Some(a))
-    } else {
-      val log = org.apache.logging.log4j.LogManager.getLogger(getClass)
-      // engageHotPairs < 0 means "engage on ANY hot mass, even zero"
-      // (test mechanics) — the gate's skip is only provable when a
-      // zero mass resolves un-engaged, i.e. for non-negative thresholds
+      maxBlacklistRows: Long = MaxBlacklistRows): ResolvedCap = {
+    if (requested == Long.MaxValue) return ResolvedCap(Long.MaxValue, None, None)
+    val auto = requested == AutoShingleDf
+    require(auto || requested >= 1,
+      s"maxShingleDf must be >= 1, Long.MaxValue (off), or AutoShingleDf (-1), got $requested")
+    val log = org.apache.logging.log4j.LogManager.getLogger(getClass)
+    // engageHotPairs < 0 means "engage on ANY hot mass, even zero"
+    // (test mechanics) — the gate's skip is only provable when a zero
+    // mass resolves un-engaged, i.e. for non-negative thresholds
+    if (auto && engageHotPairs >= 0) {
       val nDocs = df.count()
-      if (nDocs <= DefaultMaxShingleDf && engageHotPairs >= 0) {
+      if (nDocs <= DefaultMaxShingleDf) {
         log.debug(s"minhash df-guard: $nDocs docs <= cap $DefaultMaxShingleDf — " +
-          "no shingle can exceed the cap; skipping the detector (uncapped plan)")
+          "no shingle can exceed the cap; skipping the stats pass (uncapped plan)")
         return ResolvedCap(Long.MaxValue, None, None)
       }
-      val probeArr = Exec.materialize(
-        shingleHashArray(df, idCol, textCol, distinct = false))
-      val statsOpt = hotShinglesBucketedOpt(probeArr, DefaultMaxShingleDf,
-        maxBlacklistRows = maxBlacklistRows)
-      if (statsOpt.isEmpty) {
+    }
+    val cap = if (auto) DefaultMaxShingleDf else requested
+    // the resolver OWNS the shared checkpoint: every caller that
+    // persists the signatures (ensureMinhashPairGraph,
+    // minhashCandidates) releases it through `sharedArr`, and a
+    // failure here releases it before rethrowing
+    val arr = Exec.materialize(shingleHashArray(df, idCol, textCol, distinct = true))
+    val stats =
+      try collectShingleStats(arr, cap, maxBlacklistRows)
+      catch { case t: Throwable => Exec.release(arr); throw t }
+    stats match {
+      case None if !auto =>
+        Exec.release(arr)
+        throw blacklistOverflow(cap, maxBlacklistRows)
+      case None =>
         // a corpus whose hot set exceeds the guard's driver bound ran
         // FINE under the pre-auto default — auto must not turn it into
         // a hard failure (review r13). Disengage, loudly: the caller
         // keeps the uncapped semantics they always had, with the knob
         // named.
         log.warn(f"minhash df-guard DISENGAGED: more than $maxBlacklistRows%,d shingles " +
-          f"exceed df=$DefaultMaxShingleDf — the blacklist is past the guard's driver " +
-          "bound. Proceeding UNCAPPED (the pre-guard default); set an explicit, higher " +
-          "maxShingleDf or pre-strip boilerplate to re-arm the guard.")
-        return ResolvedCap(Long.MaxValue, None, Some(probeArr))
-      }
-      val stats = statsOpt.get
-      if (stats.hotMass > engageHotPairs) {
-        log.warn(f"minhash df-guard AUTO-ENGAGED at maxShingleDf=$DefaultMaxShingleDf: " +
-          f"${stats.blacklist.length}%,d shingles exceed the cap (max df ${stats.maxDf}%,d; " +
-          f"~${stats.hotMass}%.3g quadratic candidate pairs shed — a boilerplate cohort " +
-          f"grows LSH candidates as cohort², see dev/SCALE_r12.md). Pass " +
-          "maxShingleDf=Long.MaxValue to disable or an explicit cap to tune.")
-        ResolvedCap(DefaultMaxShingleDf, Some(stats.blacklist), Some(probeArr))
-      } else {
-        if (stats.hotMass > 0)
-          log.info(f"minhash df-guard: ${stats.blacklist.length}%,d hot shingles " +
-            f"(~${stats.hotMass}%.3g pairs) below the auto-engage mass " +
-            f"($engageHotPairs%.3g) — leaving the corpus uncapped")
-        ResolvedCap(Long.MaxValue, None, Some(probeArr))
-      }
+          f"exceed df=$cap — the blacklist is past the guard's driver bound. Proceeding " +
+          "UNCAPPED (the pre-guard default); set an explicit, higher maxShingleDf or " +
+          "pre-strip boilerplate to re-arm the guard.")
+        ResolvedCap(Long.MaxValue, None, Some(arr))
+      case Some((hot, _)) =>
+        val blacklist = hot.map(_.getLong(1))
+        val mass = hotMass(hot)
+        if (!auto) ResolvedCap(cap, Some(blacklist), Some(arr))
+        else if (mass > engageHotPairs) {
+          val maxDf = hot.iterator.map(_.getLong(2)).maxOption.getOrElse(0L)
+          log.warn(f"minhash df-guard AUTO-ENGAGED at maxShingleDf=$cap: " +
+            f"${blacklist.length}%,d shingles exceed the cap (max df $maxDf%,d; " +
+            f"~$mass%.3g quadratic candidate pairs shed — a boilerplate cohort grows " +
+            "LSH candidates as cohort², see dev/SCALE_r12.md). Pass " +
+            "maxShingleDf=Long.MaxValue to disable or an explicit cap to tune.")
+          ResolvedCap(cap, Some(blacklist), Some(arr))
+        } else {
+          if (mass > 0)
+            log.info(f"minhash df-guard: ${blacklist.length}%,d hot shingles " +
+              f"(~$mass%.3g pairs) below the auto-engage mass " +
+              f"($engageHotPairs%.3g) — leaving the corpus uncapped")
+          ResolvedCap(Long.MaxValue, None, Some(arr))
+        }
     }
+  }
 
   /** MinHash signatures: k independent hash functions simulated by
     * seeding Spark's murmur3 with the hash index; signature = per-doc
@@ -1519,20 +1272,20 @@ object Dedup {
     * similarity that collides in LSH bands and grows candidates as
     * m², regardless of vocabulary size or band width. Shingles with
     * document frequency above the cap are removed BEFORE signatures
-    * (the [[hotShinglesBucketed]] detector + the same LongSetRemove
-    * scan kernel as [[ngramJaccardPairs]]'s cap — never a re-join),
-    * so a cohort's shared block stops contributing to its signatures
-    * and the m² candidate mass never materializes. The DEFAULT is
-    * [[AutoShingleDf]] (r13): the detector runs at
+    * (the exact path's one df pass, [[collectShingleStats]], + the
+    * same LongSetRemove scan kernel as [[ngramJaccardPairs]]'s cap —
+    * never a re-join), so a cohort's shared block stops contributing
+    * to its signatures and the m² candidate mass never materializes.
+    * The DEFAULT is [[AutoShingleDf]] (r13): the stats pass runs at
     * [[DefaultMaxShingleDf]] and the cap engages — loudly — only when
     * the measured hot-pair mass crosses [[AutoEngageHotPairs]];
     * otherwise results are bit-identical to the uncapped path. Auto's
     * cost (r14): corpora of ≤ [[DefaultMaxShingleDf]] docs skip the
-    * detector entirely (one cheap count — the blacklist is provably
+    * stats pass entirely (one cheap count — the blacklist is provably
     * empty there); larger corpora tokenize ONCE into a shared
-    * checkpoint that the detector and the signature projection both
+    * checkpoint that the stats pass and the signature projection both
     * read ([[resolveMinhashCap]]). Explicit `Long.MaxValue` keeps the
-    * single-scan, zero-checkpoint uncapped plan with no detector at
+    * single-scan, zero-checkpoint uncapped plan with no stats pass at
     * all.
     *
     * Exact duplicates with ANY retained shingle still collide in
@@ -1550,7 +1303,7 @@ object Dedup {
     * one).
     *
     * '''Checkpoint retention''' (ADVICE r14): resolutions that run
-    * the detector (auto past the row-count gate, explicit finite
+    * the stats pass (auto past the row-count gate, explicit finite
     * caps) tokenize the corpus into an [[graft.ops.Exec.materialize]]
     * checkpoint that the RETURNED (lazy) frame reads — the pinned
     * blocks stay held for the session. A caller that persists or
@@ -1560,14 +1313,7 @@ object Dedup {
     * the durable mode's retained lineage previously made the walk a
     * no-op for derived frames); [[minhashCandidates]] and
     * [[ensureMinhashPairGraph]] do exactly that internally. Explicit
-    * `Long.MaxValue` never checkpoints (single-scan plan).
-    *
-    * Deliberately NOT shared with [[shingleStats]]: that site fuses
-    * the blacklist with the exact path's routing-mass sum into ONE
-    * guarded collect (a ReusedExchange the fusion exists for), and its
-    * exactness over ALL shingles is the density router's contract —
-    * but the two must stay semantically aligned: null elements
-    * skipped, DF = distinct docs per shingle. */
+    * `Long.MaxValue` never checkpoints (single-scan plan). */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
                         numHashes: Int = 16,
                         maxShingleDf: Long = AutoShingleDf): DataFrame =
@@ -1576,12 +1322,12 @@ object Dedup {
 
   /** [[minhashSignatures]] after cap resolution — split out so
     * [[ensureMinhashPairGraph]] can resolve ONCE (stamping the
-    * resolved cap) and share the detector's blacklist with the
+    * resolved cap) and share the stats pass's blacklist with the
     * signature build instead of running it twice. */
   private[text] def minhashSignaturesResolved(df: DataFrame, idCol: String, textCol: String,
       numHashes: Int, resolved: ResolvedCap): DataFrame = {
-    // resolutions that ran the detector (engaged auto past the
-    // row-count gate, explicit finite caps — r15) carry the
+    // resolutions that ran the stats pass (auto past the row-count
+    // gate, explicit finite caps — r15) carry the
     // resolver's materialized arrays: the signature projection reads
     // that checkpoint instead of re-tokenizing the corpus. Uncapped /
     // gate-skipped resolutions keep the single-scan zero-checkpoint
@@ -1977,13 +1723,13 @@ object Dedup {
     // presenting the stamp every pre-cap artifact already carries.
     // An AUTO caller resolves to one of the two EXISTING stamps —
     // engaged auto builds the same blacklist as an explicit
-    // DefaultMaxShingleDf (provably: same detector, exact confirm),
+    // DefaultMaxShingleDf (provably: same stats pass, same cap),
     // un-engaged auto the same table as uncapped — so it ACCEPTS both
     // on load (the resolution is the corpus's density decision, which
-    // a loader cannot know without paying the detector; the corpus is
-    // pinned by the caller's stamp-keyed path and the detector is
+    // a loader cannot know without paying the stats pass; the corpus is
+    // pinned by the caller's stamp-keyed path and the stats pass is
     // deterministic, so the builder's resolution is THE resolution).
-    // The detector itself runs lazily: only a cache-miss build pays
+    // The stats pass itself runs lazily: only a cache-miss build pays
     // it, never a memo/disk hit.
     val acceptedCaps: Set[Long] =
       if (maxShingleDf == AutoShingleDf) Set(Long.MaxValue, DefaultMaxShingleDf)
@@ -2013,7 +1759,7 @@ object Dedup {
         if (resolvedForced) resolved.sharedArr.foreach(Exec.release)
     // ADVICE r13 #1: an auto caller ADOPTING an UNCAPPED artifact takes
     // someone else's guard resolution — correct when the builder was
-    // itself auto (deterministic detector, same corpus via the
+    // itself auto (deterministic stats pass, same corpus via the
     // stamp-keyed path), but an explicitly-built Long.MaxValue graph at
     // a shared path bypasses the guard silently. Make the adoption
     // visible (info, once per path per JVM). "Adopted" = THIS call's

@@ -122,6 +122,27 @@ class CheckpointRetentionSpec extends AnyFunSuite {
     assertPinned(0, "ensureMinhashPairGraph build")
   }
 
+  test("explicit minhash df cap: builds release the resolver's shared shingle arrays") {
+    // an explicit finite cap skips the row-count gate, so the resolver
+    // materializes its shared per-doc arrays on every call (the auto
+    // cases above never pass the gate on this 32-doc corpus) — the
+    // ResolvedCap.sharedArr release rule, pinned past the gate: cap 20
+    // blacklists the 30-doc head's trigrams
+    sweep()
+    val dir = java.nio.file.Files.createTempDirectory("graft_leak_mhcap").toString
+    val (pairs, comps) = graft.text.Dedup.ensureMinhashPairGraph(
+      denseDocs, "doc_id", "text", numHashes = 32, bands = 16,
+      minEstimate = 0.0, path = s"$dir/mh", maxShingleDf = 20L)
+    assert(pairs.count() >= 1 && comps.count() >= 2)
+    assertPinned(0, "explicit-cap ensureMinhashPairGraph build")
+    val cand = graft.text.Dedup.minhashCandidates(
+      denseDocs, "doc_id", "text", numHashes = 32, bands = 16,
+      minEstimate = 0.0, maxShingleDf = 20L)
+    assert(cand.count() >= 1)
+    assertPinned(1, "explicit-cap minhashCandidates (want: signature frame only)")
+    sweep()
+  }
+
   test("minhashCandidates pins ONLY the signature frame") {
     sweep()
     // the resolver's shared shingle checkpoint must be released once

@@ -38,19 +38,6 @@ class DedupPlanSpec extends AnyFunSuite {
       s"expected the in-task primitive sort, not a row-sorter Sort node:\n$plan")
   }
 
-  test("shingleStats: a degenerate chunk knob fails at plan build, not in tasks") {
-    // the knob overrides an executor-derived default; a bad value must
-    // fail BEFORE the corpus shuffle runs — per-task failure after a
-    // 100-TB exchange is hours late (review r15c)
-    val arr = Dedup.shingleHashArray(
-      Seq((1L, "alpha beta gamma delta")).toDF("doc_id", "text"), "doc_id", "text", 3)
-    spark.conf.set("spark.graft.dedup.statsChunkLongs", "1")
-    try {
-      val e = intercept[IllegalArgumentException] { Dedup.shingleStats(arr, 5L) }
-      assert(e.getMessage.contains("statsChunkLongs"))
-    } finally spark.conf.unset("spark.graft.dedup.statsChunkLongs")
-  }
-
   test("bandPartitions: 4x the shuffle width; an overflowing product fails by name") {
     assert(Dedup.bandPartitions(32) == 128)
     assert(Dedup.bandPartitions(0) == 4) // a degenerate width counts as 1
@@ -59,22 +46,6 @@ class DedupPlanSpec extends AnyFunSuite {
     // mid-job (ADVICE r16)
     val e = intercept[IllegalArgumentException] { Dedup.bandPartitions(Int.MaxValue) }
     assert(e.getMessage.contains("band partitions") && e.getMessage.contains("overflows"))
-  }
-
-  test("hot-bucket width is plan-validated against the 2^22 clamp (entry AND escalation)") {
-    // the escalation arithmetic clamps its rerun width at
-    // MaxBucketWidth; the entry require must hold the caller-supplied
-    // width to the SAME ceiling, or the per-task SegLongCounts grant
-    // and the width-bounded suspect collect leave their designed
-    // envelopes (VERDICT r16 #3)
-    import spark.implicits._
-    val arr = Dedup.shingleHashArray(
-      Seq((1L, "alpha beta gamma delta")).toDF("doc_id", "text"), "doc_id", "text", 3)
-    val e = intercept[IllegalArgumentException] {
-      Dedup.hotShinglesBucketedOpt(arr, 5L, width = 1 << 23)
-    }
-    assert(e.getMessage.contains("2^22"), e.getMessage)
-    assert(Dedup.MaxBucketWidth == (1 << 22) && Dedup.HotBucketWidth <= Dedup.MaxBucketWidth)
   }
 
   test("minhashCandidateIds: sort-fold pair-distinct — zero hash aggregates") {

@@ -95,49 +95,6 @@ class DedupPropertySpec extends AnyFunSuite {
     }
   }
 
-  test("hotShinglesBucketed == exact aggregate: random corpora, collision-heavy widths, any partitioning") {
-    // r13: the cheap df-stats pass must produce the EXACT blacklist —
-    // the pigeonhole-superset + exact-confirm construction proves it;
-    // this differential pins it under the stressors the proof leans
-    // on: tiny widths (every bucket a multi-shingle collision), random
-    // caps straddling the planted cohort's df, and repartitioning
-    // (which moves the per-partition threshold and which buckets turn
-    // suspect — the RESULT must not move).
-    val gen = for {
-      n <- Gen.chooseNum(4, 20)           // cohort size (block df)
-      singles <- Gen.chooseNum(3, 12)     // clean docs
-      cap <- Gen.chooseNum(1, 25)
-    } yield (n, singles, cap)
-    val cases = Gen.listOfN(6, gen).sample.getOrElse(Nil)
-    assert(cases.nonEmpty)
-    cases.foreach { case (n, singles, cap) =>
-      val docs = ((1 to n).map(i =>
-          (i.toLong, s"shared block of boiler text here unique$i tail$i")) ++
-        (1 to singles).map(j =>
-          ((100 + j).toLong, s"clean doc number$j body$j words$j")))
-        .toDF("doc_id", "text")
-      def arr(parts: Int) = Dedup.shingleHashArray(
-        docs.repartition(parts), "doc_id", "text", distinct = false)
-      val want = Dedup.hotShinglesExact(arr(2), cap.toLong).toSet
-      for (width <- Seq(2, 8, 64); parts <- Seq(1, 3, 7)) {
-        // escalate = false pins the collision-heavy tiny-width regime
-        // itself (the escalated run still relies on its correctness at
-        // its own N/W ratio)
-        val got = Dedup.hotShinglesBucketedOpt(arr(parts), cap.toLong, width,
-          escalate = false).get
-        assert(got.blacklist.toSet == want,
-          s"n=$n singles=$singles cap=$cap width=$width parts=$parts: " +
-            s"${got.blacklist.toSet} != $want")
-      }
-      // and the ESCALATED path end-to-end: width=2 with these corpora
-      // always trips the N/width > cap/2 check, so this exercises the
-      // sentinel-measured rerun — the blacklist must not move
-      val esc = Dedup.hotShinglesBucketedOpt(arr(3), cap.toLong, 2).get
-      assert(esc.blacklist.toSet == want,
-        s"escalated run diverged: n=$n cap=$cap: ${esc.blacklist.toSet} != $want")
-    }
-  }
-
   test("shingleStats sort-fold == aggregate spec: blacklist and routing mass, any partitioning") {
     // r14: the exact-path stats pass (one sorted shuffle + run-length
     // fold) replaced the groupBy whose final-stage hash maps spilled
@@ -145,7 +102,9 @@ class DedupPropertySpec extends AnyFunSuite {
     // produce the SAME hot blacklist and the SAME routing mass as the
     // aggregate formulation, under any input partitioning (the
     // explicit hash repartition pins per-key co-location; this
-    // differential is the executable proof values don't move).
+    // differential is the executable proof values don't move). Hot
+    // rows carry their df (the minhash auto resolver's mass source),
+    // so the blacklist is compared as (shingle, df) pairs.
     val gen = for {
       n <- Gen.chooseNum(4, 20)
       singles <- Gen.chooseNum(3, 12)
@@ -155,8 +114,8 @@ class DedupPropertySpec extends AnyFunSuite {
     assert(cases.nonEmpty)
     def summarize(df: org.apache.spark.sql.DataFrame) = {
       val rows = df.collect()
-      (rows.filter(_.getInt(0) == 0).map(_.getLong(1)).toSet,
-        rows.filter(_.getInt(0) == 1).map(_.getDouble(2)).sum)
+      (rows.filter(_.getInt(0) == 0).map(r => (r.getLong(1), r.getLong(2))).toSet,
+        rows.filter(_.getInt(0) == 1).map(_.getDouble(3)).sum)
     }
     cases.foreach { case (n, singles, cap) =>
       val docs = ((1 to n).map(i =>
@@ -188,13 +147,10 @@ class DedupPropertySpec extends AnyFunSuite {
       (1 to 5).map(j => ((100 + j).toLong, s"clean doc number$j body$j")))
       .toDF("doc_id", "text")
     val arrSp = Dedup.shingleHashArray(docsSp, "doc_id", "text", 3)
-    spark.conf.set("spark.graft.dedup.statsChunkLongs", "2")
-    try {
-      val (spHot, spMass) = summarize(Dedup.shingleStats(arrSp, 3L))
-      val (wHot, wMass) = summarize(Dedup.shingleStatsAgg(arrSp, 3L))
-      assert(spHot == wHot && spMass == wMass,
-        s"spill-path fold diverged: ($spHot, $spMass) != ($wHot, $wMass)")
-    } finally spark.conf.unset("spark.graft.dedup.statsChunkLongs")
+    val (spHot, spMass) = summarize(Dedup.shingleStats(arrSp, 3L, chunkLongs = 2))
+    val (wHot, wMass) = summarize(Dedup.shingleStatsAgg(arrSp, 3L))
+    assert(spHot == wHot && spMass == wMass,
+      s"spill-path fold diverged: ($spHot, $spMass) != ($wHot, $wMass)")
   }
 
   test("minhashCandidateIds sort-fold distinct == .distinct() spec twin, any partitioning") {
@@ -236,10 +192,11 @@ class DedupPropertySpec extends AnyFunSuite {
     assert(cases.nonEmpty)
     cases.foreach { corpus =>
       val df = corpus.toDF("doc_id", "text")
-      // measure the true hot mass at the default cap via the detector
-      // itself (unit-pinned against the exact aggregate above)
-      val arr = Dedup.shingleHashArray(df, "doc_id", "text", distinct = false)
-      val mass = Dedup.hotShinglesBucketed(arr, Dedup.DefaultMaxShingleDf).hotMass
+      // measure the true hot mass at the default cap via the one stats
+      // pass itself (differentialed against the aggregate above)
+      val arr = Dedup.shingleHashArray(df, "doc_id", "text")
+      val mass = Dedup.hotMass(
+        Dedup.collectShingleStats(arr, Dedup.DefaultMaxShingleDf).get._1)
       // threshold ABOVE the mass → never engage: resolution is uncapped
       val off = Dedup.resolveMinhashCap(df, "doc_id", "text",
         Dedup.AutoShingleDf, engageHotPairs = mass + 1.0)
@@ -248,7 +205,7 @@ class DedupPropertySpec extends AnyFunSuite {
       // tiny corpora have none at df>1000, so engagement yields an
       // EMPTY blacklist — capped semantics, identical values); a
       // negative threshold also bypasses the r14 row-count skip gate,
-      // so this exercises the full detector mechanics at any N
+      // so this exercises the full stats-pass mechanics at any N
       val on = Dedup.resolveMinhashCap(df, "doc_id", "text",
         Dedup.AutoShingleDf, engageHotPairs = -1.0)
       assert(on.cap == Dedup.DefaultMaxShingleDf && on.blacklist.isDefined)

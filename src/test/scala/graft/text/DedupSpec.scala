@@ -267,34 +267,64 @@ class DedupSpec extends AnyFunSuite {
       s"exact dedup must group all 10 copies: ${groups.mkString(",")}")
   }
 
-  test("hot-shingle detector: bucketed pass equals the exact aggregate, boundary df == cap not hot") {
+  test("hot-shingle stats: the one pass equals the exact aggregate, boundary df == cap not hot") {
     // cohort of 12 docs sharing a boilerplate block (block trigrams
-    // df = 12) + one true-dup pair (their trigrams df = 2)
+    // df = 12) + one true-dup pair (their trigrams df = 2). The minhash
+    // df cap runs the exact path's stats pass over the resolver's
+    // per-doc DISTINCT arrays; its blacklist must equal the aggregate
+    // twin's and the explicit-cap resolution must serve exactly it.
     val boiler = "copyright header all rights reserved by the corpus authority"
     val cdocs = ((1 to 12).map(i =>
         (i.toLong, s"$boiler unique$i words$i tail$i extra$i")) ++
       Seq((13L, "a genuinely distinct document body one two three"),
           (14L, "a genuinely distinct document body one two three")))
       .toDF("doc_id", "text")
-    val arr = Dedup.shingleHashArray(cdocs, "doc_id", "text", distinct = false)
+    val raw = Dedup.shingleHashArray(cdocs, "doc_id", "text", distinct = false)
+    val arr = Dedup.shingleHashArray(cdocs, "doc_id", "text")
+    def hotOf(cap: Long) = Dedup.collectShingleStats(arr, cap).get._1
     for (cap <- Seq(1L, 2L, 5L, 11L, 12L, 13L)) {
-      val got = Dedup.hotShinglesBucketed(arr, cap)
-      val want = Dedup.hotShinglesExact(arr, cap).toSet
-      assert(got.blacklist.toSet == want, s"cap=$cap: ${got.blacklist.toSet} != $want")
+      val hot = hotOf(cap)
+      val want = Dedup.shingleStatsAgg(arr, cap).collect()
+        .filter(_.getInt(0) == 0).map(r => (r.getLong(1), r.getLong(2))).toSet
+      val got = hot.map(r => (r.getLong(1), r.getLong(2))).toSet
+      assert(got == want, s"cap=$cap: $got != $want")
+      val resolved = Dedup.resolveMinhashCap(cdocs, "doc_id", "text", cap)
+      try assert(resolved.cap == cap && resolved.blacklist.map(_.toSet).contains(want.map(_._1)),
+        s"cap=$cap: resolver blacklist ${resolved.blacklist.map(_.toSet)} != ${want.map(_._1)}")
+      finally resolved.sharedArr.foreach(graft.ops.Exec.release)
       // exact mass re-derived independently: Σ df·(df−1)/2 over hot
-      val wantMass = arr.select(explode(array_distinct(col("__sh"))).as("s"))
+      val wantMass = raw.select(explode(array_distinct(col("__sh"))).as("s"))
         .filter(col("s").isNotNull).groupBy("s").count()
         .filter(col("count") > cap)
         .agg(coalesce(sum(col("count") * (col("count") - 1) / 2), lit(0.0)))
         .head().getDouble(0)
-      assert(got.hotMass == wantMass, s"cap=$cap mass: ${got.hotMass} != $wantMass")
+      assert(Dedup.hotMass(hot) == wantMass, s"cap=$cap mass: ${Dedup.hotMass(hot)} != $wantMass")
     }
     // boundary: the block trigrams have df exactly 12 — a cap of 12
     // must NOT flag them (the contract is strictly greater)
-    assert(Dedup.hotShinglesBucketed(arr, 12L).blacklist.isEmpty)
-    assert(Dedup.hotShinglesBucketed(arr, 11L).blacklist.nonEmpty)
-    // clean short-circuit: no suspects → zero confirm work recorded
-    assert(Dedup.hotShinglesBucketed(arr, 1000L).suspectBuckets == 0)
+    assert(hotOf(12L).isEmpty)
+    assert(hotOf(11L).nonEmpty)
+  }
+
+  test("minhash df cap counts documents, not occurrences: a trigram repeated inside one doc is not hot") {
+    // doc 1 repeats its three trigrams 4-5 times each (df 1); "shared
+    // tail words" sits in 4 docs (df 4). Resolved from raw text at
+    // cap 3, only the df-4 trigram is hot — a stats pass over
+    // occurrence counts (non-distinct arrays) would blacklist doc 1's
+    // repeats too.
+    val abc = Seq.fill(5)("alpha beta gamma").mkString(" ")
+    val docs = (Seq((1L, abc)) ++ Seq("one", "two", "three", "four").zipWithIndex.map {
+      case (w, i) => ((i + 2).toLong, s"$w shared tail words") })
+      .toDF("doc_id", "text")
+    def fp(t: String) = Dedup.shingleHashArray(Seq((0L, t)).toDF("doc_id", "text"),
+      "doc_id", "text").head().getSeq[Long](1).head
+    val resolved = Dedup.resolveMinhashCap(docs, "doc_id", "text", 3L)
+    try {
+      val bl = resolved.blacklist.get.toSet
+      assert(bl == Set(fp("shared tail words")),
+        s"blacklist must hold only the df-4 trigram, got ${bl.size} entries " +
+          "(an in-document repeat counted as df?)")
+    } finally resolved.sharedArr.foreach(graft.ops.Exec.release)
   }
 
   test("minhash auto df-guard: engages on a real cohort, matches the manual cap; clean corpus bit-identical") {
@@ -340,11 +370,11 @@ class DedupSpec extends AnyFunSuite {
     assert(dis.cap == Long.MaxValue && dis.blacklist.isEmpty,
       "auto must disengage (uncapped) when the blacklist exceeds the driver bound")
     val eOver = intercept[IllegalArgumentException] {
-      Dedup.hotShinglesBucketed(
-        Dedup.shingleHashArray(hot, "doc_id", "text", distinct = false),
+      Dedup.resolveMinhashCap(hot, "doc_id", "text",
         Dedup.DefaultMaxShingleDf, maxBlacklistRows = 3L)
     }
-    assert(eOver.getMessage.contains("raise maxShingleDf"), eOver.getMessage)
+    assert(eOver.getMessage.contains("hot-shingle blacklist") &&
+      eOver.getMessage.contains("raise maxShingleDf"), eOver.getMessage)
     // explicit values below 1 (other than the sentinel) are loud
     intercept[IllegalArgumentException] {
       Dedup.minhashSignatures(clean, "doc_id", "text", 16, maxShingleDf = 0L)
@@ -372,12 +402,10 @@ class DedupSpec extends AnyFunSuite {
     val arr = Dedup.shingleHashArray(cohort, "doc_id", "text", 3)
     val nHot = Dedup.shingleStats(arr, 2L).collect().count(_.getInt(0) == 0)
     assert(nHot > 1, s"fixture needs >1 hot shingle, got $nHot")
-    val (hot, mass) = Dedup.collectShingleStats(arr, 2L, maxBlacklistRows = nHot.toLong)
+    val (hot, mass) = Dedup.collectShingleStats(arr, 2L, maxBlacklistRows = nHot.toLong).get
     assert(hot.length == nHot, "at-bound blacklist must pass the guard")
-    val e = intercept[IllegalArgumentException] {
-      Dedup.collectShingleStats(arr, 2L, maxBlacklistRows = nHot.toLong - 1)
-    }
-    assert(e.getMessage.contains("hot-shingle blacklist"), e.getMessage)
+    assert(Dedup.collectShingleStats(arr, 2L, maxBlacklistRows = nHot.toLong - 1).isEmpty,
+      "one hot shingle past the bound must report over")
     // all-hot corpus (every shingle df=5 > cap=2): every partition's
     // FINAL run is hot, exercising the streaming fold's two-pending
     // emissions at stream end (hot row, then the mass partial); the
@@ -389,7 +417,7 @@ class DedupSpec extends AnyFunSuite {
     val allDup = (1 to 5).map(i => (i.toLong, "one single shared body of text"))
       .toDF("doc_id", "text")
     val (h2, m2) = Dedup.collectShingleStats(
-      Dedup.shingleHashArray(allDup, "doc_id", "text", 3), 2L)
+      Dedup.shingleHashArray(allDup, "doc_id", "text", 3), 2L).get
     assert(h2.nonEmpty && m2 == 0.0,
       s"all-hot corpus: expected nonempty blacklist with zero sub-cap mass, got ${h2.length}/$m2")
   }
@@ -397,21 +425,20 @@ class DedupSpec extends AnyFunSuite {
   test("auto df-guard row-count gate: skip-below-bound == detector-run; the looser pair-bound is unsound") {
     // r14 (VERDICT r13 #2): N docs <= DefaultMaxShingleDf => no shingle
     // can exceed the cap (df <= N), so auto skips the detector and
-    // returns the uncapped plan. Pin skip == detector-run: a 900-doc
+    // returns the uncapped plan. Pin skip == stats-pass run: a 900-doc
     // corpus ALL sharing a boilerplate head (the worst case below the
     // bound) must resolve uncapped under the gate, carry an empty
-    // blacklist under the detector, and produce identical signatures.
+    // blacklist under the stats pass, and produce identical signatures.
     val sub = spark.range(1, 901).select(col("id").as("doc_id"),
       concat(lit("alpha beta gamma delta shared head "),
         col("id"), lit(" unique "), col("id") * 7).as("text"))
     val gated = Dedup.resolveMinhashCap(sub, "doc_id", "text", Dedup.AutoShingleDf)
     assert(gated.cap == Long.MaxValue && gated.blacklist.isEmpty &&
       gated.sharedArr.isEmpty, "gate must skip the detector below the doc bound")
-    val detector = Dedup.hotShinglesBucketed(
-      Dedup.shingleHashArray(sub, "doc_id", "text", distinct = false),
-      Dedup.DefaultMaxShingleDf)
-    assert(detector.blacklist.isEmpty && detector.hotMass == 0.0,
-      "detector-run result below the bound must be un-engaged — the gate's claim")
+    val hotBelow = Dedup.collectShingleStats(
+      Dedup.shingleHashArray(sub, "doc_id", "text"), Dedup.DefaultMaxShingleDf).get._1
+    assert(hotBelow.isEmpty && Dedup.hotMass(hotBelow) == 0.0,
+      "stats-pass result below the bound must be un-engaged — the gate's claim")
     def sigSet(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getSeq[Int](1).toVector)).toSet
     assert(sigSet(Dedup.minhashSignatures(sub, "doc_id", "text", 16)) ==
