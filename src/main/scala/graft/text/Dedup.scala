@@ -337,11 +337,12 @@ object Dedup {
     // facts ride ONE evaluation of ONE sort-fold pass (r14/r15 — see
     // [[shingleStats]] and [[collectShingleStats]] for the
     // materialize-probe-release collect discipline): hot rows bound
-    // by the blacklist guard, mass partials summed distributed.
+    // by the blacklist guard, mass partials summed on the driver.
     // Density is summed in DOUBLE: it is a routing decision, not a
     // result, and a petabyte corpus's Σdf² overflows long.
-    val (hotRows, candidateMass) = collectShingleStats(arr, maxShingleDf)
-      .getOrElse(throw blacklistOverflow(maxShingleDf, MaxBlacklistRows))
+    val (hotRows, candidateMass) =
+      collectShingleStats(arr, maxShingleDf)((hot, mass) => (hot, mass()))
+        .getOrElse(throw blacklistOverflow(maxShingleDf, MaxBlacklistRows))
     val retained =
       if (hotRows.isEmpty) col("__sh")
       else graft.functions.LongSetRemove.remove(col("__sh"), hotRows.map(_.getLong(1)))
@@ -410,7 +411,7 @@ object Dedup {
     * ([[resolveMinhashCap]]): hot-shingle rows (`__t = 0`, value in
     * `__v`, its df in `__df`) plus per-partition PARTIAL sums of the
     * post-guard candidate-mass Σ df·(df−1)/2 (`__t = 1`, partial in
-    * `__mass` — [[collectShingleStats]] sums them distributed and
+    * `__mass` — [[collectShingleStats]] sums them on the driver and
     * bounds ONLY the `__t = 0` rows against the blacklist guard's 4M
     * bound).
     *
@@ -531,10 +532,11 @@ object Dedup {
   }
 
   /** The one evaluation + driver collect of [[shingleStats]]:
-    * `Some((hot rows, candidate mass))`, or `None` when the blacklist
-    * holds more than `maxBlacklistRows` shingles — the caller picks
-    * the loud remedy ([[blacklistOverflow]]: the exact path, explicit
-    * minhash caps) or auto mode's disengage ([[resolveMinhashCap]]).
+    * `Some(use(hot rows, candidate mass))`, or `None` when the
+    * blacklist holds more than `maxBlacklistRows` shingles — the
+    * caller picks the loud remedy ([[blacklistOverflow]]: the exact
+    * path, explicit minhash caps) or auto mode's disengage
+    * ([[resolveMinhashCap]]).
     *
     * The stats frame is [[graft.ops.Exec.materialize]]d BEFORE the
     * guard probes it (r15): [[graft.ops.Guard]]'s CollectLimit ramps
@@ -551,16 +553,21 @@ object Dedup {
     * The guard bounds ONLY the `__t = 0` blacklist rows (ADVICE r14):
     * the former probe counted the mass-partial rows against the same
     * 4M bound, so a blacklist just under it tripped the guard with a
-    * message misattributing the excess to hot shingles. The mass sum
-    * stays distributed (one tiny aggregate over the pinned frame). */
-  private[text] def collectShingleStats(arr: DataFrame, maxShingleDf: Long,
-      maxBlacklistRows: Long = MaxBlacklistRows)
-      : Option[(Array[org.apache.spark.sql.Row], Double)] = {
+    * message misattributing the excess to hot shingles.
+    *
+    * The mass is one more job — a collect of the pinned per-partition
+    * partials, summed on the driver (a global aggregate adds a
+    * shuffle stage, i.e. a second job under AQE) — so `use` gets it as
+    * a thunk and only a caller that reads it pays: the exact path's
+    * density router does; the minhash cap, which weighs the hot rows'
+    * own df, does not. The thunk is valid only inside `use`. */
+  private[text] def collectShingleStats[T](arr: DataFrame, maxShingleDf: Long,
+      maxBlacklistRows: Long = MaxBlacklistRows)(
+      use: (Array[org.apache.spark.sql.Row], () => Double) => T): Option[T] = {
     val statsMat = Exec.materialize(shingleStats(arr, maxShingleDf))
     try Guard.probe(statsMat.filter(col("__t") === 0), maxBlacklistRows).map { hot =>
-      val mass = statsMat.filter(col("__t") === 1)
-        .agg(coalesce(sum(col("__mass")), lit(0.0))).head().getDouble(0)
-      (hot, mass)
+      use(hot, () => statsMat.filter(col("__t") === 1).select(col("__mass"))
+        .collect().iterator.map(_.getDouble(0)).sum)
     } finally Exec.release(statsMat)
   }
 
@@ -1214,7 +1221,7 @@ object Dedup {
     // failure here releases it before rethrowing
     val arr = Exec.materialize(shingleHashArray(df, idCol, textCol, distinct = true))
     val stats =
-      try collectShingleStats(arr, cap, maxBlacklistRows)
+      try collectShingleStats(arr, cap, maxBlacklistRows)((hot, _) => hot)
       catch { case t: Throwable => Exec.release(arr); throw t }
     stats match {
       case None if !auto =>
@@ -1231,7 +1238,7 @@ object Dedup {
           "UNCAPPED (the pre-guard default); set an explicit, higher maxShingleDf or " +
           "pre-strip boilerplate to re-arm the guard.")
         ResolvedCap(Long.MaxValue, None, Some(arr))
-      case Some((hot, _)) =>
+      case Some(hot) =>
         val blacklist = hot.map(_.getLong(1))
         val mass = hotMass(hot)
         if (!auto) ResolvedCap(cap, Some(blacklist), Some(arr))

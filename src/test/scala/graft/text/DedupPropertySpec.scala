@@ -138,6 +138,22 @@ class DedupPropertySpec extends AnyFunSuite {
     val (eHot, eMass) = summarize(Dedup.shingleStats(
       Dedup.shingleHashArray(empty, "doc_id", "text", 3), 5L))
     assert(eHot.isEmpty && eMass == 0.0)
+    // null elements are never hot and add no mass, however often they
+    // occur; 7 sits in all five arrays, 8 in two. The df == cap
+    // boundary is not hot: at cap 5 the df-5 shingle adds C(5, 2) to
+    // the mass, at cap 4 it is the blacklist
+    val nulls = spark.range(1, 6).select(col("id").as("doc_id"),
+      array(lit(null).cast("long"), col("id") + 100, lit(7L),
+        when(col("id") <= 2, lit(8L)), lit(null).cast("long")).as("__sh"))
+    for (parts <- Seq(1, 3, 7); (cap, want) <- Seq(
+        1L -> ((Set((7L, 5L), (8L, 2L)), 0.0)),
+        4L -> ((Set((7L, 5L)), 1.0)),
+        5L -> ((Set.empty[(Long, Long)], 11.0)))) {
+      val arr = nulls.repartition(parts)
+      val got = summarize(Dedup.shingleStats(arr, cap))
+      assert(got == want && summarize(Dedup.shingleStatsAgg(arr, cap)) == want,
+        s"nulls parts=$parts cap=$cap: $got != $want")
+    }
     // and the kernel's SPILL path inside a real task (r15: the in-task
     // primitive sort spills LZ4 raw-long files past its chunk budget —
     // a 2-long chunk forces maximal spill + k-way merge on every
@@ -196,7 +212,7 @@ class DedupPropertySpec extends AnyFunSuite {
       // pass itself (differentialed against the aggregate above)
       val arr = Dedup.shingleHashArray(df, "doc_id", "text")
       val mass = Dedup.hotMass(
-        Dedup.collectShingleStats(arr, Dedup.DefaultMaxShingleDf).get._1)
+        Dedup.collectShingleStats(arr, Dedup.DefaultMaxShingleDf)((hot, _) => hot).get)
       // threshold ABOVE the mass → never engage: resolution is uncapped
       val off = Dedup.resolveMinhashCap(df, "doc_id", "text",
         Dedup.AutoShingleDf, engageHotPairs = mass + 1.0)

@@ -281,7 +281,7 @@ class DedupSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val raw = Dedup.shingleHashArray(cdocs, "doc_id", "text", distinct = false)
     val arr = Dedup.shingleHashArray(cdocs, "doc_id", "text")
-    def hotOf(cap: Long) = Dedup.collectShingleStats(arr, cap).get._1
+    def hotOf(cap: Long) = Dedup.collectShingleStats(arr, cap)((hot, _) => hot).get
     for (cap <- Seq(1L, 2L, 5L, 11L, 12L, 13L)) {
       val hot = hotOf(cap)
       val want = Dedup.shingleStatsAgg(arr, cap).collect()
@@ -402,9 +402,11 @@ class DedupSpec extends AnyFunSuite {
     val arr = Dedup.shingleHashArray(cohort, "doc_id", "text", 3)
     val nHot = Dedup.shingleStats(arr, 2L).collect().count(_.getInt(0) == 0)
     assert(nHot > 1, s"fixture needs >1 hot shingle, got $nHot")
-    val (hot, mass) = Dedup.collectShingleStats(arr, 2L, maxBlacklistRows = nHot.toLong).get
+    def hotOf(bound: Long) =
+      Dedup.collectShingleStats(arr, 2L, maxBlacklistRows = bound)((h, _) => h)
+    val hot = hotOf(nHot.toLong).get
     assert(hot.length == nHot, "at-bound blacklist must pass the guard")
-    assert(Dedup.collectShingleStats(arr, 2L, maxBlacklistRows = nHot.toLong - 1).isEmpty,
+    assert(hotOf(nHot.toLong - 1).isEmpty,
       "one hot shingle past the bound must report over")
     // all-hot corpus (every shingle df=5 > cap=2): every partition's
     // FINAL run is hot, exercising the streaming fold's two-pending
@@ -417,9 +419,38 @@ class DedupSpec extends AnyFunSuite {
     val allDup = (1 to 5).map(i => (i.toLong, "one single shared body of text"))
       .toDF("doc_id", "text")
     val (h2, m2) = Dedup.collectShingleStats(
-      Dedup.shingleHashArray(allDup, "doc_id", "text", 3), 2L).get
+      Dedup.shingleHashArray(allDup, "doc_id", "text", 3), 2L)((h, m) => (h, m())).get
     assert(h2.nonEmpty && m2 == 0.0,
       s"all-hot corpus: expected nonempty blacklist with zero sub-cap mass, got ${h2.length}/$m2")
+  }
+
+  test("collectShingleStats: the candidate mass costs a job only when the caller reads it") {
+    // the exact path's density router reads the mass; the minhash cap
+    // weighs only the hot rows' own df, so an explicit-cap resolution
+    // must cost the shared-array build plus the hot-row collect and
+    // nothing more (the mass sum used to run on every resolution)
+    val cohort = (1 to 9).flatMap(d => (1 to 5).map(c =>
+      ((d * 10 + c).toLong, s"shared boiler block d$d common text")))
+      .toDF("doc_id", "text")
+    def jobsOf(body: => Unit): Int = {
+      val meter = graft.Harness.meter(spark)
+      try { val before = meter.settle().jobs; body; meter.settle().jobs - before }
+      finally meter.close()
+    }
+    val arr = graft.ops.Exec.materialize(Dedup.shingleHashArray(cohort, "doc_id", "text"))
+    try {
+      val hotOnly = jobsOf(Dedup.collectShingleStats(arr, 2L)((h, _) => h))
+      val withMass = jobsOf(Dedup.collectShingleStats(arr, 2L)((h, m) => (h, m())))
+      assert(withMass == hotOnly + 1, s"the mass sum is one job: $hotOnly -> $withMass")
+      val arrJobs = jobsOf(graft.ops.Exec.release(graft.ops.Exec.materialize(
+        Dedup.shingleHashArray(cohort, "doc_id", "text"))))
+      val resolveJobs = jobsOf(
+        Dedup.resolveMinhashCap(cohort, "doc_id", "text", 2L).sharedArr
+          .foreach(graft.ops.Exec.release))
+      assert(resolveJobs == arrJobs + hotOnly,
+        s"explicit-cap resolution ran $resolveJobs jobs, want $arrJobs + $hotOnly " +
+          "(the array build and the hot-row collect, no mass job)")
+    } finally graft.ops.Exec.release(arr)
   }
 
   test("auto df-guard row-count gate: skip-below-bound == detector-run; the looser pair-bound is unsound") {
@@ -436,7 +467,7 @@ class DedupSpec extends AnyFunSuite {
     assert(gated.cap == Long.MaxValue && gated.blacklist.isEmpty &&
       gated.sharedArr.isEmpty, "gate must skip the detector below the doc bound")
     val hotBelow = Dedup.collectShingleStats(
-      Dedup.shingleHashArray(sub, "doc_id", "text"), Dedup.DefaultMaxShingleDf).get._1
+      Dedup.shingleHashArray(sub, "doc_id", "text"), Dedup.DefaultMaxShingleDf)((h, _) => h).get
     assert(hotBelow.isEmpty && Dedup.hotMass(hotBelow) == 0.0,
       "stats-pass result below the bound must be un-engaged — the gate's claim")
     def sigSet(df: org.apache.spark.sql.DataFrame) =
