@@ -36,6 +36,7 @@ object DomainDemo {
       NonCompletionModel.GridPoint(20, 0.1, 3, 0.8, 1.0, 0.0),
       NonCompletionModel.GridPoint(40, 0.1, 4, 0.8, 1.0, 0.0))
     val (model, best, metrics) = NonCompletionModel.gridSearch(train, test, grid)
+    Exec.release(train) // the split's one layer: releases test too
 
     // S5: persist the grid winner and reload it for inference — the
     // train-now/score-later split of the reference (inference.py:47);
@@ -58,9 +59,10 @@ object DomainDemo {
     val sample = scores.orderBy(col("game_id"), col("play_id")).limit(3).collect()
       .map(r => s"""{"play":${r.getLong(1)},"deception":${Ioops.jsonNum(r.getDouble(4), 4)},"recovery":${Ioops.jsonNum(r.getDouble(5), 4)}}""")
       .mkString("[", ",", "]")
-    // the sample above is the cleaned frames' last consumer; the after
-    // frame's layer is one of the before frame's, so this releases both
-    Exec.release(cleanBefore)
+    // the sample above is the last consumer of the cleaned frames, the
+    // players dim and the plays; the after frame's layer is one of the
+    // before frame's, so the first release covers both
+    Seq(cleanBefore, players, plays0).foreach(Exec.release)
 
     println(
       s"""{"plays_kept":$keptPlays,"train_rows":$trainN,"test_rows":$testN,""" +

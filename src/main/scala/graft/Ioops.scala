@@ -354,8 +354,8 @@ object Ioops {
       // content swap; a content hash would close that hole at the cost
       // of a full source scan per cold session (the count is satisfied
       // from parquet row-group metadata).
-      // _SUCCESS probed through the Hadoop FileSystem API (same rule as
-      // compact/mergeStream below): java.io.File would always miss on a
+      // _SUCCESS probed through the Hadoop FileSystem API:
+      // java.io.File would always miss on a
       // non-local defaultFS and silently re-pay the bucket shuffles
       // every session. The synchronized block serializes only THIS JVM;
       // two separate processes racing the same cold path can interleave
@@ -432,100 +432,6 @@ object Ioops {
     spark.conf.set(key, "dynamic")
     try updates.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
     finally prev.fold(spark.conf.unset(key))(v => spark.conf.set(key, v))
-  }
-
-  /** Sorted-parquet sink: range-partition on `keys` then sort within
-    * each partition before writing, so every output file covers a
-    * disjoint key range and parquet row-group min/max statistics make
-    * key-range scans skip whole files/row-groups. The write costs one
-    * range shuffle (sampled boundaries); every later selective scan on
-    * the sort key pays for it back — the lake-layout tool for "big fact
-    * table, always filtered by time/key" at 100 TB. IoopsSpec asserts
-    * the per-file ranges are actually disjoint. */
-  def writeSorted(df: DataFrame, path: String, keys: Seq[String],
-                  numFiles: Option[Int] = None): Unit = {
-    import org.apache.spark.sql.functions.col
-    val ranged = numFiles match {
-      case Some(n) => df.repartitionByRange(n, keys.map(col): _*)
-      case None    => df.repartitionByRange(keys.map(col): _*) // AQE-sized
-    }
-    ranged.sortWithinPartitions(keys.map(col): _*)
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** Z-ordered lake write: cluster rows by the Morton interleave of two
-    * dimension columns (each first mapped into a bounded non-negative
-    * integer domain by `xDim`/`yDim`), then range-partition + sort on
-    * the key — [[writeSorted]]'s layout machinery over
-    * [[graft.functions.ZOrderKey]]. A 2-D box predicate then prunes
-    * files/row groups on the min/max stats of BOTH dimensions, where a
-    * linear sort prunes on only one — the `OPTIMIZE ZORDER BY` layout
-    * for "big fact table, filtered by two axes" at 100 TB. The helper
-    * key column is dropped from the written files (parquet stats on the
-    * real dimension columns are what the scan prunes with). */
-  def writeZOrdered(df: DataFrame, path: String,
-                    xDim: org.apache.spark.sql.Column,
-                    yDim: org.apache.spark.sql.Column,
-                    numFiles: Option[Int] = None): Unit = {
-    import org.apache.spark.sql.functions.col
-    val keyed = df.withColumn("__zkey", graft.functions.ZOrderKey.zkey(xDim, yDim))
-    val ranged = numFiles match {
-      case Some(n) => keyed.repartitionByRange(n, col("__zkey"))
-      case None    => keyed.repartitionByRange(col("__zkey"))
-    }
-    ranged.sortWithinPartitions(col("__zkey")).drop("__zkey")
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** Small-file compaction — the lake maintenance op that undoes what
-    * incremental ingest does to a table: thousands of per-batch files
-    * whose open/footer/seek overhead dominates every later scan. Reads
-    * the directory, sizes the output from the ACTUAL on-disk bytes
-    * (`ceil(totalBytes / targetFileBytes)`, floor 1), and rewrites via
-    * `coalesce` — a narrow repacking, NO shuffle: at 100 TB a
-    * `repartition` compaction would move the whole table through an
-    * exchange for nothing (coalesce only concatenates co-located input
-    * partitions; row order within files may change, which parquet does
-    * not promise anyway). Writes to `<dir>.compact-tmp` then swaps.
-    * FLAT tables only — a hive-partitioned layout is rejected loudly:
-    * its data hides in subdirectories the top-level byte sizing never
-    * sees (the rewrite would single-task the whole table through
-    * `coalesce(1)`) AND a flat rewrite would destroy the partition
-    * layout every later pruned read depends on; compact partitioned
-    * tables per partition directory. Crash safety: the original is
-    * intact until the swap's first rename; a crash BETWEEN the two
-    * renames leaves the table absent at `dir` with the data at
-    * `<dir>.compact-old` (rename it back to recover) — the swap
-    * window, not silent loss. Returns the output file count. */
-  def compact(spark: SparkSession, dir: String,
-              targetFileBytes: Long = 128L * 1024 * 1024): Int = {
-    // Hadoop FS API, not java.io.File: the table a 100-TB compaction
-    // targets lives on hdfs:// (atomic directory rename), not the
-    // driver's local disk. (Object stores without atomic rename need a
-    // table format's commit protocol instead — documented limitation.)
-    import org.apache.hadoop.fs.Path
-    val src = new Path(dir)
-    val fs = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(src) && fs.getFileStatus(src).isDirectory,
-      s"compact: $dir is not a table directory")
-    val entries = fs.listStatus(src)
-    val subdirs = entries.filter(st => st.isDirectory &&
-      !st.getPath.getName.startsWith(".") && !st.getPath.getName.startsWith("_"))
-    require(subdirs.isEmpty,
-      s"compact: $dir is hive-partitioned (${subdirs.take(3).map(_.getPath.getName).mkString(", ")}" +
-        s"${if (subdirs.length > 3) ", …" else ""}) — compact each partition directory instead")
-    val bytes = entries
-      .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
-    val nOut = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    val tmp = new Path(src.getParent, src.getName + ".compact-tmp")
-    spark.read.parquet(dir).coalesce(nOut)
-      .write.mode("overwrite").parquet(tmp.toString)
-    val old = new Path(src.getParent, src.getName + ".compact-old")
-    fs.delete(old, true)
-    require(fs.rename(src, old) && fs.rename(tmp, src),
-      s"compact: atomic swap failed for $dir")
-    fs.delete(old, true)
-    nOut
   }
 
   /** One-pass table statistics for a path-based parquet table — the

@@ -36,7 +36,6 @@ object Tables {
   def supplier(s: SparkSession, d: String): DataFrame   = t(s, d, "supplier")
   def part(s: SparkSession, d: String): DataFrame       = t(s, d, "part")
   def nation(s: SparkSession, d: String): DataFrame     = t(s, d, "nation")
-  def region(s: SparkSession, d: String): DataFrame     = t(s, d, "region")
   /** Drop memoized DataFrames for `dir` (all tables). A lake that is
     * regenerated in place invalidates both the cached file listing and
     * the resolved schema; long-lived sessions call this after an
@@ -74,15 +73,4 @@ object Tables {
   }
   def documents(s: SparkSession, d: String): DataFrame  = t(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = t(s, d, "embeddings")
-
-  /** SQL surface: register every catalog table as a temp view (events
-    * via its nanos-safe reader), so `spark.sql` users get the whole
-    * engine — tables, built-ins, and the GraftExtensions-injected
-    * kernels (`pelt_deception`, `vec_dot`, `vec_lsh_bucket`,
-    * `vec_eq_count`) — without touching the Column API. */
-  def registerAll(s: SparkSession, dir: String): Unit =
-    names.foreach {
-      case "events" => events(s, dir).createOrReplaceTempView("events")
-      case n        => t(s, dir, n).createOrReplaceTempView(n)
-    }
 }

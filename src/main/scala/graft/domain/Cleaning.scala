@@ -24,7 +24,14 @@ object Cleaning {
     "player_side", "player_role", "x", "y", "s", "a", "dir", "o")
 
   /** players dim (players.py:87-122): unique nfl_id with keep-*first*
-    * semantics made explicit — order by (week, game, play, frame). */
+    * semantics made explicit — order by (week, game, play, frame).
+    *
+    * The ordered dim is built once with [[Exec.materialize]] and the
+    * audit runs over that layer, so raw tracking is read for the dim
+    * once, not once per consumer. Release contract: the returned frame
+    * reads that materialized layer. Once its last consumer has run its
+    * action, pass it to [[Exec.release]]; neither it nor frames derived
+    * from it may be used afterwards. */
   def playersDataset(trackingBefore: DataFrame): DataFrame = {
     val cols = Seq("nfl_id", "player_name", "player_height", "player_weight",
       "player_birth_date", "player_position")
@@ -38,16 +45,24 @@ object Cleaning {
     // rows — a raw-tracking null nfl_id survives the dedup as its own
     // group, so checking post-dedup is equivalent and avoids two extra
     // eager full scans of raw tracking per pipeline build.
-    val audit = deduped.agg(
+    val dim = Exec.materialize(deduped.orderBy("nfl_id"))
+    val audit = dim.agg(
       count(when(col("nfl_id").isNull, 1)).as("null_keys"),
       count(when(col("player_weight") <= 0, 1)).as("bad_weights")).head()
+    if (audit.getLong(0) != 0 || audit.getLong(1) != 0) Exec.release(dim)
     require(audit.getLong(0) == 0, "Found null nfl_id values")
     require(audit.getLong(1) == 0, "Invalid player_weight values (must be positive)")
-    deduped.orderBy("nfl_id")
+    dim
   }
 
   /** plays cleaning (plays.py:198-229): project → route filter →
-    * attach play-level tracking cols → flip ball landing. */
+    * attach play-level tracking cols → flip ball landing.
+    *
+    * Release contract: the returned frame reads a materialized layer
+    * ([[Exec.materialize]]), so its consumers share one read of raw
+    * tracking. Once its last consumer has run its action, pass it to
+    * [[Exec.release]]; neither it nor frames derived from it may be
+    * used afterwards. */
   def processPlays(rawPlays: DataFrame, trackingBefore: DataFrame): DataFrame = {
     val playCols = Schemas.rawPlays.fieldNames.toSeq
     val projected = rawPlays.select(playCols.map(col): _*)
@@ -60,9 +75,9 @@ object Cleaning {
       .dropDuplicates(playKeys)
     val joined = routed.join(trackCols, playKeys, "inner")
     val isLeft = col("play_direction") === "left"
-    joined
+    Exec.materialize(joined
       .withColumn("ball_land_x", Exprs.flipCoord(isLeft, col("ball_land_x"), FieldLength))
-      .withColumn("ball_land_y", Exprs.flipCoord(isLeft, col("ball_land_y"), FieldWidth))
+      .withColumn("ball_land_y", Exprs.flipCoord(isLeft, col("ball_land_y"), FieldWidth)))
   }
 
   /** J3 (tracking.py:92-121): broadcast the players dim onto tracking. */

@@ -2,7 +2,7 @@ package graft.domain
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.ops.{Aggs, Exprs}
+import graft.ops.{Aggs, Exec, Exprs}
 import Schemas._
 
 /** Entry point 2 — train/test/inference dataset creation (reference
@@ -114,12 +114,19 @@ object Datasets {
     * NEITHER split — the same silent drop the reference's pandas
     * merge-then-compare produces (NaN week fails both comparisons).
     * Audit `weeks` completeness upstream if every labeled row must be
-    * accounted for. */
+    * accounted for.
+    *
+    * The week-joined features are built once with [[Exec.materialize]],
+    * so train and test do not each recompute them. Release contract:
+    * both returned frames read that one materialized layer. Once the
+    * last consumer of either has run its action, pass either frame to
+    * [[Exec.release]]; that releases both, and neither they nor frames
+    * derived from them may be used afterwards. */
   def trainTestSplit(features: DataFrame, weeks: DataFrame,
                      numTrainWeeks: Int = 9): (DataFrame, DataFrame) = {
-    val withWeek = features.join(
+    val withWeek = Exec.materialize(features.join(
       weeks.select(col("game_id"), col("play_id"), col("week")).dropDuplicates("game_id", "play_id"),
-      Seq("game_id", "play_id"), "left")
+      Seq("game_id", "play_id"), "left"))
     (withWeek.filter(col("week") <= numTrainWeeks).drop("week"),
       withWeek.filter(col("week") > numTrainWeeks).drop("week"))
   }

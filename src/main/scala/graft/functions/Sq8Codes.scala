@@ -13,8 +13,8 @@ import org.apache.spark.sql.types._
   * `floor((x / ‖v‖ + 1) / 2 * 255 + 0.5)` — in ONE fused loop (norm
   * pass + quantize pass) inside the scan projection.
   *
-  * Bit-identical to the higher-order formulation it replaces
-  * (`Similarity.sq8Lambda`, kept as the executable spec): same
+  * Bit-identical to the higher-order formulation it replaces (kept in
+  * SimilaritySpec as the executable spec): same
   * float→double promotion, same IEEE operation order, same
   * `math.floor(·).toLong` conversion (NaN → 0, matching Spark's
   * non-ANSI double→long cast for the zero-vector edge callers are told

@@ -132,14 +132,11 @@ object Pelt {
     cps(bestIdx)
   }
 
-  /** K3 deception score (deception.py:83-117): mean(signal[cp:]) −
-    * mean(signal[:cp]); fallback last − first when no change point. */
-  def deceptionScore(signal: Array[Double], pen: Double = DefaultPenalty): Double =
-    changePointAndScore(signal, pen)._2
-
-  /** [[changePoint]] and [[deceptionScore]] from ONE segmentation —
-    * every caller wants both, and computing them separately runs the
-    * full PELT dynamic program twice per group. */
+  /** [[changePoint]] and the K3 deception score (deception.py:83-117:
+    * mean(signal[cp:]) − mean(signal[:cp]); fallback last − first when
+    * no change point) from ONE segmentation — every caller wants both,
+    * and computing them separately runs the full PELT dynamic program
+    * twice per group. */
   def changePointAndScore(signal: Array[Double],
                           pen: Double = DefaultPenalty): (Int, Double) = {
     val n = signal.length

@@ -91,18 +91,6 @@ object NonCompletionModel {
     Metrics(auc, row.getDouble(0), row.getDouble(1))
   }
 
-  /** Calibration curve (evaluate.py: 10 bins): bin by predicted
-    * probability, mean predicted vs observed rate. */
-  def calibration(scored: DataFrame, bins: Int = 10): DataFrame =
-    scored.select(
-      least(floor(col("non_completion_probability") * bins), lit(bins - 1L)).as("bin"),
-      col("non_completion_probability").as("p"), col("target").cast("double").as("y"))
-      .groupBy("bin")
-      .agg(Exprs.r4(avg(col("p"))).as("avg_predicted"),
-        Exprs.r4(avg(col("y"))).as("frac_positive"),
-        count(lit(1)).as("n"))
-      .orderBy("bin")
-
   /** ONE definition of the clamped cross-entropy (eps = 1e-15, the
     * sklearn clamp) — shared by [[evaluate]]'s reported metric and
     * [[loglossOf]]'s grid-search/permutation selection metric, so a

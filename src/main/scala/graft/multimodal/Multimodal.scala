@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * `javax.imageio` — actual pixels in, width/height/channel-mean
   * features out, no dependencies beyond the JDK. The audio/video kinds
   * keep deterministic byte-level stand-ins ([[extractFeatures]] /
-  * [[resizeStub]] / [[sampleFrames]]) — this container ships no such
+  * [[sampleFrames]]) — this container ships no such
   * codecs — but every kernel shares the same real Spark shape: binary
   * column + metadata in, typed rows out, one codec instance per
   * partition, no driver involvement, no shuffle, so each scales exactly
@@ -164,32 +164,6 @@ object Multimodal {
 
   /** A "resized" media row: binary out, target dims in the metadata. */
   case class ResizedRow(id: Long, resized: Array[Byte], w: Int, h: Int)
-
-  /** Resize kernel: binary in → binary out at a fixed target size —
-    * the transform-shaped multimodal op (decode/extract are
-    * projection-shaped, frame-sample is explode-shaped). The stub maps
-    * the payload to exactly w·h bytes by nearest-neighbor sampling over
-    * the byte array as a 1-D signal; a real implementation swaps the
-    * sampling loop for a codec resize with identical plumbing: typed
-    * rows, per-partition kernel init, output bytes bounded by (w, h)
-    * regardless of input size — which is what makes the op safe to run
-    * before a shuffle (the shuffled bytes are the *resized* payloads). */
-  def resizeStub(spark: SparkSession, media: DataFrame, w: Int, h: Int): DataFrame = {
-    import spark.implicits._
-    val ds: Dataset[MediaRow] = media.as[MediaRow]
-    ds.mapPartitions { rows =>
-      val out = new Array[Byte](w * h) // per-partition buffer (decoder-init shape)
-      rows.map { r =>
-        val n = r.payload.length
-        var i = 0
-        while (i < out.length) {
-          out(i) = if (n == 0) 0 else r.payload((i.toLong * n / out.length).toInt)
-          i += 1
-        }
-        ResizedRow(r.id, out.clone(), w, h)
-      }
-    }.toDF()
-  }
 
   /** One sampled frame: index within the blob plus a per-frame content
     * fingerprint (the stub stand-in for a decoded/resized frame). */

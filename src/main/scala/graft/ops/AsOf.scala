@@ -117,8 +117,4 @@ object AsOf {
     val verOut = versionCols.map(c => col("__vnext").getField(c).as(s"asof_$c"))
     joined.select((factCols ++ verOut).toIndexedSeq: _*)
   }
-
-  /** Column helper for callers that already unioned: kept minimal. */
-  def lastNonNullOver(c: Column, w: org.apache.spark.sql.expressions.WindowSpec): Column =
-    last(c, ignoreNulls = true).over(w)
 }

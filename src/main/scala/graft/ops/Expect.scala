@@ -46,7 +46,7 @@ object Expect {
   /** The full audit of [[check]] in ONE scan (r19 optimization): per-rule
     * violation counts (every configured rule present, n=0 included) plus
     * `rows_passed` / `rows_quarantined` totals, as (rule, n) rows. The
-    * [[check]]+[[audit]]+two-counts composition evaluates the same
+    * [[check]]+audit+two-counts composition evaluates the same
     * numbers but plans THREE scans of the input (the audit explode, the
     * clean count, the quarantine count — sibling filters defeat subtree
     * reuse); here every figure is a conditional aggregate over the one
@@ -81,24 +81,5 @@ object Expect {
       struct(lit("rows_quarantined").as("rule"), col("__quarantined").as("n")))
     one.select(explode(array(entries: _*)).as("__e"))
       .select(col("__e.rule").as("rule"), col("__e.n").as("n"))
-  }
-
-  /** Per-rule violation counts with EVERY configured rule present — a
-    * rule with zero violations reports n=0. Deriving the audit only
-    * from the exploded quarantine side silently omits quiet rules,
-    * making "rule never fired" indistinguishable from "rule never
-    * evaluated" (caught by the degenerate-cardinality sweep, r10: a
-    * violation-free corpus produced an empty audit). The rule-name
-    * side is a driver literal of the configured rules (tiny, local);
-    * the exploded counts join against it, absent → 0. */
-  def audit(quarantined: DataFrame, ruleNames: Seq[String]): DataFrame = {
-    require(ruleNames.nonEmpty, "at least one expectation rule required")
-    val s = quarantined.sparkSession
-    import s.implicits._
-    val names = ruleNames.toDF("rule")
-    val counts = quarantined.select(explode(col("violations")).as("rule"))
-      .groupBy(col("rule")).agg(count(lit(1)).as("n"))
-    names.join(counts, Seq("rule"), "left")
-      .select(col("rule"), coalesce(col("n"), lit(0L)).as("n"))
   }
 }

@@ -130,25 +130,6 @@ private[graft] object LongRunSort {
     def nextRun(): Boolean
   }
 
-  /** Sorted (value, runLength) stream of the multiset `it` — the
-    * boxed convenience view over [[runCursor]] (spec/differential use;
-    * the hot path consumes the cursor). */
-  def sortedRuns(it: Iterator[Long], chunkLongs: Int = 0,
-      spillTo: File = null): Iterator[(Long, Long)] = {
-    val c = runCursor(it, chunkLongs, spillTo)
-    new Iterator[(Long, Long)] {
-      private var hasPending = false
-      private def advance(): Unit = if (!hasPending) hasPending = c.nextRun()
-      def hasNext: Boolean = { advance(); hasPending }
-      def next(): (Long, Long) = {
-        advance()
-        if (!hasPending) throw new NoSuchElementException("runs drained")
-        hasPending = false
-        (c.runValue, c.runCount)
-      }
-    }
-  }
-
   /** Per-segment capacity: 256 Ki longs = 2 MiB. The kernel NEVER
     * allocates bigger than this — on a 16 GiB heap G1's regions are
     * 8 MiB and anything ≥ 4 MiB is a humongous allocation needing
@@ -163,7 +144,8 @@ private[graft] object LongRunSort {
     * there is no grow-and-copy transient either. */
   private val SegCapLongs: Int = 256 * 1024
 
-  /** The primitive-cursor form of [[sortedRuns]]. `chunkLongs <= 0`
+  /** Sorted (value, runLength) runs of the multiset `it`, as a
+    * primitive cursor. `chunkLongs <= 0`
     * means "derive from this JVM" ([[derivedChunkLongs]]); `spillTo`
     * overrides the scratch-dir resolution (spec injection — production
     * callers leave it null). */

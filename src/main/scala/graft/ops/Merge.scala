@@ -33,8 +33,8 @@ object Merge {
     * result is the next base of an incremental merge — without the
     * version the snapshot cannot rank against later batches; without
     * the tombstone an out-of-order pre-delete upsert arriving in a
-    * LATER batch would resurrect a deleted key. Serve the snapshot
-    * through [[served]]. */
+    * LATER batch would resurrect a deleted key. The serving view of a
+    * snapshot filters the tombstones and drops the bookkeeping. */
   /** `tieBreakCols` extend the version ordering toward a TOTAL order
     * WITHOUT being dropped from the output — pass payload columns here
     * when the stream can carry duplicate keys at one (ts, tie) (a
@@ -56,12 +56,6 @@ object Merge {
     if (asSnapshot) won
     else won.filter(!col(deleteCol)).drop(versionCols :+ deleteCol: _*)
   }
-
-  /** The serving view of a snapshot maintained with
-    * `asSnapshot = true`: tombstones filtered, bookkeeping dropped. */
-  def served(snapshot: DataFrame, versionCols: Seq[String],
-             deleteCol: String): DataFrame =
-    snapshot.filter(!col(deleteCol)).drop(versionCols :+ deleteCol: _*)
 
   /** SCD-2: build the full HISTORY table from a change stream — where
     * [[applyChanges]] (SCD-1) keeps only each key's latest state, SCD-2

@@ -34,15 +34,11 @@ object Sampling {
     * the decimal rendering of a long, not on its binary layout). */
   def hashDraw(key: Column): Column = substring(md5(key.cast("string")), 1, 4)
 
-  /** Keep rows where the key's hash draw falls below `rate`.
-    * Note rates quantize to 1/65536 steps (and 1.0 keeps ~65535/65536 —
-    * use no filter if you mean "all"). */
-  def hashSample(df: DataFrame, key: Column, rate: Double): DataFrame =
-    df.filter(hashDraw(key) < lit(rateThreshold(rate)))
-
   /** Stratified hash sample: per-stratum keep-rates (a training-mix
     * spec: "50% of en, 25% of de, …"), one CASE expression resolving
-    * the stratum's threshold, one filter. Strata absent from `rates`
+    * the stratum's threshold, one filter — a row is kept when its key's
+    * [[hashDraw]] falls below its stratum's rate. Rates quantize to
+    * 1/65536 steps (1.0 keeps ~65535/65536). Strata absent from `rates`
     * fall back to `defaultRate`. */
   def stratifiedSample(df: DataFrame, key: Column, stratum: Column,
                        rates: Map[String, Double], defaultRate: Double): DataFrame = {
@@ -55,14 +51,14 @@ object Sampling {
   /** Importance-weighted deterministic sampling: per-row keep
     * probability = `rate` (a COLUMN, clamped to [0, 1]) — "sample
     * proportional to quality score", the weighted half of a training
-    * mix. Same draw as [[hashSample]], so the decision stays a pure,
+    * mix. Same draw as [[stratifiedSample]], so the decision stays a pure,
     * auditable function of the key, and a row's fate is monotone in
     * its rate: raising a row's rate can only flip it from dropped to
     * kept. The threshold is rendered per row with the floor-form
     * rounding (`floor(x + 0.5)`) every cross-engine number here uses —
     * NOT `round()` — so the DuckDB oracle reproduces the cut exactly.
     *
-    * Quantization at the top end (same 16-bit grid [[hashSample]]
+    * Quantization at the top end (same 16-bit grid [[stratifiedSample]]
     * documents): the draw is compared against a 4-hex threshold, so
     * rate 1.0 keeps 65535/65536 of rows — the single draw equal to
     * "ffff" is dropped. Callers needing a true keep-all at rate ≥ 1
@@ -78,7 +74,7 @@ object Sampling {
   /** Cap each group at `n` rows — the "at most N documents per domain /
     * source / language" curation gate — selecting the n rows with the
     * SMALLEST hash draws (tie-broken by key), so the selection is as
-    * auditable, retry-stable, and engine-reproducible as [[hashSample]]
+    * auditable, retry-stable, and engine-reproducible as [[stratifiedSample]]
     * and is NESTED: capPerGroup(m) ⊆ capPerGroup(n) for m ≤ n, and the
     * kept set never changes for a group that only gained rows with
     * larger draws. One shuffle (the window's group partitioning).
@@ -88,7 +84,7 @@ object Sampling {
     * SOUNDLY when a group is known to be huge: any draw threshold that
     * retains ≥ n of the group's rows provably preserves the result
     * (everything it drops sorts after the kept n), so
-    * `hashSample(df, key, rate)` with a conservative per-group rate
+    * a [[stratifiedSample]] with a conservative per-group rate
     * bounds the window input at ~rate·|group| without changing the
     * output — verify the ≥ n retention per group and fall back for the
     * (vanishingly rare) under-filled ones. */
@@ -139,7 +135,7 @@ object Sampling {
     * positive and sum to ≤ 1 (a deficit leaves a remainder bucket that
     * falls to the LAST label — spelled this way so the thresholds are
     * closed-form for the oracle). Cut points quantize to the draw's
-    * 1/65536 resolution, same as [[hashSample]]. Zero shuffle: one
+    * 1/65536 resolution, same as [[stratifiedSample]]. Zero shuffle: one
     * CASE over the hash draw in the scan projection. */
   def splitAssign(df: DataFrame, key: Column,
                   fractions: Seq[(String, Double)]): DataFrame = {
@@ -159,7 +155,7 @@ object Sampling {
     // a NULL label, loud and filterable downstream — without the guard
     // every when() condition evaluates null and the row falls through
     // the CASE into the LAST label, silently contaminating the eval
-    // split with unkeyed rows (hashSample's null rule, made visible
+    // split with unkeyed rows (the samplers' null-key drop, made visible
     // instead of a drop: a split assigner must account for every row).
     df.withColumn("split", when(key.isNotNull, labeled))
   }

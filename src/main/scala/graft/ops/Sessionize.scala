@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 /** Batch sessionization (gaps-and-islands): split each key's event
   * stream into sessions wherever the gap between consecutive events
   * exceeds `gap` — the batch twin of the streaming session window
-  * (`Streaming.sessionWindows` / w2), for backfills and historical
+  * (`Streaming.sessionAgg` / w2), for backfills and historical
   * re-sessionization where the input is a static table, not a stream.
   *
   * Spark-first plan: one window pass per key ordered by time —

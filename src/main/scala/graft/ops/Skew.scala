@@ -26,11 +26,10 @@ object Skew {
 
   /** Salt that also scatters exact-duplicate rows: mixes the physical
     * row position (`monotonically_increasing_id`) into the hash. Safe
-    * wherever the salt VALUE never reaches the result — true for both
+    * wherever the salt VALUE never reaches the result — true for
     * [[saltedJoin]] (the dim side carries every salt, so any fact salt
-    * joins identically) and [[saltedAgg]] (the second-level aggregate
-    * re-merges the partials whatever the partial grouping was) — because
-    * then only placement, not output, depends on the row position. */
+    * joins identically) — because then only placement, not output,
+    * depends on the row position. */
   def rowSaltCol(n: Int, from: Column*): Column =
     pmod(hash((from :+ monotonically_increasing_id()): _*), lit(n))
 
@@ -65,25 +64,5 @@ object Skew {
     val saltedDim = dim.withColumn("__salt",
       explode(sequence(lit(0), lit(salt - 1))))
     saltedFact.join(saltedDim, keys :+ "__salt", joinType).drop("__salt")
-  }
-
-  /** Salted two-level aggregation for algebraic aggregates (sum/count/
-    * min/max): partial agg on (keys, salt) — the hot group splits into
-    * `salt` partial rows across reducers — then final agg on keys.
-    * `partials` maps each wanted output to its (partial, final) pair,
-    * e.g. sum → (sum, sum), count → (count, sum).
-    * `spreadDuplicates`: see [[rowSaltCol]] — required when the hot
-    * group's rows are exact duplicates of each other. */
-  def saltedAgg(df: DataFrame, keys: Seq[String], salt: Int,
-                partial: Seq[Column], finalAgg: Seq[Column],
-                spreadDuplicates: Boolean = false): DataFrame = {
-    val keyCols = keys.map(col)
-    val allCols = df.columns.map(col).toIndexedSeq
-    df.withColumn("__salt",
-        if (spreadDuplicates) rowSaltCol(salt, allCols: _*) else saltCol(salt, allCols: _*))
-      .groupBy((keyCols :+ col("__salt")): _*)
-      .agg(partial.head, partial.tail: _*)
-      .groupBy(keyCols: _*)
-      .agg(finalAgg.head, finalAgg.tail: _*)
   }
 }

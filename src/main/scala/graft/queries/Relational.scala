@@ -359,9 +359,8 @@ object Relational {
 
     // X19 (extension surface, functions/ZOrderKey.scala): Morton
     // z-order key — the multi-dimensional clustering primitive behind
-    // OPTIMIZE ZORDER BY (Ioops.writeZOrdered is the layout path;
-    // IoopsSpec proves the 2-D pruning win). Dimensions mapped into
-    // 16-bit domains so the per-bit SQL oracle is exact.
+    // OPTIMIZE ZORDER BY. Dimensions mapped into 16-bit domains so the
+    // per-bit SQL oracle is exact.
     "x19_zorder_key" -> ((s, d) =>
       Tables.orders(s, d).select(col("o_orderkey"),
         graft.functions.ZOrderKey.zkey(

@@ -427,7 +427,7 @@ object TextSim {
         "doc_id", "text", n = 3, minCommon = 5)
         .select(col("doc_id"), col("lang"))),
 
-    // Graded decontamination (Dedup.contaminationScore): per-doc
+    // Graded decontamination (Dedup.contaminationScoreAgainst): per-doc
     // fraction of distinct 3-gram shingles found in the benchmark —
     // threshold/rank/monitor instead of binary drop. Broadcast-probe
     // marker join + ONE doc-keyed aggregate; the oracle recomputes
@@ -439,8 +439,8 @@ object TextSim {
     // Exact corpus heavy hitters: top-20 tokens by frequency with a
     // deterministic tie-break — explode + partial-aggregated count +
     // TakeOrderedAndProject (no full sort; the top-k heap merges
-    // map-side). The count-min sketch (CorpusSketches.tokenCountMin) is
-    // the bounded-memory scale path when the vocabulary itself is huge.
+    // map-side). A count-min sketch is the bounded-memory scale path
+    // when the vocabulary itself is huge.
     "text_top_tokens" -> ((s, d) =>
       Tables.documents(s, d)
         .select(explode(TextOps.tokens(col("text"))).as("token"))
@@ -487,7 +487,7 @@ object TextSim {
         TextOps.tokenCount(col("text")).as("n_words"))),
 
     // Quality scoring: length + stopword ratio + alpha ratio.
-    // DSIR-style importance weight (TextOps.dsirWeight): score every
+    // DSIR-style importance weight (TextOps.dsirWeightWithModels): score every
     // document under the corpus bigram LM and under a TARGET-domain LM
     // (sources src0-2 play the target); the NLL gap ranks documents by
     // domain affinity — the data-selection signal for building a
@@ -616,7 +616,7 @@ object TextSim {
         qs, "query_id", "query_text", k = 5)
     }),
 
-    // Bigram LM quality scoring (TextOps.bigramNll): per-doc average
+    // Bigram LM quality scoring (TextOps.bigramNllWithModel): per-doc average
     // −ln P(w_i | w_{i−1}) under corpus-trained add-one-smoothed
     // bigram counts — the statistical-LM quality filter. One row per
     // document with ≥2 tokens; the oracle replays the exact count /

@@ -51,23 +51,6 @@ object Ivf {
     df.filter(Similarity.eligible(col(vecCol)))
       .withColumn("cell", Kmeans.nearest(col(vecCol), cents))
 
-  /** ANN near-duplicate pairs against a FITTED quantizer: IVF cell as
-    * the block key, sign-LSH sub-buckets inside each cell (skew-safe
-    * even if one cell is hot). Candidate recall is cell-collision ×
-    * LSH-collision; exact cosine is still computed per candidate. */
-  def ivfNearDup(df: DataFrame, idCol: String, vecCol: String,
-                 cents: Centroids, threshold: Double,
-                 planes: Int): DataFrame =
-    Similarity.lshNearDup(assignCells(df, vecCol, cents), idCol, vecCol,
-      "cell", threshold, planes)
-
-  /** Fit-inline convenience (tests / one-shot jobs); production probes
-    * load a persisted quantizer via [[fitOrLoad]]. */
-  def ivfNearDup(df: DataFrame, idCol: String, vecCol: String,
-                 k: Int, threshold: Double, seed: Long = 42L,
-                 planes: Int = 8): DataFrame =
-    ivfNearDup(df, idCol, vecCol, fitCentroids(df, vecCol, k, seed), threshold, planes)
-
   /** Per-query probed cells: rank every centroid per query (|queries| ×
     * k rows — queries and the broadcast centroid list are both small
     * sides; the corpus never participates) and keep the `nprobe`
@@ -95,17 +78,10 @@ object Ivf {
   /** ANN top-k: per query, rank all k centroids (k is tiny — a broadcast
     * cross join), keep the `nprobe` nearest cells, then search only the
     * corpus vectors in those cells. Exact cosine + deterministic
-    * tie-break within the probed set. */
-  def ivfTopK(corpus: DataFrame, idCol: String, vecCol: String,
-              queries: DataFrame, cents: Centroids,
-              k: Int = 3, nprobe: Int = 2): DataFrame =
-    ivfTopKFromAssigned(assignedFrame(corpus, idCol, vecCol, cents),
-      idCol, vecCol, queries, cents, k, nprobe)
-
-  /** [[ivfTopK]] against a pre-assigned frame — [[assignedFrame]]
-    * recomputed inline, or a persisted index's rows via
-    * [[indexAssigned]] (cells and norms paid at ingest, not per
-    * search). */
+    * tie-break within the probed set. `assigned` is the cell-assigned
+    * corpus (cell, neighbor_id, c_vec, c_norm) — a persisted index's
+    * rows via [[indexAssigned]], so cells and norms are paid at ingest,
+    * not per search. */
   def ivfTopKFromAssigned(assigned: DataFrame, idCol: String, vecCol: String,
                           queries: DataFrame, cents: Centroids,
                           k: Int = 3, nprobe: Int = 2): DataFrame = {
@@ -115,24 +91,19 @@ object Ivf {
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos_sim"))
   }
 
-  /** The corpus side of the cell join: cell, id, vector, L2 norm. */
-  def assignedFrame(corpus: DataFrame, idCol: String, vecCol: String,
-                    cents: Centroids): DataFrame =
-    assignCells(corpus, vecCol, cents)
-      .select(col("cell"), col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"),
-        Similarity.l2Norm(col(vecCol)).as("c_norm"))
-
   /** Adapt a persisted IVF-PQ index frame ([[IvfPq.ensureIndex]]
-    * schema) to the [[assignedFrame]] shape. Norms were computed at
-    * build from the same l2Norm expression and round-trip parquet
-    * doubles exactly, so scoring doubles are identical either way. */
+    * schema) to the cell-assigned corpus shape (cell, neighbor_id,
+    * c_vec, c_norm). Norms were computed at build from the same l2Norm
+    * expression and round-trip parquet doubles exactly, so scoring
+    * doubles are identical to an inline assignment. */
   def indexAssigned(indexed: DataFrame): DataFrame =
     indexed.select(col("cell"), col("neighbor_id"),
       col("vec").as("c_vec"), col("norm").as("c_norm"))
 
-  /** Shared probe→join→score head of [[ivfTopK]] and [[ivfTopKAgg]]:
-    * exact rounded cosine for every (query, probed-cell corpus row)
-    * pair. One expression tree, so both rankers see IDENTICAL doubles. */
+  /** Shared probe→join→score head of [[ivfTopKFromAssigned]] and
+    * [[ivfTopKAggFromAssigned]]: exact rounded cosine for every (query,
+    * probed-cell corpus row) pair. One expression tree, so both rankers
+    * see IDENTICAL doubles. */
   private def scoredWithinCells(assigned: DataFrame, idCol: String, vecCol: String,
                                 queries: DataFrame, cents: Centroids,
                                 nprobe: Int): DataFrame = {
@@ -144,23 +115,16 @@ object Ivf {
           (col("q_norm") * col("c_norm"))).as("cos_sim"))
   }
 
-  /** Aggregation-formulated twin of [[ivfTopK]] — executable spec for
-    * the ranking machinery, NOT the production path: the same scored
-    * pairs ranked by `array_sort(collect_list(struct))` inside a hash
-    * aggregate instead of a `row_number` window (negated score sorts
-    * descending, neighbor id breaks ties — the same total order).
-    * Scoring arithmetic is shared ([[scoredWithinCells]]), so any
-    * divergence from ivfTopK isolates a top-k machinery bug
-    * (window/sort/tie-break), which is exactly what the
-    * `sim_ivf_agree` scoreboard differential witnesses. */
-  def ivfTopKAgg(corpus: DataFrame, idCol: String, vecCol: String,
-                 queries: DataFrame, cents: Centroids,
-                 k: Int = 3, nprobe: Int = 2): DataFrame =
-    ivfTopKAggFromAssigned(assignedFrame(corpus, idCol, vecCol, cents),
-      idCol, vecCol, queries, cents, k, nprobe)
-
-  /** [[ivfTopKAgg]] against a pre-assigned frame (same contract as
-    * [[ivfTopKFromAssigned]]). */
+  /** Aggregation-formulated twin of [[ivfTopKFromAssigned]] (same
+    * `assigned` contract) — executable spec for the ranking machinery,
+    * NOT the production path: the same scored pairs ranked by
+    * `array_sort(collect_list(struct))` inside a hash aggregate instead
+    * of a `row_number` window (negated score sorts descending, neighbor
+    * id breaks ties — the same total order). Scoring arithmetic is
+    * shared ([[scoredWithinCells]]), so any divergence from the window
+    * form isolates a top-k machinery bug (window/sort/tie-break), which
+    * is exactly what the `sim_ivf_agree` scoreboard differential
+    * witnesses. */
   def ivfTopKAggFromAssigned(assigned: DataFrame, idCol: String, vecCol: String,
                              queries: DataFrame, cents: Centroids,
                              k: Int = 3, nprobe: Int = 2): DataFrame = {

@@ -2,7 +2,7 @@ package graft.sim
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ops.{Aggs, Exec, Exprs}
+import graft.ops.{Aggs, Exprs}
 
 /** IVF-PQ: the deployed shape of product-quantized ANN search —
   * [[Ivf]]'s coarse quantizer prunes the corpus to the `nprobe` cells
@@ -77,28 +77,11 @@ object IvfPq {
         .write.mode("overwrite").partitionBy("cell").parquet(tmp))
   }
 
-  /** ANN top-k through both pruning stages. `cents` and `cb` follow the
-    * same train-once/probe-many S5 life cycle as their single-stage
-    * queries ([[Ivf.fitOrLoad]], [[Pq.fitOrLoad]] — fit on a bounded
-    * sample, persist, load everywhere else). This overload builds the
-    * index inline (tests / one-shot jobs); production passes the
-    * persisted index via the `indexed` overload below. */
-  def topK(corpus: DataFrame, idCol: String, vecCol: String,
-           queries: DataFrame, cents: Kmeans.Centroids, cb: Pq.Codebooks,
-           k: Int = 3, nprobe: Int = 2, shortlist: Int = 50): DataFrame = {
-    // Materialized for the same reason as Pq.adcTopK — decode's lambda
-    // references pq_codes and CollapseProject would otherwise inline the
-    // whole argmin encode into it, re-running the m·k distance scan per
-    // subspace reference.
-    val indexed = Exec.materialize(
-      buildIndex(corpus, idCol, vecCol, cents, cb)
-        .select(col("cell"), col("neighbor_id"), col("pq_codes")))
-    topKIndexed(corpus, idCol, vecCol, queries, indexed, cents, cb,
-      k, nprobe, shortlist)
-  }
-
-  /** Search against a pre-built index frame ([[ensureIndex]] /
-    * [[buildIndex]] schema). */
+  /** ANN top-k through both pruning stages, against a pre-built index
+    * frame ([[ensureIndex]] / [[buildIndex]] schema). `cents` and `cb`
+    * follow the same train-once/probe-many life cycle as their
+    * single-stage queries ([[Ivf.fitOrLoad]], [[Pq.fitOrLoad]] — fit on
+    * a bounded sample, persist, load everywhere else). */
   def topKIndexed(corpus: DataFrame, idCol: String, vecCol: String,
                   queries: DataFrame, indexedFull: DataFrame,
                   cents: Kmeans.Centroids, cb: Pq.Codebooks,

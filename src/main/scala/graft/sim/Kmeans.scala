@@ -104,17 +104,18 @@ object Kmeans {
   }
 
   /** The 0-based index of the centroid nearest `vec` (squared Euclidean,
-    * ties to the lowest index) over the literal table, argmin by
-    * `array_position(d2, array_min(d2))`. The squared differences are
-    * summed by the native `vec_dot` against a ones vector — the same
-    * left-to-right fold onto 0.0 as an `aggregate` lambda (x·1.0 == x),
-    * so the same doubles, without one interpreted lambda call per
-    * element. */
+    * ties to the lowest index): the fit's own assignment, as a Scala UDF
+    * closed over the centroid table. Each distance is Σ(a−b)² added left
+    * to right onto 0.0, the doubles `vec_dot` gives against a ones vector
+    * (x·1.0 == x); a NaN distance ranks after every number, as in
+    * `array_min`. A NULL vector, a NULL element or a length mismatch
+    * gives NULL. */
   def nearest(vec: Column, cents: Centroids): Column = {
-    val ones = typedLit(Seq.fill(cents.head.length)(1.0))
-    val d2 = transform(typedLit(cents.map(_.toSeq).toSeq), c =>
-      Similarity.dot(zip_with(vec, c, (a, b) => (a - b) * (a - b)), ones))
-    (array_position(d2, array_min(d2)) - 1).cast("int")
+    val argmin = udf { (v: Seq[java.lang.Double]) =>
+      if (v == null || v.length != cents.head.length || v.contains(null)) null
+      else Integer.valueOf(nearestIndex(v.iterator.map(_.doubleValue).toArray, cents))
+    }
+    argmin(vec.cast("array<double>"))
   }
 
   private[sim] def render(tag: String, m: Int, k: Int, cb: Array[Centroids]): Array[Byte] =

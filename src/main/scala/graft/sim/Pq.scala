@@ -70,30 +70,6 @@ object Pq {
     Array.tabulate(m)(j => Kmeans.fit(pts.map(_.slice(j * sub, (j + 1) * sub)), k, seed + j))
   }
 
-  /** Persist / reload the codebooks as a plain text artifact
-    * ([[Kmeans]]'s format; doubles round-trip bit-exactly, asserted in
-    * PqSpec) through the shared file-publish protocol
-    * ([[graft.Ioops.commitFileAtomic]]), against the active session's
-    * Hadoop conf. The header is derived from the ACTUAL shape — a direct
-    * save has no separate "requested" shape, so a later [[fitOrLoad]]
-    * with a LARGER requested k will, correctly, reject it. */
-  def save(cb: Codebooks, path: String): Unit = {
-    // every artifact carries the '#pq' header: the text-parsing DuckDB
-    // oracle reads line 1 as the header unconditionally
-    require(cb.nonEmpty && cb.forall(_.nonEmpty),
-      s"PQ save at $path: empty codebook (m=${cb.length}" +
-        s"${if (cb.nonEmpty) s", min centroids=${cb.map(_.length).min}" else ""})" +
-        " — refusing to stamp a degenerate '#pq' header")
-    val p = new org.apache.hadoop.fs.Path(path)
-    graft.Ioops.commitFileAtomic(p.getFileSystem(hadoopConf), p)(
-      _.write(Kmeans.render("pq", cb.length, cb.map(_.length).max, cb)))
-  }
-
-  private def hadoopConf =
-    org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration
-
-  def load(path: String): Codebooks = Kmeans.parse("pq", Kmeans.readText(path, hadoopConf))._2
-
   /** Train-once/probe-many entry, mirroring [[Ivf.fitOrLoad]]: the
     * codebook artifact at `path` ([[Kmeans.ensure]] — memo, unparseable
     * artifact rebuilds, requested (m, k) in the header, a different
@@ -225,7 +201,7 @@ object Pq {
     * collapse at the shortlist boundary) reranks what it has rather
     * than inventing rows — callers needing exactly-k must widen
     * `shortlist`. Shared tail of [[adcRerankTopK]] and
-    * [[IvfPq.topK]]. */
+    * [[IvfPq.topKIndexed]]. */
   private[sim] def exactRerank(corpus: DataFrame, idCol: String, vecCol: String,
                                queries: DataFrame, short: DataFrame,
                                k: Int): DataFrame = {

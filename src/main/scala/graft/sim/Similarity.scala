@@ -168,20 +168,6 @@ object Similarity {
     * Callers must exclude zero vectors (norm 0 → NaN codes). */
   def sq8(vec: Column): Column = graft.functions.Sq8Codes.codes(vec)
 
-  /** The higher-order-function formulation of [[sq8]] — kept as the
-    * executable spec the native kernel is bit-parity-tested against
-    * (SimilaritySpec). The norm rides in via array_repeat, which
-    * evaluates its argument ONCE per row — put the same expression
-    * inside the lambda body and the interpreted HOF re-evaluates the
-    * whole dot product per ELEMENT (dim² multiplies per row; the
-    * CollapseProject hazard documented on Dedup.shingleHashArray
-    * applies to any per-row scalar a lambda references). */
-  def sq8Lambda(vec: Column): Column = {
-    val vd = toDouble(vec)
-    zip_with(vd, array_repeat(sqrt(dot(vec, vec)), size(vec)),
-      (x, nrm) => floor((x / nrm + 1) / 2 * 255 + 0.5).cast("long"))
-  }
-
   /** Dequantize SQ8 codes back to the unit-cube approximation of the
     * normalized vector. Quantization error per component ≤ 1/255, so
     * the reconstructed cosine is within ~0.01 of the true value —

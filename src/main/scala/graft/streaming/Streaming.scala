@@ -1,36 +1,22 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.ops.Exprs
 
-/** Structured-Streaming surface (extension — the reference is batch-only,
-  * SURVEY.md §2.10; labeled as such). Every transform here is written
-  * once and runs identically over a batch frame or a `readStream` frame —
-  * the Spark contract that makes a 100-TB backfill and the live stream
-  * share one code path:
+/** Watermarked event-time transforms (extension — the reference is
+  * batch-only, SURVEY.md §2.10; labeled as such). Each is written once
+  * and runs identically over a batch frame or a `readStream` frame: the
+  * board's w2, w3 and w5 queries run them as batch frames, and
+  * `StreamingSpec` runs them over a `MemoryStream`.
   *
-  *   - event-time tumbling windows with watermarked late-data handling,
   *   - session windows (built-in `session_window`, gap-merged),
-  *   - custom running state via `mapGroupsWithState`.
+  *   - the stream-stream interval join, inner or left outer.
   *
-  * State stores shard by group key across executors; watermarks bound
-  * state size, so none of these accumulate unbounded driver state.
+  * Watermarks bound state size, so neither accumulates unbounded
+  * state on a stream.
   */
 object Streaming {
-
-  /** Event-time tumbling-window aggregate. On a stream, pass a
-    * `watermark` so late rows beyond the bound are dropped and window
-    * state is reclaimed; on a batch frame pass None (a watermark is a
-    * no-op there anyway — kept explicit for readability). */
-  def tumblingAgg(events: DataFrame, win: String = "1 hour",
-                  watermark: Option[String] = None): DataFrame = {
-    val src = watermark.fold(events)(w => events.withWatermark("ts", w))
-    src.groupBy(window(col("ts"), win).as("w"))
-      .agg(count(lit(1)).as("n"), Exprs.r2(Exprs.sumExact(col("value"))).as("sum_value"))
-      .select(col("w.start").as("hour_start"), col("n"), col("sum_value"))
-  }
 
   /** Per-user session windows: events closer than `gap` merge into one
     * session; `session_end` is last-event time + gap (Spark
@@ -46,164 +32,6 @@ object Streaming {
       .select(col("user_id"), col("session.start").as("session_start"),
         col("session.end").as("session_end"), col("n_events"), col("sum_value"))
   }
-
-  case class Ev(user_id: Long, event_id: Long, ts: java.sql.Timestamp, value: Double)
-  case class UserStat(user_id: Long, n: Long, sum_value: Double,
-                      last_event_id: Long)
-
-  /** Custom streaming state (K-style kernel on a stream): running
-    * per-user count/sum/last-event via `mapGroupsWithState` — the
-    * mechanism for stateful logic the built-in windows can't express.
-    * State is one small case class per user, sharded by the state store;
-    * emit is one updated row per user per micro-batch (update mode).
-    *
-    * State TTL: without one, state grows with the distinct-user count
-    * forever — the 100-TB/day scale-killer the watermarked siblings
-    * don't have. `ttl` (processing-time) expires a user idle longer
-    * than the horizon: on timeout the final stat is re-emitted (an
-    * idempotent upsert for the update-mode sink) and the state entry is
-    * reclaimed; a user reappearing later restarts from zero — the
-    * explicit contract of "running stats over the active-user horizon".
-    * Pass None only for genuinely bounded key domains. */
-  def runningUserStats(events: Dataset[Ev],
-                       ttl: Option[String] = Some("30 minutes")): Dataset[UserStat] = {
-    import events.sparkSession.implicits._
-    val timeout = if (ttl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-                  else GroupStateTimeout.NoTimeout
-    events.groupByKey(_.user_id)
-      .mapGroupsWithState[UserStat, UserStat](timeout)(userStatsFunc(ttl))
-  }
-
-  /** The per-group transition function behind [[runningUserStats]] —
-    * exposed so the TTL branches are unit-testable through Spark's
-    * public `TestGroupState` harness (deterministic, no engine clock). */
-  private[streaming] def userStatsFunc(ttl: Option[String])(
-      uid: Long, rows: Iterator[Ev], state: GroupState[UserStat]): UserStat =
-    if (state.hasTimedOut) {
-      val last = state.get
-      state.remove()
-      last // idempotent re-emit; the entry is gone from the store
-    } else {
-      val prev = state.getOption.getOrElse(UserStat(uid, 0L, 0.0, Long.MinValue))
-      val next = rows.foldLeft(prev) { (acc, e) =>
-        UserStat(uid, acc.n + 1,
-          // quantized accumulation, same policy as Exprs.sumExact
-          (math.floor(acc.sum_value * 1e7 + 0.5) + math.floor(e.value * 1e7 + 0.5)) / 1e7,
-          if (e.event_id > acc.last_event_id) e.event_id else acc.last_event_id)
-      }
-      state.update(next)
-      ttl.foreach(state.setTimeoutDuration)
-      next
-    }
-
-  case class SessionBuf(start: Long, lastTs: Long, n: Long, sumQ: Long)
-  case class Session(user_id: Long, session_start: java.sql.Timestamp,
-                     session_end: java.sql.Timestamp, n_events: Long, sum_value: Double)
-
-  /** Custom sessionization via `flatMapGroupsWithState` + event-time
-    * timeout — the fully-manual counterpart of [[sessionAgg]] for
-    * session logic the built-in can't express (per-session custom
-    * accumulators here; in general: early emits, session caps, merges).
-    * Within a batch, a gap ≥ `gapMs` closes and emits the running
-    * session; the final open session is emitted by the state timeout
-    * once the watermark passes its end. Emitted rows match
-    * [[sessionAgg]]'s (start, last + gap, count, quantized sum).
-    * State per user is one 4-field buffer, reclaimed on timeout.
-    *
-    * `allowedLateness` is the watermark delay: with EventTimeTimeout,
-    * the engine DROPS rows older than the watermark before they reach
-    * the state function, so a cross-batch out-of-order event inside a
-    * still-open session is silently lost unless the watermark trails
-    * by the expected disorder (the same knob [[sessionAgg]]'s caller
-    * chooses). The "0 seconds" default keeps in-order streams exact
-    * AND makes timeouts fire as soon as a session's gap elapses — a
-    * larger lateness delays every final-session emit by the same
-    * amount (watermark mechanics, not a defect). */
-  def sessionizeCustom(events: Dataset[Ev], gapMs: Long,
-                       allowedLateness: String = "0 seconds"): Dataset[Session] = {
-    import events.sparkSession.implicits._
-    def emit(uid: Long, s: SessionBuf): Session =
-      Session(uid, new java.sql.Timestamp(s.start),
-        new java.sql.Timestamp(s.lastTs + gapMs), s.n, s.sumQ / 1e7)
-    events.withWatermark("ts", allowedLateness)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionBuf, Session](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, rows: Iterator[Ev], state: GroupState[SessionBuf]) =>
-          if (state.hasTimedOut) {
-            val s = state.get; state.remove(); Iterator.single(emit(uid, s))
-          } else {
-            val closed = scala.collection.mutable.ArrayBuffer.empty[Session]
-            var cur = state.getOption
-            rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
-              val q = math.floor(e.value * 1e7 + 0.5).toLong
-              cur = cur match {
-                case Some(s) if e.ts.getTime - s.lastTs < gapMs =>
-                  Some(SessionBuf(s.start, e.ts.getTime, s.n + 1, s.sumQ + q))
-                case other =>
-                  other.foreach(s => closed += emit(uid, s))
-                  Some(SessionBuf(e.ts.getTime, e.ts.getTime, 1L, q))
-              }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              state.setTimeoutTimestamp(s.lastTs + gapMs)
-            }
-            closed.iterator
-          }
-      }
-  }
-
-  /** Streaming curation: the live-ingest face of `PipelineDemo.curate`'s
-    * gate + dedup stages, built from the same operators — quality and
-    * language gates are stateless projections (identical code runs on a
-    * batch frame), and the dedup stage is [[dedupStream]]'s bounded
-    * watermark state. Near-dup LSH stays batch-side (it needs a corpus
-    * self-join; the streaming pattern is micro-batch LSH against the
-    * bloom/bucket state of the curated store, out of scope here). */
-  def curateStream(docs: DataFrame, textCol: String, langCol: String, tsCol: String,
-                   minTokens: Long = 5, minAlpha: Double = 0.6,
-                   langs: Seq[String] = Seq("en", "de", "es"),
-                   horizon: String = "1 hour"): DataFrame = {
-    val gated = docs.filter(
-      graft.text.TextOps.tokenCount(col(textCol)) >= minTokens &&
-        graft.text.TextOps.alphaRatio(col(textCol)) >= minAlpha &&
-        col(langCol).isin(langs: _*))
-    dedupStream(gated, textCol, tsCol, horizon)
-  }
-
-  /** Streaming exact dedup — the streaming face of `text.Dedup.exact`
-    * for a live ingest pipeline: fingerprint the payload, keep the first
-    * arrival of each fingerprint, drop repeats that arrive within the
-    * watermark horizon. `dropDuplicatesWithinWatermark` keeps one state
-    * entry per distinct key seen inside the horizon and reclaims it as
-    * the event-time watermark advances — bounded state, unlike a plain
-    * streaming `dropDuplicates` whose key set grows forever. Repeats
-    * separated by more than the horizon are admitted again by design
-    * (at 100 TB/day the horizon is the dedup contract: exact within the
-    * window, batch `Dedup.exact` owns the full-corpus pass). */
-  def dedupStream(docs: DataFrame, textCol: String, tsCol: String,
-                  horizon: String = "1 hour"): DataFrame =
-    docs.withWatermark(tsCol, horizon)
-      .withColumn("text_md5", md5(col(textCol)))
-      .dropDuplicatesWithinWatermark("text_md5")
-
-  /** Stream-static enrichment join: a live event stream joined to a
-    * slowly-changing dimension frame. The static side re-EXECUTES per
-    * micro-batch, but its parquet FILE LISTING is captured when `dim`
-    * was created (`spark.read` caches the file index in the plan) — so
-    * new rows inside already-listed files are seen, while files added
-    * or replaced after creation are NOT (a rewritten dim dir serves
-    * stale rows or fails the scan once old files vanish). To follow a
-    * refreshed dim, re-read it per batch (`foreachBatch` + fresh
-    * `spark.read.parquet`) or register it as a catalog table and
-    * REFRESH it. Being a dim, it broadcasts — the stream side never
-    * shuffles, which is the only join shape that holds up when the
-    * stream is the 100-TB/day side. `left` keeps events whose key has
-    * no dim row yet (late dim upserts are a fact of life in ingest
-    * pipelines). */
-  def enrichStream(events: DataFrame, dim: DataFrame, key: String): DataFrame =
-    events.join(broadcast(dim), Seq(key), "left")
 
   /** Watermarked stream-stream interval join — the clicks⋈impressions
     * shape: match right-stream rows to left-stream rows on `key` when
@@ -235,105 +63,5 @@ object Streaming {
       s"$key = __rk AND $rightTs >= $leftTs AND " +
         s"$rightTs <= $leftTs + INTERVAL $interval"), joinType)
       .drop("__rk")
-  }
-
-  /** Streaming CDC merge — maintain a keyed parquet snapshot from a
-    * change stream: each micro-batch applies
-    * [[graft.ops.Merge.applyChanges]] (latest version per key wins,
-    * tombstoned deletes, versions retained — see `asSnapshot`) against
-    * the current snapshot and atomically replaces it via
-    * write-new-then-swap. Out-of-order changes are safe ACROSS batches,
-    * not just within one: the snapshot remembers each key's winning
-    * version (and tombstones), so a late row loses to what it should
-    * lose to. Replays after a crash re-merge the same batch — a
-    * deterministic, idempotent overwrite — so checkpoint + swap gives
-    * effectively-once snapshot maintenance on a plain file sink. Read
-    * the result through [[graft.ops.Merge.served]]. */
-  def mergeStream(changes: DataFrame, keys: Seq[String],
-                  versionCols: Seq[String], deleteCol: String,
-                  snapshotDir: String, checkpointDir: String):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Update)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        // Hadoop FS API, not java.io.File: a real snapshot lives on
-        // hdfs:// with atomic directory rename. (Object stores without
-        // atomic rename need a table format's commit log instead.)
-        import org.apache.hadoop.fs.Path
-        val root = new Path(snapshotDir)
-        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val cur = new Path(root, "current")
-        val prev = new Path(root, "previous")
-        def committed(d: Path) = fs.exists(new Path(d, "_SUCCESS"))
-        // Crash-safe base resolution: at every point of the swap below,
-        // at least one of current/previous holds a committed pre-batch
-        // snapshot — a replay that finds `current` missing (crash
-        // between the renames) recovers from `previous` instead of
-        // silently merging against an empty base.
-        val base =
-          if (committed(cur)) spark.read.parquet(cur.toString)
-          else if (committed(prev)) spark.read.parquet(prev.toString)
-          else batch.limit(0) // genuine first batch: empty base, same schema
-        val next = graft.ops.Merge.applyChanges(
-          base, batch, keys, versionCols, deleteCol, asSnapshot = true)
-        // write-new-then-swap: never overwrite the directory being read
-        val stage = new Path(root, s"stage-$batchId")
-        next.write.mode("overwrite").parquet(stage.toString)
-        // Swap WITHOUT ever dropping the last committed snapshot:
-        // `previous` is only rotated while `current` exists, so a crash
-        // at any point leaves at least one committed directory for the
-        // base resolution above. (An unconditional delete-prev-first
-        // here had a double-crash hole: on the replay path where
-        // `current` was already gone, deleting `previous` before the
-        // final rename left NOTHING committed, and the next replay
-        // rebuilt the snapshot from one micro-batch.) Hadoop FS
-        // delete/rename signal failure by RETURNING FALSE, not
-        // throwing — every step is checked so a failed swap fails the
-        // micro-batch (checkpoint retries it) instead of silently
-        // committing a sink that still serves the pre-batch state.
-        if (committed(cur)) {
-          fs.delete(prev, true)
-          require(!fs.exists(prev), s"snapshot swap: could not clear $prev")
-          require(fs.rename(cur, prev), s"snapshot swap: $cur -> $prev failed")
-        } else if (fs.exists(cur)) {
-          // an uncommitted `current` can't arise from this swap (cur is
-          // only ever created by an atomic rename of a committed stage)
-          // but must not survive to the rename below: on a local FS,
-          // rename onto an existing directory nests instead of failing
-          fs.delete(cur, true)
-          require(!fs.exists(cur), s"snapshot swap: could not clear uncommitted $cur")
-        }
-        require(fs.rename(stage, cur), s"snapshot swap: $stage -> $cur failed")
-        ()
-      }
-      .start()
-
-  /** Incremental file pipeline: process everything currently available
-    * from a streaming frame into a parquet directory, exactly once, then
-    * stop (`Trigger.AvailableNow`). The checkpoint carries source
-    * offsets + sink commit log, so re-running after new files land
-    * processes ONLY the new data, and a crash mid-batch replays without
-    * duplicating output — the incremental-backfill shape for a corpus
-    * that grows by drops, where each run costs one pass over the *new*
-    * bytes instead of the full corpus. */
-  def runIncremental(df: DataFrame, outDir: String, checkpointDir: String): Unit = {
-    val q = df.writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  /** Convenience: run a streaming frame into an in-memory table and
-    * block until all available input is processed (tests / demos). */
-  def runToMemory(df: DataFrame, name: String, mode: OutputMode): Unit = {
-    val q = df.writeStream.format("memory").queryName(name).outputMode(mode).start()
-    q.processAllAvailable()
-    q.stop()
   }
 }

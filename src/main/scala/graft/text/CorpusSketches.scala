@@ -2,7 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.sketch.{BloomFilter, CountMinSketch}
+import org.apache.spark.util.sketch.BloomFilter
 
 /** Corpus-level sketches for incremental ingest at 100-TB scale — the
   * point is what they REPLACE: a join against the historical corpus.
@@ -38,17 +38,16 @@ object CorpusSketches {
     // Zero-row corpus (the first-ever ingest in bloomOrLoad's
     // maintained-artifact life cycle) → a driver-constructed EMPTY
     // filter at the same parameters, not the zero-row bloomFilter NPE
-    // and not a sentinel key: this build feeds [[filterUnseen]], where
-    // a sentinel-colliding document would be a SILENT drop with no
-    // exact confirm to recover it (unlike [[fpColumnBloom]]'s reverse
-    // gate). The emptiness probe is one limit-1 job, paid on the
+    // and not a sentinel key: a drop gate built on this filter would
+    // SILENTLY drop a sentinel-colliding document, with no exact
+    // confirm to recover it (unlike [[fpColumnBloom]]'s reverse gate). The emptiness probe is one limit-1 job, paid on the
     // ingest/build path only — warm loads never reach it.
     // null-text rows carry NO key: Spark's xxhash64 SKIPS null inputs
     // and returns its seed (42), so an unfiltered null-text corpus row
     // would insert 42 — and every null-text probe row hashes to that
     // same 42, turning "null is never seen" into "every null is seen"
-    // (a silent drop through [[filterUnseen]], with no exact confirm
-    // to recover it)
+    // (a silent drop through any drop gate, with no exact confirm to
+    // recover it)
     val keyed = df.filter(col(textCol).isNotNull)
       .select(xxhash64(TextOps.fingerprint(col(textCol))).as("fp_h"))
     if (keyed.isEmpty) BloomFilter.create(expected, fpp)
@@ -80,31 +79,13 @@ object CorpusSketches {
     })(out => fingerprintBloom(df, textCol, expected, fpp).writeTo(out))
   }
 
-  /** Incremental-dedup pre-filter: keep only documents whose
-    * fingerprint is NOT (probably) in `seen`. The serialized filter
-    * embeds as a binary literal probed by the native
-    * `BloomFilterMightContain` expression — the same codegen'd kernel
-    * Spark's runtime bloom join-filters use — so the probe runs inside
-    * whole-stage codegen with zero UDFs (the public sketch format and
-    * the catalyst expression share `BloomFilterImpl`'s serialization).
-    * Exactness contract: every true duplicate is dropped (no false
-    * negatives — build and probe hash identically); a false positive
-    * drops a genuinely-new doc with probability ≤ fpp — for
-    * training-data dedup that trade is almost always right, and the
-    * residual can be recovered by routing the dropped stream through
-    * exact dedup if it matters. Null-text documents are KEPT — guarded
-    * EXPLICITLY, not by probe nullability: xxhash64 skips a null input
-    * and returns its seed, so the probe expression itself is never
-    * null (a bare probe would test key 42 and drop every null-text
-    * row whenever any null ever entered a build — see the matching
-    * filter in [[fingerprintBloom]]). Gate null texts upstream if they
-    * should not pass at all. */
-  def filterUnseen(df: DataFrame, textCol: String, seen: BloomFilter): DataFrame =
-    df.filter(col(textCol).isNull || !seenProbe(textCol, seen))
-
-  /** The raw might-contain probe [[filterUnseen]] filters on — exposed
-    * so two-phase consumers ([[Dedup.incrementalNew]]) can route the
-    * bloom-POSITIVE side into an exact confirm instead of dropping it. */
+  /** Might-contain probe of a document's fingerprint against a
+    * [[fingerprintBloom]] filter, as the native `BloomFilterMightContain`
+    * expression (codegen'd, no UDF). Exactness contract: no false
+    * negatives — build and probe hash identically; a false positive
+    * has probability ≤ fpp, so two-phase consumers
+    * ([[Dedup.incrementalNew]]) route the bloom-POSITIVE side into an
+    * exact confirm instead of dropping it. */
   def seenProbe(textCol: String, seen: BloomFilter): org.apache.spark.sql.Column =
     fpProbe(TextOps.fingerprint(col(textCol)), seen)
 
@@ -123,8 +104,8 @@ object CorpusSketches {
     // gate — conservative direction, exactness unaffected, because
     // every fpColumnBloom consumer routes positives into an exact
     // confirm (incrementalNew) rather than dropping them. Do NOT feed
-    // these filters to [[filterUnseen]]-style drop gates; build those
-    // with [[fingerprintBloom]], which is sentinel-free.
+    // these filters to drop gates; build those with
+    // [[fingerprintBloom]], which is sentinel-free.
     df.select(xxhash64(fpCol).as("fp_h"))
       .unionByName(df.sparkSession.range(1)
         .select(lit(Long.MinValue).as("fp_h")))
@@ -142,14 +123,4 @@ object CorpusSketches {
       Literal(bos.toByteArray),
       ColumnBridge.expression(xxhash64(fpCol))))
   }
-
-  /** Count-min sketch of token frequencies: `eps` bounds the
-    * overestimate (≤ eps · total-token-count with confidence
-    * 1 − 1/e^d), memory is width × depth counters regardless of corpus
-    * size. Query with `sketch.estimateCount(token)`. */
-  def tokenCountMin(df: DataFrame, textCol: String,
-                    eps: Double = 0.001, confidence: Double = 0.99,
-                    seed: Int = 42): CountMinSketch =
-    df.select(explode(TextOps.tokens(col(textCol))).as("token"))
-      .stat.countMinSketch("token", eps, confidence, seed)
 }

@@ -67,40 +67,20 @@ object Dedup {
   /** Boilerplate coverage per document: how much of each doc is made of
     * cross-document spans — the DECISION step on top of
     * [[crossDocSpans]]' blocklist. Emits per doc its distinct-span
-    * count, how many of those spans are corpus boilerplate (appear in
-    * ≥ `minDocs` docs), and the fraction — threshold it to drop
+    * count, how many of those spans are corpus boilerplate (in the
+    * blocklist), and the fraction — threshold it to drop
     * template-dominated pages, or anti-join the flagged spans to strip.
-    *
     * Same span semantics as [[crossDocSpans]] (per-doc distinct,
-    * sub-`window` docs absent). Scale shape: span explosion stays in
-    * the scan projection on both consumers; the blocklist aggregate is
-    * the one span-keyed shuffle, and the probe join is left to AQE —
-    * a small blocklist (the common case: boilerplate is a tiny
-    * fraction of the distinct-span domain) broadcasts, so the probe
-    * side never exchanges; a pathological one falls back to a shuffle
-    * join rather than OOMing the executors. The doc-keyed coverage
-    * aggregate is the only other shuffle. Every count is exact. */
-  def spanCoverage(df: DataFrame, idCol: String, textCol: String,
-                   window: Int = 4, minDocs: Long = 2L): DataFrame = {
-    require(window >= 2, s"window must be >= 2, got $window")
-    require(minDocs >= 2, s"minDocs must be >= 2, got $minDocs")
-    val spans = docSpans(df, Seq(col(idCol)), textCol, window)
-    val block = spans.groupBy(col("span"))
-      .agg(count(lit(1)).as("__df")).filter(col("__df") >= minDocs)
-      .select(col("span"), lit(1).as("__boiler"))
-    spans.join(block, Seq("span"), "left")
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_spans"), count(col("__boiler")).as("n_boiler"))
-      .withColumn("boiler_frac", graft.ops.Exprs.r4(
-        col("n_boiler").cast("double") / col("n_spans").cast("double")))
-  }
-
-  /** [[spanCoverage]] against a PRE-BUILT blocklist frame
-    * ([[crossDocSpans]] / [[ensureSpanBlocklist]] schema: span,
-    * n_docs — already filtered to ≥ minDocs): only the per-doc span
-    * scan, the probe join, and the doc-keyed coverage aggregate run —
-    * the span-keyed blocklist shuffle was paid once at ingest. The
-    * blocklist must come from the SAME corpus generation (stamp the
+    * sub-`window` docs absent).
+    *
+    * `blocklist` is PRE-BUILT ([[crossDocSpans]] /
+    * [[ensureSpanBlocklist]] schema: span, n_docs — already filtered to
+    * ≥ minDocs): only the per-doc span scan, the probe join, and the
+    * doc-keyed coverage aggregate run — the span-keyed blocklist
+    * shuffle was paid once at ingest. The probe join is left to AQE: a
+    * small blocklist (the common case) broadcasts, so the probe side
+    * never exchanges; a pathological one falls back to a shuffle join.
+    * The blocklist must come from the SAME corpus generation (stamp the
     * artifact path) or coverage fractions silently drift. */
   def spanCoverageWithBlocklist(df: DataFrame, idCol: String, textCol: String,
                                 window: Int, blocklist: DataFrame): DataFrame = {
@@ -127,23 +107,6 @@ object Dedup {
     graft.Artifact.table(df.sparkSession, path, Seq("span", "n_docs"))(
       crossDocSpans(df, textCol, window, minDocs))
 
-  /** Distinct word n-gram shingles per document: (id, shingle) rows. */
-  def shingles(df: DataFrame, idCol: String, textCol: String, n: Int = 3): DataFrame = {
-    // Materialize the token array in its own projection: inlined, the
-    // regex split would be re-evaluated as a subexpression of every
-    // element_at below (~3·shingles times per row) — higher-order
-    // lambdas are interpreted, with no common-subexpression reuse.
-    val withToks = df.select(col(idCol), TextOps.tokens(col(textCol)).as("__toks"))
-    val toks = col("__toks")
-    // Guard short docs: sequence(0, size-n) would count *down* for size<n.
-    val sh = when(size(toks) >= n,
-      transform(
-        sequence(lit(0), size(toks) - n),
-        i => concat_ws(" ", (0 until n).map(o => element_at(toks, i + o + 1)): _*)))
-      .otherwise(array().cast("array<string>"))
-    withToks.select(col(idCol), explode(array_distinct(sh)).as("shingle"))
-  }
-
   /** 64-bit shingle fingerprints per document, built without
     * materializing shingle strings: xxhash64 folds the n token strings
     * of each gram directly. `distinct` dedups grams *within* a document
@@ -165,31 +128,16 @@ object Dedup {
     * kernel — tokenize once, fingerprint every gram in one fused codegen
     * loop. The per-document array is what the projection-shaped
     * signature kernels ([[minhashSignatures]]) consume — no explode, no
-    * shuffle. (The higher-order formulation is kept as
-    * [[shingleHashArrayLambda]], the executable spec the kernel is
-    * parity-tested against — and a cautionary tale: with the token
-    * array in the projection below, CollapseProject inlines the split()
-    * into every element_at and re-tokenizes the document per gram.) */
+    * shuffle. (The higher-order formulation is kept in SigKernelsSpec,
+    * the executable spec the kernel is parity-tested against — and a
+    * cautionary tale: with the token array in its projection,
+    * CollapseProject inlines the split() into every element_at and
+    * re-tokenizes the document per gram.) */
   def shingleHashArray(df: DataFrame, idCol: String, textCol: String,
                        n: Int = 3, distinct: Boolean = true): DataFrame =
     df.select(col(idCol),
       graft.functions.ShingleHashes
         .shingles(TextOps.tokens(col(textCol)), n, distinct).as("__sh"))
-
-  /** Higher-order-function formulation of [[shingleHashArray]] —
-    * executable spec only (interpreted lambdas; collapse-unsafe). */
-  def shingleHashArrayLambda(df: DataFrame, idCol: String, textCol: String,
-                             n: Int = 3, distinct: Boolean = true): DataFrame = {
-    val withToks = df.select(col(idCol), TextOps.tokens(col(textCol)).as("__toks"))
-    val toks = col("__toks")
-    val arr = when(size(toks) >= n,
-      transform(
-        sequence(lit(0), size(toks) - n),
-        i => xxhash64((0 until n).map(o => element_at(toks, i + o + 1)): _*)))
-      .otherwise(array().cast("array<bigint>"))
-    val dedup = if (distinct) array_distinct(arr) else arr
-    withToks.select(col(idCol), dedup.as("__sh"))
-  }
 
   /** Exact n-gram Jaccard near-dup pairs: explode shingles, self-join on
     * shingle (blocking — only docs sharing ≥1 shingle ever meet), count
@@ -950,45 +898,19 @@ object Dedup {
     * rest), rank worst-first for audit, and monitor contamination
     * drift per source over time.
     *
-    * Scale shape: the benchmark shingle set is driver-sized by
-    * definition (Guard-capped, as in [[decontaminate]]) and ships as a
-    * BROADCAST hash relation — a per-shingle O(1) probe, NOT a plan
-    * literal (`array_intersect` against a literal array rebuilds its
-    * hash set per ROW: O(|benchmark|) per document, a cliff the first
-    * time the benchmark outgrows a few thousand entries). The exploded
-    * per-doc distinct shingles take one marker left join against the
-    * broadcast, then ONE shuffle — a single doc-keyed aggregate counts
-    * total and hit shingles together. One row per document that
-    * shingles at `n` (≥ n tokens); an empty benchmark scores
-    * everything 0. Same fingerprint-collision bound as
-    * [[shingleHashes]]. */
-  def contaminationScore(corpus: DataFrame, benchmark: DataFrame,
-                         idCol: String, textCol: String,
-                         n: Int = 3): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    // The ad-hoc path derives the distinct set inline (driver-guarded);
-    // the artifact path ([[ensureShingleSet]] +
-    // [[contaminationScoreAgainst]]) skips this per-invocation job.
-    val benchArr: Array[Long] = Guard.driverLiteral(
-      shingleHashes(benchmark, idCol, textCol, n)
-        .select(col("shingle_h")).distinct().as[Long],
-      "benchmark shingle set", 20000000L,
-      "too large to broadcast; score against it in chunks")
-    contaminationScoreAgainst(corpus,
-      spark.createDataset(benchArr.toIndexedSeq).toDF("shingle_h"),
-      idCol, textCol, n)
-  }
-
-  /** [[contaminationScore]] against a PRE-DISTINCTED benchmark shingle
-    * set (one `shingle_h` long column — the [[ensureShingleSet]]
-    * artifact): the per-invocation explode+distinct+collect job the
-    * inline path pays becomes a scan of a tiny parquet that ships
-    * straight into the broadcast hash relation. No driver collect at
-    * all — the 20M driverLiteral guard is replaced by Spark's own
-    * broadcast-build limit, which fails loudly rather than silently
-    * degrading. Identical results: the score depends only on the
-    * shingle SET. */
+    * `benchShingles` is the PRE-DISTINCTED benchmark shingle set (one
+    * `shingle_h` long column — the [[ensureShingleSet]] artifact): a
+    * scan of a tiny parquet that ships straight into a BROADCAST hash
+    * relation — a per-shingle O(1) probe, NOT a plan literal
+    * (`array_intersect` against a literal array rebuilds its hash set
+    * per ROW: O(|benchmark|) per document). Spark's broadcast-build
+    * limit fails loudly on an oversized set rather than silently
+    * degrading. The exploded per-doc distinct shingles take one marker
+    * left join against the broadcast, then ONE shuffle — a single
+    * doc-keyed aggregate counts total and hit shingles together. One
+    * row per document that shingles at `n` (≥ n tokens); an empty
+    * benchmark scores everything 0. Same fingerprint-collision bound as
+    * [[shingleHashes]]; the score depends only on the shingle SET. */
   def contaminationScoreAgainst(corpus: DataFrame, benchShingles: DataFrame,
                                 idCol: String, textCol: String,
                                 n: Int): DataFrame = {
@@ -1043,8 +965,8 @@ object Dedup {
     * gate — the anti-join verdict per positive is unchanged.
     *
     * Null-text batch rows carry a null fingerprint, which joins
-    * nothing — they are admitted (gate them upstream, as in
-    * [[CorpusSketches.filterUnseen]]). Emits (id, fingerprint). */
+    * nothing — they are admitted (gate them upstream). Emits (id,
+    * fingerprint). */
   def incrementalNew(corpus: DataFrame, batch: DataFrame,
                      idCol: String, textCol: String,
                      expected: Long, fpp: Double = 0.01): DataFrame =
@@ -1074,7 +996,7 @@ object Dedup {
       CorpusSketches.seenProbe(textCol, bloom).as("__seen")))
     // Explicit null routing, not null-arm coalesces: the probe column
     // is NEVER null (xxhash64 folds a null fingerprint to its seed —
-    // the filterUnseen analysis), so the old coalesce fallbacks were
+    // see fingerprintBloom), so the old coalesce fallbacks were
     // dead code and a null-text row rode the bloom's verdict on the
     // constant seed hash: a seed-hash positive would drag every
     // null-fingerprint row into `positives`, and its null fingerprint

@@ -231,54 +231,6 @@ object TextOps {
       .select(col("query_id"), col("rank"), col("doc_id"), col("score"))
   }
 
-  /** Per-document bigram language-model negative log-likelihood — the
-    * classic statistical-LM quality filter (CCNet-style): train bigram
-    * counts on the corpus, score every document by its average
-    * per-bigram −ln P(w_i | w_{i−1}) under add-one smoothing
-    *
-    *   P(b | a) = (n_ab + 1) / (n_a + V)
-    *
-    * (n_a = Σ_b n_ab, the context total; V = corpus vocabulary size).
-    * Low avg NLL ≈ fluent/typical text; word salad and boilerplate
-    * noise score high. Perplexity is exp(avg_nll) — monotone, so
-    * threshold on NLL directly.
-    *
-    * Plan at scale: token arrays materialized ONCE (the bigram
-    * explosion references the array through a HOF — without the
-    * checkpoint CollapseProject re-runs the tokenizer per reference);
-    * bigram counts are one explode + hash aggregate (map-side
-    * combined); context totals derive from the (much smaller) bigram
-    * COUNT table, never a second corpus pass; the count table is
-    * materialized — it IS the model artifact — and joins back to the
-    * scoring stream co-keyed on (a, b) where AQE's skew split absorbs
-    * Zipfian hot bigrams; V broadcasts as a 1-row aggregate. Left
-    * joins + coalesce keep the formula total for scoring text the
-    * model never saw (unseen bigram → smoothed floor, unseen context
-    * → 1/V). Documents with fewer than two tokens have no bigrams and
-    * are absent from the output by contract. */
-  def bigramNll(corpus: org.apache.spark.sql.DataFrame, idCol: String,
-                textCol: String): org.apache.spark.sql.DataFrame =
-    bigramNllAgainst(corpus, corpus, idCol, textCol)
-
-  /** [[bigramNll]] generalized to score one frame under a model
-    * trained on ANOTHER — the primitive behind domain-targeted data
-    * selection ([[dsirWeight]]): counts/vocabulary come from `model`,
-    * every `score` document gets its average −ln P under them. When
-    * `score eq model` the token materialization is shared and this is
-    * exactly [[bigramNll]]. */
-  def bigramNllAgainst(score: org.apache.spark.sql.DataFrame,
-                       model: org.apache.spark.sql.DataFrame,
-                       idCol: String, textCol: String): org.apache.spark.sql.DataFrame =
-    if (score eq model) {
-      // self-scoring shares ONE token materialization between the
-      // count build and the scoring side
-      val toks = materializedToks(score, Seq(col(idCol)), textCol)
-      bigramNllFromToks(toks,
-        graft.ops.Exec.materialize(countsFromToks(toks)), idCol)
-    } else
-      bigramNllWithModel(score, materializedCounts(model, textCol),
-        idCol, textCol)
-
   /** Tokenized ≥2-token docs, MATERIALIZED: `__t` is referenced many
     * times downstream (size() in sequence, two element_at per bigram)
     * and CollapseProject would re-run the tokenizer per reference on a
@@ -294,24 +246,9 @@ object TextOps {
     bigramsOf(toks, Seq.empty)
       .groupBy(col("a"), col("b")).agg(count(lit(1)).as("n_ab"))
 
-  /** MATERIALIZED count table for a model corpus, with the build's
-    * internal token checkpoint released once the counts land (r15
-    * review: `materialize(bigramCounts(model))` retained the
-    * model-corpus-sized token arrays behind a handle nothing could
-    * reach — one leaked copy per inline model build in
-    * [[dsirWeight]] / [[bigramNllAgainst]]). The returned frame is
-    * caller-owned (it backs the scoring joins). */
-  private def materializedCounts(model: org.apache.spark.sql.DataFrame,
-                                 textCol: String): org.apache.spark.sql.DataFrame = {
-    val t = materializedToks(model, Seq.empty, textCol)
-    val c = graft.ops.Exec.materialize(countsFromToks(t))
-    graft.ops.Exec.release(t)
-    c
-  }
-
   /** The trained bigram LM AS A TABLE: (a, b, n_ab) counts over the
     * model corpus's adjacent token pairs (≥2-token docs only — the
-    * same docs [[bigramNllAgainst]] has always trained on). The table
+    * same docs the scoring side keeps). The table
     * is the COMPLETE model: context totals n_a are its per-a sums, and
     * the vocabulary size is the distinct-token count of a ∪ b — every
     * token of a ≥2-token doc appears as some bigram endpoint, so the
@@ -352,11 +289,35 @@ object TextOps {
             element_at(col("__t"), i + 1).as("b")))).as("__bg"): _*)
       .select(cols :+ col("__bg.a").as("a") :+ col("__bg.b").as("b"): _*)
 
-  /** Score `score` under a PRE-BUILT count table ([[bigramCounts]] /
+  /** Per-document bigram language-model negative log-likelihood — the
+    * classic statistical-LM quality filter (CCNet-style): score every
+    * document by its average per-bigram −ln P(w_i | w_{i−1}) under
+    * add-one smoothing
+    *
+    *   P(b | a) = (n_ab + 1) / (n_a + V)
+    *
+    * (n_a = Σ_b n_ab, the context total; V = corpus vocabulary size).
+    * Low avg NLL ≈ fluent/typical text; word salad and boilerplate
+    * noise score high. Perplexity is exp(avg_nll) — monotone, so
+    * threshold on NLL directly.
+    *
+    * Plan at scale: token arrays materialized ONCE (the bigram
+    * explosion references the array through a HOF — without the
+    * checkpoint CollapseProject re-runs the tokenizer per reference);
+    * bigram counts are one explode + hash aggregate (map-side
+    * combined); context totals derive from the (much smaller) bigram
+    * COUNT table, never a second corpus pass; the count table is
+    * materialized — it IS the model artifact — and joins back to the
+    * scoring stream co-keyed on (a, b) where AQE's skew split absorbs
+    * Zipfian hot bigrams; V broadcasts as a 1-row aggregate. Left
+    * joins + coalesce keep the formula total for scoring text the
+    * model never saw (unseen bigram → smoothed floor, unseen context
+    * → 1/V). Documents with fewer than two tokens have no bigrams and
+    * are absent from the output by contract.
+    *
+    * Scores `score` under a PRE-BUILT count table ([[bigramCounts]] /
     * [[ensureBigramModel]] schema). Context totals and the vocabulary
-    * derive from the table (exact — see [[bigramCounts]]); scoring is
-    * unchanged: add-one-smoothed −ln P per bigram, unseen bigram →
-    * smoothed floor, unseen context → 1/V, decimal-exact summation. */
+    * derive from the table (exact — see [[bigramCounts]]). */
   def bigramNllWithModel(score: org.apache.spark.sql.DataFrame,
                          nab: org.apache.spark.sql.DataFrame,
                          idCol: String, textCol: String): org.apache.spark.sql.DataFrame =
@@ -390,22 +351,9 @@ object TextOps {
     * than the corpus's own model. Positive = target-like (keep /
     * upsample when building a domain mix); near zero = typical; the
     * classic importance-resampling score with hashed-bigram features
-    * replaced by the exact bigram LMs [[bigramNll]] already maintains.
+    * replaced by exact bigram LMs ([[bigramNllWithModel]]).
     *
-    * Scale shape: two [[bigramNllAgainst]] passes over the corpus
-    * (each materializes its tokenization once; the model sides are
-    * bigram-count-table-sized), joined on the document id. Documents
-    * absent from either pass (< 2 tokens) are absent from the
-    * output. */
-  def dsirWeight(corpus: org.apache.spark.sql.DataFrame,
-                 target: org.apache.spark.sql.DataFrame,
-                 idCol: String, textCol: String): org.apache.spark.sql.DataFrame =
-    dsirWeightWithModels(corpus,
-      materializedCounts(corpus, textCol),
-      materializedCounts(target, textCol),
-      idCol, textCol)
-
-  /** [[dsirWeight]] against PRE-BUILT count tables for both LMs
+    * Against PRE-BUILT count tables for both LMs
     * ([[ensureBigramModel]] life cycle): the scoring corpus tokenizes
     * and materializes ONCE, shared by both scoring sides; neither
     * model corpus is touched.
@@ -554,7 +502,7 @@ object TextOps {
 
   /** Gopher-style per-document repetition statistics (Rae et al. 2021,
     * "Scaling Language Models", Table A1 repetition filters — the
-    * standard web-scale quality gate next to [[bigramNll]]):
+    * standard web-scale quality gate next to [[bigramNllWithModel]]):
     * `top_token_frac` (share of tokens taken by the most frequent
     * token), `top_bigram_frac` (share of bigram positions taken by the
     * most frequent bigram), and `dup_trigram_frac` (share of trigram
@@ -567,7 +515,7 @@ object TextOps {
     * explode + per-(doc, gram) groupBy formulation would shuffle every
     * token of a 100 TB corpus on (doc_id, gram). Documents with fewer
     * than three tokens have no trigram denominator and are absent by
-    * contract (the [[bigramNll]] convention). */
+    * contract (the [[bigramNllWithModel]] convention). */
   def repetitionStats(df: org.apache.spark.sql.DataFrame, idCol: String,
                       textCol: String): org.apache.spark.sql.DataFrame = {
     import graft.ops.Exprs.r4

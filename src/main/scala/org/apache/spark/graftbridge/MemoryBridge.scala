@@ -32,10 +32,4 @@ object MemoryBridge {
       ctx.taskMetrics().incMemoryBytesSpilled(memBytes)
       ctx.taskMetrics().incDiskBytesSpilled(diskBytes)
     }
-
-  /** The task's (memoryBytesSpilled, diskBytesSpilled) so far — spec
-    * readout for the crediting above. (0, 0) outside a task. */
-  def spilledBytes(ctx: TaskContext): (Long, Long) =
-    if (ctx == null || ctx.taskMetrics() == null) (0L, 0L)
-    else (ctx.taskMetrics().memoryBytesSpilled, ctx.taskMetrics().diskBytesSpilled)
 }

@@ -208,7 +208,11 @@ class ArtifactCanarySpec extends AnyFunSuite {
     // rewrite in place with a different (m=2, k=4) codebook: the memo
     // keeps serving the old fit until the path is invalidated
     val other = Array.tabulate(2, 4, 4)((j, c, x) => (j * 100 + c * 10 + x).toDouble)
-    graft.sim.Pq.save(other, p)
+    val path = new org.apache.hadoop.fs.Path(p)
+    val out = path.getFileSystem(spark.sparkContext.hadoopConfiguration).create(path, true)
+    try out.write(("#pq m=2 k=4\n" + other.map(_.map(_.mkString(",")).mkString(";"))
+      .mkString("\n")).getBytes("UTF-8"))
+    finally out.close()
     assert(graft.sim.Pq.fitOrLoad(emb, "embedding", m = 2, k = 4, p) eq cb)
     Artifact.invalidate(p)
     val reloaded = graft.sim.Pq.fitOrLoad(emb, "embedding", m = 2, k = 4, p)

@@ -51,55 +51,56 @@ class CatalogLifecycleSpec extends AnyFunSuite {
 
   test("in-place regeneration: stale consumers are never silently pre-rewrite; invalidate resolves the new lake") {
     assume(new java.io.File("/root/testdata/sf0.001").isDirectory)
-    val dir = java.nio.file.Files.createTempDirectory("graft_lake").toString
+    TempDirs.withTempDir("graft_lake") { dir =>
 
-    writeLake(dir, 200)
-    val before: Map[String, Long] =
-      ConsumerQueries.map(q => q -> SparkEntry.queries(q)(spark, dir).count()).toMap
-    val rowsBefore = Tables.t(spark, dir, "lineitem").count()
+      writeLake(dir, 200)
+      val before: Map[String, Long] =
+        ConsumerQueries.map(q => q -> SparkEntry.queries(q)(spark, dir).count()).toMap
+      val rowsBefore = Tables.t(spark, dir, "lineitem").count()
 
-    // Regenerate IN PLACE: different population + documents schema drift
-    writeLake(dir, 97)
-    spark.read.parquet(s"$dir/documents.parquet")
-      .withColumn("__drift", org.apache.spark.sql.functions.lit(1))
-      .write.mode("overwrite").parquet(s"$dir/documents_new.parquet")
-    // overwrite documents with the drifted schema (write-then-move:
-    // Spark cannot overwrite its own input)
-    org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(s"$dir/documents.parquet"))
-    org.apache.commons.io.FileUtils.moveDirectory(
-      new java.io.File(s"$dir/documents_new.parquet"),
-      new java.io.File(s"$dir/documents.parquet"))
+      // Regenerate IN PLACE: different population + documents schema drift
+      writeLake(dir, 97)
+      spark.read.parquet(s"$dir/documents.parquet")
+        .withColumn("__drift", org.apache.spark.sql.functions.lit(1))
+        .write.mode("overwrite").parquet(s"$dir/documents_new.parquet")
+      // overwrite documents with the drifted schema (write-then-move:
+      // Spark cannot overwrite its own input)
+      org.apache.commons.io.FileUtils.deleteDirectory(
+        new java.io.File(s"$dir/documents.parquet"))
+      org.apache.commons.io.FileUtils.moveDirectory(
+        new java.io.File(s"$dir/documents_new.parquet"),
+        new java.io.File(s"$dir/documents.parquet"))
 
-    // 3: a stale memoized handle must not silently serve the OLD lake:
-    // either it fails loudly (vanished files / length mismatch) or it
-    // observes the new population. "Same count as before the rewrite"
-    // is only acceptable when old and new populations coincide — they
-    // don't here (200 vs 97 source rows).
-    val staleOutcome =
-      try Right(Tables.t(spark, dir, "lineitem").count())
-      catch { case e: Exception => Left(e.getClass.getSimpleName) }
-    staleOutcome match {
-      case Right(n) => assert(n != rowsBefore,
-        "stale catalog handle silently served the pre-rewrite row count")
-      case Left(_) => () // loud failure is the acceptable alternative
+      // 3: a stale memoized handle must not silently serve the OLD lake:
+      // either it fails loudly (vanished files / length mismatch) or it
+      // observes the new population. "Same count as before the rewrite"
+      // is only acceptable when old and new populations coincide — they
+      // don't here (200 vs 97 source rows).
+      val staleOutcome =
+        try Right(Tables.t(spark, dir, "lineitem").count())
+        catch { case e: Exception => Left(e.getClass.getSimpleName) }
+      staleOutcome match {
+        case Right(n) => assert(n != rowsBefore,
+          "stale catalog handle silently served the pre-rewrite row count")
+        case Left(_) => () // loud failure is the acceptable alternative
+      }
+
+      // 4: the documented contract — invalidate, then every reader
+      // resolves the new schema and every consumer runs green.
+      Tables.invalidate(dir)
+      assert(Tables.documents(spark, dir).columns.contains("__drift"),
+        "post-invalidate documents read must resolve the regenerated schema")
+      Tables.names.foreach { t =>
+        val df = if (t == "events") Tables.events(spark, dir) else Tables.t(spark, dir, t)
+        assert(df.schema.nonEmpty, s"$t failed to re-resolve after invalidate")
+      }
+      val after: Map[String, Long] =
+        ConsumerQueries.map(q => q -> SparkEntry.queries(q)(spark, dir).count()).toMap
+      // the subset ran green end-to-end; and at least one consumer must
+      // observe the population change (all-equal would mean the rewrite
+      // was invisible to every single consumer — not credible at 200→97)
+      assert(ConsumerQueries.exists(q => before(q) != after(q)),
+        s"no consumer observed the regeneration: before=$before after=$after")
     }
-
-    // 4: the documented contract — invalidate, then every reader
-    // resolves the new schema and every consumer runs green.
-    Tables.invalidate(dir)
-    assert(Tables.documents(spark, dir).columns.contains("__drift"),
-      "post-invalidate documents read must resolve the regenerated schema")
-    Tables.names.foreach { t =>
-      val df = if (t == "events") Tables.events(spark, dir) else Tables.t(spark, dir, t)
-      assert(df.schema.nonEmpty, s"$t failed to re-resolve after invalidate")
-    }
-    val after: Map[String, Long] =
-      ConsumerQueries.map(q => q -> SparkEntry.queries(q)(spark, dir).count()).toMap
-    // the subset ran green end-to-end; and at least one consumer must
-    // observe the population change (all-equal would mean the rewrite
-    // was invisible to every single consumer — not credible at 200→97)
-    assert(ConsumerQueries.exists(q => before(q) != after(q)),
-      s"no consumer observed the regeneration: before=$before after=$after")
   }
 }

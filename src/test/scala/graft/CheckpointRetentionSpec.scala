@@ -200,10 +200,6 @@ class CheckpointRetentionSpec extends AnyFunSuite {
           bench, "doc_id", "text", k = 3)),
       ("jsDivergence (joined vocabulary)", 1,
         () => graft.text.TextOps.jsDivergence(sparseDocs, denseDocs, "text")),
-      ("dsirWeight (two LMs + shared tokens)", 3,
-        () => graft.text.TextOps.dsirWeight(denseDocs, sparseDocs, "doc_id", "text")),
-      ("bigramNll self-scoring (tokens + counts)", 2,
-        () => graft.text.TextOps.bigramNll(denseDocs, "doc_id", "text")),
       ("weightedMedian (ranged copy)", 1,
         () => graft.ops.Aggs.weightedMedian(
           denseDocs.select(col("doc_id") % 4, col("doc_id").cast("double"), lit(1.0))

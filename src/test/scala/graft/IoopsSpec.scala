@@ -99,26 +99,6 @@ class IoopsSpec extends AnyFunSuite {
     } finally java.util.Locale.setDefault(old)
   }
 
-  test("sorted-parquet sink: per-file key ranges are disjoint (skippable)") {
-    val dir = tmpDir("sorted") + "/orders"
-    val df = (1 to 10000).map(i => ((i * 7919) % 10000L, s"row$i")).toDF("k", "v")
-    Ioops.writeSorted(df, dir, Seq("k"), numFiles = Some(8))
-    // every output file must cover a key range that overlaps no other
-    // file's — that disjointness is what lets parquet min/max stats
-    // skip files on a key-range filter
-    val ranges = spark.read.parquet(dir)
-      .groupBy(input_file_name().as("f"))
-      .agg(min("k").as("lo"), max("k").as("hi"))
-      .collect().map(r => (r.getLong(1), r.getLong(2))).sortBy(_._1)
-    assert(ranges.length > 1, "need multiple files to prove disjointness")
-    ranges.sliding(2).foreach {
-      case Array((_, hi1), (lo2, _)) => assert(hi1 <= lo2, s"overlap: $hi1 > $lo2")
-      case _ =>
-    }
-    // and the rows all survive the roundtrip
-    assert(spark.read.parquet(dir).count() == 10000)
-  }
-
   test("metrics JSON sink writes sorted plain JSON") {
     val p = tmpDir("metrics") + "/run/metrics.json"
     Ioops.writeMetricsJson(p, Map("logloss" -> 0.581, "auc" -> 0.671))
@@ -141,45 +121,6 @@ class IoopsSpec extends AnyFunSuite {
     // session conf restored (unset by default → static semantics back)
     assert(spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
       .forall(_.equalsIgnoreCase("static")))
-  }
-
-  test("compact repacks a many-small-files table without losing rows") {
-    import spark.implicits._
-    val dir = tmpDir("compact") + "/t"
-    // 64 tiny files, as incremental ingest would leave behind
-    (0L until 20000L).map(i => (i, s"payload_$i")).toDF("k", "v")
-      .repartition(64).write.mode("overwrite").parquet(dir)
-    val before = new java.io.File(dir).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(before == 64)
-    val nOut = Ioops.compact(spark, dir, targetFileBytes = 512L * 1024)
-    val after = new java.io.File(dir).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(after == nOut && after < before, s"before=$before after=$after")
-    val back = spark.read.parquet(dir)
-    assert(back.count() == 20000)
-    assert(back.agg(org.apache.spark.sql.functions.sum("k")).head().getLong(0)
-      == (0L until 20000L).sum)
-    // no leftover swap directories
-    assert(!new java.io.File(dir + ".compact-tmp").exists)
-    assert(!new java.io.File(dir + ".compact-old").exists)
-  }
-
-  test("compact refuses a hive-partitioned table instead of flattening it") {
-    import spark.implicits._
-    val dir = tmpDir("compact_part") + "/t"
-    (0L until 100L).map(i => (i, (i % 4).toString)).toDF("k", "p")
-      .write.mode("overwrite").partitionBy("p").parquet(dir)
-    // top-level listing sees only p=* subdirs -> the old sizing computed
-    // bytes=0 and rewrote the WHOLE table through coalesce(1), also
-    // destroying the partition layout; now it fails fast
-    val boom = intercept[IllegalArgumentException] {
-      Ioops.compact(spark, dir)
-    }
-    assert(boom.getMessage.contains("hive-partitioned"), boom.getMessage)
-    // table untouched, partition layout intact
-    assert(spark.read.parquet(dir).count() == 100)
-    assert(new java.io.File(dir).listFiles().exists(_.getName.startsWith("p=")))
   }
 
   test("commitDirAtomic: publish is atomic, losers adopt the winner, broken dests are replaced") {

@@ -37,17 +37,18 @@ class LakeCopySpec extends AnyFunSuite {
 
   for ((q, t, countCol, want) <- Cases)
     test(s"$q: an in-place regeneration serves the new rows, not the stale copy") {
-      val dir = java.nio.file.Files.createTempDirectory("graft_lakecopy").toString
-      def counted(): Long = SparkEntry.queries(q)(spark, dir).collect()
-        .map(_.getAs[Long](countCol)).sum
-      writeTable(dir, t, 50)
-      val before = counted()
-      assert(before == want(dir))
-      Thread.sleep(5) // ensure mtime can move even on coarse-granularity FS
-      writeTable(dir, t, 100)
-      Tables.invalidate(dir)
-      val after = counted()
-      assert(after == want(dir) && after != before,
-        s"$q served $after rows after the regeneration (before: $before, want: ${want(dir)})")
+      TempDirs.withTempDir("graft_lakecopy") { dir =>
+        def counted(): Long = SparkEntry.queries(q)(spark, dir).collect()
+          .map(_.getAs[Long](countCol)).sum
+        writeTable(dir, t, 50)
+        val before = counted()
+        assert(before == want(dir))
+        Thread.sleep(5) // ensure mtime can move even on coarse-granularity FS
+        writeTable(dir, t, 100)
+        Tables.invalidate(dir)
+        val after = counted()
+        assert(after == want(dir) && after != before,
+          s"$q served $after rows after the regeneration (before: $before, want: ${want(dir)})")
+      }
     }
 }

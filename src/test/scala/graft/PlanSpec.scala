@@ -121,7 +121,7 @@ class PlanSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, sf)
     val bloom = graft.text.CorpusSketches.fingerprintBloom(
       docs.filter(org.apache.spark.sql.functions.col("doc_id") < 100), "text", expected = 1000)
-    val filtered = graft.text.CorpusSketches.filterUnseen(docs, "text", bloom)
+    val filtered = docs.filter(!graft.text.CorpusSketches.seenProbe("text", bloom))
     filtered.collect()
     val p = filtered.queryExecution.executedPlan.toString
     val line = p.linesIterator.find(_.contains("might_contain")).getOrElse("")

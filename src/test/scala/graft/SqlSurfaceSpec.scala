@@ -2,17 +2,24 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The pure-SQL face of the engine: after Tables.registerAll, a SQL-only
-  * user can run relational queries, the LLM-pipeline text ops, and the
-  * injected native kernels — including a full query that mirrors a
-  * DataFrame-API result exactly. */
+/** The pure-SQL face of the engine: with every catalog table
+  * registered as a temp view (events through its nanos-safe reader), a
+  * SQL-only user can run relational queries and the injected native
+  * kernels — including a full query that mirrors a DataFrame-API result
+  * exactly. */
 class SqlSurfaceSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
+
+  private def registerAll(dir: String): Unit =
+    Tables.names.foreach {
+      case "events" => Tables.events(spark, dir).createOrReplaceTempView("events")
+      case n        => Tables.t(spark, dir, n).createOrReplaceTempView(n)
+    }
 
   private val sf = "/root/testdata/sf0.001"
 
   test("registerAll exposes every table, events with a usable timestamp") {
-    Tables.registerAll(spark, sf)
+    registerAll(sf)
     Tables.names.foreach { n =>
       assert(spark.sql(s"SELECT * FROM $n LIMIT 1").count() == 1, n)
     }
@@ -22,7 +29,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
   }
 
   test("a SQL-only top-k query matches the DataFrame-API query result") {
-    Tables.registerAll(spark, sf)
+    registerAll(sf)
     val sql = spark.sql(
       """SELECT c_custkey, c_name, c_acctbal FROM customer
         |ORDER BY c_acctbal DESC, c_custkey ASC LIMIT 10""".stripMargin)
@@ -33,7 +40,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
   }
 
   test("native kernels compose inside plain SQL over registered tables") {
-    Tables.registerAll(spark, sf)
+    registerAll(sf)
     val r = spark.sql(
       """SELECT vec_id,
         |  vec_dot(embedding, embedding) AS sq_norm,

@@ -2,6 +2,7 @@ package graft.domain
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 import graft.kernels.Pelt
@@ -12,9 +13,13 @@ import graft.ops.{Exec, Exprs}
   * play (dropped), a far-ball-landing play (dropped), a left-direction
   * play (flipped), a missing-QB play (dropped by the role-count filter),
   * and a filtered route (dropped in plays cleaning). */
-class DomainSpec extends AnyFunSuite {
+class DomainSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
+
+  // the fixture's players dim and plays are materialized layers
+  override def afterAll(): Unit =
+    try Seq(players, cleanedPlays).foreach(Exec.release) finally super.afterAll()
 
   // ----- fixture ------------------------------------------------------
   // before-throw rows: (game, play, nfl, frame, dir, side, role, x, y, s, a, dirAngle, o,
@@ -163,7 +168,7 @@ class DomainSpec extends AnyFunSuite {
           g.values.sum
         }
       (sizes(0), sizes(1))
-    } finally Exec.release(gotB)
+    } finally Seq(gotB, players, plays).foreach(Exec.release)
   }
 
   test("DAG clean equals the tree-shaped reference on the hand fixture, both materialize modes") {
@@ -278,7 +283,7 @@ class DomainSpec extends AnyFunSuite {
       .map(r => r.getLong(1) -> r).toMap
     val s1 = scores(1L)
     assert(s1.getAs[Long]("defender_id") == 30L)
-    assert(math.abs(s1.getAs[Double]("deception_score") - Pelt.deceptionScore(probs1)) < 1e-12)
+    assert(math.abs(s1.getAs[Double]("deception_score") - Pelt.changePointAndScore(probs1)._2) < 1e-12)
     assert(math.abs(s1.getAs[Double]("deception_score") - 0.6) < 1e-12)
     // play1 C → recovery = -p_last = -0.8
     assert(math.abs(s1.getAs[Double]("recovery_score") - (-0.8)) < 1e-12)
@@ -309,7 +314,7 @@ class DomainSpec extends AnyFunSuite {
       val r = scores(playId)
       val n = ps.length
       assert(r.getAs[Long]("game_id") == 7L)
-      assert(r.getAs[Double]("deception_score") == Pelt.deceptionScore(ps), s"play $playId")
+      assert(r.getAs[Double]("deception_score") == Pelt.changePointAndScore(ps)._2, s"play $playId")
       // ids and the recovery score come from the last frame (frame n)
       assert(r.getAs[Long]("receiver_id") == 100L + n - 1, s"play $playId")
       assert(r.getAs[Long]("defender_id") == 200L + n - 1, s"play $playId")

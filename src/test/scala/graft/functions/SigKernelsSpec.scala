@@ -16,6 +16,20 @@ class SigKernelsSpec extends AnyFunSuite {
 
   // repartition(5): partial-aggregation order in the grouped forms must
   // not matter, and the kernels must behave identically per partition
+  /** The higher-order-function formulation the native `shingle_hashes`
+    * kernel replaced — the executable spec (interpreted lambdas). */
+  private def shingleHashArrayLambda(df: org.apache.spark.sql.DataFrame, idCol: String,
+                                     textCol: String, n: Int, distinct: Boolean) = {
+    val withToks = df.select(col(idCol), graft.text.TextOps.tokens(col(textCol)).as("__toks"))
+    val toks = col("__toks")
+    val arr = when(size(toks) >= n,
+      transform(
+        sequence(lit(0), size(toks) - n),
+        i => xxhash64((0 until n).map(o => element_at(toks, i + o + 1)): _*)))
+      .otherwise(array().cast("array<bigint>"))
+    withToks.select(col(idCol), (if (distinct) array_distinct(arr) else arr).as("__sh"))
+  }
+
   private lazy val docs = (
     (0 until 60).map(i => (i.toLong, s"alpha beta gamma doc $i token${i % 7} tail")) ++
       Seq((100L, "one two"),       // 2 tokens: no 3-gram shingles
@@ -55,13 +69,13 @@ class SigKernelsSpec extends AnyFunSuite {
   test("shingle_hashes kernel == HOF transform form (set per doc; order under distinct=false)") {
     val native = Dedup.shingleHashArray(docs, "doc_id", "text", 3, distinct = true)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
-    val lambda = Dedup.shingleHashArrayLambda(docs, "doc_id", "text", 3, distinct = true)
+    val lambda = shingleHashArrayLambda(docs, "doc_id", "text", 3, distinct = true)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
     assert(native == lambda)
     // distinct=false preserves gram order exactly — element-for-element
     val nativeSeq = Dedup.shingleHashArray(docs, "doc_id", "text", 3, distinct = false)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val lambdaSeq = Dedup.shingleHashArrayLambda(docs, "doc_id", "text", 3, distinct = false)
+    val lambdaSeq = shingleHashArrayLambda(docs, "doc_id", "text", 3, distinct = false)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(nativeSeq == lambdaSeq)
     // short docs: empty fingerprint array in both forms

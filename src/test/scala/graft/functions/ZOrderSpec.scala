@@ -5,8 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 
 /** Z-order kernel: bit-level parity with a naive reference interleave,
-  * curve locality, and the actual layout win — a 2-D box predicate
-  * touches fewer files under writeZOrdered than under a linear sort. */
+  * codegen parity, and curve locality. */
 class ZOrderSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -52,35 +51,5 @@ class ZOrderSpec extends AnyFunSuite {
     val inQ11 = ZOrderKey.interleave(0x8000L + 5, 0x8000L + 9)
     val inQ00 = ZOrderKey.interleave(5L, 9L)
     assert((inQ11 >> 30) == 3L && (inQ00 >> 30) == 0L)
-  }
-
-  test("2-D box predicate touches fewer files z-ordered than linear-sorted") {
-    val rnd = new scala.util.Random(17)
-    val pts = Seq.fill(20000)((rnd.nextInt(1024).toLong, rnd.nextInt(1024).toLong))
-      .toDF("x", "y")
-    val dir = java.nio.file.Files.createTempDirectory("graft_zorder").toString
-    graft.Ioops.writeZOrdered(pts, s"$dir/z", col("x"), col("y"), Some(16))
-    graft.Ioops.writeSorted(pts, s"$dir/linear", Seq("x"), Some(16))
-
-    // per-FILE y bounding ranges — the stats a min/max-pruning scan
-    // sees. The decisive case for z-order is a predicate on the
-    // dimension the linear sort does NOT order by: every linear file
-    // spans all of y (touches 16/16), while the z-layout bounds y per
-    // file.
-    def touchedByY(path: String): (Int, Int) = {
-      val files = new java.io.File(path).listFiles()
-        .filter(_.getName.endsWith(".parquet")).map(_.toString)
-      val hit = files.count { f =>
-        val r = spark.read.parquet(f).agg(min(col("y")), max(col("y"))).head()
-        r.getLong(0) <= 160 && r.getLong(1) >= 100 // y in [100, 160]
-      }
-      (hit, files.length)
-    }
-    val (zHit, zAll) = touchedByY(s"$dir/z")
-    val (linHit, linAll) = touchedByY(s"$dir/linear")
-    assert(linHit == linAll, s"linear layout should span y in every file: $linHit/$linAll")
-    assert(zHit * 2 <= zAll, s"z-order should bound y: touched $zHit of $zAll files")
-    // and the layouts hold the same rows
-    assert(spark.read.parquet(s"$dir/z").count() == 20000)
   }
 }

@@ -29,7 +29,7 @@ class KernelAggSpec extends AnyFunSuite {
 
     val want = rows.groupBy(_._1).map { case (uid, rs) =>
       val signal = rs.sortBy(r => (r._2, r._3)).map(_._4).toArray
-      uid -> ((signal.length, Pelt.changePoint(signal), Pelt.deceptionScore(signal)))
+      uid -> ((signal.length, Pelt.changePoint(signal), Pelt.changePointAndScore(signal)._2))
     }
     assert(got == want)
   }

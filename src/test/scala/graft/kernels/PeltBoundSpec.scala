@@ -43,7 +43,7 @@ class PeltBoundSpec extends AnyFunSuite {
     val first = (0 until cap).map(i => (i % 97).toDouble).toArray
     assert(row.getInt(0) == cap, s"n_points ${row.getInt(0)} != cap $cap")
     assert(row.getInt(1) == Pelt.changePoint(first))
-    assert(math.abs(row.getDouble(2) - Pelt.deceptionScore(first)) < 1e-12)
+    assert(math.abs(row.getDouble(2) - Pelt.changePointAndScore(first)._2) < 1e-12)
   }
 
   test("mapGroups form stays identical to the uncapped result for in-domain series") {

@@ -37,14 +37,14 @@ class PeltSpec extends AnyFunSuite {
     val s = Array.fill(20)(3.0)
     assert(Pelt.segment(s) == Seq(20))
     assert(Pelt.changePoint(s) == 20)
-    assert(Pelt.deceptionScore(s) == 0.0) // last - first
+    assert(Pelt.changePointAndScore(s)._2 == 0.0) // last - first
   }
 
   test("clean step on the jump grid is found") {
     val s = Array.fill(5)(0.0) ++ Array.fill(5)(5.0)
     assert(Pelt.segment(s) == Seq(5, 10))
     assert(Pelt.changePoint(s) == 5)
-    assert(math.abs(Pelt.deceptionScore(s) - 5.0) < 1e-12)
+    assert(math.abs(Pelt.changePointAndScore(s)._2 - 5.0) < 1e-12)
   }
 
   test("off-grid step snaps to nearest grid break") {
@@ -52,13 +52,13 @@ class PeltSpec extends AnyFunSuite {
     val s = Array(0.0, 0.0, 0.0, 5.0, 5.0, 5.0, 5.0, 5.0, 5.0, 5.0)
     assert(Pelt.changePoint(s) == 5)
     // deception = mean(s[5:]) - mean(s[:5]) = 5 - 2 = 3
-    assert(math.abs(Pelt.deceptionScore(s) - 3.0) < 1e-12)
+    assert(math.abs(Pelt.changePointAndScore(s)._2 - 3.0) < 1e-12)
   }
 
   test("short series (< 2*min_size) falls back to last-first") {
     val s = Array(0.1, 0.9, 0.4)
     assert(Pelt.segment(s) == Seq(3))
-    assert(math.abs(Pelt.deceptionScore(s) - 0.3) < 1e-12)
+    assert(math.abs(Pelt.changePointAndScore(s)._2 - 0.3) < 1e-12)
   }
 
   test("two steps: max-magnitude selection picks the larger jump") {
@@ -70,8 +70,8 @@ class PeltSpec extends AnyFunSuite {
   }
 
   test("empty and singleton series are safe") {
-    assert(Pelt.deceptionScore(Array.empty[Double]) == 0.0)
-    assert(Pelt.deceptionScore(Array(0.7)) == 0.0)
+    assert(Pelt.changePointAndScore(Array.empty[Double])._2 == 0.0)
+    assert(Pelt.changePointAndScore(Array(0.7))._2 == 0.0)
   }
 
   test("property: PELT output is legal and near the brute-force optimum (200 seeded cases)") {

@@ -81,16 +81,4 @@ class NonCompletionModelSpec extends AnyFunSuite {
     assert(imp("separation") > 0.1, s"separation delta=${imp("separation")}")
     assert(imp("separation") > imp("qb_speed"))
   }
-
-  test("calibration curve has at most 10 populated bins covering all rows") {
-    val (model, _, _) = fitted
-    val cal = NonCompletionModel.calibration(NonCompletionModel.score(model, testDf))
-    val rows = cal.collect()
-    assert(rows.length <= 10)
-    assert(rows.map(_.getAs[Long]("n")).sum == 100)
-    rows.foreach { r =>
-      assert(r.getAs[Double]("avg_predicted") >= 0.0 &&
-        r.getAs[Double]("avg_predicted") <= 1.0)
-    }
-  }
 }

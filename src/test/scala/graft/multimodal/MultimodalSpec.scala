@@ -59,26 +59,6 @@ class MultimodalSpec extends AnyFunSuite {
     assert((f.getDouble(4), f.getDouble(5), f.getDouble(6)) == ((3.0, 18.0, 21.0)))
   }
 
-  test("resize maps any payload to exactly w*h bytes, deterministically") {
-    val df = Seq(
-      (1L, "abcdefghij", "img", "s1"),   // downsample 10 → 6
-      (2L, "xy", "img", "s1"),           // upsample 2 → 6
-      (3L, "", "img", "s1")              // empty payload → zero bytes
-    ).toDF("id", "text", "kind", "src")
-    val media = Multimodal.withPayload(df, "id", "text", "kind", "src")
-    val out = Multimodal.resizeStub(spark, media, 3, 2)
-      .collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]](1)).toMap
-    assert(out.values.forall(_.length == 6))
-    // nearest-neighbor over "abcdefghij": floor(i*10/6) = 0,1,3,5,6,8 → a,b,d,f,g,i
-    assert(new String(out(1L)) == "abdfgi")
-    assert(new String(out(2L)) == "xxxyyy")
-    assert(out(3L).forall(_ == 0))
-    // deterministic across runs
-    val again = Multimodal.resizeStub(spark, media, 3, 2)
-      .collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]](1)).toMap
-    assert(out.keySet.forall(k => java.util.Arrays.equals(out(k), again(k))))
-  }
-
   test("frame sampling explodes every stride-th 64-byte window per blob") {
     // 130 ASCII bytes → frames 0,1,2; stride 2 keeps 0 and 2
     val text = "x" * 130

@@ -66,11 +66,14 @@ class EmptyInputSpec extends AnyFunSuite {
     assert(graft.text.TextOps.bm25TopDocs(someDocs, "doc_id", "text",
       noQs, "query_id", "query_text").count() == 0)
 
-    val bg = graft.text.TextOps.bigramNll(noDocs, "doc_id", "text")
+    val bg = graft.text.TextOps.bigramNllWithModel(noDocs,
+      graft.text.TextOps.bigramCounts(noDocs, "text"), "doc_id", "text")
     assert(bg.count() == 0 &&
       bg.columns.toSeq == Seq("doc_id", "n_bigrams", "avg_nll"))
 
-    val cs = graft.text.Dedup.contaminationScore(noDocs, someDocs, "doc_id", "text")
+    val cs = graft.text.Dedup.contaminationScoreAgainst(noDocs,
+      graft.text.Dedup.shingleHashes(someDocs, "doc_id", "text").select("shingle_h").distinct(),
+      "doc_id", "text", 3)
     assert(cs.count() == 0 &&
       cs.columns.toSeq == Seq("doc_id", "n_shingles", "n_common", "contamination"))
 

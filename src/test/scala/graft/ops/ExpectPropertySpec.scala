@@ -65,11 +65,13 @@ class ExpectPropertySpec extends AnyFunSuite {
         else assert(qRows.get(r._1).contains(failing),
           s"row $r must quarantine with $failing, got ${qRows.get(r._1)}")
       }
-      // audit covers quiet rules with n = 0
-      val audit = Expect.audit(quarantined, ruleSet.map(_._1))
+      // the one-scan audit covers quiet rules with n = 0
+      val audit = Expect.checkAudit(df, ruleSet.map(r => (r._1, r._2)))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       val wantCounts = ruleSet.map { case (n, _, p) =>
-        n -> rows.count(r => !p(r)).toLong }.toMap
+        n -> rows.count(r => !p(r)).toLong }.toMap ++ Map(
+        "rows_passed" -> cleanIds.size.toLong,
+        "rows_quarantined" -> qRows.size.toLong)
       assert(audit == wantCounts, s"rows=$rows:\n$audit\nvs $wantCounts")
     }
   }

@@ -42,20 +42,6 @@ class ExpectSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] { Expect.check(df, Seq.empty) }
   }
 
-  test("audit reports every configured rule — quiet rules at n=0") {
-    val (_, bad) = Expect.check(df, rules)
-    val counts = Expect.audit(bad, rules.map(_._1))
-      .as[(String, Long)].collect().toMap
-    assert(counts == Map("positive" -> 2L, "bounded" -> 1L, "nonempty" -> 1L))
-    // violation-free corpus: the audit must still name every rule
-    // (an empty audit is indistinguishable from rules never evaluated)
-    val (_, none) = Expect.check(df, Seq("tautology" -> lit(true)))
-    val quiet = Expect.audit(none, Seq("tautology"))
-      .as[(String, Long)].collect().toMap
-    assert(quiet == Map("tautology" -> 0L))
-    intercept[IllegalArgumentException] { Expect.audit(bad, Seq.empty) }
-  }
-
   test("checkAudit equals the composed check+audit+counts form (one scan, r19)") {
     // the one-scan audit must report EXACTLY the rows the three-scan
     // composition reported: per-rule counts (quiet rules at 0) plus the
@@ -64,7 +50,7 @@ class ExpectSpec extends AnyFunSuite {
     def composed(in: org.apache.spark.sql.DataFrame,
                  rs: Seq[(String, org.apache.spark.sql.Column)]): Map[String, Long] = {
       val (good, bad) = Expect.check(in, rs)
-      (Expect.audit(bad, rs.map(_._1))
+      (ExpectReference.audit(bad, rs.map(_._1))
         .unionByName(good.agg(count(lit(1)).as("n"))
           .select(lit("rows_passed").as("rule"), col("n")))
         .unionByName(bad.agg(count(lit(1)).as("n"))

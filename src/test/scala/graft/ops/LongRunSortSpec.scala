@@ -8,6 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * machinery is exercised deterministically at chunk sizes the scale
   * points never force. */
 class LongRunSortSpec extends AnyFunSuite {
+  import LongRunSortSpec.sortedRuns
 
   private def reference(xs: Seq[Long]): Seq[(Long, Long)] =
     xs.groupBy(identity).view.mapValues(_.size.toLong).toSeq.sortBy(_._1)
@@ -28,7 +29,7 @@ class LongRunSortSpec extends AnyFunSuite {
       // chunk 2 = maximal spill-file count; 64 = a few files; 1<<20 =
       // the zero-file in-memory fast path
       for (chunk <- Seq(2, 64, 1 << 20)) {
-        val got = LongRunSort.sortedRuns(xs.iterator, chunk).toSeq
+        val got = sortedRuns(xs.iterator, chunk).toSeq
         assert(got == want, s"chunk=$chunk n=${xs.size}")
         // run-lengths must re-sum to the input size (no element lost
         // at a chunk boundary)
@@ -41,20 +42,20 @@ class LongRunSortSpec extends AnyFunSuite {
     // 10 copies of the same value through chunk=3: the run crosses
     // three spill files and the final buffer — the merge must emit a
     // single (v, 10) run, not per-cursor fragments
-    val got = LongRunSort.sortedRuns(Iterator.fill(10)(42L), 3).toSeq
+    val got = sortedRuns(Iterator.fill(10)(42L), 3).toSeq
     assert(got == Seq((42L, 10L)))
     // and interleaved with neighbors that also span boundaries
     val xs = Seq(5L, 42L, 5L, 42L, 5L, 42L, 5L, 42L, 5L, 42L, 7L)
-    val got2 = LongRunSort.sortedRuns(xs.iterator, 2).toSeq
+    val got2 = sortedRuns(xs.iterator, 2).toSeq
     assert(got2 == Seq((5L, 5L), (7L, 1L), (42L, 5L)))
   }
 
   test("empty input, single element, extreme values") {
-    assert(LongRunSort.sortedRuns(Iterator.empty, 8).isEmpty)
-    assert(LongRunSort.sortedRuns(Iterator.single(Long.MinValue), 8).toSeq ==
+    assert(sortedRuns(Iterator.empty, 8).isEmpty)
+    assert(sortedRuns(Iterator.single(Long.MinValue), 8).toSeq ==
       Seq((Long.MinValue, 1L)))
     val xs = Seq(Long.MaxValue, Long.MinValue, 0L, Long.MaxValue, Long.MinValue)
-    assert(LongRunSort.sortedRuns(xs.iterator, 2).toSeq ==
+    assert(sortedRuns(xs.iterator, 2).toSeq ==
       Seq((Long.MinValue, 2L), (0L, 1L), (Long.MaxValue, 2L)))
   }
 
@@ -64,7 +65,7 @@ class LongRunSortSpec extends AnyFunSuite {
     // suites creating/deleting their own spills (review r15)
     val dir = java.nio.file.Files.createTempDirectory("lruns_del").toFile
     def spillCount = dir.listFiles((_, n) => n.startsWith("graft-lruns")).length
-    val runs = LongRunSort.sortedRuns((1 to 1000).map(_.toLong % 50).iterator, 16, dir)
+    val runs = sortedRuns((1 to 1000).map(_.toLong % 50).iterator, 16, dir)
     assert(spillCount > 0, "expected spill files at chunk=16 over 1000 elems")
     runs.foreach(_ => ()) // drain
     assert(spillCount == 0, "drained merge must delete its spill files")
@@ -103,7 +104,7 @@ class LongRunSortSpec extends AnyFunSuite {
           (n - i).toLong % 997
         }
       }
-      val runs = LongRunSort.sortedRuns(src, 1 << 26, dir)
+      val runs = sortedRuns(src, 1 << 26, dir)
       val filesAfterBuild = dir.listFiles((_, f) => f.startsWith("graft-lruns")).length
       var total = 0L; var distinct = 0L; var prev = Long.MinValue; var sorted = true
       runs.foreach { case (v, c) =>
@@ -116,8 +117,8 @@ class LongRunSortSpec extends AnyFunSuite {
       // r16: the spill must be CREDITED to the task's spill metrics
       // (kernel spills were invisible to Spark before — the r15
       // observability caveat)
-      val (spillMem, spillDisk) = org.apache.spark.graftbridge.MemoryBridge
-        .spilledBytes(org.apache.spark.TaskContext.get())
+      val metrics = org.apache.spark.TaskContext.get().taskMetrics()
+      val (spillMem, spillDisk) = (metrics.memoryBytesSpilled, metrics.diskBytesSpilled)
       Iterator((grabbed, filesAfterBuild, total, distinct, sorted, filesAfterDrain,
         residual, spillMem, spillDisk))
     }.collect()
@@ -182,7 +183,7 @@ class LongRunSortSpec extends AnyFunSuite {
           (n - i).toLong % 997
         }
       }
-      val runs = LongRunSort.sortedRuns(src, 1 << 26, dir)
+      val runs = sortedRuns(src, 1 << 26, dir)
       val filesAfterBuild = dir.listFiles((_, f) => f.startsWith("graft-lruns")).length
       var total = 0L; var distinct = 0L; var prev = Long.MinValue; var sorted = true
       runs.foreach { case (v, c) =>
@@ -190,8 +191,8 @@ class LongRunSortSpec extends AnyFunSuite {
         prev = v; total += c; distinct += 1
       }
       val residual = tmm.getMemoryConsumptionForThisTask
-      val (spillMem, spillDisk) = org.apache.spark.graftbridge.MemoryBridge
-        .spilledBytes(org.apache.spark.TaskContext.get())
+      val metrics = org.apache.spark.TaskContext.get().taskMetrics()
+      val (spillMem, spillDisk) = (metrics.memoryBytesSpilled, metrics.diskBytesSpilled)
       Iterator((grabbed, asked, filesAfterBuild, total, distinct, sorted,
         residual, spillMem, spillDisk))
     }.collect()
@@ -361,7 +362,7 @@ class LongRunSortSpec extends AnyFunSuite {
 
   test("rejects a degenerate chunk budget") {
     intercept[IllegalArgumentException] {
-      LongRunSort.sortedRuns(Iterator.single(1L), 1)
+      sortedRuns(Iterator.single(1L), 1)
     }
   }
 
@@ -377,7 +378,17 @@ class LongRunSortSpec extends AnyFunSuite {
     assert(d.toLong * 8 * cores * 4 <= Runtime.getRuntime.maxMemory ||
       d == (1 << 20), s"derived $d longs x $cores cores exceeds a quarter of heap")
     // and the zero sentinel routes through the derivation
-    assert(LongRunSort.sortedRuns(Seq(3L, 1L, 3L).iterator, 0).toSeq ==
+    assert(sortedRuns(Seq(3L, 1L, 3L).iterator, 0).toSeq ==
       Seq((1L, 1L), (3L, 2L)))
+  }
+}
+
+object LongRunSortSpec {
+  /** The runs of [[LongRunSort.runCursor]] as a boxed iterator (in a
+    * companion, so task closures calling it capture no spec instance). */
+  def sortedRuns(it: Iterator[Long], chunkLongs: Int = 0,
+      spillTo: java.io.File = null): Iterator[(Long, Long)] = {
+    val c = LongRunSort.runCursor(it, chunkLongs, spillTo)
+    Iterator.continually(c.nextRun()).takeWhile(identity).map(_ => (c.runValue, c.runCount))
   }
 }

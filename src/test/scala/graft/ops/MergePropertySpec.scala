@@ -9,8 +9,8 @@ import graft.SparkTestSession
   * change streams (random keys, versions, deletes — including version
   * collisions resolved by the tie column), `Merge.applyChanges` must
   * equal a reference in-memory fold, and applying an already-applied
-  * batch to the resulting snapshot must be a no-op (the crash-replay
-  * idempotence `Streaming.mergeStream` relies on). */
+  * batch to the resulting snapshot must be a no-op (crash-replay
+  * idempotence for an incremental merge). */
 class MergePropertySpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -151,7 +151,7 @@ class MergePropertySpec extends AnyFunSuite {
     val snap2 = Merge.applyChanges(snap1, chDf, Seq("k"), Seq("__v", "__tie"),
       "__del", asSnapshot = true)
     def served(df: org.apache.spark.sql.DataFrame) =
-      Merge.served(df, Seq("__v", "__tie"), "__del")
+      df.filter(!col("__del")).drop("__v", "__tie", "__del")
         .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getDouble(2)))).toSet
     assert(served(snap1) == served(snap2))
     assert(served(snap1) == Set(1L -> ("a2", 1.1), 3L -> ("c", 3.0)))

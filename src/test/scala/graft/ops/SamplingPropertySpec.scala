@@ -8,12 +8,17 @@ import graft.SparkTestSession
   * frames must keep EXACTLY the n smallest (md5-draw, key) rows per
   * group — reproduced by a driver reference spelling the same draw —
   * independent of partitioning, and the kept sets must NEST
-  * (cap m ⊆ cap n for m ≤ n, the auditability contract). `hashSample`
-  * must select exactly the reference's draw-threshold rows. */
+  * (cap m ⊆ cap n for m ≤ n, the auditability contract). A one-stratum
+  * `stratifiedSample` must select exactly the reference's draw-threshold rows. */
 class SamplingPropertySpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
   import org.apache.spark.sql.functions.col
+
+  /** A one-stratum [[Sampling.stratifiedSample]]: every row at `rate`. */
+  private def hashSample(df: org.apache.spark.sql.DataFrame,
+                         key: org.apache.spark.sql.Column, rate: Double) =
+    Sampling.stratifiedSample(df, key, org.apache.spark.sql.functions.lit(""), Map.empty, rate)
 
   // (group, key) with keys globally unique — the documented tie-break
   // contract (duplicate keys within a group have no defined order)
@@ -54,7 +59,7 @@ class SamplingPropertySpec extends AnyFunSuite {
     cases.foreach { rows =>
       val df = rows.toDF("g", "k").repartition(3)
       Seq(0.25, 0.5).foreach { rate =>
-        val got = Sampling.hashSample(df, col("k"), rate)
+        val got = hashSample(df, col("k"), rate)
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
         // the operator's threshold: first 4 hex nibbles < rate * 16^4
         val thr = "%04x".format(math.round(rate * 65536).toInt)

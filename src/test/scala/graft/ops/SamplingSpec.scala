@@ -10,6 +10,11 @@ class SamplingSpec extends AnyFunSuite {
 
   private lazy val ids = (0L until 20000L).toDF("id")
 
+  /** A one-stratum [[Sampling.stratifiedSample]]: every row at `rate`. */
+  private def hashSample(df: org.apache.spark.sql.DataFrame,
+                         key: org.apache.spark.sql.Column, rate: Double) =
+    Sampling.stratifiedSample(df, key, org.apache.spark.sql.functions.lit(""), Map.empty, rate)
+
   test("takeUntilBudget: greedy-prefix semantics, oversized heads block, groups independent") {
     // priority = w desc, id asc; group a cumsums 5, 8, 10, 11 → budget 9
     // keeps {5, 3}; the later 1 (which WOULD fit 5+3+1) stays dropped —
@@ -30,7 +35,7 @@ class SamplingSpec extends AnyFunSuite {
 
   test("hashSample hits the rate within sampling error") {
     for (rate <- Seq(0.1, 0.5, 0.9)) {
-      val kept = Sampling.hashSample(ids, col("id"), rate).count()
+      val kept = hashSample(ids, col("id"), rate).count()
       val expect = 20000 * rate
       // md5 prefix is uniform; 4σ binomial tolerance
       val tol = 4 * math.sqrt(20000 * rate * (1 - rate))
@@ -39,17 +44,17 @@ class SamplingSpec extends AnyFunSuite {
   }
 
   test("samples are deterministic and nested across rates") {
-    val k30 = Sampling.hashSample(ids, col("id"), 0.3).collect().map(_.getLong(0)).toSet
-    val k30b = Sampling.hashSample(ids, col("id"), 0.3).collect().map(_.getLong(0)).toSet
-    val k60 = Sampling.hashSample(ids, col("id"), 0.6).collect().map(_.getLong(0)).toSet
+    val k30 = hashSample(ids, col("id"), 0.3).collect().map(_.getLong(0)).toSet
+    val k30b = hashSample(ids, col("id"), 0.3).collect().map(_.getLong(0)).toSet
+    val k60 = hashSample(ids, col("id"), 0.6).collect().map(_.getLong(0)).toSet
     assert(k30 == k30b)            // pure function of the key
     assert(k30.subsetOf(k60))      // raising the rate only adds rows
   }
 
   test("rate 0 keeps nothing; out-of-range rates are rejected") {
-    assert(Sampling.hashSample(ids, col("id"), 0.0).count() == 0)
+    assert(hashSample(ids, col("id"), 0.0).count() == 0)
     intercept[IllegalArgumentException] {
-      Sampling.hashSample(ids, col("id"), 1.5)
+      hashSample(ids, col("id"), 1.5)
     }
   }
 

@@ -9,8 +9,7 @@ import graft.SparkTestSession
   * preservation), exact-duplicate fact rows (the rowSaltCol case),
   * duplicate dim keys (fan-out must be reproduced exactly), one-sided
   * keys — the salted join must be MULTISET-identical to the plain join
-  * for every supported join type and both salt modes, and the salted
-  * two-level aggregate must equal the plain aggregate. Salting is a
+  * for every supported join type and both salt modes. Salting is a
   * placement change; any value divergence is a correctness bug. */
 class SkewPropertySpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -52,24 +51,6 @@ class SkewPropertySpec extends AnyFunSuite {
           assert(salted == plain,
             s"type=$jt spread=$spread fact=$f dim=$d:\n$salted\nvs $plain")
         }
-      }
-    }
-  }
-
-  test("saltedAgg equals the plain aggregate on random frames") {
-    import org.apache.spark.sql.functions._
-    val cases = Gen.listOfN(5, factGen).sample.getOrElse(Nil)
-    assert(cases.nonEmpty)
-    cases.foreach { f =>
-      val df = f.toDF("k", "p")
-      val plain = multiset(df.groupBy(col("k"))
-        .agg(sum(col("p")).as("s"), count(lit(1)).as("n")))
-      Seq(false, true).foreach { spread =>
-        val salted = multiset(Skew.saltedAgg(df, Seq("k"), salt = 3,
-          partial = Seq(sum(col("p")).as("ps"), count(lit(1)).as("pn")),
-          finalAgg = Seq(sum(col("ps")).as("s"), sum(col("pn")).as("n")),
-          spreadDuplicates = spread))
-        assert(salted == plain, s"spread=$spread rows=$f:\n$salted\nvs $plain")
       }
     }
   }

@@ -12,6 +12,17 @@ class IvfPqSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
+  /** IVF-PQ top-k over an index built inline (the board loads a
+    * persisted one). Materialized, as the persisted index is: decode's
+    * lambda references pq_codes, and CollapseProject would otherwise
+    * inline the whole argmin encode into it per subspace reference. */
+  private def topK(corpus: org.apache.spark.sql.DataFrame, idCol: String, vecCol: String,
+                   queries: org.apache.spark.sql.DataFrame, cents: Kmeans.Centroids,
+                   cb: Pq.Codebooks, k: Int, nprobe: Int, shortlist: Int) =
+    IvfPq.topKIndexed(corpus, idCol, vecCol, queries,
+      graft.ops.Exec.materialize(IvfPq.buildIndex(corpus, idCol, vecCol, cents, cb)),
+      cents, cb, k, nprobe, shortlist)
+
   private def unit(v: Array[Double]) = {
     val n = math.sqrt(v.map(x => x * x).sum); v.map(_ / n)
   }
@@ -39,7 +50,7 @@ class IvfPqSpec extends AnyFunSuite {
     val exact = Similarity.bruteForceTopK(df, "vec_id", "embedding", queries, 3)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    val approx = IvfPq.topK(df, "vec_id", "embedding", queries, model, cb,
+    val approx = topK(df, "vec_id", "embedding", queries, model, cb,
         k = 3, nprobe = 2, shortlist = 20)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
@@ -67,7 +78,7 @@ class IvfPqSpec extends AnyFunSuite {
     // nprobe = all cells and shortlist = corpus: only the rerank's exact
     // cosine decides, so the result must EQUAL brute force (same
     // tie-break) — pins the composition's join/window machinery
-    val full = IvfPq.topK(df, "vec_id", "embedding", queries, model, cb,
+    val full = topK(df, "vec_id", "embedding", queries, model, cb,
         k = 3, nprobe = 4, shortlist = 128)
       .select("query_id", "rank", "neighbor_id", "cos_sim")
       .as[(Long, Int, Long, Double)].collect().sortBy(r => (r._1, r._2))
@@ -83,12 +94,12 @@ class IvfPqSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("graft_ivfpq").toString
     val model = Ivf.fitOrLoad(emb, "embedding", 16, tmp + "/quantizer")
     val cb = Pq.fitOrLoad(emb, "embedding", m = 8, k = 32, tmp + "/cb")
-    val out = IvfPq.topK(emb, "vec_id", "embedding",
+    val out = topK(emb, "vec_id", "embedding",
         emb.filter(col("vec_id") < 10), model, cb, k = 3, nprobe = 4, shortlist = 50)
       .collect()
     assert(out.length > 0 && out.length <= 30)
     // deterministic: second run over the SAME loaded artifacts matches
-    val out2 = IvfPq.topK(emb, "vec_id", "embedding",
+    val out2 = topK(emb, "vec_id", "embedding",
         emb.filter(col("vec_id") < 10), model, cb, k = 3, nprobe = 4, shortlist = 50)
       .collect()
     assert(out.map(_.toSeq).toSeq == out2.map(_.toSeq).toSeq)

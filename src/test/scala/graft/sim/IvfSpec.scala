@@ -5,9 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 
 /** IVF specs on planted well-separated clusters: the quantizer puts a
-  * cluster in one cell, near-dup search recovers planted duplicates,
-  * probed top-k matches brute force when the probe covers the true
-  * cluster. */
+  * cluster in one cell, probed top-k matches brute force when the probe
+  * covers the true cluster. */
 class IvfSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -28,6 +27,13 @@ class IvfSpec extends AnyFunSuite {
     }.toDF("vec_id", "embedding")
   }
 
+  /** The cell-assigned corpus side of the probe join, assigned inline
+    * (the board reads it from a persisted index). */
+  private def assigned(corpus: org.apache.spark.sql.DataFrame, cents: Kmeans.Centroids) =
+    Ivf.assignCells(corpus, "embedding", cents)
+      .select(col("cell"), col("vec_id").as("neighbor_id"), col("embedding").as("c_vec"),
+        Similarity.l2Norm(col("embedding")).as("c_norm"))
+
   test("quantizer separates planted clusters into distinct cells") {
     val model = Ivf.fitCentroids(vecs, "embedding", 3, seed = 7L)
     val cells = Ivf.assignCells(vecs, "embedding", model)
@@ -38,16 +44,6 @@ class IvfSpec extends AnyFunSuite {
       assert(cs.size == 1, s"cluster $c split across cells $cs")
     }
     assert(byCluster.values.flatten.toSet.size == 3)
-  }
-
-  test("ivf near-dup recovers within-cluster pairs, none across clusters") {
-    val pairs = Ivf.ivfNearDup(vecs, "vec_id", "embedding", k = 3,
-      threshold = 0.99, seed = 7L)
-      .collect().map(r => (r.getLong(1), r.getLong(2))).toSet
-    val within = for {
-      c <- 0 until 3; i <- 0 until 4; j <- i + 1 until 4
-    } yield ((c * 10 + i).toLong, (c * 10 + j).toLong)
-    assert(pairs == within.toSet, s"got $pairs")
   }
 
   test("sampled-fit quantizer (the 100-TB path) still separates clusters") {
@@ -94,8 +90,8 @@ class IvfSpec extends AnyFunSuite {
   test("ivf top-k with a covering probe matches brute force") {
     val model = Ivf.fitCentroids(vecs, "embedding", 3, seed = 7L)
     val queries = vecs.filter(col("vec_id") === 0 || col("vec_id") === 10)
-    val ivf = Ivf.ivfTopK(vecs, "vec_id", "embedding", queries, model,
-      k = 2, nprobe = 1)
+    val ivf = Ivf.ivfTopKFromAssigned(assigned(vecs, model), "vec_id", "embedding",
+      queries, model, k = 2, nprobe = 1)
       .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
     val brute = Similarity.bruteForceTopK(vecs, "vec_id", "embedding", queries, k = 2)
       .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
@@ -107,7 +103,7 @@ class IvfSpec extends AnyFunSuite {
     import spark.implicits._
     // Two ways a NaN score could theoretically arise, both cut off
     // upstream of the top-k machinery (so the window-vs-agg ranking
-    // twins can never silently disagree on NaN order — ivfTopKAgg's
+    // twins can never silently disagree on NaN order — the agg twin's
     // nan_first flag is defense-in-depth, not a live code path):
     // (1) NaN elements — rejected by the quantizer's training-set check
     val withNaN = Seq((0L, Array(1.0f, 0.0f)), (1L, Array(Float.NaN, 1.0f)))
@@ -127,9 +123,11 @@ class IvfSpec extends AnyFunSuite {
     ).toDF("vec_id", "embedding")
     val model = Ivf.fitCentroids(withZero, "embedding", k = 2, seed = 3L)
     val q = withZero.filter(col("vec_id") === 0)
-    val a = Ivf.ivfTopK(withZero, "vec_id", "embedding", q, model, k = 3, nprobe = 2)
+    val a = Ivf.ivfTopKFromAssigned(assigned(withZero, model), "vec_id", "embedding",
+      q, model, k = 3, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
-    val b = Ivf.ivfTopKAgg(withZero, "vec_id", "embedding", q, model, k = 3, nprobe = 2)
+    val b = Ivf.ivfTopKAggFromAssigned(assigned(withZero, model), "vec_id", "embedding",
+      q, model, k = 3, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
     assert(a == b, s"twins diverge: $a vs $b")
     assert(!a.exists(_._3 == 2L), s"zero-norm vector ranked: $a")

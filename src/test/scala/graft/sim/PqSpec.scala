@@ -17,29 +17,17 @@ class PqSpec extends AnyFunSuite {
   private def freshPath() = java.nio.file.Files
     .createTempDirectory("graft_pq").toString + "/cb"
 
+  /** The codebooks persisted at `p`, read back from disk. */
+  private def onDisk(p: String): Pq.Codebooks =
+    Kmeans.parse("pq", Kmeans.readText(p, spark.sparkContext.hadoopConfiguration))._2
+
   test("fit is deterministic; save/load round-trips bit-exactly") {
     val a = Pq.fit(emb, "embedding", m = 4, k = 8, seed = 7L)
     val b = Pq.fit(emb, "embedding", m = 4, k = 8, seed = 7L)
     assert(a.flatten.flatten.toSeq == b.flatten.flatten.toSeq)
-    val p = freshPath()
-    Pq.save(a, p)
-    val c = Pq.load(p)
+    val c = Kmeans.parse("pq", new String(Kmeans.render("pq", 4, 8, a), "UTF-8"))._2
     assert(a.flatten.flatten.toSeq == c.flatten.flatten.toSeq)
     assert(a.length == 4 && a.head.length == 8 && a.head.head.length == 16)
-  }
-
-  test("save refuses a degenerate codebook instead of stamping a broken '#pq' header") {
-    val p = freshPath()
-    val emptyM = intercept[IllegalArgumentException] {
-      Pq.save(Array.empty[Array[Array[Double]]], p)
-    }
-    assert(emptyM.getMessage.contains("empty codebook"))
-    val emptySub = intercept[IllegalArgumentException] {
-      Pq.save(Array(Array(Array(1.0, 2.0)), Array.empty[Array[Double]]), p)
-    }
-    assert(emptySub.getMessage.contains("empty codebook"))
-    // nothing was published at the path by either refusal
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(p)))
   }
 
   test("fitOrLoad: stale artifact for a DIFFERENT requested shape fails loudly; same shape reloads") {
@@ -198,10 +186,8 @@ class PqSpec extends AnyFunSuite {
 
   test("publish hygiene: overwrite works, no temp orphans, corrupt artifact replaced") {
     val p = freshPath()
-    val cb = Pq.fit(emb, "embedding", m = 4, k = 8, seed = 7L)
-    Pq.save(cb, p)
-    Pq.save(cb, p) // documented overwrite semantics over a COMPLETE artifact
-    assert(Pq.load(p).flatten.flatten.toSeq == cb.flatten.flatten.toSeq)
+    val cb = Pq.fitOrLoad(emb, "embedding", m = 4, k = 8, p, seed = 7L)
+    assert(onDisk(p).flatten.flatten.toSeq == cb.flatten.flatten.toSeq)
     val parent = new java.io.File(p).getParentFile
     assert(parent.listFiles.forall(f => !f.getName.contains(".tmp-")),
       s"orphan temps: ${parent.listFiles.map(_.getName).mkString(",")}")
@@ -209,9 +195,10 @@ class PqSpec extends AnyFunSuite {
     // be REPLACED by fitOrLoad — the entry-broken capture — and the
     // rebuilt artifact must load with the shape header intact
     java.nio.file.Files.writeString(java.nio.file.Paths.get(p), "garbage")
+    graft.Artifact.invalidate(p) // drop the memo: the next ensure reads the disk
     val re = Pq.fitOrLoad(emb, "embedding", m = 4, k = 8, p, seed = 7L)
     assert(re.flatten.flatten.toSeq == cb.flatten.flatten.toSeq)
-    assert(Pq.load(p).flatten.flatten.toSeq == cb.flatten.flatten.toSeq)
+    assert(onDisk(p).flatten.flatten.toSeq == cb.flatten.flatten.toSeq)
     assert(parent.listFiles.forall(f => !f.getName.contains(".tmp-")))
   }
 

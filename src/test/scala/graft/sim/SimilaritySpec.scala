@@ -1,5 +1,6 @@
 package graft.sim
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
@@ -157,6 +158,15 @@ class SimilaritySpec extends AnyFunSuite {
     assert(pairs == Set((1L, 2L)), s"got $pairs")
   }
 
+  /** The higher-order-function formulation the native SQ8 kernel
+    * replaced. The norm rides in via array_repeat, which evaluates its
+    * argument ONCE per row (inside the lambda the interpreted HOF would
+    * re-run the dot product per element). */
+  private def sq8Lambda(vec: Column): Column =
+    zip_with(transform(vec, _.cast("double")),
+      array_repeat(sqrt(Similarity.dot(vec, vec)), size(vec)),
+      (x, nrm) => floor((x / nrm + 1) / 2 * 255 + 0.5).cast("long"))
+
   test("sq8: native kernel bit-matches the lambda executable spec") {
     import spark.implicits._
     val rnd = new scala.util.Random(23)
@@ -165,7 +175,7 @@ class SimilaritySpec extends AnyFunSuite {
       (99L, Array(1.0f, 0.0f, -1.0f))).toDF("vec_id", "embedding")
     val both = data.select(col("vec_id"),
       Similarity.sq8(col("embedding")).as("k"),
-      Similarity.sq8Lambda(col("embedding")).as("s")).collect()
+      sq8Lambda(col("embedding")).as("s")).collect()
     both.foreach { r =>
       assert(r.getSeq[Long](1) == r.getSeq[Long](2), s"vec ${r.getLong(0)}")
     }

@@ -3,7 +3,7 @@ package graft.sim
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.{Ioops, SparkTestSession, Tables}
+import graft.{Ioops, SparkTestSession, Tables, TempDirs}
 
 /** ANN artifact staleness: index artifacts are keyed by the source's
   * filesystem-metadata stamp, so regenerating the embeddings table in
@@ -31,44 +31,51 @@ class StampSpec extends AnyFunSuite {
   }
 
   test("sourceStamp changes on in-place regeneration, stable across reads") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stamp").toString
-    writeEmbeddings(dir, 0f)
-    val s1 = Ioops.sourceStamp(spark, s"$dir/embeddings.parquet")
-    val s1b = Ioops.sourceStamp(spark, s"$dir/embeddings.parquet")
-    assert(s1 == s1b, "stamp must be deterministic for an unchanged source")
-    assert(s1 != "absent")
-    Thread.sleep(5) // ensure mtime can move even on coarse-granularity FS
-    writeEmbeddings(dir, 100f)
-    val s2 = Ioops.sourceStamp(spark, s"$dir/embeddings.parquet")
-    assert(s1 != s2, "regenerated source must stamp differently")
-    assert(Ioops.sourceStamp(spark, s"$dir/does_not_exist.parquet") == "absent")
+    TempDirs.withTempDir("graft_stamp") { dir =>
+      writeEmbeddings(dir, 0f)
+      val s1 = Ioops.sourceStamp(spark, s"$dir/embeddings.parquet")
+      val s1b = Ioops.sourceStamp(spark, s"$dir/embeddings.parquet")
+      assert(s1 == s1b, "stamp must be deterministic for an unchanged source")
+      assert(s1 != "absent")
+      Thread.sleep(5) // ensure mtime can move even on coarse-granularity FS
+      writeEmbeddings(dir, 100f)
+      val s2 = Ioops.sourceStamp(spark, s"$dir/embeddings.parquet")
+      assert(s1 != s2, "regenerated source must stamp differently")
+      assert(Ioops.sourceStamp(spark, s"$dir/does_not_exist.parquet") == "absent")
+    }
   }
 
   test("quantizer refits after in-place regeneration (new artifact, not stale reuse)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_refit").toString
-    val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    def ivfArtifacts(): Set[String] = {
-      val models = new java.io.File(System.getProperty("java.io.tmpdir"), "graft-models")
-      Option(models.list()).getOrElse(Array.empty)
-        .filter(n => n.startsWith("ivf_k16_") && n.contains(slug)).toSet
+    val src = TempDirs.withTempDir("graft_refit") { dir =>
+      val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
+      def ivfArtifacts(): Set[String] = {
+        val models = new java.io.File(System.getProperty("java.io.tmpdir"), "graft-models")
+        Option(models.list()).getOrElse(Array.empty)
+          .filter(n => n.startsWith("ivf_k16_") && n.contains(slug)).toSet
+      }
+      writeEmbeddings(dir, 0f)
+      graft.queries.TextSim.prebuildIndexes(spark, dir)
+      val gen1 = ivfArtifacts()
+      assert(gen1.size == 1, s"expected one artifact for generation 1, got $gen1")
+      // idempotent: a second prebuild against the unchanged source loads
+      graft.queries.TextSim.prebuildIndexes(spark, dir)
+      assert(ivfArtifacts() == gen1)
+      // regenerate in place; the catalog memo must be dropped (documented
+      // contract for in-place rewrites) and the stamp must route the next
+      // prebuild to a NEW artifact path — i.e. a refit on the new data
+      Thread.sleep(5)
+      writeEmbeddings(dir, 100f)
+      Tables.invalidate(dir)
+      graft.queries.TextSim.prebuildIndexes(spark, dir)
+      // the publish of the refit prunes the superseded generation
+      val gen2 = ivfArtifacts()
+      assert(gen2.size == 1 && gen2 != gen1,
+        s"regeneration must leave exactly one, new artifact (refit): gen1=$gen1 gen2=$gen2")
+      assert(TempDirs.artifactsOf(dir).nonEmpty) // the check below is not vacuous
+      dir
     }
-    writeEmbeddings(dir, 0f)
-    graft.queries.TextSim.prebuildIndexes(spark, dir)
-    val gen1 = ivfArtifacts()
-    assert(gen1.size == 1, s"expected one artifact for generation 1, got $gen1")
-    // idempotent: a second prebuild against the unchanged source loads
-    graft.queries.TextSim.prebuildIndexes(spark, dir)
-    assert(ivfArtifacts() == gen1)
-    // regenerate in place; the catalog memo must be dropped (documented
-    // contract for in-place rewrites) and the stamp must route the next
-    // prebuild to a NEW artifact path — i.e. a refit on the new data
-    Thread.sleep(5)
-    writeEmbeddings(dir, 100f)
-    Tables.invalidate(dir)
-    graft.queries.TextSim.prebuildIndexes(spark, dir)
-    // the publish of the refit prunes the superseded generation
-    val gen2 = ivfArtifacts()
-    assert(gen2.size == 1 && gen2 != gen1,
-      s"regeneration must leave exactly one, new artifact (refit): gen1=$gen1 gen2=$gen2")
+    // the spec's temp source leaves nothing behind: no dir, no generation
+    assert(TempDirs.artifactsOf(src).isEmpty && !new java.io.File(src).exists,
+      s"leftovers of $src: ${TempDirs.artifactsOf(src)}")
   }
 }

@@ -9,9 +9,9 @@ import graft.SparkTestSession
 
 /** Streaming specs: the same transform over a batch frame and a
   * MemoryStream must agree (the single-code-path contract); watermarked
-  * append-mode sessions flush exactly when the watermark passes; custom
-  * mapGroupsWithState state survives across micro-batches; a parquet
-  * directory replays through readStream. */
+  * append-mode sessions flush exactly when the watermark passes; the
+  * interval joins emit only in-interval matches, and a left-outer
+  * unmatched row once the watermark passes. */
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -80,182 +80,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed.toSeq.map(_._2).sum == (batch1 ++ batch2).size * 4L)
   }
 
-  test("mapGroupsWithState keeps running per-user state across micro-batches") {
-    implicit val ctx = spark.sqlContext
-    val input = MemoryStream[(Long, Long, Timestamp, Double)]
-    val events = input.toDF().toDF("user_id", "event_id", "ts", "value")
-      .as[Streaming.Ev]
-    // ttl=None: with a ProcessingTimeTimeout the engine triggers
-    // continuous empty micro-batches to poll the clock — correct in
-    // production, pure churn in a data-driven test
-    val q = Streaming.runningUserStats(events, ttl = None)
-      .writeStream.format("memory").queryName("running").outputMode(OutputMode.Update).start()
-    input.addData(batch1); q.processAllAvailable()
-    input.addData(batch2); q.processAllAvailable()
-    q.stop()
-
-    // update mode: the LAST row per user is the final state
-    val last = spark.table("running")
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2), r.getLong(3)))
-      .groupBy(_._1).map { case (k, vs) => k -> vs.maxBy(_._2._1)._2 }
-    assert(last(1L) == ((3L, 8.0, 103L)))
-    assert(last(2L) == ((2L, 10.25, 202L)))
-  }
-
-  test("runningUserStats TTL: live updates arm the timer; timeout reclaims state and re-emits") {
-    // TestGroupState (Spark's public harness for GroupState functions):
-    // deterministic TTL-branch coverage — a real-clock engine test with a
-    // short ProcessingTimeTimeout spins continuous micro-batches and races
-    // the test's own sleeps, so the clock is simulated instead
-    import org.apache.spark.api.java.Optional
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
-    val ttl = Some("30 minutes")
-    val nowMs = 1000L
-
-    // live branch: state updated AND the processing-time timer armed
-    val live = TestGroupState.create[Streaming.UserStat](
-      Optional.empty(), GroupStateTimeout.ProcessingTimeTimeout,
-      nowMs, Optional.empty[Long](), hasTimedOut = false)
-    val out = Streaming.userStatsFunc(ttl)(
-      1L, Iterator(Streaming.Ev(1L, 101L, ts(0), 1.5)), live)
-    assert(out == Streaming.UserStat(1L, 1L, 1.5, 101L))
-    assert(live.getTimeoutTimestampMs.isPresent, "TTL timer not armed")
-    assert(live.getTimeoutTimestampMs.get == nowMs + 30L * 60000L)
-
-    // timeout branch: final stat re-emitted (idempotent upsert for an
-    // update-mode sink), state entry reclaimed
-    val timedOut = TestGroupState.create[Streaming.UserStat](
-      Optional.of(out), GroupStateTimeout.ProcessingTimeTimeout,
-      nowMs + 31L * 60000L, Optional.empty[Long](), hasTimedOut = true)
-    val fin = Streaming.userStatsFunc(ttl)(1L, Iterator.empty, timedOut)
-    assert(fin == out, "timeout must re-emit the final stat unchanged")
-    assert(timedOut.isRemoved, "state not reclaimed on TTL expiry")
-
-    // ttl=None keeps the documented bounded-key-domain contract: no timer
-    val none = TestGroupState.create[Streaming.UserStat](
-      Optional.empty(), GroupStateTimeout.NoTimeout,
-      nowMs, Optional.empty[Long](), hasTimedOut = false)
-    Streaming.userStatsFunc(None)(1L, Iterator(Streaming.Ev(1L, 101L, ts(0), 1.5)), none)
-    assert(!none.getTimeoutTimestampMs.isPresent)
-  }
-
-  test("flatMapGroupsWithState sessionization matches session_window semantics") {
-    implicit val ctx = spark.sqlContext
-    val input = MemoryStream[(Long, Long, Timestamp, Double)]
-    val events = input.toDF().toDF("user_id", "event_id", "ts", "value")
-      .as[Streaming.Ev]
-    val q = Streaming.sessionizeCustom(events, gapMs = 10 * 60000L)
-      .writeStream.format("memory").queryName("custom_sess")
-      .outputMode(OutputMode.Append).start()
-    input.addData(batch1); q.processAllAvailable()
-    input.addData(batch2); q.processAllAvailable()
-    // one more far event: state timeouts fire against the watermark set
-    // by the PREVIOUS batch, so this flushes user 1's ts(30) session
-    input.addData(Seq((3L, 301L, ts(2000), 1.0))); q.processAllAvailable()
-    q.stop()
-
-    val got = spark.table("custom_sess")
-      .collect().map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2),
-        r.getLong(3), r.getDouble(4))).toSet
-    val batchDf = (batch1 ++ batch2).toDF("user_id", "event_id", "ts", "value")
-      .select(col("user_id"), col("ts"), col("value"))
-    val want = Streaming.sessionAgg(batchDf, "10 minutes")
-      .collect().map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2),
-        r.getLong(3), r.getDouble(4))).toSet
-    // every session of users 1 and 2 is now closed (watermark at ts(2000))
-    assert(got == want, s"got=$got\nwant=$want")
-    assert(got.size == 4)
-  }
-
-  test("streaming dedup keeps the first arrival per fingerprint within the horizon") {
-    implicit val ctx = spark.sqlContext
-    val input = MemoryStream[(Long, Timestamp, String)]
-    val stream = input.toDF().toDF("doc_id", "ts", "text")
-    val q = Streaming.dedupStream(stream, "text", "ts", horizon = "30 minutes")
-      .writeStream.format("memory").queryName("dedup").outputMode(OutputMode.Append).start()
-    // batch 1: two distinct texts + an in-batch duplicate
-    input.addData(Seq(
-      (1L, ts(0), "alpha beta"), (2L, ts(1), "gamma delta"), (3L, ts(2), "alpha beta")))
-    q.processAllAvailable()
-    // batch 2: cross-batch duplicate within the horizon → dropped;
-    // new text → kept
-    input.addData(Seq((4L, ts(5), "alpha beta"), (5L, ts(6), "epsilon")))
-    q.processAllAvailable()
-    q.stop()
-    val kept = spark.table("dedup").collect().map(_.getLong(0)).toSet
-    assert(kept == Set(1L, 2L, 5L), s"kept=$kept")
-  }
-
-  test("stream-static join enriches events with dim rows, keeps unmatched") {
-    implicit val ctx = spark.sqlContext
-    val dim = Seq((1L, "gold"), (2L, "silver")).toDF("user_id", "tier")
-    val input = MemoryStream[(Long, Long)]
-    val stream = input.toDF().toDF("user_id", "event_id")
-    val q = Streaming.enrichStream(stream, dim, "user_id")
-      .writeStream.format("memory").queryName("enriched").outputMode(OutputMode.Append).start()
-    input.addData(Seq((1L, 101L), (3L, 301L))) // user 3 has no dim row
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("enriched").collect()
-      .map(r => (r.getLong(0), r.getLong(1), Option(r.getString(2)))).toSet
-    assert(got == Set((1L, 101L, Some("gold")), (3L, 301L, None)), s"got=$got")
-  }
-
-  test("streaming curation gates + dedups a live stream like the batch pipeline") {
-    implicit val ctx = spark.sqlContext
-    val input = MemoryStream[(Long, Timestamp, String, String)]
-    val stream = input.toDF().toDF("doc_id", "ts", "text", "lang")
-    val q = Streaming.curateStream(stream, "text", "lang", "ts", horizon = "30 minutes")
-      .writeStream.format("memory").queryName("curated").outputMode(OutputMode.Append).start()
-    val body = "the quick brown fox jumps over the lazy dog today"
-    input.addData(Seq(
-      (1L, ts(0), body, "en"),              // keeper
-      (2L, ts(1), "too short", "en"),       // token gate
-      (3L, ts(2), "$$$ ### !!! ??? %%% ^^^", "en"), // alpha gate
-      (4L, ts(3), body, "fr"),              // lang gate
-      (5L, ts(4), body, "en")))             // dup of 1 → dropped
-    q.processAllAvailable()
-    q.stop()
-    val kept = spark.table("curated").collect().map(_.getLong(0)).toSet
-    assert(kept == Set(1L), s"kept=$kept")
-  }
-
-  test("AvailableNow incremental runs process only new files, no duplicates") {
-    val base = java.nio.file.Files.createTempDirectory("graft_incr").toString
-    val (in, out, ckpt) = (s"$base/in", s"$base/out", s"$base/ckpt")
-    val schema = Seq((1L, "a")).toDF("doc_id", "text").schema
-    Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text")
-      .write.mode("append").parquet(in)
-    def run(): Unit = Streaming.runIncremental(
-      spark.readStream.schema(schema).parquet(in)
-        .withColumn("toks", graft.text.TextOps.tokens(col("text"))),
-      out, ckpt)
-    run()
-    assert(spark.read.parquet(out).count() == 2)
-    // second run with no new input: nothing re-processed
-    run()
-    assert(spark.read.parquet(out).count() == 2)
-    // a new file lands; only it is processed
-    Seq((3L, "gamma")).toDF("doc_id", "text").write.mode("append").parquet(in)
-    run()
-    val ids = spark.read.parquet(out).collect().map(_.getLong(0)).sorted.toSeq
-    assert(ids == Seq(1L, 2L, 3L), s"ids=$ids")
-  }
-
-  test("tumbling agg over a readStream parquet directory equals the batch result") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString + "/events"
-    val df = (batch1 ++ batch2).toDF("user_id", "event_id", "ts", "value")
-    df.write.mode("overwrite").parquet(dir)
-    val stream = spark.readStream.schema(df.schema).parquet(dir)
-    Streaming.runToMemory(Streaming.tumblingAgg(stream, "1 hour", Some("0 seconds")),
-      "tumbled", OutputMode.Complete)
-    val got = spark.table("tumbled").collect()
-      .map(r => (r.getTimestamp(0), r.getLong(1), r.getDouble(2))).toSet
-    val want = Streaming.tumblingAgg(df, "1 hour").collect()
-      .map(r => (r.getTimestamp(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(got == want && got.size == 2)
-  }
-
   test("stream-stream interval join matches rows within the interval only") {
     implicit val ctx = spark.sqlContext
     val clicks = MemoryStream[(Long, Timestamp, Long)]
@@ -313,59 +137,5 @@ class StreamingSpec extends AnyFunSuite {
     // click 11 matched; click 12 emitted with a NULL imp (the negative
     // answer), never a (12, 92) row
     assert(got == Set((11L, 91L), (12L, -1L)), s"got=$got")
-  }
-
-  test("mergeStream maintains a snapshot across batches, out-of-order safe") {
-    implicit val ctx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_cdc").toString
-    val input = MemoryStream[(Long, String, Double, Long, Boolean)]
-    val changes = input.toDF().toDF("k", "name", "bal", "__v", "__del")
-    val q = Streaming.mergeStream(changes, Seq("k"), Seq("__v"), "__del",
-      dir + "/snap", dir + "/ckpt")
-    // batch 1: two inserts + a delete for a key inserted in the SAME batch
-    input.addData(Seq((1L, "a", 1.0, 10L, false), (2L, "b", 2.0, 10L, false),
-      (3L, "c", 3.0, 10L, false), (3L, "x", 0.0, 11L, true)))
-    q.processAllAvailable()
-    // batch 2: out-of-order OLD update for k=1 (must lose to v10),
-    // a genuine newer update for k=2, and a pre-delete upsert for k=3
-    // (must lose to the v11 tombstone, NOT resurrect)
-    input.addData(Seq((1L, "stale", 9.9, 5L, false),
-      (2L, "b2", 2.2, 12L, false), (3L, "ghost", 3.3, 10L, false)))
-    q.processAllAvailable()
-    q.stop()
-    val snap = spark.read.parquet(dir + "/snap/current")
-    val got = graft.ops.Merge.served(snap, Seq("__v"), "__del")
-      .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getDouble(2)))).toMap
-    assert(got == Map(1L -> ("a", 1.0), 2L -> ("b2", 2.2)), s"got=$got")
-  }
-
-  test("mergeStream recovers the base from `previous` if a swap crashed mid-rename") {
-    implicit val ctx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_cdc2").toString
-    val input = MemoryStream[(Long, String, Double, Long, Boolean)]
-    val changes = input.toDF().toDF("k", "name", "bal", "__v", "__del")
-    val q = Streaming.mergeStream(changes, Seq("k"), Seq("__v"), "__del",
-      dir + "/snap", dir + "/ckpt")
-    input.addData(Seq((1L, "a", 1.0, 10L, false)))
-    q.processAllAvailable()
-    // simulate a crash between the two renames: the committed snapshot
-    // sits in `previous`, `current` is gone
-    val cur = new java.io.File(dir + "/snap", "current")
-    val prev = new java.io.File(dir + "/snap", "previous")
-    assert(cur.renameTo(prev))
-    input.addData(Seq((2L, "b", 2.0, 10L, false)))
-    q.processAllAvailable()
-    q.stop()
-    val got = graft.ops.Merge.served(
-        spark.read.parquet(dir + "/snap/current"), Seq("__v"), "__del")
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    // batch-1 data must survive the recovery path
-    assert(got == Map(1L -> "a", 2L -> "b"), s"got=$got")
-    // and the recovery swap must NEVER have deleted the only committed
-    // snapshot: `previous` is rotated only while `current` exists, so
-    // after a recovery batch the old snapshot is still on disk — a
-    // crash at any point during that swap leaves a committed base
-    assert(new java.io.File(prev, "_SUCCESS").exists,
-      "recovery swap must not drop `previous` while `current` is absent")
   }
 }

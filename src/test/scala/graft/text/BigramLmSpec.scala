@@ -11,12 +11,21 @@ class BigramLmSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
+  /** Self-scoring: every document under the corpus's own bigram LM. */
+  private def bigramNll(docs: org.apache.spark.sql.DataFrame, idCol: String, textCol: String) =
+    TextOps.bigramNllWithModel(docs, TextOps.bigramCounts(docs, textCol), idCol, textCol)
+
+  private def dsirWeight(corpus: org.apache.spark.sql.DataFrame,
+                         target: org.apache.spark.sql.DataFrame, idCol: String, textCol: String) =
+    TextOps.dsirWeightWithModels(corpus, TextOps.bigramCounts(corpus, textCol),
+      TextOps.bigramCounts(target, textCol), idCol, textCol)
+
   test("hand-computed smoothed NLL on a 2-doc corpus, to the emitted rounding") {
     // corpus: d1 = "a b a b", d2 = "a b c"
     // n_ab: (a,b)=3, (b,a)=1, (b,c)=1; n_a: a=3, b=2; V=3
     // d2: (a,b) p=4/6, (b,c) p=2/5 → avg(−ln) = 0.6609 at 4dp
     val docs = Seq((1L, "a b a b"), (2L, "a b c")).toDF("doc_id", "text")
-    val byId = TextOps.bigramNll(docs, "doc_id", "text")
+    val byId = bigramNll(docs, "doc_id", "text")
       .select("doc_id", "n_bigrams", "avg_nll")
       .as[(Long, Long, Double)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
     assert(byId(2L)._1 == 2L)
@@ -28,7 +37,7 @@ class BigramLmSpec extends AnyFunSuite {
     val fluent = (1 to 20).map(i => (i.toLong, "the cat sat on the mat"))
     val salad = Seq((99L, "mat the on sat the cat"))
     val docs = (fluent ++ salad).toDF("doc_id", "text")
-    val nll = TextOps.bigramNll(docs, "doc_id", "text")
+    val nll = bigramNll(docs, "doc_id", "text")
       .select("doc_id", "avg_nll").as[(Long, Double)].collect().toMap
     assert(nll(1L) < nll(99L),
       s"frequent bigram paths must score as more likely: $nll")
@@ -37,16 +46,16 @@ class BigramLmSpec extends AnyFunSuite {
   test("duplicating a doc increases its bigrams' counts and lowers its NLL") {
     val base = Seq((1L, "x y z w"), (2L, "p q r s")).toDF("doc_id", "text")
     val dup = Seq((1L, "x y z w"), (2L, "p q r s"), (3L, "x y z w")).toDF("doc_id", "text")
-    val a = TextOps.bigramNll(base, "doc_id", "text")
+    val a = bigramNll(base, "doc_id", "text")
       .select("doc_id", "avg_nll").as[(Long, Double)].collect().toMap
-    val b = TextOps.bigramNll(dup, "doc_id", "text")
+    val b = bigramNll(dup, "doc_id", "text")
       .select("doc_id", "avg_nll").as[(Long, Double)].collect().toMap
     assert(b(1L) < a(1L), s"doubled bigram counts must raise P: $a vs $b")
   }
 
   test("docs with fewer than two tokens are absent by contract") {
     val docs = Seq((1L, "solo"), (2L, "two tokens"), (3L, "")).toDF("doc_id", "text")
-    val ids = TextOps.bigramNll(docs, "doc_id", "text")
+    val ids = bigramNll(docs, "doc_id", "text")
       .select("doc_id").as[Long].collect().toSet
     assert(ids == Set(2L))
   }
@@ -62,10 +71,10 @@ class BigramLmSpec extends AnyFunSuite {
         (null.asInstanceOf[java.lang.Long], "a b c"))
       .toDF("doc_id", "text")
     val target = Seq((100L, "a b")).toDF("doc_id", "text")
-    val dsirIds = TextOps.dsirWeight(corpus, target, "doc_id", "text")
+    val dsirIds = dsirWeight(corpus, target, "doc_id", "text")
       .select("doc_id").collect().map(r => Option(r.get(0))).toSet
     assert(dsirIds == Set(Some(1L)), s"dsir must drop the null-id group: $dsirIds")
-    val nllIds = TextOps.bigramNll(corpus, "doc_id", "text")
+    val nllIds = bigramNll(corpus, "doc_id", "text")
       .select("doc_id").collect().map(r => Option(r.get(0))).toSet
     assert(nllIds == Set(Some(1L), None), s"bigramNll keeps the null group: $nllIds")
   }
@@ -80,19 +89,10 @@ class BigramLmSpec extends AnyFunSuite {
         Seq((20L, legal), (21L, legal))
       ).toDF("doc_id", "text")
     val target = Seq((100L, legal), (101L, legal + " of record")).toDF("doc_id", "text")
-    val w = TextOps.dsirWeight(corpus, target, "doc_id", "text")
+    val w = dsirWeight(corpus, target, "doc_id", "text")
       .select("doc_id", "dsir_weight").as[(Long, Double)].collect().toMap
     assert(w(20L) > w(1L),
       s"legal doc must be more target-like than a recipe: $w")
     assert(w(20L) > 0.0, s"target-domain doc should gain under the target LM: $w")
-  }
-
-  test("bigramNllAgainst with model == score frame equals bigramNll") {
-    val docs = Seq((1L, "a b a b"), (2L, "a b c"), (3L, "c b a")).toDF("doc_id", "text")
-    val a = TextOps.bigramNll(docs, "doc_id", "text")
-      .as[(Long, Long, Double)].collect().sortBy(_._1).toSeq
-    val b = TextOps.bigramNllAgainst(docs, docs, "doc_id", "text")
-      .as[(Long, Long, Double)].collect().sortBy(_._1).toSeq
-    assert(a == b)
   }
 }

@@ -11,6 +11,14 @@ class DedupSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
+  /** Contamination against the benchmark's distinct shingle set. */
+  private def contaminationScore(corpus: org.apache.spark.sql.DataFrame,
+                                 bench: org.apache.spark.sql.DataFrame,
+                                 idCol: String, textCol: String) =
+    Dedup.contaminationScoreAgainst(corpus,
+      Dedup.shingleHashes(bench, idCol, textCol).select("shingle_h").distinct(),
+      idCol, textCol, 3)
+
   private val docA = "the quick brown fox jumps over the lazy dog again and again"
   private val docB = "the quick brown fox jumps over the lazy dog again and again" // dup of A
   private val docC = "the quick brown fox jumps over the lazy cat again and again" // near-dup
@@ -31,7 +39,7 @@ class DedupSpec extends AnyFunSuite {
     // word ("cat" for "dog"): of its 10 distinct shingles, the 3
     // containing "cat" are clean → 7/10 contaminated.
     val bench = docs.filter(col("doc_id") === 1)
-    val got = Dedup.contaminationScore(docs, bench, "doc_id", "text")
+    val got = contaminationScore(docs, bench, "doc_id", "text")
       .select("doc_id", "n_shingles", "n_common", "contamination")
       .as[(Long, Long, Long, Double)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
@@ -39,21 +47,13 @@ class DedupSpec extends AnyFunSuite {
     assert(got(4L) == ((7L, 0L, 0.0)), got(4L))
     assert(got(3L) == ((10L, 7L, 0.7)), got(3L))
     // empty benchmark → everything scores 0, rows survive
-    val zeros = Dedup.contaminationScore(docs, docs.filter(col("doc_id") < 0),
+    val zeros = contaminationScore(docs, docs.filter(col("doc_id") < 0),
         "doc_id", "text")
       .select("contamination").as[Double].collect()
     assert(zeros.length == 4 && zeros.forall(_ == 0.0))
     // sub-n docs have no shingles and are absent
     val tiny = Seq((9L, "one two")).toDF("doc_id", "text")
-    assert(Dedup.contaminationScore(tiny, bench, "doc_id", "text").count() == 0)
-  }
-
-  test("shingles: distinct 3-grams, short docs yield none") {
-    val tiny = Seq((1L, "one two"), (2L, "a b c d")).toDF("doc_id", "text")
-    val sh = Dedup.shingles(tiny, "doc_id", "text")
-      .groupBy("doc_id").count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(!sh.contains(1L)) // 2 tokens < n=3 → no shingles
-    assert(sh(2L) == 2L)     // "a b c", "b c d"
+    assert(contaminationScore(tiny, bench, "doc_id", "text").count() == 0)
   }
 
   test("ngram Jaccard: identical docs 1.0, near-dups high, disjoint absent") {

@@ -10,6 +10,12 @@ class SpanDupSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
+  /** Coverage against the corpus's own cross-doc span blocklist. */
+  private def spanCoverage(df: org.apache.spark.sql.DataFrame, idCol: String, textCol: String,
+                           window: Int = 4, minDocs: Long = 2L) =
+    Dedup.spanCoverageWithBlocklist(df, idCol, textCol, window,
+      Dedup.crossDocSpans(df, textCol, window, minDocs))
+
   private def spans(docs: Seq[(Long, String)], window: Int = 4,
                     minDocs: Long = 2L): Map[String, Long] =
     Dedup.crossDocSpans(docs.toDF("doc_id", "text"), "text", window, minDocs)
@@ -52,7 +58,7 @@ class SpanDupSpec extends AnyFunSuite {
     val footer = "all rights reserved worldwide"
     // doc 1: 5 tokens before the 4-token footer → 9 tokens → 6 spans,
     // exactly one of which (the footer itself) is cross-doc.
-    val rows = Dedup.spanCoverage(Seq(
+    val rows = spanCoverage(Seq(
       (1L, s"alpha beta gamma delta epsi $footer"),
       (2L, s"zeta eta theta iota kappa $footer"),
       (3L, "nu xi omicron pi rho sigma")).toDF("doc_id", "text"),
@@ -64,7 +70,7 @@ class SpanDupSpec extends AnyFunSuite {
   }
 
   test("spanCoverage: an all-boilerplate doc scores 1.0") {
-    val m = Dedup.spanCoverage(Seq(
+    val m = spanCoverage(Seq(
       (1L, "a b c d e"), (2L, "a b c d e"), (3L, "x y z w"))
       .toDF("doc_id", "text"), "doc_id", "text")
       .as[(Long, Long, Long, Double)].collect()
@@ -87,7 +93,7 @@ class SpanDupSpec extends AnyFunSuite {
     // coverage probing the artifact == coverage building inline
     val viaArt = Dedup.spanCoverageWithBlocklist(docs, "doc_id", "text", 4, art)
       .as[(Long, Long, Long, Double)].collect().toSet
-    val inline = Dedup.spanCoverage(docs, "doc_id", "text", 4, 2L)
+    val inline = spanCoverage(docs, "doc_id", "text", 4, 2L)
       .as[(Long, Long, Long, Double)].collect().toSet
     assert(viaArt == inline, s"artifact-probed coverage diverged: $viaArt vs $inline")
     // warm memo hit + corrupted artifact rebuild
